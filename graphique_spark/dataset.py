@@ -21,6 +21,7 @@ from graphique_spark.inputs import Agg, Filter, combine_filters
 from graphique_spark.operators.asof import asof_join
 from graphique_spark.operators.sequence import with_row_index, with_run_ids
 from graphique_spark.operators.topk import rank_filter, sort_keys, top_k
+from graphique_spark.session import local_frame
 
 
 class Dataset:
@@ -325,7 +326,8 @@ class Dataset:
 
     def _metadata_groups(self, path: str, by: list[str], counts: str | None) -> "Dataset":
         """Distinct partition-key groups (and sizes) from hive directory
-        names + parquet footers; a LocalRelation, no file scan. Partition
+        names + parquet footers; an Arrow-built LocalRelation
+        (``session.local_frame``), no file scan and no Spark job. Partition
         values arrive as directory strings and are cast to the types Spark
         inferred for the scanned frame, so both paths agree on schema."""
         from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -341,7 +343,7 @@ class Dataset:
             tuple(values[c] for c in by) + ((n,) if counts else ())
             for values, n in groups
         ]
-        out = self.df.sparkSession.createDataFrame(data, schema)
+        out = local_frame(self.df.sparkSession, data, schema)
         types = dict(self.df.dtypes)
         out = out.select(
             *[F.col(c).cast(types[c]).alias(c) for c in by],
@@ -567,13 +569,13 @@ class Dataset:
             else None
         )
         if not len(indices):
-            # pyarrow take([]) = empty table; createDataFrame cannot infer
-            # a schema from zero rows
+            # pyarrow take([]) = empty table
             return self._wrap(self.df.limit(0), op)
         df = with_row_index(self.df, rowid) if synthesized else self.df
-        spark = df.sparkSession
-        wanted = spark.createDataFrame(
-            [(pos, int(i)) for pos, i in enumerate(indices)], schema=["__pos", rowid]
+        wanted = local_frame(
+            df.sparkSession,
+            [(pos, int(i)) for pos, i in enumerate(indices)],
+            f"__pos long, `{rowid}` long",
         )
         out = df.join(F.broadcast(wanted), on=rowid, how="inner").orderBy("__pos").drop("__pos")
         return self._wrap(out.drop(rowid) if synthesized else out, op)

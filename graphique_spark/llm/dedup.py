@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphique_spark.session import local_frame
+
 #: Mersenne prime 2^31-1: modulus for the affine MinHash permutations.
 #: Operands stay < 2^62, so the arithmetic never overflows int64 in Spark
 #: *or* DuckDB (which errors on BIGINT overflow rather than wrapping).
@@ -616,13 +618,12 @@ def connected_components(
     """
     if method not in ("auto", "label", "star"):
         raise ValueError(f"method must be auto|label|star, got {method!r}")
-    materialize = materializer(pairs, checkpoint_dir)
-    edges = materialize(
-        # symmetrize via ONE explode pass: a union of two projections of
-        # the pair pipeline executes the (expensive) candidate-verify
-        # subplan twice — the post-shuffle jaccard/intersect work is not
-        # covered by exchange reuse. One Generate emits both directions
-        # from a single execution, then one distinct exchange.
+    # symmetrize via ONE explode pass: a union of two projections of the
+    # pair pipeline executes the (expensive) candidate-verify subplan twice
+    # — the post-shuffle jaccard/intersect work is not covered by exchange
+    # reuse. One Generate emits both directions from a single execution,
+    # then one distinct exchange.
+    edges = (
         pairs.select(
             F.explode(
                 F.array(
@@ -633,17 +634,16 @@ def connected_components(
         )
         .select(F.col("__e.a").alias("a"), F.col("__e.b").alias("b"))
         .distinct()
-        # materialize once: the (possibly expensive) upstream pair pipeline
-        # must not re-run inside every propagation round
     )
     if method == "auto":
-        # Small-graph fast path: once the edge list is materialized its
-        # size is known; under the threshold a driver union-find beats N
-        # iterative shuffle rounds the way a broadcast join beats a
+        # Small-graph fast path: under the threshold a driver union-find
+        # beats N iterative shuffle rounds the way a broadcast join beats a
         # sort-merge join — a BOUNDED collect (<=~1 MiB at the default),
-        # same contract as spark.sql.autoBroadcastJoinThreshold. Near-dup
-        # edge sets are tiny relative to their corpora (they are pairs,
-        # not docs); graphs exceeding the bound fall through to the
+        # same contract as spark.sql.autoBroadcastJoinThreshold. The
+        # sample is read straight off the edge plan, so the common small
+        # graph runs no checkpoint job and persists nothing. Near-dup edge
+        # sets are tiny relative to their corpora (they are pairs, not
+        # docs); graphs exceeding the bound fall through to the
         # distributed label-propagation path unchanged.
         small_cap = int(
             edges.sparkSession.conf.get("graphique.cc.smallGraphEdges", "65536")
@@ -672,7 +672,7 @@ def connected_components(
             schema = edges.select(
                 F.col("a").alias("v"), F.col("a").alias("component")
             ).schema
-            return edges.sparkSession.createDataFrame(labels, schema=schema)
+            return local_frame(edges.sparkSession, labels, schema)
         method = "label"
         # Auto mode must be safe UNATTENDED on adversarial graphs: label
         # propagation needs diameter rounds, so a deep chain (mirror-heavy
@@ -686,6 +686,10 @@ def connected_components(
         )
     else:
         escalate_after = None
+    # materialize once: the (possibly expensive) upstream pair pipeline
+    # must not re-run inside every propagation round
+    materialize = materializer(pairs, checkpoint_dir)
+    edges = materialize(edges)
     if method == "star":
         return _star_components(edges, max_iterations, materialize)
     labels = edges.select(F.col("a").alias("v")).distinct().withColumn(

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from graphique_spark.session import local_frame
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -306,7 +308,8 @@ def ivf_knn_join(
     if not centroids:
         # no cells -> no candidate pairs: typed empty result, matching
         # the ivf_topk empty-centroid contract
-        return queries.sparkSession.createDataFrame(
+        return local_frame(
+            queries.sparkSession,
             [],
             T.StructType(
                 [

@@ -12,6 +12,8 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from graphique_spark.session import local_frame
+
 #: tiny per-language stopword lists for the n-gram/stopword heuristic
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a"],
@@ -428,8 +430,7 @@ def contaminated_docs_bloom(
         .localCheckpoint(eager=False)
     )
     bitmap = build_bloom(bench_grams, "h", m_bits, k)
-    spark = corpus.sparkSession
-    bf = spark.createDataFrame([(bitmap,)], "bf array<bigint>")
+    bf = local_frame(corpus.sparkSession, [(bitmap,)], "bf array<bigint>")
     grams = corpus.select(
         F.col(id_col), F.explode(word_ngrams(F.col(text), n)).alias("g")
     ).select(id_col, hash60(F.col("g")).alias("h"))

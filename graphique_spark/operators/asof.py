@@ -23,6 +23,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphique_spark.session import local_frame
+
 _SIDE = "__asof_side"
 _PAYLOAD = "__asof_payload"
 _RON = "__asof_ron"
@@ -206,7 +208,7 @@ def _global_last_fill(unioned: DataFrame, order: list[Column]) -> DataFrame:
         (pid, carry["p"] if carry else None, carry["t"] if carry else None)
         for pid, carry in carry_in.items()
     ]
-    carry_df = unioned.sparkSession.createDataFrame(rows, schema)
+    carry_df = local_frame(unioned.sparkSession, rows, schema)
     return (
         filled.join(F.broadcast(carry_df), on=_PID, how="left")
         .withColumn(_PAYLOAD, F.coalesce(F.col(_PAYLOAD), F.col("__carry_p")))

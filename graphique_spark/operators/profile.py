@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphique_spark.session import local_frame
+
 _NUMERIC_EXACT = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 
@@ -101,4 +103,4 @@ def profile(df: DataFrame, columns: Sequence[str] | None = None, exact: bool = T
                 None if numeric else row[f"xs_{c}"],
             )
         )
-    return df.sparkSession.createDataFrame(out, PROFILE_SCHEMA)
+    return local_frame(df.sparkSession, out, PROFILE_SCHEMA)

@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphique_spark.session import local_frame
+
 
 @dataclass
 class Rule:
@@ -85,7 +87,8 @@ def validate(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     single aggregate row, so nothing re-executes."""
     spark = df.sparkSession
     if not rules:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "rule string, kind string, violations bigint, "
             "checked bigint, passed boolean",

@@ -41,6 +41,8 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphique_spark.session import local_frame
+
 
 def _step_quality_filter(spark, df, p, text, id_col):
     from graphique_spark.llm.text import quality_score
@@ -114,8 +116,10 @@ def _step_decontaminate(spark, df, p, text, id_col):
     if "eval_path" in p:
         evals = spark.read.parquet(p["eval_path"])
     else:
-        evals = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(p["eval_texts"])], "eval_id long, text string"
+        evals = local_frame(
+            spark,
+            [(i, t) for i, t in enumerate(p["eval_texts"])],
+            "eval_id long, text string",
         )
     bad = contaminated_docs(
         df.select(F.col(id_col).alias("doc_id"), F.col(text).alias("text")),

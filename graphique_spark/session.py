@@ -10,8 +10,10 @@ are reproducible across driver locales. Local test runs override
 from __future__ import annotations
 
 import os
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Conservative cluster-ready defaults; any key can be overridden via
 #: ``extra_conf``. These are *logical* settings (safe in local mode too) —
@@ -78,3 +80,30 @@ def local_session(cpus: int | None = None) -> SparkSession:
     """Session for local testing: ``local[$SPARK_GRAFT_CPUS]``."""
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return get_session(master=f"local[{cpus}]", shuffle_partitions=cpus)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """A small driver-side frame as an Arrow-built ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` plans a ``LogicalRDD`` over a
+    pickled Python RDD: every action on it starts a Python worker, and
+    Catalyst sees no size for it. Converting the rows to a
+    ``pyarrow.Table`` first gives a ``LocalRelation`` with the same schema
+    and nullability; actions on it run no Spark job, and the optimizer
+    folds projections over it. ``schema`` is a ``StructType`` or a DDL
+    string. Values convert by the same rules as ``createDataFrame`` (naive
+    timestamps are process-local time). Types Arrow cannot carry, such as
+    year-month and calendar intervals, raise ``PySparkTypeError``."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    if rows:
+        table = LocalDataToArrowConversion.convert(rows, schema, False)
+    else:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema=schema)

@@ -16,6 +16,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from graphique_spark.dataset import Dataset
+from graphique_spark.session import local_frame
 
 
 def hive_partition_keys(path: str) -> tuple[str, ...]:
@@ -686,7 +687,7 @@ def verify_manifest(spark: SparkSession, dest: str, partition_by: str | None = N
         # which is exactly the "files are gone" mismatch. Narrow catch:
         # a corrupt footer / permission error must RAISE, not read as
         # "empty but intact".
-        actual = spark.createDataFrame([], stored.schema)
+        actual = local_frame(spark, [], stored.schema)
     on = [partition_by] if partition_by else []
     a = actual.select(
         *on, F.col("n_rows").alias("n_actual"), F.col("checksum").alias("sum_actual")

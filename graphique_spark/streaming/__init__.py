@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphique_spark.session import local_frame
+
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -446,8 +448,8 @@ def incremental_dedup_sink(
                     new_index=idx_rows,
                 )
             else:
-                dups = spark.createDataFrame(
-                    [], "new_id long, index_id long, jaccard double"
+                dups = local_frame(
+                    spark, [], "new_id long, index_id long, jaccard double"
                 )
             (
                 dups.withColumn("batch_id", F.lit(batch_id))

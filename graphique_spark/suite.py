@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from graphique_spark.dataset import Dataset
 from graphique_spark.inputs import Agg
+from graphique_spark.session import local_frame
 from graphique_spark.sources import NANO_COLUMNS, normalize_nanos
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1110,9 +1111,10 @@ def column_leaf_aggregates(spark, sf_dir):
         fr(tp["quantile"][0], 4), fr(tp["quantile"][1], 4), fr(tp["quantile"][2], 4),
         pri["min"], pri["max"], pri["nunique"],
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [row],
-        schema="cnt bigint, uniq bigint, lo double, hi double, total double, "
+        "cnt bigint, uniq bigint, lo double, hi double, total double, "
         "mean_v double, std_v double, q25 double, q50 double, q75 double, "
         "p_lo string, p_hi string, p_uniq bigint",
     )
@@ -1432,7 +1434,8 @@ def dataset_count_any(spark, sf_dir):
     n = orders.count()
     urgent = orders.filter(o_orderpriority={"eq": ["1-URGENT"]}).any()
     negative = orders.filter(F.col("o_totalprice") < 0).any()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, urgent, negative)],
         "orders_rows bigint, has_urgent boolean, has_negative boolean",
     )
@@ -1541,8 +1544,8 @@ def first_partition_prune(spark, sf_dir):
 def partition_metadata_groups(spark, sf_dir):
     """Partition fast path (reference interface.py:233-234, core.py:55-63):
     group-by-partition-key with counts on an untransformed parquet root is
-    answered from directory names + parquet footers — the physical plan is
-    a LocalRelation, zero data pages read."""
+    answered from directory names + parquet footers — an Arrow-built
+    LocalRelation (physically one LocalTableScan), zero data pages read."""
     import os
     import tempfile
 
@@ -1553,8 +1556,8 @@ def partition_metadata_groups(spark, sf_dir):
     sources.write_partitioned(orders.df, dest, ["o_orderstatus"])
     ds = sources.read_parquet(spark, dest)
     out = ds.group(by=["o_orderstatus"], counts="n")
-    if "Scan parquet" in out.explain("simple"):  # metadata, not scan
-        raise AssertionError("metadata group-by fell back to a parquet scan")
+    if "LocalTableScan" not in out.explain("simple"):  # metadata, not scan
+        raise AssertionError("metadata group-by is not a LocalTableScan")
     return out.df
 
 

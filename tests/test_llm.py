@@ -301,6 +301,53 @@ def test_connected_components_empty(spark):
     assert dedup.connected_components(pairs, method="star").count() == 0
 
 
+def _cc_labels(pairs, **kw):
+    return {
+        r["v"]: r["component"]
+        for r in dedup.connected_components(pairs, **kw).collect()
+    }
+
+
+CC_EDGES = [(1, 2), (2, 3), (3, 4), (10, 11), (12, 11), (20, 21), (21, 20)]
+CC_EXPECTED = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def test_connected_components_small_path_persists_nothing(spark):
+    # the small-graph path collects its bounded edge sample straight off
+    # the plan: no checkpoint job, no block left registered
+    jsc = spark.sparkContext._jsc
+    pairs = spark.createDataFrame(CC_EDGES, "id_a long, id_b long")
+    before = jsc.getPersistentRDDs().size()
+    out = dedup.connected_components(pairs)
+    assert {r["v"]: r["component"] for r in out.collect()} == CC_EXPECTED
+    assert jsc.getPersistentRDDs().size() == before
+    plan = out._jdf.queryExecution().analyzed().getClass().getSimpleName()
+    assert plan == "LocalRelation"
+
+
+def test_connected_components_forced_distributed_matches_small(spark):
+    pairs = spark.createDataFrame(CC_EDGES, "id_a long, id_b long")
+    small = _cc_labels(pairs)
+    spark.conf.set("graphique.cc.smallGraphEdges", "2")  # 14 edges > cap
+    try:
+        forced = _cc_labels(pairs)
+    finally:
+        spark.conf.unset("graphique.cc.smallGraphEdges")
+    assert small == forced == CC_EXPECTED
+
+
+def test_connected_components_label_and_star_unchanged(spark):
+    pairs = spark.createDataFrame(CC_EDGES, "id_a long, id_b long")
+    assert _cc_labels(pairs, method="label") == CC_EXPECTED
+    assert _cc_labels(pairs, method="star") == CC_EXPECTED
+    strs = spark.createDataFrame(
+        [(f"d{a:02d}", f"d{b:02d}") for a, b in CC_EDGES], "id_a string, id_b string"
+    )
+    want = {f"d{v:02d}": f"d{c:02d}" for v, c in CC_EXPECTED.items()}
+    assert _cc_labels(strs) == _cc_labels(strs, method="label") == want
+    assert _cc_labels(strs, method="star") == want
+
+
 @slow_full  # ~110s (65 label rounds x shuffle jobs): star/auto coverage
 # stays default via test_auto_mode_escalates_to_star_on_deep_chains and
 # test_star_components_chain_round_count

@@ -2,7 +2,8 @@
 join shapes that destroy 100 TB runs — CartesianProduct and
 BroadcastNestedLoopJoin — plus Python row-at-a-time evaluation
 (BatchEvalPython). A new query that accidentally introduces one fails CI
-here, not on the cluster.
+here, not on the cluster. A source-level check keeps list-built frames
+(Python-RDD scans) behind ``session.local_frame``.
 
 Whitelist rationale:
 * knn_join — deliberate bounded cross join (small broadcast query side);
@@ -104,6 +105,38 @@ def test_no_python_row_udfs(plans):
     # is the row-at-a-time path that must never appear
     offenders = [name for name, plan in plans.items() if "BatchEvalPython" in plan]
     assert not offenders, f"row-at-a-time Python eval in: {offenders}"
+
+
+def test_driver_rows_go_through_local_frame():
+    # A frame built from a Python list by createDataFrame (or an RDD from
+    # parallelize) scans a pickled Python RDD: every action starts a Python
+    # worker. Its plan prints "Scan ExistingRDD", the same as a
+    # localCheckpoint frame, so test_no_python_row_udfs cannot see it.
+    # Source-level lint: only session.local_frame (Arrow -> LocalRelation)
+    # may call createDataFrame, and nothing calls parallelize.
+    import ast
+    import pathlib
+
+    import graphique_spark
+
+    root = pathlib.Path(graphique_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        if path == root / "session.py":
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("createDataFrame", "parallelize")
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, f"list-built frames outside local_frame: {offenders}"
 
 
 def test_plans_api_reports_and_asserts(spark, tables):
