@@ -8,11 +8,11 @@ middleware.py:41-65); this is the same architecture over PySpark:
   table's fields at the query root, like ``GraphQL(root)``).
 * Each resolver builds a new *lazy* Dataset; only scalar leaves
   (``count``, ``values``, ``row``...) launch Spark jobs.
-* When a table field has multiple table/leaf sub-selections, the frame is
-  persisted (MEMORY_AND_DISK) for the duration of the request so sibling
-  fields share one materialization — the reference's ``resolve()``/
-  ``.cache()`` trick (reference interface.py:83-91) — and unpersisted when
-  the request finishes.
+* Sibling leaves of one table field share its Spark jobs, where the
+  reference caches the table for its sub-fields (reference
+  interface.py:83-91): one job answers every aggregate leaf and the
+  ``count``, one more every ``values`` leaf with the same ``limit:``
+  (``schema.LeafBatches``). Nothing is persisted.
 
 No ASGI dependency: ``execute`` is synchronous/in-process. Any HTTP layer
 can wrap it; the engine itself stays transport-neutral.
@@ -26,65 +26,11 @@ from graphql import GraphQLSchema, graphql_sync
 from pyspark.sql import DataFrame
 
 from graphique_spark.dataset import Dataset
-from graphique_spark.service.schema import SchemaBuilder
+from graphique_spark.service.schema import LeafBatches, SchemaBuilder
 
 
 class GraphQLError(Exception):
     pass
-
-
-class _PersistRegistry:
-    """Refcounted, lock-serialized persist/unpersist per canonicalized plan.
-
-    Naive per-request ``df.persist()`` / ``df.unpersist()`` is unsafe under
-    concurrent requests: two threads caching the SAME logical plan race in
-    Spark's CacheManager (cacheQuery's lookup->build isn't atomic across
-    sessions' calls), and the losing thread's materialized InMemoryRelation
-    RDD is never deregistered — measured here as persistent-RDD blocks
-    accumulating across request bursts while cacheManager.isEmpty() stays
-    true (an executor-memory leak on a long-lived service). One request
-    unpersisting a plan another request is still using additionally forces
-    recomputation. This registry keys entries by the JVM-canonicalized
-    plan (semanticHash + sameResult confirmation): the FIRST acquirer
-    persists, later acquirers just bump the refcount, and the LAST release
-    unpersists — all under one Python lock so the JVM cache mutations for
-    a plan never interleave.
-    """
-
-    def __init__(self):
-        import threading
-
-        self._lock = threading.Lock()
-        self._entries: dict[int, list[dict]] = {}
-
-    @staticmethod
-    def _jplan(ds: Dataset):
-        return ds.df._jdf.queryExecution().analyzed().canonicalized()
-
-    def acquire(self, ds: Dataset) -> dict:
-        """Ensure ``ds``'s plan is persisted; returns a release token."""
-        jplan = self._jplan(ds)
-        h = jplan.semanticHash()
-        with self._lock:
-            bucket = self._entries.setdefault(h, [])
-            for ent in bucket:
-                if ent["plan"].sameResult(jplan):
-                    ent["n"] += 1
-                    return ent
-            ent = {"hash": h, "plan": jplan, "ds": ds.persist(), "n": 1}
-            bucket.append(ent)
-            return ent
-
-    def release(self, ent: dict) -> None:
-        with self._lock:
-            ent["n"] -= 1
-            if ent["n"] == 0:
-                bucket = self._entries.get(ent["hash"], [])
-                if ent in bucket:
-                    bucket.remove(ent)
-                    if not bucket:
-                        del self._entries[ent["hash"]]
-                ent["ds"].unpersist()
 
 
 class GraphQLService:
@@ -113,7 +59,6 @@ class GraphQLService:
                 ds._source = sqlrender.table_ref(name)
                 ds._ops = ()
         self.allow_sql = allow_sql
-        self._persist_registry = _PersistRegistry()
         self.schema: GraphQLSchema = SchemaBuilder(self.roots, keys=keys).build()
 
     def execute(
@@ -126,7 +71,7 @@ class GraphQLService:
         reference conftest.py:26-31). ``partial=True`` returns whatever
         resolved, with failed fields nulled — the reference's ``optional``
         partial-results behavior (reference interface.py:138-141)."""
-        result = self._run(query, variables)
+        result, _ = self._run(query, variables)
         if result.errors and not partial:
             raise GraphQLError(result.errors) from result.errors[0].original_error
         return result.data
@@ -140,12 +85,13 @@ class GraphQLService:
         """HTTP-response-shaped execution: ``{data, errors?, extensions?}``
         with formatted (JSON-safe) errors. ``metrics=True`` adds per-resolver
         wall-clock timings, the reference's Apollo-tracing-derived metrics
-        extension (reference middleware.py:22-38)."""
+        extension (reference middleware.py:22-38), and per table node that
+        batched its leaves: its path, leaf count and batch-job time."""
         middleware = [_MetricsMiddleware()] if metrics else None
         import time
 
         start = time.perf_counter()
-        result = self._run(query, variables, middleware=middleware)
+        result, batches = self._run(query, variables, middleware=middleware)
         payload: dict = {"data": result.data}
         if result.errors:
             payload["errors"] = [e.formatted for e in result.errors]
@@ -155,7 +101,10 @@ class GraphQLService:
             payload["extensions"] = {
                 "metrics": {
                     "duration": str(timedelta(seconds=time.perf_counter() - start)),
-                    "execution": {"resolvers": middleware[0].resolvers},
+                    "execution": {
+                        "resolvers": middleware[0].resolvers,
+                        "batches": batches.metrics(),
+                    },
                 }
             }
         return payload
@@ -163,38 +112,17 @@ class GraphQLService:
     def _run(self, query, variables=None, middleware=None):
         single = len(self.roots) == 1
         root_value = next(iter(self.roots.values())) if single else None
-        context = {
-            "roots": self.roots,
-            "allow_sql": self.allow_sql,
-            "persisted": [],
-            "persist_registry": self._persist_registry,
-        }
-        try:
-            result = graphql_sync(
-                self.schema,
-                query,
-                root_value=root_value,
-                context_value=context,
-                variable_values=dict(variables or {}),
-                middleware=middleware,
-            )
-        finally:
-            # graphql_sync normally captures resolver errors in the result,
-            # but if it raises (bad document, middleware error) the acquired
-            # cache entries must still be released. Release is best-effort
-            # PER TOKEN: one failing unpersist (a JVM hiccup) must neither
-            # strand the remaining entries nor mask the request's result.
-            for token in context["persisted"]:
-                try:
-                    if isinstance(token, Dataset):  # direct-persist fallback
-                        token.unpersist()
-                    else:
-                        self._persist_registry.release(token)
-                except Exception as exc:  # noqa: BLE001
-                    import warnings
-
-                    warnings.warn(f"persist release failed: {exc}", stacklevel=2)
-        return result
+        batches = LeafBatches()
+        context = {"roots": self.roots, "allow_sql": self.allow_sql, "batches": batches}
+        result = graphql_sync(
+            self.schema,
+            query,
+            root_value=root_value,
+            context_value=context,
+            variable_values=dict(variables or {}),
+            middleware=middleware,
+        )
+        return result, batches
 
 
 class _MetricsMiddleware:

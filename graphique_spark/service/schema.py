@@ -21,7 +21,10 @@ reached via the untyped ``column(name:)`` field, as in the reference
 from __future__ import annotations
 
 import re
+import time
 import warnings
+from datetime import timedelta
+from functools import partial
 from typing import Any, Mapping
 
 from graphql import (
@@ -39,7 +42,10 @@ from graphql import (
     GraphQLSchema,
     GraphQLString,
     Undefined,
+    get_named_type,
 )
+from graphql.execution.collect_fields import collect_sub_fields
+from graphql.execution.values import get_argument_values
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
@@ -51,31 +57,166 @@ from graphique_spark.service.scalars import JSON, BigInt, Duration, graphql_type
 _NAME = re.compile(r"[_A-Za-z][_0-9A-Za-z]*$")
 
 
-def _with_cache(fn):
-    """Persist a table field's frame when it has multiple sub-selections so
-    sibling fields share one materialization — the reference's
-    ``resolve()``/``.cache()`` trick (reference interface.py:83-91). The
-    service unpersists everything recorded in ``context['persisted']`` at
-    request end."""
+# ---------------------------------------------------------------------------
+# leaf batches: at most two Spark jobs per table node
+#
+# The reference materializes a table node once for all of its sub-fields
+# (reference interface.py:83-91). Here the node's scalar leaves are compiled
+# instead into one aggregate job (every aggregate leaf of ``columns { c {..} }``
+# and ``alias: column(..) {..}`` plus a table ``count`` sibling) and one values
+# job per distinct ``values(limit:)`` — one columnar pass answers many fields.
+# A job is planned when its table node resolves and runs when the first of its
+# leaves reads it; planning runs nothing.
+
+_MISS = object()
+
+
+class _Job:
+    """One Spark job answering several leaves; ``collect()`` returns one
+    answer per leaf, in plan order."""
+
+    __slots__ = ("collect", "answers", "error", "seconds")
+
+    def __init__(self, collect):
+        self.collect = collect
+        self.answers = self.error = self.seconds = None
+
+    def answer(self, i: int):
+        if self.seconds is None:
+            start = time.perf_counter()
+            try:
+                self.answers = self.collect()
+            except _TooManyValues as exc:  # the cap holds for every leaf alike
+                self.error = exc
+            except Exception:  # noqa: BLE001  each leaf falls back to its own job
+                pass
+            self.seconds = time.perf_counter() - start
+        if self.error is not None:
+            raise self.error
+        return _MISS if self.answers is None else self.answers[i]
+
+
+class LeafBatches:
+    """Per-request cache: a leaf's response path -> (job, position)."""
+
+    def __init__(self):
+        self.leaves: dict[tuple, tuple[_Job, int]] = {}
+        #: (node path, leaf count, jobs) of every node that batched leaves
+        self.nodes: list[tuple[tuple, int, list[_Job]]] = []
+        self.root_planned = False
+
+    def metrics(self) -> list[dict]:
+        return [
+            {
+                "path": list(path),
+                "leaves": leaves,
+                "duration": str(timedelta(seconds=sum(j.seconds or 0.0 for j in jobs))),
+            }
+            for path, leaves, jobs in self.nodes
+        ]
+
+
+def _batched(info):
+    """This leaf's answer from its node's batch, or ``_MISS`` when it was not
+    batched or the batch failed: the leaf then runs its own job, so one bad
+    leaf nulls only itself (partial results)."""
+    batches = (info.context or {}).get("batches")
+    hit = batches.leaves.get(tuple(info.path.as_list())) if batches else None
+    return hit[0].answer(hit[1]) if hit else _MISS
+
+
+def _agg_answers(ds, exprs):
+    [row] = ds.df.select(*exprs).collect()
+    return list(row)
+
+
+def _values_answers(ds, cols, limit):
+    rows = _capped_rows(ds, ds.df.select(*cols), limit)
+    return [[r[i] for r in rows] for i in range(len(cols))]
+
+
+def _plan_node(ds, info, path=None, node_type=None, field_nodes=None) -> None:
+    """Plan the leaf batches of the table node ``ds`` (by default the field
+    being resolved). Anything unusual plans no batch and leaves each leaf to
+    its own job."""
+    batches = (info.context or {}).get("batches")
+    if batches is None or not isinstance(ds, Dataset):
+        return
+    path = tuple(info.path.as_list()) if path is None else path
+
+    def children(parent_type, nodes):
+        """(response key, field name, field, field nodes) of each sub-field."""
+        parent_type = get_named_type(parent_type)
+        fields = collect_sub_fields(
+            info.schema, info.fragments, info.variable_values, parent_type, nodes
+        )
+        for key, sub in fields.items():
+            field = parent_type.fields.get(sub[0].name.value)
+            if field is not None:
+                yield key, sub[0].name.value, field, sub
+
+    def args(field, sub):
+        return _given(get_argument_values(field, sub[0], info.variable_values))
+
+    aggs: list[tuple[tuple, Column]] = []
+    values: dict[Any, list[tuple[tuple, Column]]] = {}
+
+    def leaves(col, col_type, nodes, prefix):
+        for key, kind, field, sub in children(col_type, nodes):
+            if kind == "values":
+                limit = args(field, sub).get("limit")
+                values.setdefault(limit, []).append((prefix + (key,), col))
+            elif kind in _BATCHABLE_AGGS:
+                aggs.append((prefix + (key,), _BATCHABLE_AGGS[kind](col, **args(field, sub))))
+
+    try:
+        for key, name, field, sub in children(
+            node_type or info.return_type, field_nodes or info.field_nodes
+        ):
+            if name == "count" and not getattr(ds, "path", None):  # roots count footers
+                aggs.append((path + (key,), F.count(F.lit(1))))
+            elif name == "column":
+                leaves(_column_expr(ds, **args(field, sub)), field.type, sub, path + (key,))
+            elif name == "columns":
+                for col_key, col, col_field, col_sub in children(field.type, sub):
+                    leaves(F.col(col), col_field.type, col_sub, path + (key, col_key))
+    except Exception:  # noqa: BLE001  (e.g. an unparsable cast: the leaf reports it)
+        return
+    jobs = [(aggs, partial(_agg_answers, ds, [e for _, e in aggs]))]
+    for limit, group in values.items():
+        jobs.append((group, partial(_values_answers, ds, [c for _, c in group], limit)))
+    # a lone leaf gains nothing from batching
+    planned = [(group, _Job(collect)) for group, collect in jobs if len(group) > 1]
+    for group, job in planned:
+        batches.leaves.update((leaf, (job, i)) for i, (leaf, _) in enumerate(group))
+    if planned:
+        batches.nodes.append((path, sum(len(g) for g, _ in planned), [j for _, j in planned]))
+
+
+def _plan_batches(fn):
+    """Wrap a table field's resolver to plan the leaf batches of its node."""
 
     def wrapper(ds, info, **kwargs):
         out = fn(ds, info, **kwargs)
-        node = info.field_nodes[0]
-        selections = node.selection_set.selections if node.selection_set else []
-        if len(selections) > 1 and isinstance(out, Dataset):
-            context = info.context or {}
-            registry = context.get("persist_registry")
-            if registry is not None:
-                # refcounted + lock-serialized: concurrent requests caching
-                # the same plan share one entry instead of racing Spark's
-                # CacheManager (see service._PersistRegistry)
-                context.setdefault("persisted", []).append(registry.acquire(out))
-            else:
-                out = out.persist()
-                context.setdefault("persisted", []).append(out)
+        _plan_node(out, info)
         return out
 
     return wrapper
+
+
+def _plan_root_batches(fn):
+    """Single-root mode: the query root is itself a table node, with no
+    resolver of its own; the first top-level field plans its batches."""
+
+    def wrapper(ds, info, **kwargs):
+        batches = (info.context or {}).get("batches")
+        if batches is not None and not batches.root_planned:
+            batches.root_planned = True
+            _plan_node(ds, info, (), info.parent_type, [info.operation])
+        return fn(ds, info, **kwargs)
+
+    return wrapper
+
 
 StringList = GraphQLList(GraphQLNonNull(GraphQLString))
 
@@ -200,32 +341,9 @@ CAST_FIELD = GraphQLInputObjectType(
 _column_types: dict[str, GraphQLObjectType] = {}
 
 
-def _col_df(source):
-    ds, name = source
-    return ds.df.select(name)
-
-
-def _col_agg(fn):
-    def resolver(source, info, **args):
-        # batched fast path: the `columns` resolver may have computed every
-        # scalar-aggregate leaf of the selection in ONE Spark job (see
-        # _batch_column_aggs); the cache is keyed by the alias-aware
-        # response path (column key, leaf key)
-        cache = getattr(source, "_agg_cache", None)
-        if cache is not None and info.path.prev is not None:
-            key = (info.path.prev.key, info.path.key)
-            if key in cache:
-                return cache[key]
-        ds, name = source
-        [[value]] = ds.df.select(fn(F.col(name), **_given(args))).collect()
-        return value
-
-    return resolver
-
-
-#: leaf field name -> aggregate-expression factory, mirroring the per-leaf
-#: resolvers in ``column_type`` exactly (same functions, same arguments) so
-#: a batched value is bit-identical to the per-leaf job's value.
+#: leaf field name -> aggregate-expression factory. The per-leaf resolvers
+#: (``_col_agg``) and the node batch (``_plan_node``) both build their
+#: expressions from this one table, so a batched value is the per-leaf value.
 _BATCHABLE_AGGS: dict[str, Any] = {
     "count": lambda c: F.count(c),
     "nunique": lambda c, approx=False: (
@@ -246,98 +364,30 @@ _BATCHABLE_AGGS: dict[str, Any] = {
 }
 
 
-class _ColSource(tuple):
-    """(ds, name) leaf source that can carry the batched-aggregate cache."""
+def _col_agg(kind: str):
+    factory = _BATCHABLE_AGGS[kind]
 
-    _agg_cache = None
+    def resolver(source, info, **args):
+        value = _batched(info)
+        if value is _MISS:
+            ds, name = source
+            [[value]] = ds.df.select(factory(F.col(name), **_given(args))).collect()
+        return value
 
-
-class _ColumnsBatch:
-    """Source emitted by the ``columns`` resolver: the Dataset plus the
-    pre-computed scalar-aggregate leaves of the whole selection."""
-
-    __slots__ = ("ds", "cache")
-
-    def __init__(self, ds, cache):
-        self.ds = ds
-        self.cache = cache
+    return resolver
 
 
-def _batch_column_aggs(ds, info) -> dict:
-    """One Spark job for every scalar-aggregate leaf under ``columns``.
-
-    Each ``_col_agg`` leaf is otherwise its own ``select(...).collect()``
-    — a full pass over the table per leaf (11 passes for the typical
-    stats selection; at scale, 11 scans where one suffices). Collect the
-    plain FieldNode leaves whose name has a factory above into a single
-    ``select`` and hand the row to the leaf resolvers via the cache.
-    Anything unusual — fragments, directives, argument errors, or a
-    failing batch job — falls back to the per-leaf path, preserving
-    GraphQL partial-result semantics."""
-    from graphql.execution.values import get_argument_values
-    from graphql.language import FieldNode
-
-    parent_type = info.return_type
-    while hasattr(parent_type, "of_type"):
-        parent_type = parent_type.of_type
-    if not isinstance(parent_type, GraphQLObjectType):
-        return {}
-    exprs: list[Column] = []
-    keys: list[tuple[str, str]] = []
-    for node in info.field_nodes:
-        if node.selection_set is None:
-            continue
-        for col_node in node.selection_set.selections:
-            if not isinstance(col_node, FieldNode) or col_node.directives:
-                continue
-            if col_node.selection_set is None:
-                continue
-            col_field = parent_type.fields.get(col_node.name.value)
-            if col_field is None:
-                continue
-            col_type = col_field.type
-            while hasattr(col_type, "of_type"):
-                col_type = col_type.of_type
-            if not isinstance(col_type, GraphQLObjectType):
-                continue
-            col_key = col_node.alias.value if col_node.alias else col_node.name.value
-            colname = col_node.name.value
-            for leaf in col_node.selection_set.selections:
-                if not isinstance(leaf, FieldNode) or leaf.directives:
-                    continue
-                factory = _BATCHABLE_AGGS.get(leaf.name.value)
-                leaf_field = col_type.fields.get(leaf.name.value)
-                if factory is None or leaf_field is None:
-                    continue
-                try:
-                    args = get_argument_values(leaf_field, leaf, info.variable_values)
-                    expr = factory(F.col(colname), **_given(args))
-                except Exception:  # noqa: BLE001  (leaf falls back)
-                    continue
-                leaf_key = leaf.alias.value if leaf.alias else leaf.name.value
-                keys.append((col_key, leaf_key))
-                exprs.append(expr.alias(f"__agg{len(exprs)}"))
-    if len(exprs) < 2:
-        return {}  # a single leaf gains nothing from batching
-    try:
-        [row] = ds.df.select(*exprs).collect()
-    except Exception:  # noqa: BLE001  (per-leaf jobs preserve partial results)
-        return {}
-    return {key: row[i] for i, key in enumerate(keys)}
+def _resolve_count(ds, info):
+    value = _batched(info)
+    return ds.count() if value is _MISS else value
 
 
-def _resolve_columns(ds, info):
-    return _ColumnsBatch(ds, _batch_column_aggs(ds, info))
-
-
-def _column_source(src, name):
-    """Per-column source: thread the batch cache through when the parent
-    was the batching ``columns`` resolver; plain (ds, name) otherwise."""
-    if isinstance(src, _ColumnsBatch):
-        out = _ColSource((src.ds, name))
-        out._agg_cache = src.cache
-        return out
-    return (src, name)
+def _column_expr(ds, name, cast=None, index=None, **kw):
+    """The ``column(name:, cast:, try:, index:)`` expression over ``ds``."""
+    col = ds.column(name, None if index is None else list(index))
+    if cast is not None:
+        col = col.try_cast(cast) if kw.get("try") else col.cast(cast)
+    return col
 
 
 #: conf key capping driver-side column materialization (values/distinct/
@@ -348,13 +398,17 @@ MAX_VALUES_CONF = "spark.graphique.maxValues"
 MAX_VALUES_DEFAULT = 100_000
 
 
+class _TooManyValues(ValueError):
+    """The ``maxValues`` cap: every ``values`` leaf of a batch raises it."""
+
+
 def _capped_rows(ds, df, limit):
     if limit not in (Undefined, None):
         return df.limit(limit).collect()
     cap = int(ds.df.sparkSession.conf.get(MAX_VALUES_CONF, str(MAX_VALUES_DEFAULT)))
     rows = df.limit(cap + 1).collect()
     if len(rows) > cap:
-        raise ValueError(
+        raise _TooManyValues(
             f"column materialization exceeds {cap} rows; pass `limit:` or "
             f"raise the {MAX_VALUES_CONF} conf"
         )
@@ -362,8 +416,11 @@ def _capped_rows(ds, df, limit):
 
 
 def _resolve_values(source, info, limit=Undefined):
-    ds, _ = source
-    return [r[0] for r in _capped_rows(ds, _col_df(source), limit)]
+    values = _batched(info)
+    if values is _MISS:
+        ds, name = source
+        values = [r[0] for r in _capped_rows(ds, ds.df.select(name), limit)]
+    return values
 
 
 def _resolve_distinct(source, info, limit=Undefined):
@@ -400,41 +457,39 @@ def column_type(scalar: GraphQLScalarType, numeric: bool, boolean: bool = False)
             args={"limit": GraphQLArgument(GraphQLInt)},
             resolve=_resolve_values,
         ),
-        "count": GraphQLField(BigInt, resolve=_col_agg(F.count)),
+        "count": GraphQLField(BigInt, resolve=_col_agg("count")),
         "nunique": GraphQLField(
             BigInt,
             args={"approx": GraphQLArgument(GraphQLBoolean, default_value=False)},
-            resolve=lambda s, i, approx=False: _col_agg(
-                F.approx_count_distinct if approx else F.count_distinct
-            )(s, i),
+            resolve=_col_agg("nunique"),
         ),
         "distinct": GraphQLField(
             set_type(scalar),
             args={"limit": GraphQLArgument(GraphQLInt)},
             resolve=_resolve_distinct,
         ),
-        "first": GraphQLField(scalar, resolve=_col_agg(lambda c: F.first(c, ignorenulls=True))),
-        "last": GraphQLField(scalar, resolve=_col_agg(lambda c: F.last(c, ignorenulls=True))),
-        "min": GraphQLField(scalar, resolve=_col_agg(F.min)),
-        "max": GraphQLField(scalar, resolve=_col_agg(F.max)),
-        "mode": GraphQLField(scalar, resolve=_col_agg(F.mode)),
+        "first": GraphQLField(scalar, resolve=_col_agg("first")),
+        "last": GraphQLField(scalar, resolve=_col_agg("last")),
+        "min": GraphQLField(scalar, resolve=_col_agg("min")),
+        "max": GraphQLField(scalar, resolve=_col_agg("max")),
+        "mode": GraphQLField(scalar, resolve=_col_agg("mode")),
     }
     if numeric:
         fields.update(
-            sum=GraphQLField(scalar, resolve=_col_agg(F.sum)),
-            mean=GraphQLField(GraphQLFloat, resolve=_col_agg(F.avg)),
-            std=GraphQLField(GraphQLFloat, resolve=_col_agg(F.stddev_samp)),
-            var=GraphQLField(GraphQLFloat, resolve=_col_agg(F.var_samp)),
+            sum=GraphQLField(scalar, resolve=_col_agg("sum")),
+            mean=GraphQLField(GraphQLFloat, resolve=_col_agg("mean")),
+            std=GraphQLField(GraphQLFloat, resolve=_col_agg("std")),
+            var=GraphQLField(GraphQLFloat, resolve=_col_agg("var")),
             quantile=GraphQLField(
                 GraphQLList(GraphQLFloat),
                 args={"q": GraphQLArgument(GraphQLNonNull(GraphQLList(GraphQLNonNull(GraphQLFloat))))},
-                resolve=lambda s, i, q: _col_agg(lambda c: F.percentile(c, F.array(*map(F.lit, q))))(s, i),
+                resolve=_col_agg("quantile"),
             ),
         )
     if boolean:
         fields.update(
-            any=GraphQLField(GraphQLBoolean, resolve=_col_agg(F.bool_or)),
-            all=GraphQLField(GraphQLBoolean, resolve=_col_agg(F.bool_and)),
+            any=GraphQLField(GraphQLBoolean, resolve=_col_agg("any")),
+            all=GraphQLField(GraphQLBoolean, resolve=_col_agg("all")),
         )
     _column_types[name] = GraphQLObjectType(name, fields)
     return _column_types[name]
@@ -461,8 +516,7 @@ def _jsonable(value):
 
 
 def _resolve_json_values(source, info, limit=Undefined):
-    ds, name = source
-    return [_jsonable(r[0]) for r in _capped_rows(ds, ds.df.select(name), limit)]
+    return [_jsonable(v) for v in _resolve_values(source, info, limit)]
 
 
 def _resolve_unnest(source, info):
@@ -491,7 +545,7 @@ def array_column_type(dtype: T.ArrayType) -> GraphQLObjectType:
                     args={"limit": GraphQLArgument(GraphQLInt)},
                     resolve=_resolve_json_values,
                 ),
-                "count": GraphQLField(BigInt, resolve=_col_agg(F.count)),
+                "count": GraphQLField(BigInt, resolve=_col_agg("count")),
                 "length": GraphQLField(GraphQLList(BigInt), resolve=_resolve_lengths),
                 "unnest": GraphQLField(inner, resolve=_resolve_unnest),
             },
@@ -516,7 +570,7 @@ def struct_column_type() -> GraphQLObjectType:
                     args={"limit": GraphQLArgument(GraphQLInt)},
                     resolve=_resolve_json_values,
                 ),
-                "count": GraphQLField(BigInt, resolve=_col_agg(F.count)),
+                "count": GraphQLField(BigInt, resolve=_col_agg("count")),
                 "names": GraphQLField(
                     StringList, resolve=lambda s, i: list(_dtype(s).names)
                 ),
@@ -561,7 +615,7 @@ def map_column_type() -> GraphQLObjectType:
                     args={"limit": GraphQLArgument(GraphQLInt)},
                     resolve=_resolve_json_values,
                 ),
-                "count": GraphQLField(BigInt, resolve=_col_agg(F.count)),
+                "count": GraphQLField(BigInt, resolve=_col_agg("count")),
                 "keys": GraphQLField(
                     StringList,
                     args={"limit": GraphQLArgument(GraphQLInt)},
@@ -618,10 +672,18 @@ class SchemaBuilder:
             self._typename_roots[self.tables[name].name] = name
         if len(self.roots) == 1:
             [(name, _)] = self.roots.items()
-            fields = dict(self.tables[name].fields)
+            fields = {
+                key: GraphQLField(
+                    f.type, f.args, _plan_root_batches(f.resolve), description=f.description
+                )
+                for key, f in self.tables[name].fields.items()
+            }
         else:
             fields = {
-                name: GraphQLField(table, resolve=(lambda n: lambda s, i: i.context["roots"][n])(name))
+                name: GraphQLField(
+                    table,
+                    resolve=_plan_batches((lambda n: lambda s, i: i.context["roots"][n])(name)),
+                )
                 for name, table in self.tables.items()
             }
         fields.update(self.federation_fields())
@@ -670,7 +732,7 @@ class SchemaBuilder:
 
     def _resolve_entities(self, source, info, representations):
         out = []
-        for rep in representations:
+        for i, rep in enumerate(representations):
             typename = rep["__typename"]
             root_name = self._typename_roots[typename]
             if root_name not in self.keys:
@@ -682,6 +744,8 @@ class SchemaBuilder:
             resolved = ds.filter(**filters)
             resolved._gql_typename = typename
             out.append(resolved)
+            path = (*info.path.as_list(), i)
+            _plan_node(resolved, info, path, self.tables[root_name])
         return out
 
     # -- sub-types ---------------------------------------------------------
@@ -691,7 +755,7 @@ class SchemaBuilder:
         for field in _valid_fields(schema):
             fields[field.name] = GraphQLField(
                 spark_column_type(field.dataType),
-                resolve=(lambda n: lambda src, info: _column_source(src, n))(field.name),
+                resolve=(lambda n: lambda ds, info: (ds, n))(field.name),
             )
         return GraphQLObjectType(f"{name.capitalize()}Columns", fields)
 
@@ -733,7 +797,7 @@ class SchemaBuilder:
         def fields():
             table = self.tables[name]
             out: dict[str, GraphQLField] = {
-                "count": GraphQLField(BigInt, resolve=lambda ds, i: ds.count()),
+                "count": GraphQLField(BigInt, resolve=_resolve_count),
                 "any": GraphQLField(
                     GraphQLBoolean,
                     args={"limit": GraphQLArgument(GraphQLInt, default_value=1)},
@@ -765,7 +829,7 @@ class SchemaBuilder:
                 "optional": GraphQLField(table, resolve=lambda ds, i: ds),
                 "toSql": GraphQLField(GraphQLString, resolve=lambda ds, i: ds.to_sql()),
                 "columns": GraphQLField(
-                    self.columns_type(name, schema), resolve=_resolve_columns
+                    self.columns_type(name, schema), resolve=lambda ds, i: ds
                 ),
                 "column": GraphQLField(
                     generic_column_type(),
@@ -1027,7 +1091,7 @@ class SchemaBuilder:
             }
             for fld in out.values():
                 if fld.type is table:
-                    fld.resolve = _with_cache(fld.resolve)
+                    fld.resolve = _plan_batches(fld.resolve)
             return out
 
         table = GraphQLObjectType(tname, fields)
@@ -1053,12 +1117,8 @@ class SchemaBuilder:
         )
 
     @staticmethod
-    def _resolve_column(ds: Dataset, info, name: str, cast=Undefined, index=Undefined, **kw):
-        col = ds.column(name, None if index in (Undefined, None) else list(index))
-        out = "_col"
-        if cast is not Undefined and cast is not None:
-            col = col.try_cast(cast) if kw.get("try") else col.cast(cast)
-        return (ds.select(col.alias(out)), out)
+    def _resolve_column(ds: Dataset, info, **args):
+        return (ds.select(_column_expr(ds, **_given(args)).alias("_col")), "_col")
 
     @staticmethod
     def _resolve_asof(

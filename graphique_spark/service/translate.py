@@ -19,7 +19,7 @@ from graphique_spark.dataset import Dataset
 
 class _Info:
     """Minimal resolver info: enough for the schema's table resolvers
-    (field_nodes for the cache heuristic, context for permissions)."""
+    (context for permissions; no leaf batches, so nothing is planned)."""
 
     def __init__(self, node, context):
         self.field_nodes = [node]
@@ -43,7 +43,6 @@ def compile_dataset(service, query: str, allow_sql: bool | None = None) -> Datas
     context = {
         "roots": service.roots,
         "allow_sql": service.allow_sql if allow_sql is None else allow_sql,
-        "persisted": [],
     }
 
     if len(service.roots) == 1:
@@ -57,27 +56,23 @@ def compile_dataset(service, query: str, allow_sql: bool | None = None) -> Datas
         parent = root_field.type
         selections = node.selection_set.selections if node.selection_set else []
 
-    try:
-        while True:
-            nxt = None
-            for child in selections:
-                field = parent.fields.get(child.name.value)
-                # a table-typed field: an object type exposing the operator surface
-                if (
-                    field is not None
-                    and isinstance(field.type, GraphQLObjectType)
-                    and "toSql" in field.type.fields
-                ):
-                    nxt = (child, field)
-                    break
-            if nxt is None:
-                return ds
-            node, field = nxt
-            args = get_argument_values(field, node, {})
-            out = field.resolve(ds, _Info(node, context), **args)
-            ds = out if isinstance(out, Dataset) else Dataset(out)
-            parent = field.type
-            selections = node.selection_set.selections if node.selection_set else []
-    finally:
-        for persisted in context["persisted"]:  # compile-only: nothing should stay marked
-            persisted.unpersist()
+    while True:
+        nxt = None
+        for child in selections:
+            field = parent.fields.get(child.name.value)
+            # a table-typed field: an object type exposing the operator surface
+            if (
+                field is not None
+                and isinstance(field.type, GraphQLObjectType)
+                and "toSql" in field.type.fields
+            ):
+                nxt = (child, field)
+                break
+        if nxt is None:
+            return ds
+        node, field = nxt
+        args = get_argument_values(field, node, {})
+        out = field.resolve(ds, _Info(node, context), **args)
+        ds = out if isinstance(out, Dataset) else Dataset(out)
+        parent = field.type
+        selections = node.selection_set.selections if node.selection_set else []

@@ -439,6 +439,21 @@ def test_federation_entities_and_sdl(tables):
         {"__typename": "NationTable", "count": 1},
         {"__typename": "RegionTable", "count": 1},
     ]
+    # each entity is a table node of its own: its leaves share one job
+    out = svc.run(
+        """{ _entities(representations: [{__typename: "NationTable", n_nationkey: 0},
+                                         {__typename: "RegionTable", r_regionkey: 1}]) {
+             ... on NationTable { count columns { n_regionkey { max } } }
+             ... on RegionTable { count r: column(name: "r_regionkey") { min } } } }""",
+        metrics=True,
+    )
+    region = svc.execute('{ nation { filter(n_nationkey: {eq: [0]}) { columns { n_regionkey { max } } } } }')
+    assert out["data"]["_entities"] == [
+        {"count": 1, "columns": region["nation"]["filter"]["columns"]},
+        {"count": 1, "r": {"min": 1}},
+    ]
+    batches = out["extensions"]["metrics"]["execution"]["batches"]
+    assert [(b["path"], b["leaves"]) for b in batches] == [(["_entities", 0], 2), (["_entities", 1], 2)]
 
 
 def test_typed_array_column_fields(tables):
@@ -764,18 +779,16 @@ def test_where_column_name_is_reserved(spark):
 
 
 def test_concurrent_request_persist_lifecycle(service, spark):
-    """Cache lifecycle under concurrent requests (SURVEY §7): N overlapping
-    execute() calls on one service, each triggering the _with_cache persist
-    (a table field with multiple sub-selections), including identical
-    documents from different threads — Spark's CacheManager dedups cached
-    plans by canonicalized plan, so one request's request-end unpersist can
-    race another request still using the same plan's cache. Correctness
-    must hold (cache is transparent; losers recompute) and no persisted
-    blocks may survive once every request finishes."""
+    """Concurrent requests persist nothing (SURVEY §7): N overlapping
+    execute() calls on one service, each with a table field of several
+    sub-selections whose leaves share batch jobs, including identical
+    documents from different threads. Every answer equals its serial
+    execution, the CacheManager stays empty throughout the burst, and no
+    persisted blocks survive once every request finishes."""
     import concurrent.futures
 
     queries = [
-        # two sub-selections under filter -> persist path
+        # two sub-selections under filter -> one batch job for the leaves
         """{ lineitem { filter(l_returnflag: {eq: ["R"]}) {
               count columns { l_quantity { sum } } } } }""",
         """{ orders { filter(o_orderstatus: {eq: ["F"]}) {
@@ -809,12 +822,15 @@ def test_concurrent_request_persist_lifecycle(service, spark):
     was_empty = cache_manager.isEmpty()
 
     def run(i):
-        return i % len(queries), service.execute(queries[i % len(queries)])
+        data = service.execute(queries[i % len(queries)])
+        return i % len(queries), data, cache_manager.isEmpty()
 
     with concurrent.futures.ThreadPoolExecutor(max_workers=8) as pool:
         results = list(pool.map(run, range(24)))
-    for qi, data in results:
+    for qi, data, _ in results:
         assert data == expected[qi]
+    if was_empty:
+        assert all(empty for _, _, empty in results)
 
     assert settled_rdd_count() <= baseline_rdds
     if was_empty:
@@ -822,10 +838,9 @@ def test_concurrent_request_persist_lifecycle(service, spark):
 
 
 def test_failing_resolver_releases_persisted_cache(service, spark):
-    """A request whose parent table field persisted (multiple
-    sub-selections) but whose sibling resolver then errors must still
-    release its cache entry at request end — partial results and raising
-    documents share the finally-path release in service._run."""
+    """A request with a table field of several sub-selections whose
+    sibling resolver errors leaves no persisted blocks behind: the
+    service persists nothing, partial results included."""
     jsc = spark.sparkContext._jsc
     baseline = jsc.getPersistentRDDs().size()
     out = service.run(
@@ -842,8 +857,8 @@ def test_failing_resolver_releases_persisted_cache(service, spark):
     assert jsc.getPersistentRDDs().size() <= baseline
 
 
-# --- persist-registry thread stress (VERDICT r09 item 7) ---------------
-# The CacheManager race the r09 _PersistRegistry fixed was found by a
+# --- concurrent-request thread stress (VERDICT r09 item 7) --------------
+# A CacheManager race under request-scoped persists was once found by a
 # fixed 3-document burst one size smaller than this; randomizing the
 # document mix (chained filter->slice levels, shared roots, duplicate
 # plans across threads) probes the interleavings a fixed list can miss.
@@ -853,8 +868,8 @@ _STRESS_ROOTS = {
     "orders": ("o_orderstatus", ["F", "O", "P"], "o_totalprice"),
     "customer": ("c_mktsegment", ["BUILDING", "AUTOMOBILE"], "c_acctbal"),
 }
-# join targets per root, so stress documents can put JOIN plans (broadcast
-# or shuffle shapes, non-trivially-equal canonicalizations) in the registry
+# join targets per root, so stress documents run JOIN plans (broadcast or
+# shuffle shapes) under the same concurrent traffic
 _STRESS_JOINS = {
     "lineitem": ("orders", "l_orderkey", "o_orderkey"),
     "orders": ("customer", "o_custkey", "c_custkey"),
@@ -865,10 +880,9 @@ _STRESS_JOINS = {
 def _stress_doc(root, value_i, agg, limit, shape="filter_slice"):
     """One randomized request. ``shape`` widens the operator grammar
     (VERDICT r10 item 7) beyond filter->slice chains: group/join/window
-    stages put registry entries with non-trivially-equal plans (Aggregate,
-    Join, Window canonicalizations) under the same concurrent
-    acquire/release traffic. Every document is deterministic: filters pin
-    group keys to one value, leaves are order-insensitive aggregates."""
+    stages put Aggregate, Join and Window plans under the same concurrent
+    traffic. Every document is deterministic: filters pin group keys to
+    one value, leaves are order-insensitive aggregates."""
     col, values, num = _STRESS_ROOTS[root]
     value = values[value_i % len(values)]
     flt = f'filter({col}: {{eq: ["{value}"]}})'
@@ -897,9 +911,8 @@ def _stress_doc(root, value_i, agg, limit, shape="filter_slice"):
         return f"{{ {root} {{ {flt} {{ {inner} }} }} }}"
     inner = f"count columns {{ {num} {{ {agg} }} }}"
     if limit:
-        # a second nesting level with >=2 sub-selections persists BOTH the
-        # filtered plan and the sliced plan — nested acquire/release on
-        # overlapping entries
+        # a second nesting level with >=2 sub-selections: two table nodes
+        # batch their leaves over overlapping plans
         inner += f" slice(limit: {limit}) {{ count columns {{ {num} {{ min }} }} }}"
     return f"{{ {root} {{ {flt} {{ {inner} }} }} }}"
 
@@ -924,12 +937,11 @@ def _stress_doc(root, value_i, agg, limit, shape="filter_slice"):
 # randomized stress behind GRAPHIQUE_FULL_TESTS=1 (VERDICT r12 item 2)
 @slow_full
 def test_persist_registry_thread_stress(service, spark, docs):
-    """Randomized concurrent cache-lifecycle stress: 8 threads x 24
-    requests over a random document mix sharing roots (duplicate plans
-    guaranteed by the pigeonhole of 24 tasks over <=8 documents). Every
-    response must equal its serial execution, and once all requests
-    finish no persisted RDD blocks may survive — the refcounted registry
-    must end at zero no matter how acquires/releases interleaved."""
+    """Randomized concurrent stress: 8 threads x 24 requests over a random
+    document mix sharing roots (duplicate plans guaranteed by the
+    pigeonhole of 24 tasks over <=8 documents). Every response must equal
+    its serial execution, and once all requests finish no persisted RDD
+    blocks may survive and the CacheManager holds nothing new."""
     import concurrent.futures
     import math
     import time
@@ -979,3 +991,218 @@ def test_persist_registry_thread_stress(service, spark, docs):
     assert drained_rdd_count(baseline) <= baseline
     if was_empty:
         assert cache_manager.isEmpty()
+
+
+# --- leaf batches: at most two Spark jobs per table node ----------------
+
+
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted by a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"leaf-batches-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "leaf batch job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_GROUP_VALUES = """{{ lineitem {{ filter(l_returnflag: {{eq: ["R"]}}) {{
+    group(by: ["l_linestatus"], counts: "n",
+          aggregate: {{sum: [{{name: "l_quantity", alias: "q"}}]}}) {{
+      order(by: ["l_linestatus"]) {{ {leaves} }} }} }} }} }}"""
+
+
+def test_group_values_document_runs_one_values_job(service, spark, oracle):
+    """The three ``values`` leaves of a dashboard group_values document
+    share one job: the document runs the jobs of its one-leaf version."""
+    leaves = (
+        'columns { l_linestatus { values } } n: column(name: "n") { values } '
+        'q: column(name: "q") { values }'
+    )
+    service.execute(_GROUP_VALUES.format(leaves=leaves))  # warm the plans
+    data, jobs = _jobs(spark, lambda: service.execute(_GROUP_VALUES.format(leaves=leaves)))
+    one = "columns { l_linestatus { values } }"
+    _, one_leaf_jobs = _jobs(spark, lambda: service.execute(_GROUP_VALUES.format(leaves=one)))
+    assert jobs == one_leaf_jobs
+    order = data["lineitem"]["filter"]["group"]["order"]
+    rows = oracle.execute(
+        "SELECT l_linestatus, count(*), sum(l_quantity) FROM lineitem "
+        "WHERE l_returnflag = 'R' GROUP BY 1 ORDER BY 1"
+    ).fetchall()
+    assert order["columns"]["l_linestatus"]["values"] == [r[0] for r in rows]
+    assert order["n"]["values"] == [r[1] for r in rows]
+    assert order["q"]["values"] == pytest.approx([float(r[2]) for r in rows])
+
+
+def test_count_and_aggregate_siblings_run_one_job(service, spark, oracle):
+    """A table ``count``, a ``columns`` aggregate and an aliased ``column``
+    aggregate under one node are one select: the jobs of a lone count."""
+    doc = """{ lineitem { filter(l_returnflag: {eq: ["R"]}) {
+        count columns { l_quantity { sum } } t: column(name: "l_tax") { sum } } } }"""
+    lone = '{ lineitem { filter(l_returnflag: {eq: ["R"]}) { count } } }'
+    service.execute(doc)
+    data, jobs = _jobs(spark, lambda: service.execute(doc))
+    _, lone_jobs = _jobs(spark, lambda: service.execute(lone))
+    assert jobs == lone_jobs
+    [(n, qty, tax)] = oracle.execute(
+        "SELECT count(*), sum(l_quantity), sum(l_tax) FROM lineitem WHERE l_returnflag = 'R'"
+    ).fetchall()
+    got = data["lineitem"]["filter"]
+    assert got["count"] == n
+    assert got["columns"]["l_quantity"]["sum"] == pytest.approx(float(qty))
+    assert got["t"]["sum"] == pytest.approx(float(tax))
+
+
+def test_bad_batched_sibling_nulls_only_itself(service):
+    """A failing leaf in a batch fails the batch; every leaf then runs its
+    own job, so only the bad one is nulled (partial results)."""
+    doc = """{ orders { filter(o_orderstatus: {eq: ["P"]}) { order(by: ["o_orderkey"]) {
+        count columns { o_orderkey { values min } }
+        bad: column(name: "nope") { values }
+        price: column(name: "o_totalprice") { values max }
+        status: column(name: "o_orderstatus", cast: "int") { max } } } } }"""
+    out = service.run(doc)
+    node = out["data"]["orders"]["filter"]["order"]
+    # the unknown column fails the values batch at analysis; the ANSI cast
+    # fails the aggregate batch at run time
+    assert node.pop("bad") is None and node.pop("status") == {"max": None}
+    assert sorted(e["path"][3:] for e in out["errors"]) == [["bad"], ["status", "max"]]
+    alone = service.execute(
+        """{ orders { filter(o_orderstatus: {eq: ["P"]}) { order(by: ["o_orderkey"]) {
+            count columns { o_orderkey { values min } }
+            price: column(name: "o_totalprice") { values max } } } } }"""
+    )
+    assert node == alone["orders"]["filter"]["order"]
+
+
+def test_values_cap_raises_for_every_batched_leaf(spark, tables):
+    from graphique_spark.service import GraphQLService
+
+    svc = GraphQLService(tables["orders"])
+    spark.conf.set("spark.graphique.maxValues", "10")
+    try:
+        out = svc.run(
+            '{ columns { o_orderkey { values } o_totalprice { values } } '
+            'k: column(name: "o_custkey") { values } }'
+        )
+    finally:
+        spark.conf.unset("spark.graphique.maxValues")
+    assert out["data"] == {
+        "columns": {"o_orderkey": {"values": None}, "o_totalprice": {"values": None}},
+        "k": {"values": None},
+    }
+    assert sorted(e["path"][-2] for e in out["errors"]) == ["k", "o_orderkey", "o_totalprice"]
+    assert all("maxValues" in e["message"] for e in out["errors"])
+
+
+def test_mixed_values_limits_keep_their_row_counts(service):
+    data = service.execute(
+        """{ orders { order(by: ["o_orderkey"]) {
+            columns { o_orderkey { values(limit: 2) } o_totalprice { values(limit: 3) } }
+            k: column(name: "o_orderkey") { values(limit: 3) }
+            p: column(name: "o_totalprice") { values(limit: 2) } } } }"""
+    )["orders"]["order"]
+    keys, prices = data["columns"]["o_orderkey"]["values"], data["columns"]["o_totalprice"]["values"]
+    assert (len(keys), len(prices), len(data["k"]["values"]), len(data["p"]["values"])) == (2, 3, 3, 2)
+    assert data["k"]["values"][:2] == keys and data["p"]["values"] == prices[:2]
+
+
+def test_batched_nested_values_keep_json_form(spark):
+    """Array, struct and map ``values`` answered by a batch are exactly
+    what each leaf returns on its own."""
+    from graphique_spark import Dataset
+    from graphique_spark.service import GraphQLService
+
+    df = spark.createDataFrame(
+        [([1, 2], (1, "x"), {"a": 1.0}), (None, (2, None), {}), ([], None, None)],
+        "arr array<int>, st struct<a:int,b:string>, m map<string,double>",
+    )
+    svc = GraphQLService(Dataset(df))
+    leaves = [
+        "columns { arr { values } }",
+        "columns { st { values } }",
+        "columns { m { values } }",
+        'a: column(name: "arr") { values }',
+        's: column(name: "st") { values }',
+    ]
+    out = svc.run(f"{{ columns {{ arr {{ values }} st {{ values }} m {{ values }} }} "
+                  f"{' '.join(leaves[3:])} }}", metrics=True)
+    assert out["extensions"]["metrics"]["execution"]["batches"][0]["leaves"] == 5
+    batched = out["data"]
+    for doc in leaves:
+        [(key, alone)] = svc.execute(f"{{ {doc} }}").items()
+        if key == "columns":
+            [(key, alone)] = alone.items()
+            assert batched["columns"][key] == alone
+        else:
+            assert batched[key] == alone
+    assert batched["columns"]["arr"]["values"] == [[1, 2], None, []]
+    assert batched["columns"]["st"]["values"] == [{"a": 1, "b": "x"}, {"a": 2, "b": None}, None]
+    assert batched["columns"]["m"]["values"] == [{"a": 1.0}, {}, None]
+
+
+def test_unordered_slice_values_come_from_same_rows(spark):
+    """Sibling ``values`` of an unordered ``slice(limit:)`` over a
+    multi-partition frame are one job, so they read the same rows: a
+    nondeterministic column differs between jobs, never within one."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from graphique_spark import Dataset
+    from graphique_spark.service import GraphQLService
+
+    draw = F.udf(lambda: random.randrange(10**9), "long").asNondeterministic()
+    df = spark.range(0, 4000, numPartitions=8).withColumn("r", draw())
+    svc = GraphQLService(Dataset(df.withColumn("tens", F.col("r") * 10)))
+    data = svc.execute(
+        '{ slice(limit: 40) { columns { r { values } tens { values } } '
+        't: column(name: "tens") { values } } }'
+    )["slice"]
+    drawn = data["columns"]["r"]["values"]
+    assert len(drawn) == 40
+    assert data["columns"]["tens"]["values"] == [r * 10 for r in drawn] == data["t"]["values"]
+
+
+def test_compile_paths_run_no_job_and_persist_nothing(service, spark):
+    """``compile_dataset`` and a ``toSql`` request over a multi-child,
+    multi-leaf document run no Spark job, cache nothing and leave the
+    persistent RDDs as they were."""
+    from graphique_spark.service.translate import compile_dataset
+
+    jsc = spark.sparkContext._jsc
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache_manager.isEmpty()
+    rdds = jsc.getPersistentRDDs().size()
+    doc = """{ lineitem { filter(l_returnflag: {eq: ["R"]}) {
+        count columns { l_quantity { sum values } l_tax { max } }
+        group(by: ["l_linestatus"], counts: "n") {
+          n: column(name: "n") { values sum } columns { l_linestatus { values } } } } } }"""
+    sql, jobs = _jobs(spark, lambda: compile_dataset(service, doc).to_sql())
+    assert "GROUP BY" in sql.upper() and jobs == 0
+    to_sql = """{ lineitem { filter(l_returnflag: {eq: ["R"]}) { toSql
+        group(by: ["l_linestatus"], counts: "n") { toSql } order(by: ["l_tax"]) { toSql } } } }"""
+    data, jobs = _jobs(spark, lambda: service.execute(to_sql))
+    assert data["lineitem"]["filter"]["group"]["toSql"] and jobs == 0
+    assert jsc.getPersistentRDDs().size() == rdds
+    if was_empty:
+        assert cache_manager.isEmpty()
+
+
+def test_metrics_report_batches_per_table_node(service):
+    leaves = (
+        'columns { l_linestatus { values } } n: column(name: "n") { values } '
+        'q: column(name: "q") { values max }'
+    )
+    out = service.run(_GROUP_VALUES.format(leaves=leaves), metrics=True)
+    [batch] = out["extensions"]["metrics"]["execution"]["batches"]
+    assert batch["path"] == ["lineitem", "filter", "group", "order"]
+    assert batch["leaves"] == 3  # three values leaves; the lone max runs alone
+    hours, minutes, seconds = batch["duration"].split(":")
+    assert hours == "0" and minutes == "00" and 0 < float(seconds) < 60
