@@ -9,20 +9,50 @@
   query's bucket (and optionally neighboring probes). The scale path when
   query volume is high: the bucket join prunes the scan by ~2^planes.
 
-The dot product is a ``zip_with`` + ``aggregate`` higher-order expression —
-JVM-side, no Python. Elements are cast to double first so results are
-bit-reproducible across engines (float32 summation is not).
+Two ways to compute a cosine, chosen by where the other vector lives:
+
+* **Against driver-side vectors** (a query, centroids, a probe list):
+  :func:`brute_force_topk`, :func:`ivf_topk`, :func:`assign_clusters`,
+  :func:`lsh_ann_topk`, :func:`lsh_ann_topk_indexed` and the cell
+  assignment of :func:`ivf_knn_join` all call one numpy kernel,
+  :func:`_score`, under ``DataFrame.mapInArrow``. As Column expressions
+  every literal vector cost ``dim`` ``F.lit`` columns plus lambdas to
+  build (thousands of py4j calls for 16 centroids) and a row-by-row
+  higher-order-function (HOF) evaluation to run; the kernel ships the
+  vectors once per task and scores a whole Arrow batch per numpy step.
+  Filters, joins and the final ``orderBy(..).limit(k)`` stay in Spark.
+* **Column against column** (the pair stage of :func:`knn_join`,
+  :func:`knn_join_lsh` and the LSH blocking joins) and :func:`lsh_bucket`
+  stay ``zip_with`` + ``aggregate`` HOFs: the pairs come out of a join, so
+  there is no driver-side vector to ship, and the expression keeps the
+  join stage in the JVM.
+
+Both ways give the same doubles. Elements are cast to double first
+(float32 summation is not reproducible across engines), and
+:func:`_fold` sums every dot product left to right over the dimensions,
+the order of Spark's ``aggregate`` (a BLAS ``@`` product sums in another
+order). A cosine is NULL, as ``try_divide`` makes it, for a zero-norm
+vector, a NULL vector, a NULL element or a vector of another length.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+import sys
+from typing import Callable, Sequence
 
+import numpy as np
+import pyarrow as pa
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from graphique_spark.session import local_frame
+
+# the kernel's functions travel to Python workers by value: a worker needs
+# numpy and pyarrow, not this package, on its path
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _as_double(col: Column) -> Column:
@@ -55,27 +85,131 @@ def _cos_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.try_divide(dot(a, b), na * nb)
 
 
-def _cos_lit(v: Column, vn: Column, vec: Sequence[float]) -> Column:
-    """Cosine of a pre-cast double vector (norm ``vn``) against a
-    driver-side literal vector: the literal's norm is a Python float, so
-    each row evaluates ONE array aggregate — centroid-assignment loops
-    (k cells per row) otherwise recompute the row norm k times and fold
-    a dim-length literal aggregate per cell."""
-    import math
-
-    n = math.sqrt(sum(float(x) * float(x) for x in vec))
-    cv = F.array(*[F.lit(float(x)) for x in vec])
-    return F.try_divide(dot(v, cv), vn * F.lit(n))
-
-
 def _with_vec_norm(
     df: DataFrame, vec_col: str, v_name: str, n_name: str
 ) -> DataFrame:
     """Attach the pre-cast double vector and its norm as columns — the
-    per-row hoist :func:`_cos_pre` / :func:`_cos_lit` consume."""
+    per-row hoist :func:`_cos_pre` consumes."""
     return df.withColumn(v_name, F.col(vec_col).cast("array<double>")).withColumn(
         n_name, norm(F.col(v_name))
     )
+
+
+def _fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``sum(a[..., j] * b[..., j])`` over the last axis, left to right —
+    the summation order of Spark's ``aggregate`` HOF, so the kernel, the
+    driver-side folds and the Column paths agree bit for bit. The other
+    axes broadcast: rows × 1 × dim against targets × dim is a rows ×
+    targets matrix of dot products."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a.shape[-1]):
+        acc = acc + a[..., j] * b[..., j]
+    return acc
+
+
+def _rows(arr: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """An Arrow list array as an (n, dim) float64 matrix, plus the mask of
+    rows that are not NULL, have exactly ``dim`` elements and no NULL
+    element — every other row gets a NULL cosine (``zip_with`` pads the
+    shorter side with NULLs). Those rows are zero in the matrix."""
+    off = arr.offsets.to_numpy()
+    ok = (np.diff(off) == dim) & arr.is_valid().to_numpy(zero_copy_only=False)
+    if not ok.any():
+        return np.zeros((len(arr), dim)), ok
+    idx = np.where(ok[:, None], off[:-1, None] + np.arange(dim), 0)
+    vals = arr.values
+    m = vals.to_numpy(zero_copy_only=False).astype(np.float64)[idx]
+    if vals.null_count:
+        ok &= ~vals.is_null().to_numpy(zero_copy_only=False)[idx].any(axis=1)
+    m[~ok] = 0.0
+    return m, ok
+
+
+def _cosines(
+    arr: pa.Array, targets: Sequence[Sequence[float]]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Rows × targets cosines of a vector column batch against driver-side
+    vectors, and the mask of NULL ones: ``try_divide(dot, |row| * |t|)``
+    with :func:`_fold` sums, so a zero denominator or an unusable row (see
+    :func:`_rows`) is NULL."""
+    cos = np.zeros((len(arr), len(targets)))
+    null = np.ones(cos.shape, dtype=bool)
+    for dim in {len(t) for t in targets}:
+        cols = [i for i, t in enumerate(targets) if len(t) == dim]
+        tv = np.array([targets[i] for i in cols], dtype=np.float64)
+        tv = tv.reshape(len(cols), dim)
+        v, ok = _rows(arr, dim)
+        den = np.sqrt(_fold(v, v))[:, None] * np.sqrt(_fold(tv, tv))
+        bad = ~ok[:, None] | (den == 0)
+        cos[:, cols] = _fold(v[:, None, :], tv) / np.where(bad, 1.0, den)
+        null[:, cols] = bad
+    return cos, null
+
+
+def _ranked(cos: np.ndarray, null: np.ndarray, rank: np.ndarray) -> np.ndarray:
+    """Per row, the target indices in Spark's descending order of
+    ``struct(cos, cid)``: a NULL cosine below every number, NaN above
+    (Spark's double order), equal cosines by ``rank`` descending."""
+    cls = np.where(null, 0, np.where(np.isnan(cos), 2, 1))
+    val = np.where(cls == 1, cos, 0.0)
+    return np.lexsort((np.broadcast_to(rank, cos.shape), val, cls), axis=-1)[:, ::-1]
+
+
+def _cells(cids: Sequence) -> tuple[list, np.ndarray]:
+    """Distinct centroid ids in ascending order, and each centroid's
+    position among them: the cell label the kernel emits and the rank
+    :func:`_ranked` breaks ties by."""
+    labels = sorted(set(cids))
+    pos = {c: i for i, c in enumerate(labels)}
+    return labels, np.array([pos[c] for c in cids], dtype=np.int32)
+
+
+def _score(
+    df: DataFrame,
+    vec_col: str,
+    keep: list[str],
+    targets: Sequence[Sequence[float]],
+    fields: list[T.StructField],
+    emit: Callable[[np.ndarray, np.ndarray], list[pa.Array]],
+) -> DataFrame:
+    """The vector kernel: ``df``'s ``keep`` columns plus ``fields``, under
+    ``mapInArrow``. Per Arrow batch, :func:`_cosines` scores ``vec_col``
+    against ``targets`` and ``emit(cos, null)`` turns the rows × targets
+    matrix into the ``fields`` arrays."""
+    src = df.select(*dict.fromkeys([*keep, vec_col]))
+    at = keep.index(vec_col) if vec_col in keep else len(keep)
+    names = [*keep, *(f.name for f in fields)]
+
+    def cosine_kernel(batches):  # the name the plan prints
+        for b in batches:
+            cos, null = _cosines(b.column(at), targets)
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns[: len(keep)], *emit(cos, null)], names=names
+            )
+
+    schema = T.StructType([*(df.schema[c] for c in keep), *fields])
+    return src.mapInArrow(cosine_kernel, schema)
+
+
+_COSINE = T.StructField("cosine", T.DoubleType())
+
+
+def _query_cosine(
+    df: DataFrame, query: Sequence[float], vec_col: str, id_col: str
+) -> DataFrame:
+    """(id, cosine to ``query``) — the top-k sites' kernel call."""
+    return _score(
+        df,
+        vec_col,
+        [id_col],
+        [query],
+        [_COSINE],
+        lambda cos, null: [pa.array(cos[:, 0], mask=null[:, 0])],
+    )
+
+
+def _topk(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
 
 def brute_force_topk(
@@ -87,16 +221,11 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k by cosine similarity to a literal query vector.
 
-    Plan shape: scan → per-row expression → TakeOrderedAndProject. No
-    shuffle of the embeddings themselves; scales linearly with executors.
+    Plan shape: scan → MapInArrow (the vector kernel) →
+    TakeOrderedAndProject. No shuffle of the embeddings themselves; scales
+    linearly with executors.
     """
-    d = _with_vec_norm(df, vec_col, "__v", "__n")
-    sim = _cos_lit(F.col("__v"), F.col("__n"), query)
-    return (
-        d.select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _topk(_query_cosine(df, query, vec_col, id_col), id_col, k)
 
 
 def _hyperplane(plane: int, dim: int) -> list[float]:
@@ -204,45 +333,41 @@ def ivf_topk(
     :func:`_hash_sampled_centroids`) — a stride sample (``id % s == 0``)
     would grow O(n) and blow up at scale. Pass ``centroids=`` (e.g. from
     :func:`fit_centroids`) for k-means cells; the probe and assignment
-    plumbing is identical. Assignment is a pure map-side expression over
-    centroid literals (no shuffle of the embeddings). At scale the table
-    would be written partitioned by ``cell`` and a probe reads ``nprobe``
-    partitions only.
+    plumbing is identical. Assignment is map-side, in the vector kernel
+    (no shuffle of the embeddings). At scale the table would be written
+    partitioned by ``cell`` and a probe reads ``nprobe`` partitions only.
     """
     if centroids is None:
         centroids = _hash_sampled_centroids(df, num_centroids, vec_col, id_col)
     if not centroids:
         # empty corpus samples zero centroids: typed empty result
         return df.select(F.col(id_col), F.lit(0.0).alias("cosine")).limit(0)
-    # probe choice on the driver: left-to-right fold == Spark's aggregate HOF
-    def _py_cos(a, b):
-        num = sum(float(x) * float(y) for x, y in zip(a, b))
-        na = sum(float(x) * float(x) for x in a) ** 0.5
-        nb = sum(float(y) * float(y) for y in b) ** 0.5
-        # zero-norm vector (failed encode / padding row sampled as a
-        # centroid, or a zero query): orthogonal, not a ZeroDivisionError
-        return num / (na * nb) if na and nb else 0.0
+    cvecs = [v for _, v in centroids]
+    # equal cosines go to the SMALLEST cid, on the driver and in the
+    # kernel alike (duplicate centroids otherwise assign a cell the probe
+    # never picks); the probe ranking runs the kernel's own scoring on the
+    # query, so a zero-norm centroid (NULL cosine) ranks last here too
+    _, label = _cells([c for c, _ in centroids])
+    q = pa.array([[float(x) for x in query]], pa.list_(pa.float64()))
+    probe = label[_ranked(*_cosines(q, cvecs), -label)[0, :nprobe]]
+    m = len(cvecs)
 
-    ranked = sorted(centroids, key=lambda c: (-_py_cos(c[1], query), c[0]))
-    probe = [cid for cid, _ in ranked[:nprobe]]
-    # assignment as a pure map-side expression over centroid literals: no
-    # cross join, no groupBy shuffle of the embeddings. cid is NEGATED in
-    # the struct so F.greatest resolves equal-similarity ties to the
-    # SMALLEST cid — the same preference the driver ranking above uses
-    # (duplicate centroids otherwise assign a cell the probe never picks)
-    d = _with_vec_norm(df, vec_col, "__v", "__n")
-    cells = []
-    for cid, cvec in centroids:
-        sim = _cos_lit(F.col("__v"), F.col("__n"), cvec)
-        cells.append(F.struct(sim.alias("s"), F.lit(-cid).alias("nc")))
-    cell = -(F.greatest(*cells) if len(cells) > 1 else cells[0])["nc"]
-    qsim = _cos_lit(F.col("__v"), F.col("__n"), query)
-    return (
-        d.withColumn("__cell", cell)
-        .filter(F.col("__cell").isin(probe))
-        .select(F.col(id_col), qsim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    def emit(cos, null):
+        best = _ranked(cos[:, :m], null[:, :m], -label)[:, 0]
+        return [pa.array(label[best]), pa.array(cos[:, m], mask=null[:, m])]
+
+    scored = _score(
+        df,
+        vec_col,
+        [id_col],
+        [*cvecs, query],
+        [T.StructField("__cell", T.IntegerType()), _COSINE],
+        emit,
+    )
+    return _topk(
+        scored.filter(F.col("__cell").isin([int(c) for c in probe])).drop("__cell"),
+        id_col,
+        k,
     )
 
 
@@ -297,13 +422,13 @@ def ivf_knn_join(
 ) -> DataFrame:
     """Batch IVF ANN join: the approximate counterpart of :func:`knn_join`
     for a trained centroid table (:func:`fit_centroids`). Corpus rows get
-    their nearest-centroid cell as a pure map-side expression over the
-    centroid literals; each query explodes into its ``nprobe`` closest
-    cells the same way; the two sides then meet on an EQUI-join on the
-    cell, so scored pairs are ~|corpus| * nprobe / n_cells instead of the
-    exact join's |corpus| * |queries| — the difference between linear and
-    quadratic when the query set is itself large. The query side broadcasts
-    (queries * nprobe rows); the corpus never shuffles.
+    their nearest-centroid cell map-side, in the vector kernel; each
+    query explodes into its ``nprobe`` closest cells the same way; the two
+    sides then meet on an EQUI-join on the cell, so scored pairs are
+    ~|corpus| * nprobe / n_cells instead of the exact join's |corpus| *
+    |queries| — the difference between linear and quadratic when the query
+    set is itself large. The query side broadcasts (queries * nprobe rows);
+    the corpus never shuffles.
     Returns (query_id, vec_id, cosine) with rank <= k per query."""
     if not centroids:
         # no cells -> no candidate pairs: typed empty result, matching
@@ -319,32 +444,44 @@ def ivf_knn_join(
                 ]
             ),
         )
-    def _cells(v: Column, vn: Column) -> list[Column]:
-        return [
-            F.struct(_cos_lit(v, vn, cvec).alias("s"), F.lit(cid).alias("c"))
-            for cid, cvec in centroids
-        ]
+    cvecs = [v for _, v in centroids]
+    # equal cosines go to the LARGEST cid on both sides, so a query probes
+    # the duplicate centroid its neighbours joined
+    _, label = _cells([c for c, _ in centroids])
+    nprobe = int(nprobe)
+    if nprobe < 0:  # F.slice refused a negative length
+        raise ValueError(f"nprobe must be >= 0, got {nprobe}")
 
-    corp = _with_vec_norm(corpus, vec_col, "__cv", "__cn")
-    ccells = _cells(F.col("__cv"), F.col("__cn"))
-    nearest = (F.greatest(*ccells) if len(ccells) > 1 else ccells[0])["c"]
-    # per-query probe list: rank every centroid by similarity, keep nprobe
-    qpre = _with_vec_norm(
+    def nearest(cos, null):
+        return [pa.array(label[_ranked(cos, null, label)[:, 0]])]
+
+    def probes(cos, null):
+        top = label[_ranked(cos, null, label)[:, :nprobe]]
+        offsets = np.arange(len(top) + 1, dtype=np.int32) * top.shape[1]
+        return [pa.ListArray.from_arrays(offsets, pa.array(top.ravel()))]
+
+    cells = _score(
+        corpus,
+        vec_col,
+        [id_col, vec_col],
+        cvecs,
+        [T.StructField("__cell", T.IntegerType())],
+        nearest,
+    )
+    assigned = _with_vec_norm(cells, vec_col, "__cv", "__cn").select(
+        F.col(id_col), "__cv", "__cn", "__cell"
+    )
+    # per-query probe list: every centroid ranked by similarity, nprobe kept
+    probed = _score(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q")),
         "__q",
-        "__qv",
-        "__qn",
+        ["query_id", "__q"],
+        cvecs,
+        [T.StructField("__probe", T.ArrayType(T.IntegerType()))],
+        probes,
     )
-    qcells = _cells(F.col("__qv"), F.col("__qn"))
-    probe_arr = F.slice(F.reverse(F.array_sort(F.array(*qcells))), 1, int(nprobe))
-    q = qpre.select(
-        "query_id",
-        "__qv",
-        "__qn",
-        F.explode(F.transform(probe_arr, lambda s: s["c"])).alias("__cell"),
-    )
-    assigned = corp.select(
-        F.col(id_col), F.col("__cv"), F.col("__cn"), nearest.alias("__cell")
+    q = _with_vec_norm(probed, "__q", "__qv", "__qn").select(
+        "query_id", "__qv", "__qn", F.explode("__probe").alias("__cell")
     )
     scored = assigned.join(F.broadcast(q), on="__cell").select(
         "query_id",
@@ -489,16 +626,11 @@ def _dim(df: DataFrame, vec_col: str) -> int | None:
 
 
 def _py_bucket(vec: Sequence[float], planes: list[list[float]]) -> int:
-    """Driver-side bucket of a literal vector: left-to-right fold, matching
-    Spark's ``aggregate`` HOF bit-for-bit."""
-    bucket = 0
-    for p, weights in enumerate(planes):
-        acc = 0.0
-        for x, w in zip(vec, weights):
-            acc += float(x) * w
-        if acc >= 0:
-            bucket |= 1 << p
-    return bucket
+    """Driver-side bucket of a literal vector: the kernel's :func:`_fold`,
+    matching Spark's ``aggregate`` HOF in :func:`lsh_bucket` bit for bit."""
+    v = np.asarray(vec, dtype=np.float64)
+    dots = _fold(v, np.asarray(planes, dtype=np.float64).reshape(len(planes), len(v)))
+    return sum(1 << p for p, d in enumerate(dots) if d >= 0)
 
 
 def _probe_masks(num_planes: int, radius: int) -> list[int]:
@@ -551,18 +683,8 @@ def lsh_ann_topk_indexed(
     planes = [_hyperplane(p, len(query)) for p in range(num_planes)]
     query_bucket = _py_bucket(query, planes)
     probe = [query_bucket ^ m for m in _probe_masks(num_planes, probe_radius)]
-    sim = _cos_lit(F.col("__v"), F.col("__n"), query)
-    return (
-        _with_vec_norm(
-            spark.read.parquet(path).filter(F.col("bucket").isin(probe)),
-            vec_col,
-            "__v",
-            "__n",
-        )
-        .select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    probed = spark.read.parquet(path).filter(F.col("bucket").isin(probe))
+    return _topk(_query_cosine(probed, query, vec_col, id_col), id_col, k)
 
 
 def knn_join_lsh(
@@ -657,15 +779,8 @@ def lsh_ann_topk(
     probe_buckets = sorted(
         query_bucket ^ m for m in _probe_masks(num_planes, probe_radius)
     )
-    sim = _cos_lit(F.col("__v"), F.col("__n"), query)
-    return (
-        _with_vec_norm(df, vec_col, "__v", "__n")
-        .withColumn("bucket", lsh_bucket(F.col("__v"), planes))
-        .filter(F.col("bucket").isin(probe_buckets))
-        .select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    probed = df.filter(lsh_bucket(F.col(vec_col), planes).isin(probe_buckets))
+    return _topk(_query_cosine(probed, query, vec_col, id_col), id_col, k)
 
 
 def assign_clusters(
@@ -675,8 +790,8 @@ def assign_clusters(
     id_col: str = "vec_id",
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
-    """Assign every vector to its nearest centroid: one map-side pass over
-    centroid literals, no shuffle of the embeddings. Returns all input
+    """Assign every vector to its nearest centroid: one map-side pass of
+    the vector kernel, no shuffle of the embeddings. Returns all input
     columns + (cluster, cos_to_centroid).
 
     Default centroids are the deterministic hash sample (same fixed-k
@@ -692,17 +807,43 @@ def assign_clusters(
         return df.withColumn("cluster", F.lit(0)).withColumn(
             "cos_to_centroid", F.lit(0.0)
         ).limit(0)
-    pre = _with_vec_norm(df, vec_col, "__v", "__n")
-    cands = []
-    for cid, cvec in centroids:
-        cos = _cos_lit(F.col("__v"), F.col("__n"), cvec)
-        cands.append(F.struct(cos.alias("cos"), F.lit(cid).alias("cid")))
-    best = F.greatest(*cands) if len(cands) > 1 else cands[0]
-    return (
-        pre.withColumn("cluster", best["cid"])
-        .withColumn("cos_to_centroid", best["cos"])
-        .drop("__v", "__n")
+    labels, label = _cells([c for c, _ in centroids])
+    ltype = _label_type(labels)
+    cells = pa.array(labels, to_arrow_type(ltype))
+
+    def emit(cos, null):
+        # equal cosines go to the LARGEST cid; an all-NULL row too
+        best = _ranked(cos, null, label)[:, 0]
+        rows = np.arange(len(best))
+        return [
+            cells.take(pa.array(label[best])),
+            pa.array(cos[rows, best], mask=null[rows, best]),
+        ]
+
+    new = ["cluster", "cos_to_centroid"]
+    out = _score(
+        df,
+        vec_col,
+        [c for c in df.columns if c not in new],
+        [v for _, v in centroids],
+        [T.StructField(new[0], ltype), T.StructField(new[1], T.DoubleType())],
+        emit,
     )
+    if set(new) & set(df.columns):
+        # an input column of the same name is replaced in place
+        out = out.select(*dict.fromkeys([*df.columns, *new]))
+    return out
+
+
+def _label_type(labels: list) -> T.DataType:
+    """The Spark type ``F.lit`` gives these centroid ids: INT for Python
+    ints that all fit in 32 bits, else BIGINT; STRING; DOUBLE otherwise."""
+    if all(isinstance(c, str) for c in labels):
+        return T.StringType()
+    if all(isinstance(c, (int, np.integer)) for c in labels):
+        small = all(-(2**31) <= c < 2**31 for c in labels)
+        return T.IntegerType() if small else T.LongType()
+    return T.DoubleType()
 
 
 def cluster_balanced_sample(

@@ -1,4 +1,5 @@
 import os
+import types
 
 import duckdb
 import pytest
@@ -59,3 +60,21 @@ def oracle():
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_DIR}/{name}.parquet')"
         )
     return con
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """Counts py4j commands the driver sends to the JVM while the test
+    runs: ``.n`` grows by one per ``send_command`` on the gateway client
+    (method calls, field reads, reflection lookups). Plan-building cost
+    shows up here long before it shows up as latency."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = types.SimpleNamespace(n=0)
+
+    def counting(*args, **kwargs):
+        calls.n += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return calls

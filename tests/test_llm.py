@@ -1601,6 +1601,163 @@ def test_ivf_topk_duplicate_centroid_tiebreak(spark):
     assert got.count() == 4  # the duplicate-centroid region is NOT dropped
 
 
+def test_ivf_topk_zero_norm_centroid_ranks_last(spark):
+    # a zero-norm centroid has a NULL cosine to every row, so no row joins
+    # its cell; the probe ranking must put it last too, or nprobe=1 probes
+    # an empty (or all-NULL) cell instead of the query's neighbours
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.9, 0.1])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [(0, [0.0, 0.0]), (1, [1.0, 0.0])]
+    got = similarity.ivf_topk(df, [-1.0, 0.0], centroids=cents, nprobe=1).collect()
+    exact = similarity.brute_force_topk(df, [-1.0, 0.0], k=2).collect()
+    assert [r["vec_id"] for r in got] == [2, 1]
+    assert [tuple(r) for r in got] == [tuple(r) for r in exact]
+    assert got[1]["cosine"] == -1.0
+
+
+def _odd_vector_frame(spark, elem: str, id_type: str, seed: int, n=24, dim=5):
+    """Seeded random vectors plus one row of each degenerate kind: a
+    zero-norm vector, a NULL vector, a NULL element and a vector that is
+    one element short. Returns (frame, ids of the degenerate rows)."""
+    import random
+
+    rng = random.Random(seed)
+    vecs = [[rng.uniform(-1.0, 1.0) for _ in range(dim)] for _ in range(n)]
+    vecs += [[0.0] * dim, None, [0.5] * (dim - 1) + [None], [0.5] * (dim - 1)]
+    ids = range(len(vecs))
+    ids = list(ids) if id_type == "long" else [f"v{i:03d}" for i in ids]
+    df = spark.createDataFrame(
+        list(zip(ids, vecs)), f"vec_id {id_type}, embedding array<{elem}>"
+    )
+    return df, ids[n:]
+
+
+def _spark_cosines(df, vecs):
+    """{vec_id: [cosine_similarity to each of vecs]}, computed by the
+    Column-HOF ``cosine_similarity`` — the reference every site must equal."""
+    cols = [
+        similarity.cosine_similarity(
+            F.col("embedding"), F.array(*[F.lit(float(x)) for x in v])
+        ).alias(f"c{i}")
+        for i, v in enumerate(vecs)
+    ]
+    return {r[0]: list(r[1:]) for r in df.select("vec_id", *cols).collect()}
+
+
+def _cell_order(cos: list, cids: list, largest_cid: bool) -> list:
+    """cids in Spark's descending ``struct(cos, cid)`` order: a NULL cosine
+    ranks below every number, equal cosines go to the larger cid (or to the
+    smaller one when ``largest_cid`` is False)."""
+    def key(i):
+        c = cos[i]
+        return (c is not None, c or 0.0, cids[i] if largest_cid else -cids[i])
+
+    return [cids[i] for i in sorted(range(len(cids)), key=key, reverse=True)]
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_vector_sites_equal_cosine_similarity(spark, elem, id_type):
+    # every driver-vector scoring site returns cosines == cosine_similarity
+    # on the same pairs, and puts each row (degenerate ones included) in the
+    # cell of Spark's struct(cos, cid) order. cid 7 duplicates cid 2: ivf_topk
+    # breaks the tie to the smaller cid, assign_clusters and ivf_knn_join
+    # to the larger one
+    df, odd = _odd_vector_frame(spark, elem, id_type, seed=11)
+    n = df.count()
+    base = {r["vec_id"]: r["embedding"] for r in df.collect()}
+    vecs = [base[k] for k in sorted(base, key=str) if base[k] and None not in base[k]]
+    cents = [(5, vecs[3]), (2, vecs[8]), (9, vecs[14]), (7, vecs[8])]
+    cids = [c for c, _ in cents]
+    query = vecs[20]
+    ref = _spark_cosines(df, [v for _, v in cents] + [query])
+    qcos = {i: c[-1] for i, c in ref.items()}
+    for i in odd:
+        assert ref[i] == [None] * 5
+    small = {i: _cell_order(c[:-1], cids, False)[0] for i, c in ref.items()}
+    large = {i: _cell_order(c[:-1], cids, True) for i, c in ref.items()}
+    assert {small[i] for i in odd} == {2} and {large[i][0] for i in odd} == {9}
+
+    got = similarity.brute_force_topk(df, query, k=n).collect()
+    assert {r["vec_id"]: r["cosine"] for r in got} == qcos
+    assert [r["vec_id"] for r in got][-4:] == sorted(odd)  # NULLs last, by id
+
+    got = similarity.ivf_topk(df, query, centroids=cents, nprobe=len(cents), k=n)
+    assert {r["vec_id"]: r["cosine"] for r in got.collect()} == qcos
+    for cid, cvec in cents[:3]:  # a centroid as the query probes its own cell
+        got = similarity.ivf_topk(df, cvec, centroids=cents, nprobe=1, k=n)
+        assert {r["vec_id"] for r in got.collect()} == {
+            i for i in ref if small[i] == cid
+        }
+
+    got = similarity.assign_clusters(df, centroids=cents).collect()
+    assert {r["vec_id"]: (r["cluster"], r["cos_to_centroid"]) for r in got} == {
+        i: (large[i][0], max(c[:-1], key=lambda x: (x is not None, x or 0.0)))
+        for i, c in ref.items()
+    }
+
+    qs = df.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"))
+    pairs = qs.crossJoin(df).select(
+        "query_id", "vec_id", similarity.cosine_similarity(F.col("embedding"), F.col("q"))
+    )
+    pair_ref = {(r[0], r[1]): r[2] for r in pairs.collect()}
+    got = similarity.ivf_knn_join(df, df, cents, k=n, nprobe=len(cents)).collect()
+    assert {(r["query_id"], r["vec_id"]): r["cosine"] for r in got} == pair_ref
+    for nprobe in (1, 2):
+        got = similarity.ivf_knn_join(df, df, cents, k=n, nprobe=nprobe).collect()
+        assert {(r["query_id"], r["vec_id"]) for r in got} == {
+            (q, v) for q, v in pair_ref if large[v][0] in large[q][:nprobe]
+        }
+
+
+def test_ivf_topk_build_cost_flat_in_centroids(spark, py4j_calls):
+    # building the ivf_topk frame ships the centroids to the kernel as
+    # data: the py4j command count must not grow with the centroid count
+    # (as 32 F.lit columns + lambdas per centroid: about 6,000 for 16)
+    import random
+
+    rng = random.Random(3)
+    df = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(32)]) for i in range(64)],
+        "vec_id long, embedding array<float>",
+    )
+    df.schema  # noqa: B018 -- resolve the input schema before counting
+    query = [rng.uniform(-1, 1) for _ in range(32)]
+
+    def build(m):
+        cents = [(c, [rng.uniform(-1, 1) for _ in range(32)]) for c in range(m)]
+        start = py4j_calls.n
+        similarity.ivf_topk(df, query, centroids=cents, nprobe=2)
+        return py4j_calls.n - start
+
+    build(16)  # first build: one-time lookups
+    n16, n32 = build(16), build(32)
+    assert 0 < n16 <= 200
+    assert n32 <= n16
+
+
+def test_assign_clusters_and_ivf_knn_join_ties_to_largest_cid(spark):
+    rows = [(i, [1.0, 0.0]) for i in range(3)] + [(10, [0.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cents = [(7, [1.0, 0.0]), (3, [1.0, 0.0]), (9, [0.0, 1.0])]
+    got = similarity.assign_clusters(df, centroids=cents).collect()
+    assert {r["vec_id"]: r["cluster"] for r in got} == {0: 7, 1: 7, 2: 7, 10: 9}
+    # re-assigning replaces the cluster columns in place, as withColumn did
+    again = similarity.assign_clusters(
+        similarity.assign_clusters(df, centroids=cents), centroids=[(1, [0.0, 1.0])]
+    )
+    assert again.columns == ["vec_id", "embedding", "cluster", "cos_to_centroid"]
+    assert {r["cluster"] for r in again.collect()} == {1}
+    # the query side probes the same (largest-cid) duplicate the corpus
+    # joined, so nprobe=1 keeps the region
+    got = similarity.ivf_knn_join(df, df.limit(1), cents, k=5, nprobe=1)
+    assert {r["vec_id"] for r in got.collect()} == {0, 1, 2}
+    with pytest.raises(ValueError, match="nprobe"):
+        similarity.ivf_knn_join(df, df, cents, nprobe=-1)
+
+
 def test_dedup_null_text_never_pairs(spark):
     # NULL text (failed extraction) must not dedup: previously all-NULL
     # minhashes collided into one band key per band and verified at

@@ -107,6 +107,28 @@ def test_no_python_row_udfs(plans):
     assert not offenders, f"row-at-a-time Python eval in: {offenders}"
 
 
+def test_driver_vector_scoring_runs_in_arrow_kernel(spark, tables):
+    # cosine against driver-side vectors runs in the numpy mapInArrow
+    # kernel, not as zip_with/aggregate HOFs over literal arrays. The JSON
+    # form of the executed plan names every expression class.
+    from graphique_spark.llm import similarity
+
+    emb = tables["embeddings"].df
+    qvec = [float(x) for x in emb.first()["embedding"]]
+    cents = [(i, [float(x) for x in r["embedding"]]) for i, r in enumerate(emb.take(4))]
+    frames = {
+        "ivf_topk": similarity.ivf_topk(emb, qvec, centroids=cents),
+        "brute_force_topk": similarity.brute_force_topk(emb, qvec),
+        "assign_clusters": similarity.assign_clusters(emb, centroids=cents),
+    }
+    for name, df in frames.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan()
+        assert "MapInArrow" in plan.toString(), name
+        tree = plan.toJSON()
+        assert "ZipWith" not in tree and "ArrayAggregate" not in tree, name
+
+
 def test_driver_rows_go_through_local_frame():
     # A frame built from a Python list by createDataFrame (or an RDD from
     # parallelize) scans a pickled Python RDD: every action starts a Python
