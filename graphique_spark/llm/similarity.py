@@ -826,7 +826,7 @@ def assign_clusters(
         vec_col,
         [c for c in df.columns if c not in new],
         [v for _, v in centroids],
-        [T.StructField(new[0], ltype), T.StructField(new[1], T.DoubleType())],
+        [T.StructField(new[0], ltype, False), T.StructField(new[1], T.DoubleType())],
         emit,
     )
     if set(new) & set(df.columns):

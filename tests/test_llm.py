@@ -1739,11 +1739,14 @@ def test_ivf_topk_build_cost_flat_in_centroids(spark, py4j_calls):
 
 
 def test_assign_clusters_and_ivf_knn_join_ties_to_largest_cid(spark):
+    from pyspark.sql import types as T
+
     rows = [(i, [1.0, 0.0]) for i in range(3)] + [(10, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = [(7, [1.0, 0.0]), (3, [1.0, 0.0]), (9, [0.0, 1.0])]
-    got = similarity.assign_clusters(df, centroids=cents).collect()
-    assert {r["vec_id"]: r["cluster"] for r in got} == {0: 7, 1: 7, 2: 7, 10: 9}
+    out = similarity.assign_clusters(df, centroids=cents)
+    assert out.schema["cluster"] == T.StructField("cluster", T.IntegerType(), False)
+    assert {r["vec_id"]: r["cluster"] for r in out.collect()} == {0: 7, 1: 7, 2: 7, 10: 9}
     # re-assigning replaces the cluster columns in place, as withColumn did
     again = similarity.assign_clusters(
         similarity.assign_clusters(df, centroids=cents), centroids=[(1, [0.0, 1.0])]
