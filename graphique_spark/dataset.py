@@ -15,7 +15,6 @@ from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphique_spark.inputs import Agg, Filter, combine_filters
 from graphique_spark.operators.asof import asof_join
@@ -56,7 +55,7 @@ class Dataset:
         out = Dataset(df, self.roots, self.partitioning, self.source_type)
         if op is not None and self._ops is not None and self._source is not None:
             out._source = self._source
-            out._ops = self._ops + (op,) if op[0] != "noop" else self._ops
+            out._ops = self._ops + (op,)
         return out
 
     def _resolve(self, other: "Dataset | DataFrame | str") -> DataFrame:
@@ -736,21 +735,6 @@ class Dataset:
         return self._wrap(
             self.df.select(*cols), ("unpack", self.df, {"names": list(names)})
         )
-
-    # -- caching (reference resolve()/.cache(), interface.py:83-91) -------------------
-
-    def persist(self, columns: Sequence[str] | None = None) -> "Dataset":
-        """Minimal-select then persist, the reference's sibling-field reuse
-        trick: prune to the referenced columns *before* materializing so the
-        cache holds only what downstream fields read."""
-        base = self.select(*columns) if columns else self
-        return base._wrap(
-            base.df.persist(StorageLevel.MEMORY_AND_DISK), ("noop", base.df, {})
-        )
-
-    def unpersist(self) -> "Dataset":
-        self.df.unpersist()
-        return self
 
     # -- SQL escape hatch (reference interface.py:523-535; gated by caller) -----------
 

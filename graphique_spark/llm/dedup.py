@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphique_spark.session import local_frame
+from graphique_spark.session import local_frame, materialize
 
 #: Mersenne prime 2^31-1: modulus for the affine MinHash permutations.
 #: Operands stay < 2^62, so the arithmetic never overflows int64 in Spark
@@ -51,31 +51,6 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def materializer(df_or_spark, checkpoint_dir: str | None = None, eager: bool = True):
-    """Return a ``DataFrame -> DataFrame`` that cuts lineage, either to
-    reliable storage or locally.
-
-    ``localCheckpoint`` stores blocks on executors: fast, but an executor
-    loss on a real cluster makes them unrecoverable mid-job. Iterative /
-    multi-consumer pipelines (prefix-Jaccard, connected components) accept
-    ``checkpoint_dir`` so production runs can point at HDFS/S3 and get
-    fault-tolerant ``df.checkpoint()`` instead — no library edits needed.
-
-    ``eager=False`` defers materialization to the frame's FIRST action
-    (which populates the blocks every later consumer reads) instead of
-    running a dedicated job at call time — the right mode when every
-    consumer sits inside one downstream action (apply_cdc per micro-batch).
-    Callers that ``unpersist()`` upstream inputs before the first action
-    must keep ``eager=True``: a deferred cut would silently recompute from
-    the unpersisted lineage (the pagerank r12 lesson).
-    """
-    spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        return lambda df: df.checkpoint(eager=eager)
-    return lambda df: df.localCheckpoint(eager=eager)
 
 
 def bind_once(value: Column, body) -> Column:
@@ -286,11 +261,8 @@ def incremental_minhash_dedup(
         )
     else:
         # materialized: consumed by the band explode AND the verify join —
-        # without the cut each consumer re-shingles the whole new batch.
-        # eager=False: both consumers sit inside the caller's first action
-        new_sigs = materializer(new_docs, eager=False)(
-            _signatures(new_docs, text, id_col, k, num_hashes)
-        )
+        # without the cut each consumer re-shingles the whole new batch
+        new_sigs = materialize(_signatures(new_docs, text, id_col, k, num_hashes))
         nb = new_sigs.select(
             F.col("id").alias("new_id"),
             F.posexplode(_band_key_array(num_hashes, bands)).alias("band", "key"),
@@ -363,13 +335,8 @@ def minhash_candidates(
     """
     # materialized: sigs feeds the band explode AND both verify-join
     # sides — without the cut Catalyst re-derives the shingle hashing
-    # (the dominant cost) once per consumer. eager=False (VERDICT r12
-    # item 6): every consumer sits inside the caller's first action (for
-    # the CC family that action is the eager edge checkpoint), so the
-    # blocks populate in-job instead of paying a dedicated job up front;
-    # no unpersist happens before that action, so the recompute hazard
-    # documented on `materializer` does not apply
-    sigs = materializer(df, eager=False)(_signatures(df, text, id_col, k, num_hashes))
+    # (the dominant cost) once per consumer
+    sigs = materialize(_signatures(df, text, id_col, k, num_hashes))
     banded = sigs.select(
         "id", F.posexplode(_band_key_array(num_hashes, bands)).alias("band", "key")
     )
@@ -500,16 +467,15 @@ def ngram_jaccard_pairs(
     if block_by is None:
         return _prefix_jaccard(df, text, id_col, n, min_jaccard, checkpoint_dir)
     block = block_by
-    # materialized (honoring checkpoint_dir like the prefix path): docs
-    # feeds both join sides — without the cut the tokenize+hash of every
-    # doc runs twice. eager=False: both consumers sit inside the caller's
-    # first action, which populates the blocks — no dedicated cut job
-    docs = materializer(df, checkpoint_dir, eager=False)(
+    # materialized: docs feeds both join sides — without the cut the
+    # tokenize+hash of every doc runs twice
+    docs = materialize(
         df.select(
             F.col(id_col).alias("id"),
             block.alias("block"),
             F.array_distinct(F.transform(word_ngrams(F.col(text), n), hash60)).alias("ng"),
-        ).withColumn("sz", F.size("ng").cast("double"))
+        ).withColumn("sz", F.size("ng").cast("double")),
+        checkpoint_dir,
     )
     left = docs.select("block", F.col("id").alias("id_a"), F.col("ng").alias("ng_a"), F.col("sz").alias("sz_a"))
     right = docs.select("block", F.col("id").alias("id_b"), F.col("ng").alias("ng_b"), F.col("sz").alias("sz_b"))
@@ -532,20 +498,16 @@ def _prefix_jaccard(
     df: DataFrame, text: str, id_col: str, n: int, t: float,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    # eager=False: all three consumers (prefix explode + both verify
-    # joins) sit inside the caller's first action — no dedicated cut job
-    materialize = materializer(df, checkpoint_dir, eager=False)
+    # materialized: three consumers below (prefix explode + both verify
+    # joins) would otherwise each re-tokenize and re-hash the full corpus
     docs = materialize(
         df.select(
             F.col(id_col).alias("id"),
             F.array_sort(
                 F.array_distinct(F.transform(word_ngrams(F.col(text), n), hash60))
             ).alias("ng"),
-        )
-        # materialize the tokenized sets once: three consumers below (prefix
-        # explode + both verify joins) would otherwise each re-tokenize and
-        # re-hash the full corpus
-        .withColumn("sz", F.size("ng"))
+        ).withColumn("sz", F.size("ng")),
+        checkpoint_dir,
     )
     plen = F.col("sz") - F.ceil(F.lit(t) * F.col("sz")).cast("int") + 1
     pref = docs.select(
@@ -612,9 +574,12 @@ def connected_components(
       O(log n) rounds regardless of diameter, the right choice for
       adversarially deep chains at web scale.
 
-    ``checkpoint_dir`` (HDFS/S3 path) switches lineage truncation from
-    executor-local blocks to reliable storage — required for fault
-    tolerance on a real cluster; local mode defaults to localCheckpoint.
+    The distributed paths cut lineage once per round with
+    :func:`graphique_spark.session.materialize`. No round's blocks enter
+    the CacheManager: each is dropped once nothing references its frame,
+    so the returned frame keeps only the last round's. ``checkpoint_dir``
+    (HDFS/S3 path) writes those cuts to reliable storage instead of
+    executor-local blocks, for fault tolerance on a real cluster.
     """
     if method not in ("auto", "label", "star"):
         raise ValueError(f"method must be auto|label|star, got {method!r}")
@@ -688,10 +653,9 @@ def connected_components(
         escalate_after = None
     # materialize once: the (possibly expensive) upstream pair pipeline
     # must not re-run inside every propagation round
-    materialize = materializer(pairs, checkpoint_dir)
-    edges = materialize(edges)
+    edges = materialize(edges, checkpoint_dir)
     if method == "star":
-        return _star_components(edges, max_iterations, materialize)
+        return _star_components(edges, max_iterations, checkpoint_dir)
     labels = edges.select(F.col("a").alias("v")).distinct().withColumn(
         "component", F.col("v")
     )
@@ -709,7 +673,8 @@ def connected_components(
                 "v",
                 F.col("component").alias("old"),
                 F.least("component", F.coalesce("nbr", "component")).alias("component"),
-            )
+            ),
+            checkpoint_dir,
         )
         changed = merged.filter(F.col("old") != F.col("component")).limit(1).count()
         labels = merged.select("v", "component")
@@ -719,7 +684,7 @@ def connected_components(
             # still not converged after the auto-mode label budget: the
             # graph is deeper than a typical near-dup graph — switch to
             # large/small-star, whose round count is O(log n) not diameter
-            return _star_components(edges, max_iterations, materialize)
+            return _star_components(edges, max_iterations, checkpoint_dir)
     # rounds = diameter for label propagation: exhausting the budget means
     # unconverged labels, which would silently mislabel deep chains.
     raise RuntimeError(
@@ -729,7 +694,9 @@ def connected_components(
     )
 
 
-def _star_components(edges: DataFrame, max_iterations: int, materialize) -> DataFrame:
+def _star_components(
+    edges: DataFrame, max_iterations: int, checkpoint_dir: str | None
+) -> DataFrame:
     """Alternating large-star/small-star rounds over an undirected edge
     list (both directions present). Converges to a forest of depth-1 stars
     rooted at each component's minimum id in O(log n) rounds.
@@ -781,7 +748,8 @@ def _star_components(edges: DataFrame, max_iterations: int, materialize) -> Data
                         F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
                     )
                 ).alias("__e")
-            ).select(F.col("__e.a").alias("a"), F.col("__e.b").alias("b"))
+            ).select(F.col("__e.a").alias("a"), F.col("__e.b").alias("b")),
+            checkpoint_dir,
         )
         # converged when the oriented star edges are a fixed point: every
         # node's neighbors are all smaller (large-star emits nothing new).
@@ -1134,15 +1102,17 @@ def containment_pairs(
     Verification is one exact ``array_intersect`` over the materialized
     sets. Scales with token frequency, never corpus²."""
     df = ensure_parallelism(df)
-    materialize = materializer(df, checkpoint_dir)
     t = min_containment
+    # materialized: the prefix explode, the full explode and both verify
+    # joins read the tokenized sets
     docs = materialize(
         df.select(
             F.col(id_col).alias("id"),
             F.array_sort(
                 F.array_distinct(F.transform(word_ngrams(F.col(text), n), hash60))
             ).alias("ng"),
-        ).withColumn("sz", F.size("ng"))
+        ).withColumn("sz", F.size("ng")),
+        checkpoint_dir,
     )
     plen = F.col("sz") - F.ceil(F.lit(t) * F.col("sz")).cast("int") + 1
     pref = docs.select(

@@ -490,7 +490,7 @@ def phash_near_dups(
         )
     width_bits = bits // bands
     mask = (1 << width_bits) - 1
-    from graphique_spark.llm.dedup import materializer
+    from graphique_spark.session import materialize
 
     # materialized: the (id, hash) table feeds FIVE consumers (the
     # distinct-hash banding input, both sides of the id re-expansion join
@@ -498,12 +498,8 @@ def phash_near_dups(
     # typically expensive (mapInPandas image decode, simhash vote
     # aggregation) — renamed projections block exchange reuse, so without
     # the cut each consumer re-runs that pipeline. One slim row per image.
-    # ``checkpoint_dir`` (the standard materializer knob) switches the cut
-    # to reliable storage for executor-loss tolerance on a real cluster.
-    # eager=False: all five consumers sit inside the caller's first
-    # action, which populates the blocks — no dedicated cut job
-    ids = materializer(hashes, checkpoint_dir, eager=False)(
-        hashes.select(F.col(id_col), F.col(hash_col).alias("dhash"))
+    ids = materialize(
+        hashes.select(F.col(id_col), F.col(hash_col).alias("dhash")), checkpoint_dir
     )
     distinct_h = ids.select("dhash").distinct()
     bandvals = F.array(

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from graphique_spark.session import local_frame
+from graphique_spark.session import local_frame, materialize
 
 # the kernel's functions travel to Python workers by value: a worker needs
 # numpy and pyarrow, not this package, on its path
@@ -552,24 +552,21 @@ def _bucketed_pairs(
             F.lit(0.0).alias("cosine"),
         ).limit(0)
     planes = [_hyperplane(p, len(lead)) for p in range(num_planes)]
-    from graphique_spark.llm.dedup import ensure_parallelism, materializer
+    from graphique_spark.llm.dedup import ensure_parallelism
 
     df = ensure_parallelism(df)
     pre = _with_vec_norm(df, vec_col, "__v", "__n")
     # materialized: both join sides consume this frame through *renamed*
     # projections, which blocks exchange reuse — without the cut the
-    # num_planes×dim bucket dot products and the norm run twice per row.
-    # ``checkpoint_dir`` (the standard materializer knob) switches the cut
-    # to reliable storage for executor-loss tolerance on a real cluster.
-    # eager=False: every consumer (both join sides) sits inside the
-    # caller's first action, which populates the blocks — no dedicated job
-    docs = materializer(df, checkpoint_dir, eager=False)(
+    # num_planes×dim bucket dot products and the norm run twice per row
+    docs = materialize(
         pre.select(
             F.col(id_col).alias("id"),
             F.col("__v").alias("v"),
             F.col("__n").alias("nrm"),
             lsh_bucket(F.col("__v"), planes).alias("bucket"),
-        )
+        ),
+        checkpoint_dir,
     )
     left = docs.select(
         "bucket",

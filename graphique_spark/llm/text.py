@@ -12,7 +12,7 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from graphique_spark.session import local_frame
+from graphique_spark.session import local_frame, materialize
 
 #: tiny per-language stopword lists for the n-gram/stopword heuristic
 STOPWORDS = {
@@ -420,14 +420,13 @@ def contaminated_docs_bloom(
     from graphique_spark.llm.dedup import ensure_parallelism, hash60, word_ngrams
 
     corpus = ensure_parallelism(corpus)
-    bench_grams = (
+    # materialized: consumed twice (bloom build + exact verify join) —
+    # without the cut the whole benchmark re-shingles for the second pass,
+    # doubling the benchmark-side cost this function exists to avoid
+    bench_grams = materialize(
         benchmark.select(F.explode(word_ngrams(F.col(text), n)).alias("g"))
         .select(hash60(F.col("g")).alias("h"))
         .distinct()
-        # consumed twice (bloom build + exact verify join) — without the
-        # lineage cut the whole benchmark re-shingles for the second pass,
-        # doubling the benchmark-side cost this function exists to avoid
-        .localCheckpoint(eager=False)
     )
     bitmap = build_bloom(bench_grams, "h", m_bits, k)
     bf = local_frame(corpus.sparkSession, [(bitmap,)], "bf array<bigint>")
@@ -607,7 +606,7 @@ def bm25_topk(df, query_terms: list[str], k: int = 10,
     vocabulary never materializes and nothing joins. Selection is
     ``TakeOrderedAndProject`` (per-partition heaps), never a global sort.
     """
-    from graphique_spark.llm.dedup import ensure_parallelism, materializer
+    from graphique_spark.llm.dedup import ensure_parallelism
     from graphique_spark.operators.topk import top_k
 
     terms = list(dict.fromkeys(query_terms))
@@ -627,18 +626,15 @@ def bm25_topk(df, query_terms: list[str], k: int = 10,
     # materialized: the corpus-stats scalar pass and the scoring pass both
     # consume this narrow per-doc aggregate — without the cut each re-runs
     # the whole tokenize+explode+groupBy. One slim row per document.
-    # ``checkpoint_dir`` (the standard materializer knob) switches the cut
-    # to reliable storage for executor-loss tolerance on a real cluster.
-    # eager=False: the corpus-stats scalar collect right below is the
-    # frame's first action and populates the blocks — no dedicated job.
-    per_doc = materializer(df, checkpoint_dir, eager=False)(
+    per_doc = materialize(
         tok.groupBy(id_col).agg(
             F.count(F.lit(1)).alias("dl"),
             *[
                 F.sum((F.col("term") == t).cast("long")).alias(f"__tf{i}")
                 for i, t in enumerate(terms)
             ],
-        )
+        ),
+        checkpoint_dir,
     )
     stats = per_doc.agg(
         F.count(F.lit(1)),
@@ -678,35 +674,25 @@ def unigram_lm_scores(
     web-corpus vocabulary can exceed executor memory (AQE broadcasts when
     it actually fits). Nothing touches the driver except the two model
     scalars (T, V)."""
-    from graphique_spark.llm.dedup import ensure_parallelism, materializer
+    from graphique_spark.llm.dedup import ensure_parallelism
 
     df = ensure_parallelism(df)
     # materialized at the token-ARRAY level (one slim row per doc, like
     # bigram_lm_scores): the regex tokenizer otherwise re-runs for each of
-    # its three consumers (vocabulary count, model scalars, scoring join).
-    # eager=False: the vocab scalar collect below is the first action and
-    # populates these blocks in the same job — no dedicated cut job.
-    toks = materializer(df, checkpoint_dir, eager=False)(
+    # its consumers (vocabulary count and scoring join)
+    toks = materialize(
         df.select(
             F.col(id_col),
             F.regexp_extract_all(
                 F.lower(F.col(text)), F.lit(r"[a-z]{2,}"), F.lit(0)
             ).alias("__t"),
-        )
+        ),
+        checkpoint_dir,
     )
     terms = toks.select(F.col(id_col), F.explode("__t").alias("term"))
-    # lazily materialized: the model-scalar collect below populates the
-    # blocks and the scoring join reuses them — without the cut the
-    # explode + vocabulary shuffle over the token arrays runs twice. A
-    # lazy localCheckpoint (contaminated_docs_bloom precedent) rather than
-    # .persist(): the blocks are GC-cleanable once the result frame is
-    # dropped, instead of a CacheManager entry that lingers for the whole
-    # session (ADVICE r12)
-    vocab = (
-        terms.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    # materialized: the model-scalar collect and the scoring join both
+    # read the vocabulary — without the cut its shuffle runs twice
+    vocab = materialize(terms.groupBy("term").agg(F.count(F.lit(1)).alias("c")))
     total, vsize = vocab.agg(F.sum("c"), F.count(F.lit(1))).first()
     if not vsize:
         # empty corpus/vocabulary: typed empty result (sum(None)+int crash)
@@ -750,32 +736,26 @@ def bigram_lm_scores(
     unhinted because web-scale vocabularies can exceed executor memory
     (AQE broadcasts when they fit). Only the two unigram-model scalars
     (T, V) touch the driver."""
-    from graphique_spark.llm.dedup import ensure_parallelism, materializer
+    from graphique_spark.llm.dedup import ensure_parallelism
 
     df = ensure_parallelism(df)
-    # materialized: the token arrays feed FOUR consumers (the unigram
-    # scalar pass, the vocab join side, the bigram count stream and the
-    # scoring stream) — without the cut each one re-runs the regex
-    # tokenizer over the whole corpus, the dominant per-row cost.
-    # eager=False: the unigram scalar collect below is the first action
-    # and populates these blocks in the same job — no dedicated cut job.
-    toks = materializer(df, checkpoint_dir, eager=False)(
+    # materialized: the token arrays feed the unigram vocabulary, the
+    # bigram count stream and the scoring stream — without the cut each
+    # one re-runs the regex tokenizer over the whole corpus, the dominant
+    # per-row cost
+    toks = materialize(
         df.select(
             F.col(id_col),
             F.regexp_extract_all(
                 F.lower(F.col(text)), F.lit(r"[a-z]{2,}"), F.lit(0)
             ).alias("__t"),
-        )
+        ),
+        checkpoint_dir,
     )
     uni = toks.select(F.explode("__t").alias("w"))
-    # lazily materialized (see unigram_lm_scores): the unigram-scalar
-    # collect populates the blocks, the backoff join reuses them — and the
-    # blocks are GC-cleanable, unlike a lingering .persist() entry
-    vocab = (
-        uni.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cu"))
-        .localCheckpoint(eager=False)
-    )
+    # materialized: the unigram-scalar collect and the backoff join both
+    # read the vocabulary
+    vocab = materialize(uni.groupBy("w").agg(F.count(F.lit(1)).alias("cu")))
     total, vsize = vocab.agg(F.sum("cu"), F.count(F.lit(1))).first()
     if not vsize:
         # empty corpus/vocabulary: typed empty result (sum(None)+int crash)
@@ -1004,16 +984,14 @@ def term_drift(
             F.regexp_extract_all(F.lower(F.col(text)), F.lit(r"[a-z]{2,}"), F.lit(0))
         ).alias("term"),
     )
-    # lazily materialized (see unigram_lm_scores): the totals collect
-    # populates the blocks, the scored projection reuses them — without
-    # the cut the corpus tokenize + vocabulary shuffle runs twice
-    counts = (
-        tok.groupBy("term")
-        .agg(
+    # materialized: the totals collect and the scored projection both
+    # read the counts — without the cut the corpus tokenize + vocabulary
+    # shuffle runs twice
+    counts = materialize(
+        tok.groupBy("term").agg(
             F.sum(F.col("__a").cast("long")).alias("ca"),
             F.sum(F.col("__b").cast("long")).alias("cb"),
         )
-        .localCheckpoint(eager=False)
     )
     total_a, total_b, vocab = counts.agg(
         F.sum("ca"), F.sum("cb"), F.count(F.lit(1))
@@ -1144,17 +1122,14 @@ def dsir_log_weights(
     ).select(
         id_col, "__tgt", F.pmod(hash60(F.col("term")), F.lit(buckets)).alias("b")
     )
-    # lazily materialized (see unigram_lm_scores): the totals collect
-    # populates the blocks, the log-ratio projection reuses them — without
-    # the cut the whole corpus tokenize runs twice to rebuild a
-    # buckets-wide (constant-size) frame
-    counts = (
-        tok.groupBy("b")
-        .agg(
+    # materialized: the totals collect and the log-ratio projection both
+    # read the counts — without the cut the whole corpus tokenize runs
+    # twice to rebuild a buckets-wide (constant-size) frame
+    counts = materialize(
+        tok.groupBy("b").agg(
             F.count(F.lit(1)).alias("c_raw"),
             F.sum(F.col("__tgt").cast("long")).alias("c_tgt"),
         )
-        .localCheckpoint(eager=False)
     )
     n_raw, n_tgt = counts.agg(F.sum("c_raw"), F.sum("c_tgt")).first()
     if not n_raw:

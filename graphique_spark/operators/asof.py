@@ -23,7 +23,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from graphique_spark.session import local_frame
+from graphique_spark.session import local_frame, materialize
 
 _SIDE = "__asof_side"
 _PAYLOAD = "__asof_payload"
@@ -173,9 +173,7 @@ def _global_last_fill(unioned: DataFrame, order: list[Column]) -> DataFrame:
     parts = parts.withColumn(_PID, F.spark_partition_id())
     w = Window.partitionBy(_PID).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
     rn = F.row_number().over(Window.partitionBy(_PID).orderBy(*order))
-    from graphique_spark.operators.sequence import snapshot
-
-    filled = snapshot(
+    filled = materialize(
         parts.withColumn(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w))
         .withColumn(_RON, F.last(_RON, ignorenulls=True).over(w))
         .withColumn("__asof_rn", rn)

@@ -21,6 +21,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphique_spark.session import materialize
+
 INSERT, UPDATE, DELETE = "insert", "update", "delete"
 
 
@@ -63,27 +65,21 @@ def apply_cdc(
     ('insert'/'update'/'delete' — insert and update are both upserts, the
     distinction is kept only for the emitter's semantics). Sequence ties
     within a key break deterministically by op string, then payload.
-    Returns the next snapshot with the base's schema. ``checkpoint_dir``
-    switches the collapsed-log materialization from executor-local blocks
-    to reliable storage (the standard materializer knob)."""
+    Returns the next snapshot with the base's schema. The collapsed log is
+    materialized when this is called (one Spark job); ``checkpoint_dir``
+    writes it to reliable storage instead of executor-local blocks (see
+    :func:`graphique_spark.session.materialize`)."""
     keys = list(keys)
     payload = [c for c in base.columns if c not in keys]
     missing = [c for c in payload + keys + [seq_col, op_col] if c not in log.columns]
     if missing:
         raise ValueError(f"apply_cdc: log is missing columns {missing}")
-    # materialized LAZILY: ``latest`` feeds BOTH the anti-join key side and
-    # the upsert side — two consumers with different projections below the
+    # materialized: ``latest`` feeds BOTH the anti-join key side and the
+    # upsert side — two consumers with different projections below the
     # aggregate, so exchange reuse never covers them and the whole log
-    # fold (and everything upstream of the log) would execute twice.
-    # eager=False keeps apply_cdc a lazy primitive (no Spark job at call
-    # time): the caller's FIRST action over the result computes the fold
-    # once and populates the blocks the second consumer reads — at 3 tiny
-    # micro-batches the eager variant paid one extra job per batch
-    # (stream_cdc_snapshot 4.39->4.93s, VERDICT r12 item 1)
-    from graphique_spark.llm.dedup import materializer
-
-    latest = materializer(log, checkpoint_dir, eager=False)(
-        _collapse_log(log, keys, seq_col, op_col, payload)
+    # fold (and everything upstream of the log) would execute twice
+    latest = materialize(
+        _collapse_log(log, keys, seq_col, op_col, payload), checkpoint_dir
     )
     # null-safe key equality: a plain on=keys anti-join never matches null
     # key values, so ops against null-keyed rows would silently not apply.

@@ -10,9 +10,9 @@ expressed as joins + aggregates — Pregel without the framework:
 Scale shape per iteration: one join of the slim (src, dst, 1/outdeg)
 edge list against the (node, rank) table on src, one groupBy(dst) sum —
 both partial-aggregated map-side. The edge list is computed once,
-repartitioned on src and persisted, so every iteration reuses the same
-co-location; the rank table is the only thing that changes. Dangling
-nodes (no out-edges) redistribute their mass uniformly via one scalar
+repartitioned on src and materialized, so no iteration re-runs the
+upstream edge pipeline; the rank table is the only thing that changes.
+Dangling nodes (no out-edges) redistribute their mass uniformly via one scalar
 aggregate per iteration — the standard correction, without which rank
 leaks. Iterations are a fixed count (rank deltas converge geometrically;
 callers wanting a tolerance can compare successive snapshots with
@@ -24,6 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphique_spark.session import materialize
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
@@ -34,22 +37,27 @@ def pagerank(
     """Rank nodes of the directed graph ``edges`` (one row per edge,
     duplicates collapse). Returns (node, rank); ranks sum to 1.
 
-    The loop is driver-side but each step is a narrow distributed plan;
-    ``iterations`` bounds plan depth, and the per-iteration ``localCheckpoint``
-    cuts lineage so the final DAG doesn't re-execute every prior step.
+    The loop is driver-side but each step is a narrow distributed plan.
+    Each iteration ends in a :func:`graphique_spark.session.materialize`
+    cut, so the final DAG doesn't re-execute every prior step. None of the
+    cuts enters the CacheManager: an intermediate's blocks go once nothing
+    references its frame, and the returned frame keeps only the last
+    iteration's.
     """
     spark = edges.sparkSession
-    # one persisted copy of the deduped edge list: the node set, out-degrees
-    # and contribution weights all derive from it, and without the persist
-    # the (possibly expensive) upstream edge pipeline re-runs per lineage
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct().persist()
+    # one materialized copy of the deduped edge list: the node set,
+    # out-degrees and contribution weights all derive from it, and without
+    # the cut the (possibly expensive) upstream edge pipeline re-runs per
+    # lineage
+    e = materialize(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    )
     # node set AND the static dangling flag (no out-edges) in ONE shuffle:
     # explode each edge into (src, has_out=true) + (dst, false) and take
     # max(has_out) per node. The union-distinct + degree-join version cost
-    # three shuffles and a join for the same frame; the groupBy also
-    # leaves nodes hash-partitioned by node, which every iteration's
-    # nodes⋈inflow join reuses without an exchange.
-    nodes = (
+    # three shuffles and a join for the same frame. Materialized: the node
+    # count and every iteration read it.
+    nodes = materialize(
         e.select(
             F.explode(
                 F.array(
@@ -61,17 +69,16 @@ def pagerank(
         .select("s.node", F.col("s.h").alias("h"))
         .groupBy("node")
         .agg(F.max("h").alias("has_out"))
-        .persist()
     )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    n = nodes.count()  # materializes e + nodes; contrib reuses cached e
+    n = nodes.count()
     # partition count for the per-iteration edge side derives from the
     # measured edge count (fixed-width rows: ~2M rows ≈ 100 MB targets the
     # guide's 100 MB-1 GB band), not from a constant: the old
     # min(defaultParallelism, 64) under-partitions a web-scale edge list
     # (billions of edges across 64 tasks) and over-partitions a small one
-    # (64 near-empty tasks per iteration). The count is metadata-priced on
-    # the already-materialized cache.
+    # (64 near-empty tasks per iteration). The count reads the
+    # materialized edge list.
     rows_per_part = int(
         spark.conf.get("graphique.pagerank.edgeRowsPerPartition", "2000000")
     )
@@ -82,20 +89,18 @@ def pagerank(
             16 * spark.sparkContext.defaultParallelism,
         ),
     )
-    # contribution weight per edge, co-located by src for every iteration
-    contrib_edges = (
-        e.join(outdeg, on="src")
-        .select("src", "dst", (1.0 / F.col("outdeg")).alias("w"))
-        .repartition(n_parts, "src")
-        .persist()
-    )
     if n == 0:
         # empty edge frame: no nodes to rank (base would divide by zero);
         # limit(0) keeps the node column's type from the input edges
-        empty = nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
-        for cached in (e, contrib_edges, nodes):
-            cached.unpersist()
-        return empty
+        return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
+    # contribution weight per edge, hash-partitioned by src into n_parts.
+    # Under AQE a cut does not carry that layout into later plans, so
+    # each iteration re-shuffles this side (a persist kept it)
+    contrib_edges = materialize(
+        e.join(outdeg, on="src")
+        .select("src", "dst", (1.0 / F.col("outdeg")).alias("w"))
+        .repartition(n_parts, "src")
+    )
     base = (1.0 - damping) / n
 
     ranks = nodes.select("node", "has_out", F.lit(1.0 / n).alias("rank"))
@@ -113,7 +118,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(inflow, on="node", how="left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -125,9 +130,5 @@ def pagerank(
                     * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col("__dm") / n)
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
-    contrib_edges.unpersist()
-    nodes.unpersist()
-    e.unpersist()
     return ranks.select("node", "rank")

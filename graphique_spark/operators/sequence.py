@@ -11,6 +11,13 @@ task. Every helper here instead uses the classic two-phase pattern:
    turned into offsets and broadcast back.
 
 Cost: one narrow pass + one broadcast join — no global sort, no single task.
+
+The two phases are two jobs over the same rows, so each helper first cuts
+the lineage with :func:`graphique_spark.session.materialize`: a
+nondeterministic upstream (``sample``, an AQE-coalesced shuffle) could
+otherwise change partition contents between the summary job and the row
+job. The cut costs one job at call time and holds no CacheManager entry;
+its blocks go once the returned frame is dropped.
 """
 
 from __future__ import annotations
@@ -20,24 +27,10 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphique_spark.session import materialize
+
 _PID = "__gs_pid"
 _MONO = "__gs_mono"
-
-
-def snapshot(df: DataFrame) -> DataFrame:
-    """Pin partition contents before a two-job computation.
-
-    Every two-phase helper here runs one job to collect per-partition
-    summaries and a second over the SAME lineage to produce rows; a
-    nondeterministic upstream (``sample``, AQE-coalesced shuffle) could
-    otherwise desync partition contents between the jobs. MEMORY_AND_DISK
-    persistence makes the first job materialize the blocks the second one
-    reads (cleaned up by the ContextCleaner once unreferenced). Residual
-    risk is recomputation after block eviction/executor loss — rare, and
-    closable with reliable checkpointing where it matters."""
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _ordering(order_by: Sequence[str | Column]) -> list[Column]:
@@ -59,7 +52,7 @@ def with_row_index(df: DataFrame, name: str = "_rowid") -> DataFrame:
     ``zipWithIndex`` re-expressed in DataFrame operators (Arrow-friendly,
     no RDD serialization).
     """
-    tagged = snapshot(
+    tagged = materialize(
         df.withColumn(_PID, F.spark_partition_id()).withColumn(
             _MONO, F.monotonically_increasing_id()
         )
@@ -93,7 +86,7 @@ def partitioned_cumsum(
     """
     order = _ordering(order_by)
     parts = df.repartitionByRange(*order).sortWithinPartitions(*order)
-    parts = snapshot(
+    parts = materialize(
         parts.withColumn(_PID, F.spark_partition_id()).withColumn("__gs_val", value)
     )
     totals = {
@@ -148,7 +141,7 @@ def with_run_ids(
     # count of in-partition change points, plus the first/last `by` values
     # and the first row's split flag — everything the driver needs to decide
     # boundaries and offsets without a second scan or a broadcast join.
-    flagged = snapshot(
+    flagged = materialize(
         parts.withColumn("__gs_lchg", (local_change & ~first_in_part).cast("long"))
     )
     summary = {

@@ -25,6 +25,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphique_spark.session import materialize
+
 _SALT = "__gs_salt"
 
 
@@ -120,9 +122,9 @@ def skew_report(
     keys = list(keys)
     from graphique_spark.operators.topk import top_k
 
-    # pinned: the scalar collect below and the returned top-k both read
-    # counts — without the persist the per-key shuffle over df runs twice
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).persist()
+    # materialized: the scalar collect below and the returned top-k both
+    # read counts — without the cut the per-key shuffle over df runs twice
+    counts = materialize(df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")))
     total, n_keys = counts.agg(F.sum("n"), F.count(F.lit(1))).first()
     heavy = top_k(counts, ["-n", *keys], top, ())
     if not n_keys:

@@ -26,11 +26,10 @@ CLI form (config JSON with an added ``"input": <parquet root>``)::
 
 Scale shape: every step is one of the already-audited distributed
 operators (no new shuffles are introduced here); the runner adds one
-``count()`` per step for the audit (cheap metadata-priced aggregates)
-and persists each stage's output so step N+1 never re-executes steps
-1..N. For reliable lineage cuts on a real cluster pass
-``checkpoint_dir`` in the config (same contract as the dedup
-operators).
+``count()`` per step for the audit, read off the stage's output, which
+``session.materialize`` cuts so step N+1 never re-executes steps 1..N.
+For reliable lineage cuts on a real cluster pass ``checkpoint_dir`` in
+the config (same contract as the dedup operators).
 """
 
 from __future__ import annotations
@@ -41,7 +40,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphique_spark.session import local_frame
+from graphique_spark.session import local_frame, materialize
 
 
 def _step_quality_filter(spark, df, p, text, id_col):
@@ -156,15 +155,14 @@ def _step_dsir_select(spark, df, p, text, id_col):
     # token-less docs (non-Latin scripts, numeric-only, empty text) never
     # appear in scores — give them the neutral weight 0.0 (empty-product
     # importance ratio = 1) instead of silently dropping them all
-    scored = (
+    # slim (id, double) frame, materialized so the quantile action and
+    # the keep join below don't each re-run the explode/model pipeline
+    scored = materialize(
         df.select(id_col)
         .join(scores.select(id_col, "log_weight"), on=id_col, how="left")
         .select(
             id_col, F.coalesce("log_weight", F.lit(0.0)).alias("log_weight")
         )
-        # slim (id, double) frame; pinned so the quantile action and the
-        # keep join below don't each re-run the explode/model pipeline
-        .persist()
     )
     # deterministic keep set: the top fraction by weight — exact rank via
     # percent_rank would need a global window; a 1-row quantile broadcast
@@ -290,7 +288,9 @@ def run_pipeline(
     text = config.get("text", "text")
     id_col = config.get("id", "doc_id")
     audit: list[dict] = []
-    current = df.persist()
+    # every step's output is materialized: its row count and the next
+    # step both read it
+    current = materialize(df)
     rows = current.count()
     for spec in config.get("steps", []):
         op = spec["op"]
@@ -298,9 +298,8 @@ def run_pipeline(
             raise ValueError(f"unknown pipeline op {op!r} (have {sorted(STEPS)})")
         params = {k: v for k, v in spec.items() if k != "op"}
         nxt, extra = STEPS[op](spark, current, params, text, id_col)
-        nxt = nxt.persist()
+        nxt = materialize(nxt)
         n_out = nxt.count()
-        current.unpersist()
         audit.append(
             {"op": op, "rows_in": rows, "rows_out": n_out, "dropped": rows - n_out}
             | extra

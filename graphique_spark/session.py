@@ -44,9 +44,10 @@ DEFAULT_CONF = {
     # Parquet TIME(MICROS) still scans as int64 — temporal.micros_to_time
     # is the decode step.
     "spark.sql.timeType.enabled": "true",
-    # Reclaim orphaned persisted blocks (two-phase operators snapshot
-    # partition contents) promptly in long-running services; the 30 min
-    # default lets them pile up across many queries.
+    # Bounds how long the blocks of an unreachable ``materialize`` cut
+    # live: the ContextCleaner drops them only after a driver GC notices
+    # the frame is gone, and the 30 min default lets them pile up across
+    # the queries of a long-running service.
     "spark.cleaner.periodicGC.interval": "2min",
 }
 
@@ -107,3 +108,24 @@ def local_frame(
     else:
         table = to_arrow_schema(schema).empty_table()
     return spark.createDataFrame(table, schema=schema)
+
+
+def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+    """Cut ``df``'s lineage now: one eager job stores its rows, and the
+    returned frame reads them instead of re-running the plan.
+
+    Use it where several actions, or several branches of one plan, consume
+    the same costly intermediate, or where partition contents must not
+    change between two jobs. The rows go to executor-local blocks
+    (``localCheckpoint``), or to reliable storage under ``checkpoint_dir``
+    (an HDFS/S3 path on a real cluster, where an executor loss would lose
+    local blocks mid-job). Nothing enters the CacheManager: the returned
+    frame owns its blocks, and Spark's ContextCleaner drops them once
+    nothing references the frame (``spark.cleaner.periodicGC.interval``
+    in :data:`DEFAULT_CONF` bounds how long that takes). Files under
+    ``checkpoint_dir`` stay unless
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set."""
+    if checkpoint_dir:
+        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -350,9 +350,6 @@ class _Renderer:
 
     # -- operator renderers -------------------------------------------------
 
-    def op_noop(self, block, df):
-        return block
-
     def op_filter(self, block, df, pred: Column):
         if not block.plain:
             block = self.wrap(block)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphique_spark.session import local_frame
+from graphique_spark.session import local_frame, materialize
 
 
 ROCKSDB_PROVIDER = (
@@ -424,53 +424,47 @@ def incremental_dedup_sink(
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            # index the batch ONCE; both the dedup probe and the index
-            # append read these rows (shingling is the dominant per-batch
-            # cost — computing it twice doubled the ingest CPU)
-            idx_rows = _dedup.minhash_index(
+        # materialized: the dedup probe and the index append both read the
+        # batch's index rows (shingling is the dominant per-batch cost —
+        # computing it twice doubled the ingest CPU)
+        idx_rows = materialize(
+            _dedup.minhash_index(
                 batch, text=text, id_col=id_col, num_hashes=num_hashes, bands=bands
-            ).persist()
-            existing = read_parquet_if_exists(spark, index_dest)
-            if existing is not None:
-                # strictly-earlier batches only: a RETRIED batch may have
-                # already written its own index partition, and matching a
-                # doc against itself would fabricate jaccard=1.0 dups.
-                # batch_id is the hive partition key, so this prunes files.
-                history = existing.filter(F.col("batch_id") < batch_id).select(
-                    "id", "hs", "band_keys"
-                )
-                dups = _dedup.incremental_minhash_dedup(
-                    batch, history,
-                    text=text, id_col=id_col, num_hashes=num_hashes,
-                    bands=bands, min_jaccard=min_jaccard,
-                    new_index=idx_rows,
-                )
-            else:
-                dups = local_frame(
-                    spark, [], "new_id long, index_id long, jaccard double"
-                )
-            (
-                dups.withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(dups_dest)
             )
-            (
-                idx_rows.withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(index_dest)
+        )
+        existing = read_parquet_if_exists(spark, index_dest)
+        if existing is not None:
+            # strictly-earlier batches only: a RETRIED batch may have
+            # already written its own index partition, and matching a
+            # doc against itself would fabricate jaccard=1.0 dups.
+            # batch_id is the hive partition key, so this prunes files.
+            history = existing.filter(F.col("batch_id") < batch_id).select(
+                "id", "hs", "band_keys"
             )
-        finally:
-            batch.unpersist()
-            try:
-                idx_rows.unpersist()
-            except NameError:  # persist failed before assignment
-                pass
+            dups = _dedup.incremental_minhash_dedup(
+                batch, history,
+                text=text, id_col=id_col, num_hashes=num_hashes,
+                bands=bands, min_jaccard=min_jaccard,
+                new_index=idx_rows,
+            )
+        else:
+            dups = local_frame(
+                spark, [], "new_id long, index_id long, jaccard double"
+            )
+        (
+            dups.withColumn("batch_id", F.lit(batch_id))
+            .write.partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(dups_dest)
+        )
+        (
+            idx_rows.withColumn("batch_id", F.lit(batch_id))
+            .write.partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(index_dest)
+        )
 
     writer = (
         docs.writeStream.foreachBatch(process)
@@ -549,48 +543,47 @@ def upsert_sink(
             # '' cannot round-trip a partitioned layout (the writer stores
             # it as __HIVE_DEFAULT_PARTITION__, which reads back as null)
             batch = batch.withColumn(part, F.nullif(F.col(part), F.lit("")))
-        batch = batch.persist()
-        try:
-            existing = read_parquet_if_exists(spark, dest, schema=batch.schema)
-            if existing is not None:
-                # null-safe joins throughout: a plain on= join never
-                # matches NULL, which would (a) exclude the stored
-                # null-partition rows from `keep` so the dynamic overwrite
-                # of __HIVE_DEFAULT_PARTITION__ drops them, and (b) let a
-                # null-keyed row survive its own update, duplicating keys
-                touched = batch.select(F.col(part).alias("__tp")).distinct()
-                affected = existing.join(
-                    F.broadcast(touched),
-                    existing[part].eqNullSafe(touched["__tp"]),
-                    "semi",
-                )
-                bkeys = batch.select(
-                    *[F.col(k).alias(f"__bk_{k}") for k in keys]
-                ).distinct()
-                anti_cond = None
-                for k in keys:
-                    c = affected[k].eqNullSafe(bkeys[f"__bk_{k}"])
-                    anti_cond = c if anti_cond is None else anti_cond & c
-                keep = affected.join(bkeys, anti_cond, "anti")
-                merged = keep.unionByName(batch)
-            else:
-                merged = batch
-            # materialize before overwriting dest: the merged plan reads
-            # from dest, and the barrier guarantees no task re-scans a
-            # partition that the commit phase is about to replace
-            merged = merged.localCheckpoint()
-            (
-                merged.repartition(part)
-                .write.partitionBy(part)
-                # per-write dynamic overwrite: never mutate the shared
-                # session conf (it would change overwrite semantics of
-                # unrelated writes elsewhere in the application)
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(dest)
+        existing = read_parquet_if_exists(spark, dest, schema=batch.schema)
+        if existing is not None:
+            # materialized: the touched partitions, the batch keys and the
+            # union all read the batch
+            batch = materialize(batch)
+            # null-safe joins throughout: a plain on= join never
+            # matches NULL, which would (a) exclude the stored
+            # null-partition rows from `keep` so the dynamic overwrite
+            # of __HIVE_DEFAULT_PARTITION__ drops them, and (b) let a
+            # null-keyed row survive its own update, duplicating keys
+            touched = batch.select(F.col(part).alias("__tp")).distinct()
+            affected = existing.join(
+                F.broadcast(touched),
+                existing[part].eqNullSafe(touched["__tp"]),
+                "semi",
             )
-        finally:
-            batch.unpersist()
+            bkeys = batch.select(
+                *[F.col(k).alias(f"__bk_{k}") for k in keys]
+            ).distinct()
+            anti_cond = None
+            for k in keys:
+                c = affected[k].eqNullSafe(bkeys[f"__bk_{k}"])
+                anti_cond = c if anti_cond is None else anti_cond & c
+            keep = affected.join(bkeys, anti_cond, "anti")
+            merged = keep.unionByName(batch)
+        else:
+            merged = batch
+        # materialize before overwriting dest: the merged plan reads
+        # from dest, and the barrier guarantees no task re-scans a
+        # partition that the commit phase is about to replace
+        merged = materialize(merged)
+        (
+            merged.repartition(part)
+            .write.partitionBy(part)
+            # per-write dynamic overwrite: never mutate the shared
+            # session conf (it would change overwrite semantics of
+            # unrelated writes elsewhere in the application)
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(dest)
+        )
 
     writer = (
         df.writeStream.foreachBatch(merge_batch)
@@ -669,76 +662,75 @@ def cdc_sink(
             # layout, so normalize it to null up front or a later
             # delete/update keyed on '' never matches its stored row
             batch = batch.withColumn(part, F.nullif(F.col(part), F.lit("")))
-        batch = batch.persist()
-        try:
-            # collect partition values as Spark-rendered STRINGS (the cast
-            # matches what the partitioned write puts in the path), keyed
-            # alongside the raw value for the isin() pushdown below
-            touched_rows = (
-                batch.select(
-                    F.col(part).alias("__raw"),
-                    F.col(part).cast("string").alias("__str"),
-                )
-                .distinct()
-                .collect()
+        # materialized: the touched-partition collect and apply_cdc both
+        # read the batch
+        batch = materialize(batch)
+        # collect partition values as Spark-rendered STRINGS (the cast
+        # matches what the partitioned write puts in the path), keyed
+        # alongside the raw value for the isin() pushdown below
+        touched_rows = (
+            batch.select(
+                F.col(part).alias("__raw"),
+                F.col(part).cast("string").alias("__str"),
             )
-            touched = [r["__raw"] for r in touched_rows]
-            if not touched:
-                return
-            # '' was normalized to NULL above (it cannot round-trip a
-            # partitioned layout), so only None can mark the
-            # __HIVE_DEFAULT_PARTITION__ directory here
+            .distinct()
+            .collect()
+        )
+        touched = [r["__raw"] for r in touched_rows]
+        if not touched:
+            return
+        # '' was normalized to NULL above (it cannot round-trip a
+        # partitioned layout), so only None can mark the
+        # __HIVE_DEFAULT_PARTITION__ directory here
+        if any(v is None for v in touched):
+            touched = [v for v in touched if v is not None] + [None]
+        payload = [c for c in batch.columns if c not in (seq_col, op_col)]
+        existing = read_parquet_if_exists(
+            spark, dest, schema=batch.select(payload).schema
+        )
+        if existing is not None:
+            # isin([None]) is never true — null partitions need isNull
+            cond = F.col(part).isin([v for v in touched if v is not None])
             if any(v is None for v in touched):
-                touched = [v for v in touched if v is not None] + [None]
-            payload = [c for c in batch.columns if c not in (seq_col, op_col)]
-            existing = read_parquet_if_exists(
-                spark, dest, schema=batch.select(payload).schema
-            )
-            if existing is not None:
-                # isin([None]) is never true — null partitions need isNull
-                cond = F.col(part).isin([v for v in touched if v is not None])
-                if any(v is None for v in touched):
-                    cond = cond | F.col(part).isNull()
-                base = existing.where(cond).select(payload)
-            else:
-                base = batch.select(payload).limit(0)
-            # materialize before overwriting dest: the merged plan reads
-            # from dest, and the barrier guarantees no task re-scans a
-            # partition the commit phase is about to replace
-            merged = apply_cdc(
-                base, batch, keys=keys, seq_col=seq_col, op_col=op_col
-            ).localCheckpoint()
-            (
-                merged.repartition(part)
-                .write.partitionBy(part)
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(dest)
-            )
-            # partitions whose every row was deleted never appear in the
-            # dynamic-overwrite output — drop their directories explicitly,
-            # matching on the Spark-rendered string form (None survives the
-            # cast as None on both sides, so null partitions compare too)
-            survivors = {
-                r[0]
-                for r in merged.select(F.col(part).cast("string"))
-                .distinct()
-                .collect()
-            }
-            dead = [r["__str"] for r in touched_rows if r["__str"] not in survivors]
-            if dead and existing is not None:
-                # null and '' map to the SAME directory; only delete a
-                # directory no survivor value still claims
-                survivor_dirs = {partition_dirname(spark, s) for s in survivors}
-                dead_dirs = {partition_dirname(spark, p) for p in dead}
-                jvm = spark.sparkContext._jvm
-                conf = spark.sparkContext._jsc.hadoopConfiguration()
-                for dirname in sorted(dead_dirs - survivor_dirs):
-                    path = jvm.org.apache.hadoop.fs.Path(f"{dest}/{dirname}")
-                    fs = path.getFileSystem(conf)
-                    fs.delete(path, True)
-        finally:
-            batch.unpersist()
+                cond = cond | F.col(part).isNull()
+            base = existing.where(cond).select(payload)
+        else:
+            base = batch.select(payload).limit(0)
+        # materialize before overwriting dest: the merged plan reads
+        # from dest, and the barrier guarantees no task re-scans a
+        # partition the commit phase is about to replace
+        merged = materialize(
+            apply_cdc(base, batch, keys=keys, seq_col=seq_col, op_col=op_col)
+        )
+        (
+            merged.repartition(part)
+            .write.partitionBy(part)
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(dest)
+        )
+        # partitions whose every row was deleted never appear in the
+        # dynamic-overwrite output — drop their directories explicitly,
+        # matching on the Spark-rendered string form (None survives the
+        # cast as None on both sides, so null partitions compare too)
+        survivors = {
+            r[0]
+            for r in merged.select(F.col(part).cast("string"))
+            .distinct()
+            .collect()
+        }
+        dead = [r["__str"] for r in touched_rows if r["__str"] not in survivors]
+        if dead and existing is not None:
+            # null and '' map to the SAME directory; only delete a
+            # directory no survivor value still claims
+            survivor_dirs = {partition_dirname(spark, s) for s in survivors}
+            dead_dirs = {partition_dirname(spark, p) for p in dead}
+            jvm = spark.sparkContext._jvm
+            conf = spark.sparkContext._jsc.hadoopConfiguration()
+            for dirname in sorted(dead_dirs - survivor_dirs):
+                path = jvm.org.apache.hadoop.fs.Path(f"{dest}/{dirname}")
+                fs = path.getFileSystem(conf)
+                fs.delete(path, True)
 
     writer = (
         log.writeStream.foreachBatch(process)

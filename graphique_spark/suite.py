@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from graphique_spark.dataset import Dataset
 from graphique_spark.inputs import Agg
-from graphique_spark.session import local_frame
+from graphique_spark.session import local_frame, materialize
 from graphique_spark.sources import NANO_COLUMNS, normalize_nanos
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -2690,14 +2690,13 @@ def q15_top_supplier(spark, sf_dir):
         (li.df["l_shipdate"] >= F.lit("1997-01-01").cast("timestamp"))
         & (li.df["l_shipdate"] < F.lit("1997-04-01").cast("timestamp"))
     ).df
-    revenue = (
-        li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(
+    # materialized: consumed twice, by the max scalar and the filter probe
+    revenue = materialize(
+        li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
             fround(
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("total_revenue")
         )
-        .persist()  # consumed twice: the max scalar and the filter probe
     )
     top = revenue.agg(F.max("total_revenue").alias("__mx"))
     supp = table(spark, sf_dir, "supplier").df.select("s_suppkey", "s_name")

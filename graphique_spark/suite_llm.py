@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from graphique_spark import streaming
 from graphique_spark.llm import dedup, multimodal, similarity, text
+from graphique_spark.session import materialize
 from graphique_spark.suite import ORACLES, fround, query, table
 
 def _spread(ds):
@@ -2522,9 +2523,7 @@ def basket_cooccurrence(spark, sf_dir):
     # materialized: the distinct line set feeds FOUR consumers (the order
     # count, both self-join sides and the per-part counts) — without the
     # cut each one re-runs the 600k-row distinct shuffle
-    # eager=False: the n_orders count right below is the first action and
-    # populates the blocks for the other three consumers — no extra job
-    lines = dedup.materializer(spark, eager=False)(
+    lines = materialize(
         table(spark, sf_dir, "lineitem").df.select("l_orderkey", "l_partkey").distinct()
     )
     n_orders = lines.select("l_orderkey").distinct().count()

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from graphique_spark import suite
+from graphique_spark.session import materialize
 from graphique_spark.suite import fround, table
 
 PARTSUPP_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -200,9 +201,9 @@ def q9_product_type_profit(spark, sf_dir):
 def q11_important_stock(spark, sf_dir):
     """TPC-H Q11 (important stock identification).  The scalar total
     subquery becomes a one-row aggregate broadcast-cross-joined into the
-    HAVING filter; the grouped frame is persisted so the per-part sums
+    HAVING filter; the grouped frame is materialized so the per-part sums
     are computed once, not once for the groups and once for the total
-    (total = sum of group sums, aggregated FROM the persisted groups —
+    (total = sum of group sums, aggregated FROM the materialized groups —
     no second scan).  Both engines compute the total as a sum of
     per-group sums (matching summation trees) and both sides of the
     threshold comparison go through the suite's fround convention, so a
@@ -224,7 +225,8 @@ def q11_important_stock(spark, sf_dir):
         "ps_partkey",
         (F.col("ps_availqty") * F.col("ps_supplycost")).alias("v"),
     )
-    groups = nps.groupBy("ps_partkey").agg(F.sum("v").alias("__sv")).persist()
+    # materialized: the total and the filter both read the groups
+    groups = materialize(nps.groupBy("ps_partkey").agg(F.sum("v").alias("__sv")))
     total = groups.agg(F.sum("__sv").alias("__total"))
     return (
         groups.crossJoin(F.broadcast(total))

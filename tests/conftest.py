@@ -45,6 +45,49 @@ def spark():
     yield session
 
 
+def persistent_rdd_count(spark) -> int:
+    """``getPersistentRDDs().size()`` without keeping those RDDs alive. The
+    returned map holds every persistent RDD strongly for as long as the
+    gateway keeps its handle, and py4j releases dropped handles from a
+    thread that polls once a second, so a forced GC in between finds them
+    all still reachable. Releasing the handle at once makes the count
+    observe the RDDs instead of retaining them."""
+    from py4j.java_gateway import GatewayClient
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    try:
+        return rdds.size()
+    finally:
+        GatewayClient.garbage_collect_object(rdds._gateway_client, rdds._target_id)
+
+
+def settled_persistent_rdds(spark, baseline: int, rounds: int = 50) -> int:
+    """The persistent-RDD count once it falls to ``baseline`` or
+    ``rounds`` forced collections pass. A dropped materialized frame
+    releases its blocks only after Python's GC frees the py4j handle and
+    the JVM's GC clears the weak reference Spark keeps, so each round runs
+    ``gc.collect()`` and ``System.gc()`` before reading the count again."""
+    import gc
+    import time
+
+    count = persistent_rdd_count(spark)
+    for _ in range(rounds):
+        if count <= baseline:
+            break
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.1)
+        count = persistent_rdd_count(spark)
+    return count
+
+
+def assert_nothing_retained(spark, baseline: int) -> None:
+    """Nothing a finished computation used stays behind: the CacheManager
+    is empty and the persistent-RDD count settles back to ``baseline``."""
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert settled_persistent_rdds(spark, baseline) <= baseline
+
+
 @pytest.fixture(scope="session")
 def tables(spark):
     from graphique_spark.sources import load_tables

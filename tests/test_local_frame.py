@@ -130,5 +130,15 @@ def test_metadata_groups_and_take_index_are_local_relations(spark, tables, tmp_p
     assert "LogicalRDD" not in plan
 
     taken = tables["nation"].take([3, 1])
-    plan = taken.df._jdf.queryExecution().optimizedPlan().toString()
-    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    plan = taken.df._jdf.queryExecution().optimizedPlan()
+    assert "LocalRelation" in plan.toString(), plan.toString()
+    # the one LogicalRDD left is with_row_index's materialize cut, whose
+    # lineage is its checkpoint, never a pickled Python RDD
+    leaves = plan.collectLeaves()
+    rdds = [
+        leaf.rdd().toDebugString()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD"
+    ]
+    assert len(rdds) == 1 and "LocalCheckpointRDD" in rdds[0], rdds
+    assert "PythonRDD" not in rdds[0], rdds

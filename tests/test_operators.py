@@ -267,7 +267,7 @@ def test_asof_global_no_keys(spark):
 
 
 def test_row_index_nondeterministic_upstream(tables):
-    # sample() re-executes differently per job; the snapshot() persist must
+    # sample() re-executes differently per job; the materialize() cut must
     # pin partition contents so the count job and the output job agree,
     # yielding a dense 0..n-1 index
     from graphique_spark.operators.sequence import with_row_index

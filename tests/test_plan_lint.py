@@ -3,7 +3,9 @@ join shapes that destroy 100 TB runs — CartesianProduct and
 BroadcastNestedLoopJoin — plus Python row-at-a-time evaluation
 (BatchEvalPython). A new query that accidentally introduces one fails CI
 here, not on the cluster. A source-level check keeps list-built frames
-(Python-RDD scans) behind ``session.local_frame``.
+(Python-RDD scans) behind ``session.local_frame``, and another keeps every
+lineage cut (``persist``/``cache``/``checkpoint``) behind
+``session.materialize``.
 
 Whitelist rationale:
 * knn_join — deliberate bounded cross join (small broadcast query side);
@@ -129,13 +131,9 @@ def test_driver_vector_scoring_runs_in_arrow_kernel(spark, tables):
         assert "ZipWith" not in tree and "ArrayAggregate" not in tree, name
 
 
-def test_driver_rows_go_through_local_frame():
-    # A frame built from a Python list by createDataFrame (or an RDD from
-    # parallelize) scans a pickled Python RDD: every action starts a Python
-    # worker. Its plan prints "Scan ExistingRDD", the same as a
-    # localCheckpoint frame, so test_no_python_row_udfs cannot see it.
-    # Source-level lint: only session.local_frame (Arrow -> LocalRelation)
-    # may call createDataFrame, and nothing calls parallelize.
+def _calls_outside(function: str, attrs: set[str]) -> list[str]:
+    """``file:line`` of every ``.attr(...)`` call in ``graphique_spark/``
+    whose attribute is in ``attrs``, except inside ``session.<function>``."""
     import ast
     import pathlib
 
@@ -148,17 +146,40 @@ def test_driver_rows_go_through_local_frame():
         allowed = set()
         if path == root / "session.py":
             for node in ast.walk(tree):
-                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                if isinstance(node, ast.FunctionDef) and node.name == function:
                     allowed = {id(n) for n in ast.walk(node)}
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("createDataFrame", "parallelize")
+                and node.func.attr in attrs
                 and id(node) not in allowed
             ):
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    return offenders
+
+
+def test_driver_rows_go_through_local_frame():
+    # A frame built from a Python list by createDataFrame (or an RDD from
+    # parallelize) scans a pickled Python RDD: every action starts a Python
+    # worker. Its plan prints "Scan ExistingRDD", the same as a
+    # localCheckpoint frame, so test_no_python_row_udfs cannot see it.
+    # Source-level lint: only session.local_frame (Arrow -> LocalRelation)
+    # may call createDataFrame, and nothing calls parallelize.
+    offenders = _calls_outside("local_frame", {"createDataFrame", "parallelize"})
     assert not offenders, f"list-built frames outside local_frame: {offenders}"
+
+
+def test_lineage_cuts_go_through_materialize():
+    # A persisted frame stays in Spark's CacheManager until someone
+    # unpersists it, and a lazy checkpoint fills its blocks inside the
+    # first job that reads it, where several consumers of that one job can
+    # each compute the plan. session.materialize is the one eager cut
+    # whose blocks go with the frame; nothing else may persist, cache or
+    # checkpoint.
+    attrs = {"persist", "unpersist", "cache", "localCheckpoint", "checkpoint"}
+    offenders = _calls_outside("materialize", attrs)
+    assert not offenders, f"lineage cuts outside session.materialize: {offenders}"
 
 
 def test_plans_api_reports_and_asserts(spark, tables):

@@ -6,7 +6,7 @@ counts/values; errors raise.
 import pytest
 from hypothesis import given as _given, settings as _settings, strategies as _st
 
-from conftest import slow_full
+from conftest import assert_nothing_retained, settled_persistent_rdds, slow_full
 
 
 @pytest.fixture(scope="module")
@@ -855,6 +855,26 @@ def test_failing_resolver_releases_persisted_cache(service, spark):
             break
         time.sleep(0.1)
     assert jsc.getPersistentRDDs().size() <= baseline
+
+
+def test_ordered_operators_retain_nothing_after_request(service, spark):
+    """``runs`` and ``take`` pin partition contents between their summary
+    job and their row job. Once the request returns, that cut must not
+    outlive it: the CacheManager stays empty and the persistent-RDD count
+    settles back to where it was (a ``DataFrame.persist`` here leaked one
+    CacheManager entry per request in a long-running service)."""
+    baseline = settled_persistent_rdds(spark, 0)
+    runs = service.execute(
+        """{ orders { runs(by: ["o_orderstatus"], orderBy: ["o_orderkey"],
+              counts: "n") { count } } }"""
+    )
+    assert runs["orders"]["runs"]["count"] > 0
+    take = service.execute(
+        """{ nation { take(indices: [3, 0]) {
+              columns { n_nationkey { values } } } } }"""
+    )
+    assert take["nation"]["take"]["columns"]["n_nationkey"]["values"] == [3, 0]
+    assert_nothing_retained(spark, baseline)
 
 
 # --- concurrent-request thread stress (VERDICT r09 item 7) --------------
