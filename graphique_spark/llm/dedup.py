@@ -6,6 +6,14 @@ Scale design (the part that matters at 100 TB):
   functions (``transform``/``array_min``) over an in-row shingle array —
   no explode, no shuffle, no Python. A 100 TB corpus streams through the
   signature stage embarrassingly parallel.
+* **The MinHash-LSH plan is built from SQL text.** The per-hash affine
+  mins, the band keys and the pair-join projections are written as SQL
+  strings (``selectExpr``/``where``): each projection is one py4j call
+  plus one per string shipped, so a hash function adds one round trip to
+  the build, where a Column tree costs one per node and dozens of
+  reflection lookups per lambda. The parsed expression tree is the same
+  one the Column helpers build. Shingling and ``hash60`` stay Column
+  helpers, the one definition of each.
 * **Only band keys shuffle.** LSH explodes to ``bands`` rows per doc (a
   small constant) and groups by band hash; candidate pairs come from
   within-bucket joins, never an all-pairs product.
@@ -87,6 +95,9 @@ def char_shingles(col: Column, k: int = 5) -> Column:
     """Distinct character k-grams as an array (in-row, no explode).
     NULL text yields NULL (not ``[NULL]``: length(NULL) feeds greatest/
     sequence as 1, which would fabricate a one-NULL-shingle array)."""
+    if k < 1:
+        # substr(i, 0) is '' for every i: all docs would share one shingle
+        raise ValueError(f"k={k} must be >= 1")
     n = F.length(col) - (k - 1)
     grams = F.array_distinct(
         F.transform(F.sequence(F.lit(1), F.greatest(n, F.lit(1))), lambda i: col.substr(i, F.lit(k)))
@@ -138,6 +149,18 @@ def lsh_bands(signature: Column, bands: int, rows: int) -> Column:
     )
 
 
+def _minhash_sql(num_hashes: int) -> list[str]:
+    """``m0..m{num_hashes-1}`` as SQL text: per affine permutation, the min
+    over the in-row ``hs`` hash array."""
+    if num_hashes < 1:
+        # no minhash at all: every band key would be md5('') (all pairs)
+        raise ValueError(f"num_hashes={num_hashes} must be >= 1")
+    return [
+        f"array_min(transform(hs, h -> ({a} * (h % {MERSENNE}) + {b}) % {MERSENNE})) AS m{i}"
+        for i, (a, b) in ((i, _affine(i)) for i in range(num_hashes))
+    ]
+
+
 def _signatures(
     df: DataFrame,
     text: str,
@@ -146,14 +169,23 @@ def _signatures(
     num_hashes: int,
     carry: list[str] | None = None,
 ) -> DataFrame:
-    """(id, hs, m0..m{n-1}): distinct hashed-shingle set + the MinHash
-    values as SEPARATE columns. Keeping the minhashes as per-column
+    """(id, *carry, hs, m0..m{n-1}): distinct hashed-shingle set + the
+    MinHash values as SEPARATE columns. Keeping the minhashes as per-column
     projections over the named ``hs`` column is load-bearing: collapsing
     them into one nested expression lets Catalyst inline the (expensive)
     shingle-hash of ``hs`` into every transform when a downstream explode
     prunes columns — re-shingling each doc ``num_hashes`` times. The
     column boundary here keeps ``hs`` computed exactly once per row
-    (plan-asserted in tests)."""
+    (plan-asserted in tests).
+
+    The first projection uses the Column helpers (``char_shingles``,
+    ``hash60``); the ``num_hashes`` mins are one ``selectExpr`` of SQL text
+    (:func:`_minhash_sql`), so a hash function adds one py4j call to the
+    build, not a Column tree, and the parsed expression tree is the one
+    the Column form would build. ``carry`` entries are column references as in ``select``; the
+    second projection keeps them through ``*``, so no caller-supplied name
+    is ever parsed as SQL."""
+    mins = _minhash_sql(num_hashes)
     # NULL text (failed extraction) carries no shingle evidence; keeping
     # such rows gives them all-NULL minhashes, which collide into the SAME
     # band key in every band (concat_ws drops NULLs) and then verify as
@@ -163,21 +195,17 @@ def _signatures(
     hashed = F.array_distinct(
         F.transform(char_shingles(F.col(text), k), lambda s: hash60(s))
     )
-    mins = [
-        F.array_min(
-            F.transform(
-                F.col("hs"), lambda h: (F.lit(a) * (h % MERSENNE) + F.lit(b)) % MERSENNE
-            )
-        ).alias(f"m{i}")
-        for i, (a, b) in ((i, _affine(i)) for i in range(num_hashes))
-    ]
     extra = list(carry or [])
     return df.select(
         F.col(id_col).alias("id"), *extra, hashed.alias("hs")
-    ).select("id", *extra, "hs", *mins)
+    ).selectExpr("*", *mins)
 
 
-def _band_key_array(num_hashes: int, bands: int) -> Column:
+def _band_key_array(num_hashes: int, bands: int) -> str:
+    """SQL text for the array of ``bands`` LSH keys over ``m0..``: each key
+    is the md5 of its band's ``num_hashes // bands`` minhashes."""
+    if num_hashes < 1 or bands < 1:
+        raise ValueError(f"num_hashes={num_hashes} and bands={bands} must be >= 1")
     if num_hashes % bands:
         # 16 hashes / 5 bands would silently use only 15 values: the user
         # pays for num_hashes permutations but gets fewer bits of LSH
@@ -185,12 +213,11 @@ def _band_key_array(num_hashes: int, bands: int) -> Column:
             f"num_hashes={num_hashes} must be divisible by bands={bands}"
         )
     rows = num_hashes // bands
-    return F.array(
-        *[
-            F.md5(F.concat_ws("|", *[F.col(f"m{b * rows + r}") for r in range(rows)]))
-            for b in range(bands)
-        ]
+    keys = (
+        "md5(concat_ws('|', " + ", ".join(f"m{b * rows + r}" for r in range(rows)) + "))"
+        for b in range(bands)
     )
+    return f"array({', '.join(keys)})"
 
 
 def minhash_index(
@@ -215,8 +242,10 @@ def minhash_index(
     packed array from text per consumer, which is why the in-memory
     pipelines (:func:`minhash_candidates`) build on :func:`_signatures`
     instead."""
-    sigs = _signatures(df, text, id_col, k, num_hashes)
-    return sigs.select("id", "hs", _band_key_array(num_hashes, bands).alias("band_keys"))
+    keys = _band_key_array(num_hashes, bands)
+    return _signatures(df, text, id_col, k, num_hashes).selectExpr(
+        "id", "hs", f"{keys} AS band_keys"
+    )
 
 
 def incremental_minhash_dedup(
@@ -252,27 +281,15 @@ def incremental_minhash_dedup(
         # the caller already built minhash_index rows for this batch (the
         # streaming sink writes them anyway) — reuse instead of
         # re-shingling the batch a second time
-        nb = new_index.select(
-            F.col("id").alias("new_id"),
-            F.posexplode("band_keys").alias("band", "key"),
-        )
-        new_hs = new_index.select(
-            F.col("id").alias("new_id"), F.col("hs").alias("hs_n")
-        )
+        new_sigs, keys = new_index, "band_keys"
     else:
+        keys = _band_key_array(num_hashes, bands)
         # materialized: consumed by the band explode AND the verify join —
         # without the cut each consumer re-shingles the whole new batch
         new_sigs = materialize(_signatures(new_docs, text, id_col, k, num_hashes))
-        nb = new_sigs.select(
-            F.col("id").alias("new_id"),
-            F.posexplode(_band_key_array(num_hashes, bands)).alias("band", "key"),
-        )
-        new_hs = new_sigs.select(
-            F.col("id").alias("new_id"), F.col("hs").alias("hs_n")
-        )
-    ib = index.select(
-        F.col("id").alias("index_id"), F.posexplode("band_keys").alias("band", "key")
-    )
+    nb = new_sigs.selectExpr("id AS new_id", f"posexplode({keys}) AS (band, key)")
+    new_hs = new_sigs.selectExpr("id AS new_id", "hs AS hs_n")
+    ib = index.selectExpr("id AS index_id", "posexplode(band_keys) AS (band, key)")
     if max_band_freq is not None:
         hot = (
             ib.groupBy("band", "key")
@@ -292,16 +309,22 @@ def incremental_minhash_dedup(
     # array out once per colliding index doc, an unbounded build side
     # that OOMs when hot keys make the pair count large. The index scan
     # stays map-side for both joins — zero shuffles of index data.
-    cand_i = index.select(F.col("id").alias("index_id"), F.col("hs").alias("hs_i")).join(
+    cand_i = index.selectExpr("id AS index_id", "hs AS hs_i").join(
         F.broadcast(cands), on="index_id"
     )
     pairs = cand_i.join(F.broadcast(new_hs), on="new_id")
-    inter = F.size(F.array_intersect("hs_n", "hs_i")).cast("double")
-    union = F.size(F.array_union("hs_n", "hs_i")).cast("double")
-    return (
-        pairs.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("new_id", "index_id", "jaccard")
+    return _verified(pairs, "new_id", "index_id", "hs_n", "hs_i", min_jaccard)
+
+
+def _verified(
+    pairs: DataFrame, a: str, b: str, hs_a: str, hs_b: str, min_jaccard: float
+) -> DataFrame:
+    """(a, b, jaccard) of the pairs whose exact hashed-shingle Jaccard is at
+    least ``min_jaccard``, as SQL text (the threshold a DOUBLE literal)."""
+    inter = f"CAST(size(array_intersect({hs_a}, {hs_b})) AS DOUBLE)"
+    union = f"CAST(size(array_union({hs_a}, {hs_b})) AS DOUBLE)"
+    return pairs.selectExpr(a, b, f"{inter} / {union} AS jaccard").where(
+        f"jaccard >= {float(min_jaccard)!r}D"
     )
 
 
@@ -333,13 +356,12 @@ def minhash_candidates(
     are dropped via a broadcast anti-join against the (tiny) hot-key set —
     boilerplate that common isn't a useful near-dup signal anyway.
     """
+    keys = _band_key_array(num_hashes, bands)
     # materialized: sigs feeds the band explode AND both verify-join
     # sides — without the cut Catalyst re-derives the shingle hashing
     # (the dominant cost) once per consumer
     sigs = materialize(_signatures(df, text, id_col, k, num_hashes))
-    banded = sigs.select(
-        "id", F.posexplode(_band_key_array(num_hashes, bands)).alias("band", "key")
-    )
+    banded = sigs.selectExpr("id", f"posexplode({keys}) AS (band, key)")
     if max_band_freq is not None:
         hot = (
             banded.groupBy("band", "key")
@@ -348,25 +370,18 @@ def minhash_candidates(
             .select("band", "key")
         )
         banded = banded.join(F.broadcast(hot), on=["band", "key"], how="left_anti")
-    left = banded.select("band", "key", F.col("id").alias("id_a"))
-    right = banded.select("band", "key", F.col("id").alias("id_b"))
+    left = banded.selectExpr("band", "key", "id AS id_a")
+    right = banded.selectExpr("band", "key", "id AS id_b")
     cands = (
         left.join(right, on=["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        .where("id_a < id_b")
+        .selectExpr("id_a", "id_b")
         .distinct()
     )
-    sets = sigs.select("id", "hs")
-    pairs = cands.join(
-        sets.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), on="id_a"
-    ).join(sets.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), on="id_b")
-    inter = F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
-    union = F.size(F.array_union("hs_a", "hs_b")).cast("double")
-    return (
-        pairs.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
+    pairs = cands.join(sigs.selectExpr("id AS id_a", "hs AS hs_a"), on="id_a").join(
+        sigs.selectExpr("id AS id_b", "hs AS hs_b"), on="id_b"
     )
+    return _verified(pairs, "id_a", "id_b", "hs_a", "hs_b", min_jaccard)
 
 
 def simhash_fingerprint(shingles: Column, bits: int = 16) -> Column:
@@ -1049,17 +1064,11 @@ def corpus_overlap_single_pass(
     hashed = F.array_distinct(
         F.transform(char_shingles(F.col("__t"), k), lambda s: hash60(s))
     )
-    mins = [
-        F.array_min(
-            F.transform(
-                F.col("hs"), lambda h: (F.lit(a) * (h % MERSENNE) + F.lit(b)) % MERSENNE
-            )
-        ).alias(f"m{i}")
-        for i, (a, b) in ((i, _affine(i)) for i in range(num_hashes))
-    ]
     # same projection-boundary discipline as _signatures: hs is computed
     # once per row behind a named column, never inlined into each transform
-    sigs = base.select("__a", "__b", hashed.alias("hs")).select("__a", "__b", *mins)
+    sigs = base.select("__a", "__b", hashed.alias("hs")).selectExpr(
+        "__a", "__b", *_minhash_sql(num_hashes)
+    )
     agg = sigs.agg(
         *[
             F.min(F.when(F.col("__a"), F.col(f"m{i}"))).alias(f"m{i}")

@@ -110,14 +110,22 @@ def py4j_calls(spark, monkeypatch):
     """Counts py4j commands the driver sends to the JVM while the test
     runs: ``.n`` grows by one per ``send_command`` on the gateway client
     (method calls, field reads, reflection lookups). Plan-building cost
-    shows up here long before it shows up as latency."""
+    shows up here long before it shows up as latency.
+
+    Handle releases are not counted: py4j's finalizer thread sends one
+    per dropped JVM object, up to a second after the drop, so they land
+    in whichever count is running and measure earlier work."""
+    from py4j import protocol
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = types.SimpleNamespace(n=0)
 
-    def counting(*args, **kwargs):
-        calls.n += 1
-        return send(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        if not command.startswith(release):
+            calls.n += 1
+        return send(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
     return calls

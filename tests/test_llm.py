@@ -916,6 +916,122 @@ def test_minhash_no_shingle_recompute_in_plan(spark, tables):
     assert plan.count("length(text") <= 4
 
 
+def _column_signatures(df, k, num_hashes, carry):
+    """The MinHash signature frame written with Column expressions: the
+    public shingle and hash helpers and one ``transform`` lambda per
+    affine permutation."""
+    df = dedup.ensure_parallelism(df.where(F.col("text").isNotNull()))
+    hashed = F.array_distinct(
+        F.transform(dedup.char_shingles(F.col("text"), k), lambda s: dedup.hash60(s))
+    )
+    mins = [
+        F.array_min(
+            F.transform(
+                F.col("hs"),
+                lambda h: (F.lit(a) * (h % dedup.MERSENNE) + F.lit(b)) % dedup.MERSENNE,
+            )
+        ).alias(f"m{i}")
+        for i, (a, b) in ((i, dedup._affine(i)) for i in range(num_hashes))
+    ]
+    return df.select(F.col("doc_id").alias("id"), *carry, hashed.alias("hs")).select(
+        "id", *carry, "hs", *mins
+    )
+
+
+def _column_band_keys(num_hashes, bands):
+    rows = num_hashes // bands
+    return F.array(
+        *[
+            F.md5(F.concat_ws("|", *[F.col(f"m{b * rows + r}") for r in range(rows)]))
+            for b in range(bands)
+        ]
+    )
+
+
+def _assert_same_frame(got, want):
+    got_plan = got._jdf.queryExecution().optimizedPlan()
+    assert got_plan.sameResult(want._jdf.queryExecution().optimizedPlan())
+    assert got.schema == want.schema
+    key = lambda r: r["id"]  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+
+
+def test_minhash_signatures_same_plan_as_column_helpers(spark):
+    # the signature and band-key projections give the optimized plan, the
+    # schema and the rows of the same math written as Column expressions,
+    # including NULL, empty and shorter-than-k text and carried columns
+    # whose names need quoting
+    base = "the quick brown fox jumps over the lazy dog"
+    rows = [
+        (1, base, "web", 0),
+        (2, base.replace("lazy", "idle"), "web", 1),
+        (3, None, "books", 2),
+        (4, "abc", "books", 3),
+        (5, "", "code", 4),
+        (6, "completely different text about spark engines", "code", 5),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, `src.name` string, `n``x` int")
+    carry = ["`src.name`", "`n``x`"]
+    for k, num_hashes, bands in ((5, 8, 4), (3, 6, 2)):
+        want = _column_signatures(df, k, num_hashes, carry)
+        got = dedup._signatures(df, "text", "doc_id", k, num_hashes, carry=carry)
+        assert got.columns[:3] == ["id", "src.name", "n`x"]
+        _assert_same_frame(got, want)
+        ref = _column_signatures(df, k, num_hashes, [])
+        _assert_same_frame(
+            dedup.minhash_index(df, k=k, num_hashes=num_hashes, bands=bands),
+            ref.select("id", "hs", _column_band_keys(num_hashes, bands).alias("band_keys")),
+        )
+
+
+def test_minhash_build_cost_flat_in_num_hashes(spark, py4j_calls):
+    # the affine mins and band keys are SQL text, one py4j call per
+    # projection plus one per list element: a hash function adds one
+    # command, not a Column tree (as Column trees the build took 2,050 /
+    # 3,026 / 5,182 commands at 8 / 16 / 32 hashes)
+    rows = [(1, "alpha beta gamma"), (2, "alpha beta delta"), (3, "x y z"), (4, "q")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df.schema  # noqa: B018 -- resolve the input schema before counting
+
+    def build(num_hashes):
+        start = py4j_calls.n
+        dedup.minhash_candidates(df, num_hashes=num_hashes, bands=4)
+        return py4j_calls.n - start
+
+    build(8)  # first build: one-time lookups
+    n8, n16, n32 = build(8), build(16), build(32)
+    assert n32 <= 1.1 * n8
+    assert n16 <= 1000
+
+
+@pytest.mark.parametrize(
+    "params, match",
+    [
+        ({"num_hashes": 0}, "num_hashes"),
+        ({"num_hashes": -4}, "num_hashes"),
+        ({"k": 0}, "k="),
+        ({"k": -3}, "k="),
+        ({"bands": 0}, "bands"),
+    ],
+)
+def test_minhash_rejects_degenerate_parameters(spark, params, match):
+    # num_hashes=0 made every band key md5('') and k < 1 every shingle set
+    # equal, so all pairs of unrelated docs came back at jaccard 1.0;
+    # bands=0 divided by zero. Each is refused before any job runs.
+    rows = [(1, "alpha"), (2, "beta gamma"), (3, "delta"), (4, "epsilon zeta")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    with pytest.raises(ValueError, match=match):
+        dedup.minhash_candidates(df, **params)
+    with pytest.raises(ValueError, match=match):
+        dedup.minhash_index(df, **params)
+    if "bands" not in params:
+        with pytest.raises(ValueError, match=match):
+            dedup.corpus_minhash(df, **params)
+    if "k" in params:
+        with pytest.raises(ValueError, match=match):
+            dedup.char_shingles(F.col("text"), params["k"])
+
+
 def test_bm25_ranks_matching_docs_first(spark):
     rows = [
         (1, "spark spark spark engine"),
