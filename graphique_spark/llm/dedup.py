@@ -161,6 +161,23 @@ def _minhash_sql(num_hashes: int) -> list[str]:
     ]
 
 
+def _min_sql(num_hashes: int, out: str = "m", where: str | None = None) -> str:
+    """SQL text of the per-permutation ``min`` aggregates over ``m0..``,
+    named ``{out}0..``; with ``where``, each over the rows where that boolean
+    column holds. One statement carries every hash function, so the corpus
+    signatures below add no py4j call per hash."""
+    arg = "m{}" if where is None else f"CASE WHEN {where} THEN m{{}} END"
+    return ", ".join(f"min({arg.format(i)}) AS {out}{i}" for i in range(num_hashes))
+
+
+def _match_sql(a: str, b: str, num_hashes: int) -> str:
+    """SQL text of ``n_matches``, the number of permutations whose mins agree
+    between the signatures ``{a}0..`` and ``{b}0..``, and ``jaccard_est``,
+    that number over ``num_hashes``."""
+    matches = " + ".join(f"CAST({a}{i} = {b}{i} AS BIGINT)" for i in range(num_hashes))
+    return f"{matches} AS n_matches, ({matches}) / {float(num_hashes)!r}D AS jaccard_est"
+
+
 def _signatures(
     df: DataFrame,
     text: str,
@@ -290,14 +307,7 @@ def incremental_minhash_dedup(
     nb = new_sigs.selectExpr("id AS new_id", f"posexplode({keys}) AS (band, key)")
     new_hs = new_sigs.selectExpr("id AS new_id", "hs AS hs_n")
     ib = index.selectExpr("id AS index_id", "posexplode(band_keys) AS (band, key)")
-    if max_band_freq is not None:
-        hot = (
-            ib.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_band_freq)
-            .select("band", "key")
-        )
-        ib = ib.join(F.broadcast(hot), on=["band", "key"], how="left_anti")
+    ib = _drop_hot_keys(ib, max_band_freq)
     cands = (
         ib.join(F.broadcast(nb), on=["band", "key"])
         .select("new_id", "index_id")
@@ -314,6 +324,21 @@ def incremental_minhash_dedup(
     )
     pairs = cand_i.join(F.broadcast(new_hs), on="new_id")
     return _verified(pairs, "new_id", "index_id", "hs_n", "hs_i", min_jaccard)
+
+
+def _drop_hot_keys(banded: DataFrame, max_band_freq: int | None) -> DataFrame:
+    """``banded`` without the rows of any (band, key) that more than
+    ``max_band_freq`` of its rows share: a broadcast left-anti join against
+    the (tiny) hot-key set. ``None`` keeps every row."""
+    if max_band_freq is None:
+        return banded
+    hot = (
+        banded.groupBy("band", "key")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > max_band_freq)
+        .select("band", "key")
+    )
+    return banded.join(F.broadcast(hot), on=["band", "key"], how="left_anti")
 
 
 def _verified(
@@ -361,15 +386,9 @@ def minhash_candidates(
     # sides — without the cut Catalyst re-derives the shingle hashing
     # (the dominant cost) once per consumer
     sigs = materialize(_signatures(df, text, id_col, k, num_hashes))
-    banded = sigs.selectExpr("id", f"posexplode({keys}) AS (band, key)")
-    if max_band_freq is not None:
-        hot = (
-            banded.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_band_freq)
-            .select("band", "key")
-        )
-        banded = banded.join(F.broadcast(hot), on=["band", "key"], how="left_anti")
+    banded = _drop_hot_keys(
+        sigs.selectExpr("id", f"posexplode({keys}) AS (band, key)"), max_band_freq
+    )
     left = banded.selectExpr("band", "key", "id AS id_a")
     right = banded.selectExpr("band", "key", "id AS id_b")
     cands = (
@@ -1013,7 +1032,7 @@ def corpus_minhash(
     ``num_hashes`` longs. Mergeable: min of two corpus signatures IS the
     signature of the union."""
     sigs = _signatures(df, text, id_col, k, num_hashes)
-    return sigs.agg(*[F.min(f"m{i}").alias(f"m{i}") for i in range(num_hashes)])
+    return sigs.sparkSession.sql(f"SELECT {_min_sql(num_hashes)} FROM {{sigs}}", sigs=sigs)
 
 
 def corpus_overlap(
@@ -1030,14 +1049,10 @@ def corpus_overlap(
     signature frames cross-join trivially (1x1)."""
     sa = corpus_minhash(a, text, id_col, k, num_hashes)
     sb = corpus_minhash(b, text, id_col, k, num_hashes)
-    for i in range(num_hashes):
-        sb = sb.withColumnRenamed(f"m{i}", f"n{i}")
-    matches = sum(
-        (F.col(f"m{i}") == F.col(f"n{i}")).cast("long") for i in range(num_hashes)
-    )
-    return sa.crossJoin(sb).select(
-        matches.alias("n_matches"),
-        (matches / F.lit(float(num_hashes))).alias("jaccard_est"),
+    return sa.sparkSession.sql(
+        f"SELECT {_match_sql('a.m', 'b.m', num_hashes)} FROM {{sa}} a CROSS JOIN {{sb}} b",
+        sa=sa,
+        sb=sb,
     )
 
 
@@ -1069,22 +1084,10 @@ def corpus_overlap_single_pass(
     sigs = base.select("__a", "__b", hashed.alias("hs")).selectExpr(
         "__a", "__b", *_minhash_sql(num_hashes)
     )
-    agg = sigs.agg(
-        *[
-            F.min(F.when(F.col("__a"), F.col(f"m{i}"))).alias(f"m{i}")
-            for i in range(num_hashes)
-        ],
-        *[
-            F.min(F.when(F.col("__b"), F.col(f"m{i}"))).alias(f"n{i}")
-            for i in range(num_hashes)
-        ],
-    )
-    matches = sum(
-        (F.col(f"m{i}") == F.col(f"n{i}")).cast("long") for i in range(num_hashes)
-    )
-    return agg.select(
-        matches.alias("n_matches"),
-        (matches / F.lit(float(num_hashes))).alias("jaccard_est"),
+    mins = f"{_min_sql(num_hashes, 'm', '__a')}, {_min_sql(num_hashes, 'n', '__b')}"
+    return sigs.sparkSession.sql(
+        f"SELECT {_match_sql('m', 'n', num_hashes)} FROM (SELECT {mins} FROM {{sigs}})",
+        sigs=sigs,
     )
 
 
@@ -1188,26 +1191,9 @@ def corpus_overlap_matrix(
         num_hashes,
         carry=["__grp"],
     )
-    per_grp = per_doc.groupBy("__grp").agg(
-        *[F.min(f"m{i}").alias(f"m{i}") for i in range(num_hashes)]
-    )
-    a = per_grp.select(
-        F.col("__grp").alias("src_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(num_hashes)],
-    )
-    b = per_grp.select(
-        F.col("__grp").alias("src_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(num_hashes)],
-    )
-    matches = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("long") for i in range(num_hashes)
-    )
-    return (
-        a.join(b, a["src_a"] < b["src_b"])
-        .select(
-            "src_a",
-            "src_b",
-            matches.alias("n_matches"),
-            (matches / F.lit(float(num_hashes))).alias("jaccard_est"),
-        )
+    return per_doc.sparkSession.sql(
+        f"WITH a AS (SELECT __grp AS src_a, {_min_sql(num_hashes, 'a')} FROM {{sigs}} GROUP BY __grp), "
+        f"b AS (SELECT __grp AS src_b, {_min_sql(num_hashes, 'b')} FROM {{sigs}} GROUP BY __grp) "
+        f"SELECT src_a, src_b, {_match_sql('a', 'b', num_hashes)} FROM a JOIN b ON src_a < src_b",
+        sigs=per_doc,
     )

@@ -22,7 +22,7 @@ from graphql import (
     GraphQLScalarType,
     GraphQLString,
 )
-from pyspark.sql import types as T
+from pyspark.sql import Row, types as T
 
 _INT32 = 2**31
 
@@ -95,6 +95,8 @@ def _serialize_json(value: Any) -> Any:
         return str(value)
     if isinstance(value, (bytes, bytearray)):
         return base64.b64encode(bytes(value)).decode()
+    if isinstance(value, Row):  # a struct value: an object, not its field tuple
+        value = value.asDict()
     if isinstance(value, dict):
         return {k: _serialize_json(v) for k, v in value.items()}
     if isinstance(value, (list, tuple)):

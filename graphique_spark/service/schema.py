@@ -25,7 +25,7 @@ import time
 import warnings
 from datetime import timedelta
 from functools import partial
-from typing import Any, Mapping
+from typing import Any, Mapping, NamedTuple
 
 from graphql import (
     GraphQLArgument,
@@ -42,10 +42,8 @@ from graphql import (
     GraphQLSchema,
     GraphQLString,
     Undefined,
-    get_named_type,
 )
-from graphql.execution.collect_fields import collect_sub_fields
-from graphql.execution.values import get_argument_values
+from graphql.pyutils import Path
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
@@ -58,71 +56,46 @@ _NAME = re.compile(r"[_A-Za-z][_0-9A-Za-z]*$")
 
 
 # ---------------------------------------------------------------------------
-# leaf batches: at most two Spark jobs per table node
+# leaf jobs: one Spark job per kind of leaf of a table node
 #
 # The reference materializes a table node once for all of its sub-fields
-# (reference interface.py:83-91). Here the node's scalar leaves are compiled
-# instead into one aggregate job (every aggregate leaf of ``columns { c {..} }``
-# and ``alias: column(..) {..}`` plus a table ``count`` sibling) and one values
-# job per distinct ``values(limit:)`` — one columnar pass answers many fields.
-# A job is planned when its table node resolves and runs when the first of its
-# leaves reads it; planning runs nothing.
-
-_MISS = object()
+# (reference interface.py:83-91). Here each scalar leaf resolver registers
+# its expression with a job of its table node and returns an awaitable: one
+# aggregate job answers every aggregate leaf of ``columns { c {..} }``,
+# ``alias: column(..) {..}`` and ``unnest {..}`` plus a table ``count``, one
+# values job every ``values`` leaf with the same ``limit:``. graphql-core
+# calls every resolver of a document before it awaits any leaf (all table
+# fields are synchronous), so a job holds all of its leaves when the first
+# of them awaits it and runs it.
 
 
 class _Job:
-    """One Spark job answering several leaves; ``collect()`` returns one
-    answer per leaf, in plan order."""
+    """One Spark job answering several leaves of one table node:
+    ``collect(exprs)`` returns one answer per expression, in order."""
 
-    __slots__ = ("collect", "answers", "error", "seconds")
+    __slots__ = ("collect", "exprs", "answers", "error", "seconds")
 
     def __init__(self, collect):
         self.collect = collect
+        self.exprs: list[Column] = []
         self.answers = self.error = self.seconds = None
 
-    def answer(self, i: int):
+    async def answer(self, i: int):
         if self.seconds is None:
             start = time.perf_counter()
             try:
-                self.answers = self.collect()
-            except _TooManyValues as exc:  # the cap holds for every leaf alike
+                self.answers = self.collect(self.exprs)
+            except Exception as exc:  # noqa: BLE001  reported per leaf below
                 self.error = exc
-            except Exception:  # noqa: BLE001  each leaf falls back to its own job
-                pass
             self.seconds = time.perf_counter() - start
-        if self.error is not None:
-            raise self.error
-        return _MISS if self.answers is None else self.answers[i]
-
-
-class LeafBatches:
-    """Per-request cache: a leaf's response path -> (job, position)."""
-
-    def __init__(self):
-        self.leaves: dict[tuple, tuple[_Job, int]] = {}
-        #: (node path, leaf count, jobs) of every node that batched leaves
-        self.nodes: list[tuple[tuple, int, list[_Job]]] = []
-        self.root_planned = False
-
-    def metrics(self) -> list[dict]:
-        return [
-            {
-                "path": list(path),
-                "leaves": leaves,
-                "duration": str(timedelta(seconds=sum(j.seconds or 0.0 for j in jobs))),
-            }
-            for path, leaves, jobs in self.nodes
-        ]
-
-
-def _batched(info):
-    """This leaf's answer from its node's batch, or ``_MISS`` when it was not
-    batched or the batch failed: the leaf then runs its own job, so one bad
-    leaf nulls only itself (partial results)."""
-    batches = (info.context or {}).get("batches")
-    hit = batches.leaves.get(tuple(info.path.as_list())) if batches else None
-    return hit[0].answer(hit[1]) if hit else _MISS
+        if self.answers is not None:
+            return self.answers[i]
+        if len(self.exprs) == 1 or isinstance(self.error, _TooManyValues):
+            raise self.error  # the cap holds for every leaf alike
+        # a failed batch: this leaf runs the same collect alone, so one bad
+        # leaf nulls only itself (partial results)
+        [value] = self.collect([self.exprs[i]])
+        return value
 
 
 def _agg_answers(ds, exprs):
@@ -130,92 +103,63 @@ def _agg_answers(ds, exprs):
     return list(row)
 
 
-def _values_answers(ds, cols, limit):
-    rows = _capped_rows(ds, ds.df.select(*cols), limit)
-    return [[r[i] for r in rows] for i in range(len(cols))]
+def _values_answers(ds, limit, exprs):
+    rows = _capped_rows(ds, ds.df.select(*exprs), limit)
+    return [[r[i] for r in rows] for i in range(len(exprs))]
 
 
-def _plan_node(ds, info, path=None, node_type=None, field_nodes=None) -> None:
-    """Plan the leaf batches of the table node ``ds`` (by default the field
-    being resolved). Anything unusual plans no batch and leaves each leaf to
-    its own job."""
+def _collector(ds, kind):
+    """The collect function of the ``kind`` job of the table node ``ds``."""
+    return partial(_agg_answers, ds) if kind == "agg" else partial(_values_answers, ds, kind[1])
+
+
+def _leaf(info, ds: Dataset, node: Path | None, kind, expr: Column):
+    """A leaf's answer: an awaitable from its node's ``kind`` job. Executed
+    outside the service (``graphql_sync`` on ``GraphQLService.schema``, with
+    no ``batches`` in the context), the leaf is a one-leaf job run now."""
     batches = (info.context or {}).get("batches")
-    if batches is None or not isinstance(ds, Dataset):
-        return
-    path = tuple(info.path.as_list()) if path is None else path
-
-    def children(parent_type, nodes):
-        """(response key, field name, field, field nodes) of each sub-field."""
-        parent_type = get_named_type(parent_type)
-        fields = collect_sub_fields(
-            info.schema, info.fragments, info.variable_values, parent_type, nodes
-        )
-        for key, sub in fields.items():
-            field = parent_type.fields.get(sub[0].name.value)
-            if field is not None:
-                yield key, sub[0].name.value, field, sub
-
-    def args(field, sub):
-        return _given(get_argument_values(field, sub[0], info.variable_values))
-
-    aggs: list[tuple[tuple, Column]] = []
-    values: dict[Any, list[tuple[tuple, Column]]] = {}
-
-    def leaves(col, col_type, nodes, prefix):
-        for key, kind, field, sub in children(col_type, nodes):
-            if kind == "values":
-                limit = args(field, sub).get("limit")
-                values.setdefault(limit, []).append((prefix + (key,), col))
-            elif kind in _BATCHABLE_AGGS:
-                aggs.append((prefix + (key,), _BATCHABLE_AGGS[kind](col, **args(field, sub))))
-
-    try:
-        for key, name, field, sub in children(
-            node_type or info.return_type, field_nodes or info.field_nodes
-        ):
-            if name == "count" and not getattr(ds, "path", None):  # roots count footers
-                aggs.append((path + (key,), F.count(F.lit(1))))
-            elif name == "column":
-                leaves(_column_expr(ds, **args(field, sub)), field.type, sub, path + (key,))
-            elif name == "columns":
-                for col_key, col, col_field, col_sub in children(field.type, sub):
-                    leaves(F.col(col), col_field.type, col_sub, path + (key, col_key))
-    except Exception:  # noqa: BLE001  (e.g. an unparsable cast: the leaf reports it)
-        return
-    jobs = [(aggs, partial(_agg_answers, ds, [e for _, e in aggs]))]
-    for limit, group in values.items():
-        jobs.append((group, partial(_values_answers, ds, [c for _, c in group], limit)))
-    # a lone leaf gains nothing from batching
-    planned = [(group, _Job(collect)) for group, collect in jobs if len(group) > 1]
-    for group, job in planned:
-        batches.leaves.update((leaf, (job, i)) for i, (leaf, _) in enumerate(group))
-    if planned:
-        batches.nodes.append((path, sum(len(g) for g, _ in planned), [j for _, j in planned]))
+    if batches is None:
+        return _collector(ds, kind)([expr])[0]
+    return batches.leaf(ds, node, kind, expr)
 
 
-def _plan_batches(fn):
-    """Wrap a table field's resolver to plan the leaf batches of its node."""
+class LeafBatches:
+    """Per-request leaf jobs, keyed by (table node, ``"agg"`` or
+    ``("values", limit)``)."""
 
-    def wrapper(ds, info, **kwargs):
-        out = fn(ds, info, **kwargs)
-        _plan_node(out, info)
-        return out
+    def __init__(self):
+        self.jobs: dict[tuple, _Job] = {}
+        #: table node -> (its response path, its jobs), in order of first leaf
+        self.nodes: dict[Dataset, tuple[Path | None, list[_Job]]] = {}
 
-    return wrapper
+    def leaf(self, ds: Dataset, node: Path | None, kind, expr: Column):
+        """Register ``expr`` with the ``kind`` job of the table node ``ds``
+        at response path ``node``; an awaitable of the leaf's answer."""
+        job = self.jobs.get((ds, kind))
+        if job is None:
+            job = self.jobs[ds, kind] = _Job(_collector(ds, kind))
+            self.nodes.setdefault(ds, (node, []))[1].append(job)
+        job.exprs.append(expr)
+        return job.answer(len(job.exprs) - 1)
+
+    def metrics(self) -> list[dict]:
+        return [
+            {
+                "path": node.as_list() if node else [],
+                "leaves": sum(len(j.exprs) for j in jobs),
+                "duration": str(timedelta(seconds=sum(j.seconds or 0.0 for j in jobs))),
+            }
+            for node, jobs in self.nodes.values()
+        ]
 
 
-def _plan_root_batches(fn):
-    """Single-root mode: the query root is itself a table node, with no
-    resolver of its own; the first top-level field plans its batches."""
+class _Col(NamedTuple):
+    """The source of a Column object's fields: its table node, that node's
+    response path and the column's expression over the node."""
 
-    def wrapper(ds, info, **kwargs):
-        batches = (info.context or {}).get("batches")
-        if batches is not None and not batches.root_planned:
-            batches.root_planned = True
-            _plan_node(ds, info, (), info.parent_type, [info.operation])
-        return fn(ds, info, **kwargs)
-
-    return wrapper
+    ds: Dataset
+    node: Path | None
+    expr: Column
 
 
 StringList = GraphQLList(GraphQLNonNull(GraphQLString))
@@ -341,9 +285,8 @@ CAST_FIELD = GraphQLInputObjectType(
 _column_types: dict[str, GraphQLObjectType] = {}
 
 
-#: leaf field name -> aggregate-expression factory. The per-leaf resolvers
-#: (``_col_agg``) and the node batch (``_plan_node``) both build their
-#: expressions from this one table, so a batched value is the per-leaf value.
+#: leaf field name -> aggregate-expression factory: the one table the
+#: aggregate leaves (``_col_agg``) build their expressions from.
 _BATCHABLE_AGGS: dict[str, Any] = {
     "count": lambda c: F.count(c),
     "nunique": lambda c, approx=False: (
@@ -367,19 +310,17 @@ _BATCHABLE_AGGS: dict[str, Any] = {
 def _col_agg(kind: str):
     factory = _BATCHABLE_AGGS[kind]
 
-    def resolver(source, info, **args):
-        value = _batched(info)
-        if value is _MISS:
-            ds, name = source
-            [[value]] = ds.df.select(factory(F.col(name), **_given(args))).collect()
-        return value
+    def resolver(col: _Col, info, **args):
+        expr = factory(col.expr, **_given(args))
+        return _leaf(info, col.ds, col.node, "agg", expr)
 
     return resolver
 
 
 def _resolve_count(ds, info):
-    value = _batched(info)
-    return ds.count() if value is _MISS else value
+    if getattr(ds, "path", None):  # an untransformed parquet root counts footers
+        return ds.count()
+    return _leaf(info, ds, info.path.prev, "agg", F.count(F.lit(1)))
 
 
 def _column_expr(ds, name, cast=None, index=None, **kw):
@@ -415,18 +356,13 @@ def _capped_rows(ds, df, limit):
     return rows
 
 
-def _resolve_values(source, info, limit=Undefined):
-    values = _batched(info)
-    if values is _MISS:
-        ds, name = source
-        values = [r[0] for r in _capped_rows(ds, ds.df.select(name), limit)]
-    return values
+def _resolve_values(col: _Col, info, limit=None):
+    return _leaf(info, col.ds, col.node, ("values", limit), col.expr)
 
 
-def _resolve_distinct(source, info, limit=Undefined):
-    ds, name = source
-    counted = ds.df.groupBy(F.col(name).alias("v")).count()
-    rows = _capped_rows(ds, counted, limit)
+def _resolve_distinct(col: _Col, info, limit=Undefined):
+    counted = col.ds.df.groupBy(col.expr.alias("v")).count()
+    rows = _capped_rows(col.ds, counted, limit)
     return {"values": [r["v"] for r in rows], "counts": [r["count"] for r in rows]}
 
 
@@ -503,31 +439,15 @@ def generic_column_type() -> GraphQLObjectType:
     return _column_types["AnyColumn"]
 
 
-def _jsonable(value):
-    from pyspark.sql import Row
-
-    if isinstance(value, Row):
-        return {k: _jsonable(v) for k, v in value.asDict().items()}
-    if isinstance(value, dict):
-        return {k: _jsonable(v) for k, v in value.items()}
-    if isinstance(value, (list, tuple)):
-        return [_jsonable(v) for v in value]
-    return value
+def _resolve_unnest(col: _Col, info):
+    """The elements: a table node of its own, whose leaves share its jobs."""
+    ds = col.ds._wrap(col.ds.df.select(F.explode_outer(col.expr).alias("_col")))
+    return _Col(ds, info.path, F.col("_col"))
 
 
-def _resolve_json_values(source, info, limit=Undefined):
-    return [_jsonable(v) for v in _resolve_values(source, info, limit)]
-
-
-def _resolve_unnest(source, info):
-    ds, name = source
-    return (ds._wrap(ds.df.select(F.explode_outer(F.col(name)).alias(name))), name)
-
-
-def _resolve_lengths(source, info):
-    ds, name = source
-    df = ds.df.select(F.array_size(F.col(name)))
-    return [r[0] for r in _capped_rows(ds, df, Undefined)]
+def _resolve_lengths(col: _Col, info):
+    df = col.ds.df.select(F.array_size(col.expr))
+    return [r[0] for r in _capped_rows(col.ds, df, Undefined)]
 
 
 def array_column_type(dtype: T.ArrayType) -> GraphQLObjectType:
@@ -543,7 +463,7 @@ def array_column_type(dtype: T.ArrayType) -> GraphQLObjectType:
                 "values": GraphQLField(
                     GraphQLList(JSON),
                     args={"limit": GraphQLArgument(GraphQLInt)},
-                    resolve=_resolve_json_values,
+                    resolve=_resolve_values,
                 ),
                 "count": GraphQLField(BigInt, resolve=_col_agg("count")),
                 "length": GraphQLField(GraphQLList(BigInt), resolve=_resolve_lengths),
@@ -558,9 +478,8 @@ def struct_column_type() -> GraphQLObjectType:
     / ``types`` reflect the struct schema; values serialize as JSON."""
     if "StructColumn" not in _column_types:
 
-        def _dtype(source) -> T.StructType:
-            ds, name = source
-            return ds.schema[name].dataType
+        def _dtype(col: _Col) -> T.StructType:
+            return col.ds.df.select(col.expr).schema[0].dataType
 
         _column_types["StructColumn"] = GraphQLObjectType(
             "StructColumn",
@@ -568,7 +487,7 @@ def struct_column_type() -> GraphQLObjectType:
                 "values": GraphQLField(
                     GraphQLList(JSON),
                     args={"limit": GraphQLArgument(GraphQLInt)},
-                    resolve=_resolve_json_values,
+                    resolve=_resolve_values,
                 ),
                 "count": GraphQLField(BigInt, resolve=_col_agg("count")),
                 "names": GraphQLField(
@@ -591,21 +510,19 @@ def map_column_type() -> GraphQLObjectType:
     distinct key space, ``length`` the per-row entry counts."""
     if "MapColumn" not in _column_types:
 
-        def _keys(source, info, limit=Undefined):
+        def _keys(col: _Col, info, limit=Undefined):
             # Distinct-key collect is driver-side: cap like values/distinct.
-            ds, name = source
             df = (
-                ds.df.select(F.explode_outer(F.map_keys(F.col(name))).alias("k"))
+                col.ds.df.select(F.explode_outer(F.map_keys(col.expr)).alias("k"))
                 .select(F.col("k").cast("string").alias("k"))
                 .distinct()
             )
-            rows = _capped_rows(ds, df, limit)
+            rows = _capped_rows(col.ds, df, limit)
             return sorted((r["k"] for r in rows), key=lambda k: (k is None, k))
 
-        def _lengths(source, info):
-            ds, name = source
-            df = ds.df.select(F.size(F.col(name)))
-            return [r[0] for r in _capped_rows(ds, df, Undefined)]
+        def _lengths(col: _Col, info):
+            df = col.ds.df.select(F.size(col.expr))
+            return [r[0] for r in _capped_rows(col.ds, df, Undefined)]
 
         _column_types["MapColumn"] = GraphQLObjectType(
             "MapColumn",
@@ -613,7 +530,7 @@ def map_column_type() -> GraphQLObjectType:
                 "values": GraphQLField(
                     GraphQLList(JSON),
                     args={"limit": GraphQLArgument(GraphQLInt)},
-                    resolve=_resolve_json_values,
+                    resolve=_resolve_values,
                 ),
                 "count": GraphQLField(BigInt, resolve=_col_agg("count")),
                 "keys": GraphQLField(
@@ -671,18 +588,12 @@ class SchemaBuilder:
             self.tables[name] = self.table_type(name, ds.schema)
             self._typename_roots[self.tables[name].name] = name
         if len(self.roots) == 1:
-            [(name, _)] = self.roots.items()
-            fields = {
-                key: GraphQLField(
-                    f.type, f.args, _plan_root_batches(f.resolve), description=f.description
-                )
-                for key, f in self.tables[name].fields.items()
-            }
+            [table] = self.tables.values()
+            fields = dict(table.fields)
         else:
             fields = {
                 name: GraphQLField(
-                    table,
-                    resolve=_plan_batches((lambda n: lambda s, i: i.context["roots"][n])(name)),
+                    table, resolve=(lambda n: lambda s, i: i.context["roots"][n])(name)
                 )
                 for name, table in self.tables.items()
             }
@@ -732,7 +643,7 @@ class SchemaBuilder:
 
     def _resolve_entities(self, source, info, representations):
         out = []
-        for i, rep in enumerate(representations):
+        for rep in representations:
             typename = rep["__typename"]
             root_name = self._typename_roots[typename]
             if root_name not in self.keys:
@@ -744,8 +655,6 @@ class SchemaBuilder:
             resolved = ds.filter(**filters)
             resolved._gql_typename = typename
             out.append(resolved)
-            path = (*info.path.as_list(), i)
-            _plan_node(resolved, info, path, self.tables[root_name])
         return out
 
     # -- sub-types ---------------------------------------------------------
@@ -755,7 +664,9 @@ class SchemaBuilder:
         for field in _valid_fields(schema):
             fields[field.name] = GraphQLField(
                 spark_column_type(field.dataType),
-                resolve=(lambda n: lambda ds, info: (ds, n))(field.name),
+                resolve=(lambda n: lambda ds, info: _Col(ds, info.path.prev.prev, F.col(n)))(
+                    field.name
+                ),
             )
         return GraphQLObjectType(f"{name.capitalize()}Columns", fields)
 
@@ -1089,9 +1000,6 @@ class SchemaBuilder:
                     resolve=self._resolve_sql,
                 ),
             }
-            for fld in out.values():
-                if fld.type is table:
-                    fld.resolve = _plan_batches(fld.resolve)
             return out
 
         table = GraphQLObjectType(tname, fields)
@@ -1118,7 +1026,9 @@ class SchemaBuilder:
 
     @staticmethod
     def _resolve_column(ds: Dataset, info, **args):
-        return (ds.select(_column_expr(ds, **_given(args)).alias("_col")), "_col")
+        expr = _column_expr(ds, **_given(args))
+        ds.df.select(expr)  # analyzed here: an unknown name fails this field alone
+        return _Col(ds, info.path.prev, expr)
 
     @staticmethod
     def _resolve_asof(

@@ -19,7 +19,8 @@ from graphique_spark.dataset import Dataset
 
 class _Info:
     """Minimal resolver info: enough for the schema's table resolvers
-    (context for permissions; no leaf batches, so nothing is planned)."""
+    (context for permissions). Only table fields are resolved; no leaf
+    registers with a job, so no job runs."""
 
     def __init__(self, node, context):
         self.field_nodes = [node]

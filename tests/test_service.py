@@ -1167,6 +1167,19 @@ def test_batched_nested_values_keep_json_form(spark):
     assert batched["columns"]["m"]["values"] == [{"a": 1.0}, {}, None]
 
 
+def test_untyped_column_struct_values_are_objects(spark):
+    """A struct column reached by name through ``column(name:)`` serializes
+    its values as JSON objects, as the typed ``columns`` field does."""
+    from graphique_spark import Dataset
+    from graphique_spark.service import GraphQLService
+
+    df = spark.createDataFrame([((1, "x"),), (None,)], "st struct<a:int,b:string>")
+    svc = GraphQLService(Dataset(df))
+    data = svc.execute('{ columns { st { values } } s: column(name: "st") { values first } }')
+    assert data["s"]["values"] == data["columns"]["st"]["values"] == [{"a": 1, "b": "x"}, None]
+    assert data["s"]["first"] == {"a": 1, "b": "x"}
+
+
 def test_unordered_slice_values_come_from_same_rows(spark):
     """Sibling ``values`` of an unordered ``slice(limit:)`` over a
     multi-partition frame are one job, so they read the same rows: a
@@ -1223,6 +1236,86 @@ def test_metrics_report_batches_per_table_node(service):
     out = service.run(_GROUP_VALUES.format(leaves=leaves), metrics=True)
     [batch] = out["extensions"]["metrics"]["execution"]["batches"]
     assert batch["path"] == ["lineitem", "filter", "group", "order"]
-    assert batch["leaves"] == 3  # three values leaves; the lone max runs alone
+    assert batch["leaves"] == 4  # three values leaves; the lone max is a one-leaf job
     hours, minutes, seconds = batch["duration"].split(":")
     assert hours == "0" and minutes == "00" and 0 < float(seconds) < 60
+
+
+def _seconds(duration):
+    hours, minutes, seconds = duration.split(":")
+    return 3600 * int(hours) + 60 * int(minutes) + float(seconds)
+
+
+def test_unnest_leaves_share_one_job(spark):
+    """``unnest`` is a table node of its own: its aggregate leaves are one
+    job, the jobs of a lone ``count``."""
+    from graphique_spark import Dataset
+    from graphique_spark.service import GraphQLService
+
+    df = spark.createDataFrame([([1, 5],), ([],), ([7, 2, 9],)], "arr array<int>")
+    svc = GraphQLService(Dataset(df))
+    doc = "{ columns { arr { unnest { count min max } } } }"
+    lone = "{ columns { arr { unnest { count } } } }"
+    svc.execute(doc)
+    data, jobs = _jobs(spark, lambda: svc.execute(doc))
+    _, lone_jobs = _jobs(spark, lambda: svc.execute(lone))
+    assert jobs == lone_jobs
+    assert data["columns"]["arr"]["unnest"] == {"count": 5, "min": 1, "max": 9}
+
+
+def test_unparsable_cast_sibling_keeps_node_batched(spark):
+    """A ``column(cast:)`` whose type does not parse fails its own field;
+    its siblings run the jobs of the node without it."""
+    from graphique_spark import Dataset
+    from graphique_spark.service import GraphQLService
+
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "n long, s string")
+    svc = GraphQLService(Dataset(df))
+    leaves = "count columns { n { min max sum } s { max } }"
+    doc = f'{{ {leaves} bad: column(name: "s", cast: "nope") {{ max }} }}'
+    svc.run(doc)
+    out, jobs = _jobs(spark, lambda: svc.run(doc))
+    alone, alone_jobs = _jobs(spark, lambda: svc.execute(f"{{ {leaves} }}"))
+    assert jobs == alone_jobs
+    assert [e["path"] for e in out["errors"]] == [["bad"]]
+    assert out["data"].pop("bad") is None
+    assert out["data"] == alone
+
+
+def test_leaf_durations_cover_their_job(service):
+    """A leaf's resolver duration runs until its node's job has answered
+    it, so each leaf of a one-job node takes at least the job's time."""
+    leaves = (
+        'columns { l_linestatus { values } } n: column(name: "n") { values } '
+        'q: column(name: "q") { values }'
+    )
+    out = service.run(_GROUP_VALUES.format(leaves=leaves), metrics=True)
+    execution = out["extensions"]["metrics"]["execution"]
+    [batch] = execution["batches"]
+    job = _seconds(batch["duration"])
+    assert batch["leaves"] == 3 and job > 0
+    node = batch["path"]
+    durations = {
+        tuple(r["path"][len(node):]): _seconds(r["duration"])
+        for r in execution["resolvers"]
+        if r["path"][-1] == "values"
+    }
+    assert set(durations) == {("columns", "l_linestatus", "values"), ("n", "values"), ("q", "values")}
+    assert all(d >= job for d in durations.values())
+
+
+def test_execute_inside_running_event_loop(service, spark):
+    """``execute`` called from a thread that runs an event loop (a notebook
+    cell) answers as it does elsewhere, and its jobs run in the caller's
+    job group."""
+    import asyncio
+
+    doc = """{ lineitem { filter(l_returnflag: {eq: ["R"]}) {
+        count columns { l_quantity { sum } } } } }"""
+
+    async def cell():
+        return service.execute(doc)
+
+    want, jobs = _jobs(spark, lambda: service.execute(doc))
+    got, loop_jobs = _jobs(spark, lambda: asyncio.run(cell()))
+    assert got == want and loop_jobs == jobs > 0
