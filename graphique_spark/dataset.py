@@ -11,6 +11,7 @@ the *semantics* declaratively.
 
 from __future__ import annotations
 
+import threading
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -21,6 +22,8 @@ from graphique_spark.operators.asof import asof_join
 from graphique_spark.operators.sequence import with_row_index, with_run_ids
 from graphique_spark.operators.topk import rank_filter, sort_keys, top_k
 from graphique_spark.session import local_frame
+
+_SQL_VIEW_LOCK = threading.Lock()
 
 
 class Dataset:
@@ -645,8 +648,8 @@ class Dataset:
 
     def asof_join(self, right: "Dataset | DataFrame | str", on: str, **kwargs) -> "Dataset":
         robj = self._resolve_ds(right)
-        # renderable when the right side has a recorded chain: SQL text
-        # re-expresses the union+last-window composition (sqlrender.op_asof)
+        # renderable when the right side has a recorded chain: op_asof
+        # renders the same AsofSql text that asof_join runs
         op = (
             ("asof", self.df, {"right": robj, "on": on, "kwargs": dict(kwargs)})
             if robj is not None
@@ -739,9 +742,19 @@ class Dataset:
     # -- SQL escape hatch (reference interface.py:523-535; gated by caller) -----------
 
     def sql(self, query: str, alias: str = "self") -> "Dataset":
-        self.df.createOrReplaceTempView(alias)
+        # a temp view name is session-wide: register, analyze and drop it
+        # under one lock so concurrent requests never read each other's
+        # table (classic spark.sql analyzes eagerly, so the frame stays
+        # valid once the view is gone)
+        spark = self.df.sparkSession
+        with _SQL_VIEW_LOCK:
+            self.df.createOrReplaceTempView(alias)
+            try:
+                out = spark.sql(query)
+            finally:
+                spark.catalog.dropTempView(alias)
         op = ("sql", self.df, {"query": query, "alias": alias})
-        return self._wrap(self.df.sparkSession.sql(query), op)
+        return self._wrap(out, op)
 
     # -- data-engineering conveniences (beyond the reference surface) -----------------
 

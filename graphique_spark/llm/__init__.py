@@ -12,7 +12,6 @@ composition — signatures are computed map-side with higher-order functions
 from graphique_spark.llm.dedup import (
     exact_duplicates,
     minhash_candidates,
-    minhash_signature,
     ngram_jaccard_pairs,
     simhash_fingerprint,
 )
@@ -32,7 +31,6 @@ __all__ = [
     "language_id",
     "lsh_ann_topk",
     "minhash_candidates",
-    "minhash_signature",
     "ngram_jaccard_pairs",
     "quality_score",
     "simhash_fingerprint",

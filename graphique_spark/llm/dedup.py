@@ -122,33 +122,6 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
     return F.when(col.isNotNull(), grams)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
-    """MinHash signature: per seed, the min md5 of (shingle, seed) — an
-    array of ``num_hashes`` hex strings. String-min is deterministic and
-    identical in any engine with md5."""
-    def seed_min(seed: str) -> Column:
-        # factory keeps the lambda unary — pyspark dispatches a 2-param
-        # transform lambda as the (element, index) form
-        return F.array_min(F.transform(shingles, lambda s: F.md5(F.concat(s, F.lit(seed)))))
-
-    return F.array(*[seed_min(f"#{i}") for i in range(num_hashes)])
-
-
-def lsh_bands(signature: Column, bands: int, rows: int) -> Column:
-    """Hash each band of the signature: array of ``bands`` md5 keys.
-
-    ``bands * rows`` must not exceed the signature length: ``F.get`` past
-    the end yields NULL, which ``concat_ws`` silently DROPS — band keys
-    quietly built from fewer values than requested collide far more
-    often."""
-    return F.array(
-        *[
-            F.md5(F.concat_ws("|", *[F.get(signature, b * rows + r) for r in range(rows)]))
-            for b in range(bands)
-        ]
-    )
-
-
 def _minhash_sql(num_hashes: int) -> list[str]:
     """``m0..m{num_hashes-1}`` as SQL text: per affine permutation, the min
     over the in-row ``hs`` hash array."""
@@ -576,12 +549,19 @@ def _prefix_jaccard(
     )
 
 
+#: Edge cap of the driver union-find in :func:`connected_components` (the
+#: broadcast-join-threshold analogue: at most ~1 MiB collected).
+_SMALL_GRAPH_EDGES = 65536
+#: Label-propagation rounds :func:`connected_components` runs before it
+#: switches to the large/small-star algorithm.
+_LABEL_ESCALATE_ROUNDS = 8
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 50,
-    method: str = "auto",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over candidate-pair edges — the survivor-
@@ -589,24 +569,12 @@ def connected_components(
     member of a component is a duplicate of the same canonical doc).
     Returns (v, component) where component = min doc id reachable.
 
-    ``method="auto"`` (default) first tries the bounded small-graph fast
-    path (driver union-find over a ``graphique.cc.smallGraphEdges``-capped
-    edge collect — the broadcast-join-threshold analogue), falling back to
-    ``"label"`` when the graph exceeds the cap, and escalating from label
-    to ``"star"`` after ``graphique.cc.labelEscalateRounds`` (default 8)
-    non-converged rounds — so auto is safe unattended on deep-chain graphs
-    instead of spinning ``max_iterations`` label rounds and raising.
-
-    Two distributed algorithms behind the same interface:
-
-    * ``method="label"`` — iterative min-label propagation. Each round is
-      one slim shuffle join (edges x labels, two longs each) + a min
-      aggregation. Rounds needed = graph diameter — near-dup graphs are
-      shallow (dupes of dupes), so this converges in a handful of rounds.
-    * ``method="star"`` — alternating large-star/small-star (Kiveris et
-      al., "Connected Components in MapReduce and Beyond", SoCC'14):
-      O(log n) rounds regardless of diameter, the right choice for
-      adversarially deep chains at web scale.
+    Graphs of at most ``_SMALL_GRAPH_EDGES`` edges run a driver union-find
+    over one bounded edge collect. Larger graphs run min-label propagation
+    (:func:`_label_components`), which escalates to large/small-star
+    (:func:`_star_components`) after ``_LABEL_ESCALATE_ROUNDS``
+    non-converged rounds — so deep-chain graphs resolve unattended instead
+    of spinning ``max_iterations`` label rounds and raising.
 
     The distributed paths cut lineage once per round with
     :func:`graphique_spark.session.materialize`. No round's blocks enter
@@ -615,14 +583,48 @@ def connected_components(
     (HDFS/S3 path) writes those cuts to reliable storage instead of
     executor-local blocks, for fault tolerance on a real cluster.
     """
-    if method not in ("auto", "label", "star"):
-        raise ValueError(f"method must be auto|label|star, got {method!r}")
-    # symmetrize via ONE explode pass: a union of two projections of the
-    # pair pipeline executes the (expensive) candidate-verify subplan twice
-    # — the post-shuffle jaccard/intersect work is not covered by exchange
-    # reuse. One Generate emits both directions from a single execution,
-    # then one distinct exchange.
-    edges = (
+    edges = _undirected_edges(pairs, src, dst)
+    # Small-graph fast path: under the cap a driver union-find beats N
+    # iterative shuffle rounds the way a broadcast join beats a sort-merge
+    # join. The sample is read straight off the edge plan, so the common
+    # small graph runs no checkpoint job and persists nothing. Near-dup
+    # edge sets are tiny relative to their corpora (they are pairs, not
+    # docs).
+    sample = edges.limit(_SMALL_GRAPH_EDGES + 1).collect()
+    if len(sample) <= _SMALL_GRAPH_EDGES:
+        parent: dict = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for row in sample:
+            a, b = row["a"], row["b"]
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                # attach the larger root under the smaller: the root
+                # invariant (root == component min) gives the same
+                # labels as the distributed algorithms
+                parent[max(ra, rb)] = min(ra, rb)
+        labels = [(v, find(v)) for v in parent]
+        schema = edges.select(F.col("a").alias("v"), F.col("a").alias("component")).schema
+        return local_frame(edges.sparkSession, labels, schema)
+    # materialize once: the (possibly expensive) upstream pair pipeline
+    # must not re-run inside every propagation round
+    edges = materialize(edges, checkpoint_dir)
+    return _label_components(edges, max_iterations, checkpoint_dir, _LABEL_ESCALATE_ROUNDS)
+
+
+def _undirected_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct (a, b) edges in both directions. One explode pass: a union
+    of two projections of the pair pipeline executes the (expensive)
+    candidate-verify subplan twice — the post-shuffle jaccard/intersect
+    work is not covered by exchange reuse."""
+    return (
         pairs.select(
             F.explode(
                 F.array(
@@ -634,62 +636,20 @@ def connected_components(
         .select(F.col("__e.a").alias("a"), F.col("__e.b").alias("b"))
         .distinct()
     )
-    if method == "auto":
-        # Small-graph fast path: under the threshold a driver union-find
-        # beats N iterative shuffle rounds the way a broadcast join beats a
-        # sort-merge join — a BOUNDED collect (<=~1 MiB at the default),
-        # same contract as spark.sql.autoBroadcastJoinThreshold. The
-        # sample is read straight off the edge plan, so the common small
-        # graph runs no checkpoint job and persists nothing. Near-dup edge
-        # sets are tiny relative to their corpora (they are pairs, not
-        # docs); graphs exceeding the bound fall through to the
-        # distributed label-propagation path unchanged.
-        small_cap = int(
-            edges.sparkSession.conf.get("graphique.cc.smallGraphEdges", "65536")
-        )
-        sample = edges.limit(small_cap + 1).collect()
-        if len(sample) <= small_cap:
-            parent: dict = {}
 
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
 
-            for row in sample:
-                a, b = row["a"], row["b"]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # attach the larger root under the smaller: the root
-                    # invariant (root == component min) gives the same
-                    # labels as the distributed algorithms
-                    parent[max(ra, rb)] = min(ra, rb)
-            labels = [(v, find(v)) for v in parent]
-            schema = edges.select(
-                F.col("a").alias("v"), F.col("a").alias("component")
-            ).schema
-            return local_frame(edges.sparkSession, labels, schema)
-        method = "label"
-        # Auto mode must be safe UNATTENDED on adversarial graphs: label
-        # propagation needs diameter rounds, so a deep chain (mirror-heavy
-        # crawls produce them) would exhaust max_iterations and raise. Cap
-        # the label rounds and escalate to the O(log n) star algorithm
-        # instead of failing — the common shallow near-dup graph still
-        # converges in its first few cheap label rounds and never pays the
-        # star constant.
-        escalate_after = int(
-            edges.sparkSession.conf.get("graphique.cc.labelEscalateRounds", "8")
-        )
-    else:
-        escalate_after = None
-    # materialize once: the (possibly expensive) upstream pair pipeline
-    # must not re-run inside every propagation round
-    edges = materialize(edges, checkpoint_dir)
-    if method == "star":
-        return _star_components(edges, max_iterations, checkpoint_dir)
+def _label_components(
+    edges: DataFrame,
+    max_iterations: int,
+    checkpoint_dir: str | None = None,
+    escalate_after: int | None = None,
+) -> DataFrame:
+    """Iterative min-label propagation over undirected edges. Each round is
+    one slim shuffle join (edges x labels, two longs each) + a min
+    aggregation. Rounds needed = graph diameter — near-dup graphs are
+    shallow (dupes of dupes), so this converges in a handful of rounds.
+    After ``escalate_after`` non-converged rounds the graph is deeper than
+    a typical near-dup graph and :func:`_star_components` takes over."""
     labels = edges.select(F.col("a").alias("v")).distinct().withColumn(
         "component", F.col("v")
     )
@@ -715,25 +675,23 @@ def connected_components(
         if not changed:
             return labels
         if escalate_after is not None and rnd + 1 >= escalate_after:
-            # still not converged after the auto-mode label budget: the
-            # graph is deeper than a typical near-dup graph — switch to
-            # large/small-star, whose round count is O(log n) not diameter
             return _star_components(edges, max_iterations, checkpoint_dir)
     # rounds = diameter for label propagation: exhausting the budget means
     # unconverged labels, which would silently mislabel deep chains.
     raise RuntimeError(
-        f"connected_components(method='label') did not converge in "
-        f"{max_iterations} rounds (graph diameter exceeds budget); "
-        "use method='star' (O(log n) rounds) for deep-chain graphs"
+        f"label propagation did not converge in {max_iterations} rounds "
+        "(graph diameter exceeds budget)"
     )
 
 
 def _star_components(
-    edges: DataFrame, max_iterations: int, checkpoint_dir: str | None
+    edges: DataFrame, max_iterations: int, checkpoint_dir: str | None = None
 ) -> DataFrame:
-    """Alternating large-star/small-star rounds over an undirected edge
-    list (both directions present). Converges to a forest of depth-1 stars
-    rooted at each component's minimum id in O(log n) rounds.
+    """Alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) over an
+    undirected edge list (both directions present). Converges to a forest
+    of depth-1 stars rooted at each component's minimum id in O(log n)
+    rounds.
 
     Per round, both operations are one groupBy + one self-join on slim
     (long, long) rows — partial min aggregation map-side, no collects:

@@ -134,11 +134,6 @@ def attach_video_blobs(
     return df.mapInPandas(batches, schema=f"{schema}, {out} binary")
 
 
-# back-compat demo helper (text bytes as opaque blob)
-def attach_fake_blob(df: DataFrame, text: str = "text", out: str = "blob") -> DataFrame:
-    return df.withColumn(out, F.encode(F.col(text), "utf-8"))
-
-
 def bmp_bytes(seed: int, width: int, height: int) -> bytes:
     """A real 24-bit uncompressed BMP (BITMAPINFOHEADER, bottom-up rows,
     4-byte row padding) with the same deterministic gradient as

@@ -10,10 +10,10 @@ timestamps, then for each left row take ``last(right payload, ignorenulls)``
 over an unbounded-preceding frame. One shuffle on the keys — same cost as an
 equi-join — no range-explosion, no per-key skew beyond what the data has.
 
-The alternative (range join ``r.on BETWEEN l.on - tol AND l.on`` +
-``row_number() == 1``) multiplies rows by the tolerance window and is only
-used when explicitly requested via ``strategy="range"`` (it can win when
-keys are few and tolerance is tight).
+The composition is written once, as SQL text (:class:`AsofSql`): execution
+runs it through ``spark.sql`` with the two frames as parameters, and
+``Dataset.to_sql`` (sqlrender.op_asof) renders the same text over the
+rendered input subqueries.
 """
 
 from __future__ import annotations
@@ -24,10 +24,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphique_spark.session import local_frame, materialize
+from graphique_spark.sqlrender import Unrenderable, expr_sql, quote, subquery
 
 _SIDE = "__asof_side"
-_PAYLOAD = "__asof_payload"
-_RON = "__asof_ron"
+_P = "__asof_p"
+_T = "__asof_t"
+_PID = "__asof_pid"
+_RN = "__asof_rn"
+_CARRY_P = "__asof_cp"
+_CARRY_T = "__asof_ct"
+_INTERNAL = frozenset({_SIDE, _P, _T, _PID, _RN, _CARRY_P, _CARRY_T})
 
 
 def _orderable(dt) -> bool:
@@ -43,16 +49,163 @@ def _orderable(dt) -> bool:
     return True
 
 
-def asof_spec(
-    left_columns: Sequence[str], right_columns: Sequence[str],
-    right_on: str, right_by: Sequence[str], suffix: str,
-) -> tuple[list[str], dict[str, str]]:
-    """(payload_cols, renames) — the single source of the payload/rename
-    derivation, shared by both execution strategies and the SQL renderer
-    (sqlrender.op_asof) so rendered text and execution cannot drift."""
-    payload_cols = [c for c in right_columns if c not in right_by and c != right_on]
-    renames = {c: (c + suffix if c in left_columns else c) for c in payload_cols}
-    return payload_cols, renames
+class AsofSql:
+    """The as-of join's one definition, as SQL text over two input texts.
+
+    Takes :func:`asof_join`'s arguments and validates them (``ValueError``
+    before any job). :meth:`sql` composes the three steps; the keyless
+    execution path runs :meth:`union`, its own two-phase fill, then
+    :meth:`finish`."""
+
+    def __init__(
+        self,
+        left: DataFrame,
+        right: DataFrame,
+        on: str,
+        right_on: str | None = None,
+        by: Sequence[str] = (),
+        right_by: Sequence[str] | None = None,
+        tolerance: Column | str | None = None,
+        direction: str = "backward",
+        suffix: str = "_r",
+    ):
+        self.on = on
+        self.right_on = right_on or on
+        self.by = list(by)
+        self.right_by = list(right_by or by)
+        if len(self.by) != len(self.right_by):
+            # zip() would silently truncate, mapping the wrong key columns
+            # and producing all-null "matches"
+            raise ValueError(f"by has {len(self.by)} keys but right_by has {len(self.right_by)}")
+        if direction not in ("backward", "forward"):
+            raise ValueError(f"direction must be backward|forward, got {direction!r}")
+        self.direction = direction
+        self.left_columns = left.columns
+        clash = _INTERNAL.intersection(self.left_columns)
+        if clash:
+            raise ValueError(f"asof join: column names {sorted(clash)} are reserved")
+        rschema = right.schema
+        self.payload = [
+            c for c in right.columns if c not in self.right_by and c != self.right_on
+        ]
+        self.renames = {
+            c: (c + suffix if c in self.left_columns else c) for c in self.payload
+        }
+        # deterministic tie-break: among right rows sharing (keys, on), the
+        # GREATEST payload (struct-lexicographic) wins, so reruns agree
+        # instead of depending on partition order. Skipped when a payload
+        # field is unorderable (maps); ties then fall back to arbitrary, as
+        # pandas/DuckDB as-of joins do.
+        self.tiebreak = all(
+            _orderable(rschema[c].dataType) for c in [self.right_on, *self.payload]
+        )
+        self.tolerance = None
+        if isinstance(tolerance, Column):
+            try:
+                self.tolerance = expr_sql(left, tolerance)
+            except Unrenderable as exc:
+                raise ValueError(f"asof tolerance has no SQL text: {exc}") from exc
+        elif tolerance is not None:
+            self.tolerance = str(tolerance)
+
+    def union(self, ltext: str, rtext: str) -> str:
+        """Left rows (side 1) and right rows (side 0) in one relation: the
+        left columns, the side tag, the right payload as one struct and the
+        right ``on`` value. NULL fills take their types from the other
+        side through the union's type coercion."""
+        key_map = dict(zip(self.by, self.right_by))
+        r_items = []
+        for c in self.left_columns:
+            if c in key_map:
+                r_items.append(f"{quote(key_map[c])} AS {quote(c)}")
+            elif c == self.on:
+                r_items.append(f"{quote(self.right_on)} AS {quote(c)}")
+            else:
+                r_items.append(f"NULL AS {quote(c)}")
+        named = ", ".join("'" + c.replace("'", "''") + f"', {quote(c)}" for c in self.payload)
+        cols = ", ".join(quote(c) for c in self.left_columns)
+        return (
+            f"SELECT {cols}, 1 AS {_SIDE}, NULL AS {_P}, NULL AS {_T}\n"
+            f"FROM {subquery(ltext, '__asof_l')}\n"
+            "UNION ALL\n"
+            f"SELECT {', '.join(r_items)}, 0, named_struct({named}), {quote(self.right_on)}\n"
+            f"FROM {subquery(rtext, '__asof_r')}\n"
+            # a right row with a NULL `on` has no position on the time axis
+            # and can never be "the nearest"; left in, it sorts nulls-first
+            # and its payload leaks into every left row before the first
+            # real right row
+            f"WHERE {quote(self.right_on)} IS NOT NULL"
+        )
+
+    def _order(self) -> list[tuple[str, str]]:
+        """(column, direction) of the fill order: right (0) before left (1)
+        at equal ``on``, then the payload tie-break."""
+        # DESC NULLS FIRST, not DESC: a left row with NULL `on` has no
+        # position on the time axis and must come BEFORE every right row
+        # so last(payload, ignorenulls) stays null (backward gets this for
+        # free: ascending is nulls-first)
+        on = "DESC NULLS FIRST" if self.direction == "forward" else "ASC"
+        order = [(self.on, on), (_SIDE, "ASC")]
+        return order + [(_P, "ASC")] if self.tiebreak else order
+
+    def order_columns(self) -> list[Column]:
+        return [
+            F.col(c).desc_nulls_first() if d == "DESC NULLS FIRST" else F.col(c)
+            for c, d in self._order()
+        ]
+
+    def fill(self, text: str) -> str:
+        """Carry the latest right payload and ``on`` forward along the time
+        axis, per key."""
+        part = f"PARTITION BY {', '.join(quote(b) for b in self.by)} " if self.by else ""
+        order = ", ".join(f"{quote(c)} {d}" for c, d in self._order())
+        cols = ", ".join(quote(c) for c in self.left_columns)
+        return (
+            f"SELECT {cols}, {_SIDE}, last({_P}, true) OVER w AS {_P}, "
+            f"last({_T}, true) OVER w AS {_T}\n"
+            f"FROM {subquery(text, '__asof_u')}\n"
+            f"WINDOW w AS ({part}ORDER BY {order} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        )
+
+    def finish(self, text: str) -> str:
+        """Left rows with their payload columns, voided outside the
+        tolerance."""
+        payload = _P
+        if self.tolerance is not None:
+            # bound form (ts <= ts + interval), not gap form (ts - ts <= tol):
+            # timestamp subtraction yields a DAY-TO-SECOND interval, which is
+            # incomparable with a calendar (month-bearing) tolerance like P1M
+            on = quote(self.on)
+            if self.direction == "backward":
+                within = f"{on} <= {_T} + ({self.tolerance})"
+            else:
+                within = f"{_T} <= {on} + ({self.tolerance})"
+            payload = f"(CASE WHEN {_T} IS NOT NULL AND {within} THEN {_P} END)"
+        items = [quote(c) for c in self.left_columns] + [
+            f"{payload}.{quote(c)} AS {quote(self.renames[c])}" for c in self.payload
+        ]
+        return (
+            f"SELECT {', '.join(items)}\n"
+            f"FROM {subquery(text, '__asof_f')}\n"
+            f"WHERE {_SIDE} = 1"
+        )
+
+    def sql(self, ltext: str, rtext: str) -> str:
+        return self.finish(self.fill(self.union(ltext, rtext)))
+
+
+def _run_sql(spark, build, **frames: DataFrame) -> DataFrame:
+    """``spark.sql`` over the text ``build`` returns, with ``frames`` as its
+    inputs: ``build`` gets one input text per frame (the ``{name}``
+    parameter), and every other brace in its text (quoted names, tolerance
+    literals) is escaped for the formatter."""
+    marks = {name: f"\0{name}\0" for name in frames}
+    text = build(*(f"SELECT * FROM {m}" for m in marks.values()))
+    text = text.replace("{", "{{").replace("}", "}}")
+    for name, mark in marks.items():
+        text = text.replace(mark, "{" + name + "}")
+    return spark.sql(text, **frames)
 
 
 def asof_join(
@@ -64,97 +217,22 @@ def asof_join(
     right_by: Sequence[str] | None = None,
     tolerance: Column | str | None = None,
     direction: str = "backward",
-    strategy: str = "union",
     suffix: str = "_r",
 ) -> DataFrame:
     """Left as-of join. ``direction='backward'``: nearest right row with
     ``r.on <= l.on`` (within ``tolerance`` if given); ``'forward'``: nearest
-    with ``r.on >= l.on``.
+    with ``r.on >= l.on``. A string ``tolerance`` is SQL text; a Column is
+    rendered against ``left``.
 
     Right payload columns that collide with left names get ``suffix``.
     """
-    right_on = right_on or on
-    right_by = list(right_by or by)
-    by = list(by)
-    if len(by) != len(right_by):
-        # zip() would silently truncate, mapping the wrong key columns
-        # and producing all-null "matches"
-        raise ValueError(
-            f"by has {len(by)} keys but right_by has {len(right_by)}"
-        )
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if strategy == "range":
-        return _asof_range(left, right, on, right_on, by, right_by, tolerance, direction, suffix)
-
-    payload_cols, renames = asof_spec(left.columns, right.columns, right_on, right_by, suffix)
-
-    # a right row with a NULL `on` has no position on the time axis and
-    # can never be "the nearest" (the range strategy's comparison already
-    # excludes it); left in, it sorts nulls-first and its payload leaks
-    # into every left row before the first real right row
-    right = right.where(F.col(right_on).isNotNull())
-
-    lhs = left.withColumn(_SIDE, F.lit(1)).withColumn(_PAYLOAD, F.lit(None).cast(
-        "struct<" + ",".join(f"`{c}`:{right.schema[c].dataType.simpleString()}" for c in payload_cols) + ">"
-    )).withColumn(_RON, F.lit(None).cast(right.schema[right_on].dataType.simpleString()))
-
-    rhs = right.select(
-        *[F.col(rb).alias(b) for b, rb in zip(by, right_by)],
-        F.col(right_on).alias(on),
-        F.lit(0).alias(_SIDE),
-        F.struct(*[F.col(c) for c in payload_cols]).alias(_PAYLOAD),
-        F.col(right_on).alias(_RON),
-    )
-    for c in left.columns:
-        if c not in rhs.columns:
-            rhs = rhs.withColumn(c, F.lit(None).cast(left.schema[c].dataType.simpleString()))
-    rhs = rhs.select(*lhs.columns)
-
-    unioned = lhs.unionByName(rhs)
-    order = [F.col(on), F.col(_SIDE)]  # right (0) before left (1) at ties
-    if direction == "forward":
-        # desc_nulls_first, not desc: a left row with NULL `on` has no
-        # position on the time axis and must traverse BEFORE every right
-        # row so last(payload, ignorenulls) stays null — plain desc sorts
-        # nulls last and handed such rows the latest right payload
-        # (backward gets this for free: asc is nulls-first)
-        order = [F.col(on).desc_nulls_first(), F.col(_SIDE)]
-    if _orderable(right.schema[right_on].dataType) and all(
-        _orderable(right.schema[c].dataType) for c in payload_cols
-    ):
-        # deterministic tie-break: among right rows sharing (keys, on), the
-        # GREATEST payload (struct-lexicographic) wins — reruns and both
-        # strategies agree instead of depending on partition order. Skipped
-        # when a payload field is unorderable (maps); ties then fall back
-        # to arbitrary, as pandas/DuckDB as-of joins do.
-        order = order + [F.col(_PAYLOAD)]
-    if by:
-        w = Window.partitionBy(*by).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-        matched = unioned.withColumn(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w))
-        matched = matched.withColumn(_RON, F.last(_RON, ignorenulls=True).over(w))
-    else:
-        matched = _global_last_fill(unioned, order)
-
-    out = matched.filter(F.col(_SIDE) == 1)
-    if tolerance is not None:
-        tol = F.expr(tolerance) if isinstance(tolerance, str) else tolerance
-        # bound form (ts <= ts + interval), not gap form (ts - ts <= tol):
-        # timestamp subtraction yields a DAY-TO-SECOND interval, which is
-        # incomparable with a calendar (month-bearing) tolerance like P1M
-        if direction == "backward":
-            within = F.col(_RON).isNotNull() & (F.col(on) <= F.col(_RON) + tol)
-        else:
-            within = F.col(_RON).isNotNull() & (F.col(_RON) <= F.col(on) + tol)
-        out = out.withColumn(_PAYLOAD, F.when(within, F.col(_PAYLOAD)))
-        out = out.withColumn(_RON, F.when(within, F.col(_RON)))
-    return out.select(
-        *[F.col(c) for c in left.columns],
-        *[F.col(f"{_PAYLOAD}.{c}").alias(renames[c]) for c in payload_cols],
-    )
-
-
-_PID = "__asof_pid"
+    spec = AsofSql(left, right, on, right_on, by, right_by, tolerance, direction, suffix)
+    spark = left.sparkSession
+    if spec.by:
+        return _run_sql(spark, spec.sql, left=left, right=right)
+    unioned = _run_sql(spark, spec.union, left=left, right=right)
+    filled = _global_last_fill(unioned, spec.order_columns())
+    return _run_sql(spark, spec.finish, filled=filled)
 
 
 def _global_last_fill(unioned: DataFrame, order: list[Column]) -> DataFrame:
@@ -174,17 +252,17 @@ def _global_last_fill(unioned: DataFrame, order: list[Column]) -> DataFrame:
     w = Window.partitionBy(_PID).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
     rn = F.row_number().over(Window.partitionBy(_PID).orderBy(*order))
     filled = materialize(
-        parts.withColumn(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w))
-        .withColumn(_RON, F.last(_RON, ignorenulls=True).over(w))
-        .withColumn("__asof_rn", rn)
+        parts.withColumn(_P, F.last(_P, ignorenulls=True).over(w))
+        .withColumn(_T, F.last(_T, ignorenulls=True).over(w))
+        .withColumn(_RN, rn)
     )
     carry_out = {
         row[_PID]: row["co"]
         for row in filled.groupBy(_PID)
         .agg(
             F.max_by(
-                F.struct(F.col(_PAYLOAD).alias("p"), F.col(_RON).alias("t")),
-                F.col("__asof_rn"),
+                F.struct(F.col(_P).alias("p"), F.col(_T).alias("t")),
+                F.col(_RN),
             ).alias("co")
         )
         .collect()
@@ -198,8 +276,8 @@ def _global_last_fill(unioned: DataFrame, order: list[Column]) -> DataFrame:
     schema = StructType(
         [
             StructField(_PID, IntegerType()),
-            StructField("__carry_p", unioned.schema[_PAYLOAD].dataType),
-            StructField("__carry_t", unioned.schema[_RON].dataType),
+            StructField(_CARRY_P, unioned.schema[_P].dataType),
+            StructField(_CARRY_T, unioned.schema[_T].dataType),
         ]
     )
     rows = [
@@ -209,59 +287,9 @@ def _global_last_fill(unioned: DataFrame, order: list[Column]) -> DataFrame:
     carry_df = local_frame(unioned.sparkSession, rows, schema)
     return (
         filled.join(F.broadcast(carry_df), on=_PID, how="left")
-        .withColumn(_PAYLOAD, F.coalesce(F.col(_PAYLOAD), F.col("__carry_p")))
-        .withColumn(_RON, F.coalesce(F.col(_RON), F.col("__carry_t")))
-        .drop(_PID, "__asof_rn", "__carry_p", "__carry_t")
-    )
-
-
-def _asof_range(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    right_on: str,
-    by: list[str],
-    right_by: list[str],
-    tolerance: Column | str | None,
-    direction: str,
-    suffix: str,
-) -> DataFrame:
-    """Range-join variant: bounded candidate window + keep nearest."""
-    payload_cols, renames = asof_spec(left.columns, right.columns, right_on, right_by, suffix)
-    r = right.select(
-        *[F.col(rb).alias(f"__r_{b}") for b, rb in zip(by, right_by)],
-        F.col(right_on).alias("__r_on"),
-        *[F.col(c).alias(f"__r_{c}") for c in payload_cols],
-    )
-    cond = F.lit(True)
-    for b in by:
-        cond = cond & (F.col(b) == F.col(f"__r_{b}"))
-    if direction == "backward":
-        cond = cond & (F.col("__r_on") <= F.col(on))
-        if tolerance is not None:
-            tol = F.expr(tolerance) if isinstance(tolerance, str) else tolerance
-            cond = cond & (F.col("__r_on") >= F.col(on) - tol)
-    else:
-        cond = cond & (F.col("__r_on") >= F.col(on))
-        if tolerance is not None:
-            tol = F.expr(tolerance) if isinstance(tolerance, str) else tolerance
-            cond = cond & (F.col("__r_on") <= F.col(on) + tol)
-    # tag each left row with a unique id so fully identical duplicate left
-    # rows keep one output row each (partitioning the tie-break window by all
-    # left columns would collapse them)
-    tagged = left.withColumn("__l_id", F.monotonically_increasing_id())
-    joined = tagged.join(r, on=cond, how="left")
-    order = [F.col("__r_on").desc() if direction == "backward" else F.col("__r_on")]
-    if all(_orderable(right.schema[c].dataType) for c in payload_cols):
-        # same greatest-payload tie-break as the union strategy
-        order.append(
-            F.struct(*[F.col(f"__r_{c}") for c in payload_cols]).desc_nulls_last()
-        )
-    w = Window.partitionBy("__l_id").orderBy(*order)
-    best = joined.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    return best.select(
-        *[F.col(c) for c in left.columns],
-        *[F.col(f"__r_{c}").alias(renames[c]) for c in payload_cols],
+        .withColumn(_P, F.coalesce(F.col(_P), F.col(_CARRY_P)))
+        .withColumn(_T, F.coalesce(F.col(_T), F.col(_CARRY_T)))
+        .drop(_PID, _RN, _CARRY_P, _CARRY_T)
     )
 
 

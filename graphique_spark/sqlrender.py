@@ -280,6 +280,12 @@ def sort_item(key: str) -> str:
 # -- SELECT-block composition -------------------------------------------------
 
 
+def subquery(text: str, alias: str) -> str:
+    """``text`` as an indented, aliased FROM item."""
+    indented = "\n".join("  " + line for line in text.splitlines())
+    return f"(\n{indented}\n) AS {alias}"
+
+
 class _Block:
     """One SELECT block being assembled; operators fold into free clause
     slots when SQL evaluation order matches the operator order, otherwise
@@ -334,8 +340,7 @@ class _Renderer:
     def _named_sub(self, text: str) -> tuple[str, str]:
         self.n += 1
         alias = f"__s{self.n}"
-        indented = "\n".join("  " + line for line in text.splitlines())
-        return f"(\n{indented}\n) AS {alias}", alias
+        return subquery(text, alias), alias
 
     def wrap(self, block: _Block) -> _Block:
         return _Block(self._sub(block.render()))
@@ -664,121 +669,23 @@ class _Renderer:
         return _Block(src)
 
     def op_asof(self, block, df, right, on: str, kwargs: dict):
-        """As-of join as SQL text: the same union + last-value-window
-        composition the DataFrame path uses (operators/asof.py — reference
-        ``asofJoin``, interface.py:354-383). Spark SQL has no ASOF JOIN
-        keyword, but the semantics are plain SQL: union both sides tagged
-        by side, carry the latest right payload forward per key along the
-        time axis, keep left rows. The keyless DataFrame path additionally
-        uses a two-phase partition carry to avoid a single-task global
-        window — a *physical* optimization the SQL text doesn't have to
-        reproduce (same precedent as op_runs)."""
-        from graphique_spark.operators.asof import _orderable, asof_spec
+        """As-of join (reference ``asofJoin``, interface.py:354-383): the
+        text of ``operators.asof.AsofSql``, the same text execution runs,
+        over the rendered input subqueries. The keyless execution
+        path fills in two phases to avoid a single-task global window — a
+        *physical* optimization the SQL text doesn't have to reproduce
+        (same precedent as op_runs)."""
+        from graphique_spark.operators.asof import AsofSql
 
-        right_on = kwargs.get("right_on") or on
-        by = list(kwargs.get("by") or ())
-        right_by = list(kwargs.get("right_by") or by)
-        direction = kwargs.get("direction", "backward")
-        tolerance = kwargs.get("tolerance")
-        strategy = kwargs.get("strategy", "union")
-        suffix = kwargs.get("suffix", "_r")
-        if direction not in ("backward", "forward"):
-            raise Unrenderable(f"asof direction {direction!r}")
-        if strategy not in ("union", "range"):
-            raise Unrenderable(f"asof strategy {strategy!r}")
-        if len(by) != len(right_by):
-            raise Unrenderable("asof by/right_by length mismatch")
-        rdf = right.df
-        payload_cols, renames = asof_spec(df.columns, rdf.columns, right_on, right_by, suffix)
-        if not payload_cols:
-            raise Unrenderable("asof join with no right payload columns")
-        if not (
-            _orderable(rdf.schema[right_on].dataType)
-            and all(_orderable(rdf.schema[c].dataType) for c in payload_cols)
-        ):
+        try:
+            spec = AsofSql(df, right.df, on, **kwargs)
+        except ValueError as exc:
+            raise Unrenderable(str(exc)) from exc
+        if not spec.tiebreak:
             # without the greatest-payload tie-break the match among right
             # rows sharing (keys, on) is arbitrary — no SQL text can pin it
             raise Unrenderable("asof tie-break nondeterministic for unorderable payload")
-        internal = {"__side", "__p", "__t", "__pf", "__tf"}
-        if internal & (set(df.columns) | set(rdf.columns)):
-            raise Unrenderable("asof internal column name collision")
-        tol_sql = None
-        if tolerance is not None:
-            tol_sql = tolerance if isinstance(tolerance, str) else expr_sql(df, tolerance)
-        struct_ddl = "struct<" + ",".join(
-            f"`{c}`:{rdf.schema[c].dataType.simpleString()}" for c in payload_cols
-        ) + ">"
-        on_ddl = rdf.schema[right_on].dataType.simpleString()
-
-        lhs = _Block(
-            self._sub(block.render()),
-            select=[quote(c) for c in df.columns]
-            + [
-                "1 AS __side",
-                f"CAST(NULL AS {struct_ddl}) AS __p",
-                f"CAST(NULL AS {on_ddl}) AS __t",
-            ],
-        )
-        key_map = dict(zip(by, right_by))
-        r_items = []
-        for c in df.columns:
-            if c in key_map:
-                r_items.append(f"{quote(key_map[c])} AS {quote(c)}")
-            elif c == on:
-                r_items.append(f"{quote(right_on)} AS {quote(c)}")
-            else:
-                ddl = df.schema[c].dataType.simpleString()
-                r_items.append(f"CAST(NULL AS {ddl}) AS {quote(c)}")
-        named = ", ".join(
-            "'" + c.replace("'", "''") + f"', {quote(c)}" for c in payload_cols
-        )
-        r_items += [
-            "0 AS __side",
-            f"named_struct({named}) AS __p",
-            f"{quote(right_on)} AS __t",
-        ]
-        rhs = _Block(self._sub(self._right_text(right)), select=r_items)
-        # a right row with NULL `on` has no position on the time axis
-        # (operators/asof.py drops it pre-union)
-        rhs.where.append(f"{quote(right_on)} IS NOT NULL")
-        unioned = self._sub(f"({lhs.render()})\nUNION ALL\n({rhs.render()})")
-
-        on_item = f"{quote(on)} DESC NULLS FIRST" if direction == "forward" else quote(on)
-        part = f"PARTITION BY {', '.join(col_ref(b) for b in by)} " if by else ""
-        w = (
-            f"({part}ORDER BY {on_item}, __side, __p "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        )
-        mid = _Block(
-            unioned,
-            select=[quote(c) for c in df.columns]
-            + [
-                "__side",
-                f"last(__p, true) OVER {w} AS __pf",
-                f"last(__t, true) OVER {w} AS __tf",
-            ],
-        )
-        outer = _Block(self._sub(mid.render()))
-        outer.where.append("__side = 1")
-        if tol_sql is None:
-            payload_ref = "__pf"
-        else:
-            # the bound form must match the RECORDED strategy: union bounds
-            # on the left side (l.on <= r.on + tol), range on the right
-            # (r.on >= l.on - tol) — equivalent for day-time intervals and
-            # numerics, asymmetric for calendar (month-bearing) intervals
-            # (asof.py:136-141 vs :233). Forward bounds agree.
-            if direction == "forward":
-                within = f"__tf <= {quote(on)} + ({tol_sql})"
-            elif strategy == "range":
-                within = f"__tf >= {quote(on)} - ({tol_sql})"
-            else:
-                within = f"{quote(on)} <= __tf + ({tol_sql})"
-            payload_ref = f"CASE WHEN __tf IS NOT NULL AND {within} THEN __pf END"
-        outer.select = [quote(c) for c in df.columns] + [
-            f"({payload_ref}).{quote(c)} AS {quote(renames[c])}" for c in payload_cols
-        ]
-        return outer
+        return _Block(self._sub(spec.sql(block.render(), self._right_text(right))))
 
     def op_cross(self, block, df, rights: Sequence):
         src = self._sub(block.render())

@@ -934,18 +934,6 @@ def test_asof_join_matches_duckdb_asof(spark, lrows, rkeys, specs):
             got = [(i, None if w is None else int(w)) for i, w in got]
             want = [(i, None if w is None else int(w)) for i, w in want]
             assert got == want, (direction, keyed, tol, got, want)
-            if tol is not None and keyed:
-                # the bounded range-join strategy must agree with the
-                # union+window strategy AND the external oracle
-                rng = asof_join(
-                    sl, sr, on="t", by=["k"], direction=direction,
-                    tolerance=F.lit(tol), strategy="range",
-                )
-                got_rng = sorted(
-                    (r["id"], None if r["w"] is None else int(r["w"]))
-                    for r in rng.select("id", "w").collect()
-                )
-                assert got_rng == want, ("range", direction, tol, got_rng, want)
     finally:
         con.close()
 

@@ -298,14 +298,18 @@ def test_connected_components_chain_and_islands(spark):
 def test_connected_components_empty(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(pairs).count() == 0
-    assert dedup.connected_components(pairs, method="star").count() == 0
+    assert _cc_labels(pairs, "star") == {}
 
 
-def _cc_labels(pairs, **kw):
-    return {
-        r["v"]: r["component"]
-        for r in dedup.connected_components(pairs, **kw).collect()
-    }
+def _cc_labels(pairs, algorithm="auto", max_iterations=50):
+    """Component labels from the auto selection, or straight from the
+    label-propagation or star algorithm."""
+    if algorithm == "auto":
+        out = dedup.connected_components(pairs, max_iterations=max_iterations)
+    else:
+        run = {"label": dedup._label_components, "star": dedup._star_components}[algorithm]
+        out = run(dedup._undirected_edges(pairs, "id_a", "id_b"), max_iterations)
+    return {r["v"]: r["component"] for r in out.collect()}
 
 
 CC_EDGES = [(1, 2), (2, 3), (3, 4), (10, 11), (12, 11), (20, 21), (21, 20)]
@@ -325,27 +329,24 @@ def test_connected_components_small_path_persists_nothing(spark):
     assert plan == "LocalRelation"
 
 
-def test_connected_components_forced_distributed_matches_small(spark):
+def test_connected_components_forced_distributed_matches_small(spark, monkeypatch):
     pairs = spark.createDataFrame(CC_EDGES, "id_a long, id_b long")
     small = _cc_labels(pairs)
-    spark.conf.set("graphique.cc.smallGraphEdges", "2")  # 14 edges > cap
-    try:
-        forced = _cc_labels(pairs)
-    finally:
-        spark.conf.unset("graphique.cc.smallGraphEdges")
+    monkeypatch.setattr(dedup, "_SMALL_GRAPH_EDGES", 2)  # 14 edges > cap
+    forced = _cc_labels(pairs)
     assert small == forced == CC_EXPECTED
 
 
 def test_connected_components_label_and_star_unchanged(spark):
     pairs = spark.createDataFrame(CC_EDGES, "id_a long, id_b long")
-    assert _cc_labels(pairs, method="label") == CC_EXPECTED
-    assert _cc_labels(pairs, method="star") == CC_EXPECTED
+    assert _cc_labels(pairs, "label") == CC_EXPECTED
+    assert _cc_labels(pairs, "star") == CC_EXPECTED
     strs = spark.createDataFrame(
         [(f"d{a:02d}", f"d{b:02d}") for a, b in CC_EDGES], "id_a string, id_b string"
     )
     want = {f"d{v:02d}": f"d{c:02d}" for v, c in CC_EXPECTED.items()}
-    assert _cc_labels(strs) == _cc_labels(strs, method="label") == want
-    assert _cc_labels(strs, method="star") == want
+    assert _cc_labels(strs) == _cc_labels(strs, "label") == want
+    assert _cc_labels(strs, "star") == want
 
 
 @slow_full  # ~110s (65 label rounds x shuffle jobs): star/auto coverage
@@ -360,21 +361,10 @@ def test_star_components_matches_label_propagation(spark):
     edges += [(100 + i, 100 + i + 1) for i in range(64)]  # 65-node chain
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    label = {
-        r["v"]: r["component"]
-        for r in dedup.connected_components(
-            pairs, max_iterations=70, method="label"
-        ).collect()
-    }
-    auto = {
-        r["v"]: r["component"]
-        for r in dedup.connected_components(pairs).collect()
-    }
+    label = _cc_labels(pairs, "label", max_iterations=70)
+    auto = _cc_labels(pairs)
     assert auto == label  # small-graph union-find fast path agrees
-    star = {
-        r["v"]: r["component"]
-        for r in dedup.connected_components(pairs, method="star").collect()
-    }
+    star = _cc_labels(pairs, "star")
     assert star == label
     # the chain component resolves to its minimum id
     assert star[164] == 100
@@ -385,41 +375,30 @@ def test_star_components_chain_round_count(spark):
     # (min-label propagation would need ~64)
     edges = [(200 + i, 200 + i + 1) for i in range(64)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    out = dedup.connected_components(pairs, method="star", max_iterations=8)
-    comps = {r["component"] for r in out.collect()}
+    comps = set(_cc_labels(pairs, "star", max_iterations=8).values())
     assert comps == {200}
     # and label propagation raises rather than silently mislabeling
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iterations=8, method="label").collect()
+        _cc_labels(pairs, "label", max_iterations=8)
 
 
-def test_auto_mode_escalates_to_star_on_deep_chains(spark):
+def test_auto_mode_escalates_to_star_on_deep_chains(spark, monkeypatch):
     # auto must be scale-safe UNATTENDED: over the small-graph cap, label
     # propagation gets a bounded round budget, then the O(log n) star path
     # takes over — a deep chain with max_iterations far below its diameter
     # must still resolve instead of raising "did not converge"
     edges = [(300 + i, 300 + i + 1) for i in range(64)]  # diameter 64
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    spark.conf.set("graphique.cc.smallGraphEdges", "4")  # force past union-find
-    spark.conf.set("graphique.cc.labelEscalateRounds", "3")
-    try:
-        out = {
-            r["v"]: r["component"]
-            for r in dedup.connected_components(
-                pairs, max_iterations=12, method="auto"
-            ).collect()
-        }
-    finally:
-        spark.conf.unset("graphique.cc.smallGraphEdges")
-        spark.conf.unset("graphique.cc.labelEscalateRounds")
-    assert out == {300 + i: 300 for i in range(65)}
-    # explicit method="label" keeps the raise-on-divergence contract
+    monkeypatch.setattr(dedup, "_SMALL_GRAPH_EDGES", 4)  # force past union-find
+    monkeypatch.setattr(dedup, "_LABEL_ESCALATE_ROUNDS", 3)
+    assert _cc_labels(pairs, max_iterations=12) == {300 + i: 300 for i in range(65)}
+    # label propagation alone keeps the raise-on-divergence contract
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iterations=12, method="label").collect()
+        _cc_labels(pairs, "label", max_iterations=12)
 
 
 def test_prefix_jaccard_reliable_checkpoint(spark, tmp_path):
@@ -1990,10 +1969,6 @@ def test_dedup_null_text_never_pairs(spark):
         dedup.simhash_fingerprint(dedup.char_shingles(F.col("text"))).alias("f")
     ).collect()
     assert [r["f"] for r in fp[:2]] == [None, None]
-    with pytest.raises(ValueError, match="auto|label|star"):
-        dedup.connected_components(
-            spark.createDataFrame([(1, 2)], "id_a long, id_b long"), method="stars"
-        )
 
 
 def test_star_components_nonconvergence_raises(spark):
@@ -2003,7 +1978,7 @@ def test_star_components_nonconvergence_raises(spark):
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(chain, method="star", max_iterations=1)
+        _cc_labels(chain, "star", max_iterations=1)
 
 
 def test_text_whitespace_and_null_edges(spark):

@@ -65,20 +65,22 @@ def _edges(spark):
 
 
 def _components_label(spark):
-    from graphique_spark.llm.dedup import connected_components
+    from graphique_spark.llm import dedup
 
-    # a cap of one edge sends auto mode past the driver union-find
-    spark.conf.set("graphique.cc.smallGraphEdges", "1")
+    # a cap of one edge sends the auto selection past the driver union-find
+    cap = dedup._SMALL_GRAPH_EDGES
+    dedup._SMALL_GRAPH_EDGES = 1
     try:
-        return connected_components(_edges(spark))
+        return dedup.connected_components(_edges(spark))
     finally:
-        spark.conf.unset("graphique.cc.smallGraphEdges")
+        dedup._SMALL_GRAPH_EDGES = cap
 
 
 def _components_star(spark):
-    from graphique_spark.llm.dedup import connected_components
+    from graphique_spark.llm import dedup
 
-    return connected_components(_edges(spark), method="star")
+    edges = dedup._undirected_edges(_edges(spark), "id_a", "id_b")
+    return dedup._star_components(edges, max_iterations=50)
 
 
 def _phash_near_dups(spark):

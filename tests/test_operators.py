@@ -1,6 +1,8 @@
 """Composite operators: row index, runs, as-of join, top-k — validated
 against DuckDB SQL or hand-computed expectations."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,8 +75,8 @@ def test_asof_forward_and_range_strategy(spark):
     right = spark.createDataFrame([(1, 12, "x"), (1, 20, "y"), (1, 5, "z")], "k int, t long, v string")
     fwd = asof_join(left, right, on="t", by=["k"], direction="forward").collect()
     assert fwd[0]["v"] == "x"
-    rng = asof_join(left, right, on="t", by=["k"], strategy="range").collect()
-    assert rng[0]["v"] == "z"
+    bwd = asof_join(left, right, on="t", by=["k"]).collect()
+    assert bwd[0]["v"] == "z"
 
 
 def test_asof_matches_duckdb(tables, oracle):
@@ -243,11 +245,9 @@ def test_ordered_collect_mixed_direction_keys(spark):
 
 
 def test_asof_range_keeps_duplicate_left_rows(spark):
-    # ADVICE r1: identical duplicate left rows collapsed under strategy='range'
+    # identical duplicate left rows keep one output row each
     left = spark.createDataFrame([(1, 10), (1, 10)], "k int, t long")
     right = spark.createDataFrame([(1, 5, "z")], "k int, t long, v string")
-    rng = asof_join(left, right, on="t", by=["k"], strategy="range")
-    assert rng.count() == 2
     uni = asof_join(left, right, on="t", by=["k"])
     assert uni.count() == 2
 
@@ -890,8 +890,8 @@ def test_with_run_ids_nan_run_spans_partition_boundaries(spark):
 
 def test_asof_tie_break_is_deterministic_greatest_payload(spark):
     """Multiple right rows sharing (key, on) used to resolve by partition
-    order; both strategies must now pick the GREATEST payload
-    (struct-lexicographic) so reruns and strategies agree."""
+    order; the join must now pick the GREATEST payload
+    (struct-lexicographic) so reruns agree."""
     from graphique_spark.operators.asof import asof_join
 
     l = spark.createDataFrame([(0, 5, 0), (0, 1, 1)], "g long, t long, u long")
@@ -900,12 +900,60 @@ def test_asof_tie_break_is_deterministic_greatest_payload(spark):
         "g long, t long, bid long, tag string",
     ).repartition(4)
     for direction, matched_u in (("backward", 0), ("forward", 1)):
-        for strategy in ("union", "range"):
-            got = {
-                x["u"]: (x["bid"], x["tag"])
-                for x in asof_join(
-                    l, r, on="t", by=["g"], direction=direction, strategy=strategy
-                ).collect()
-            }
-            assert got[matched_u] == (9, "z"), (direction, strategy, got)
-            assert got[1 - matched_u] == (None, None), (direction, strategy, got)
+        got = {
+            x["u"]: (x["bid"], x["tag"])
+            for x in asof_join(l, r, on="t", by=["g"], direction=direction).collect()
+        }
+        assert got[matched_u] == (9, "z"), (direction, got)
+        assert got[1 - matched_u] == (None, None), (direction, got)
+
+
+def _asof_frames(spark, extra):
+    cols = ", ".join(f"c{i} long" for i in range(extra))
+    left = spark.createDataFrame([(1, 10) + tuple(range(extra))], f"k int, t long, {cols}")
+    right = spark.createDataFrame([(1, 5, "z")], "k int, t long, v string")
+    left.schema, right.schema  # noqa: B018 -- resolve the input schemas
+    return left, right
+
+
+def test_asof_build_cost_flat_in_left_columns(spark, py4j_calls):
+    # the join is one SQL text over both frames: a left column adds a
+    # quoted name to the text, not a Column built through py4j (built as
+    # DataFrame steps it took 504 / 1,554 commands at 2 / 32 columns)
+    frames = {n: _asof_frames(spark, n) for n in (2, 32)}
+
+    def build(extra):
+        left, right = frames[extra]
+        start = py4j_calls.n
+        asof_join(left, right, on="t", by=["k"])
+        return py4j_calls.n - start
+
+    build(2)  # first build: one-time lookups
+    n2, n32 = build(2), build(32)
+    assert n32 <= 1.1 * n2
+
+
+def test_asof_internal_name_collision_raises(spark):
+    # a left column named like an internal column was silently overwritten
+    # (`__asof_side = 7` came back as 1)
+    right = spark.createDataFrame([(5, "z")], "t long, v string")
+    for name in ("__asof_side", "__asof_p"):
+        left = spark.createDataFrame([(10, 7)], f"t long, {name} int")
+        with pytest.raises(ValueError, match="reserved"):
+            asof_join(left, right, on="t")
+
+
+def test_asof_tolerance_without_sql_text_raises(spark):
+    left, right = _asof_frames(spark, 2)
+    with pytest.raises(ValueError, match="tolerance"):
+        asof_join(left, right, on="t", by=["k"], tolerance=F.col("missing"))
+
+
+def test_asof_keyed_plan_one_exchange_one_window(spark):
+    left, right = _asof_frames(spark, 2)
+    out = asof_join(left, right, on="t", by=["k"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange ") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(k#\d+", plan), plan
+    assert plan.count("Window [") == 1, plan
+    assert [tuple(r) for r in out.collect()] == [(1, 10, 0, 1, "z")]

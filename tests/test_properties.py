@@ -129,7 +129,7 @@ def test_run_ids_match_sequential_model(spark, keys):
     )
 )
 def test_star_components_match_union_find(spark, edges):
-    from graphique_spark.llm.dedup import connected_components
+    from graphique_spark.llm.dedup import _star_components, _undirected_edges
 
     edges = [(a, b) for a, b in edges if a != b]
     # ground truth: sequential union-find with min-label roots
@@ -157,7 +157,7 @@ def test_star_components_match_union_find(spark, edges):
         pairs = pairs.limit(0)
     got = {
         r["v"]: r["component"]
-        for r in connected_components(pairs, method="star").collect()
+        for r in _star_components(_undirected_edges(pairs, "id_a", "id_b"), 50).collect()
     }
     assert got == expect
 

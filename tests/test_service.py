@@ -144,6 +144,34 @@ def test_sql_denied_and_allowed(tables):
     assert data["sql"]["count"] == 5
 
 
+def test_concurrent_sql_requests_read_their_own_table(spark):
+    """``self`` names each request's own root even when requests over
+    different roots run at once, and no ``self`` view outlives a request."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from graphique_spark.service import GraphQLService
+
+    services = [
+        (GraphQLService(spark.range(n), allow_sql=True), n) for n in (10, 1000)
+    ]
+    doc = '{ sql(query: "SELECT id FROM self") { count } }'
+
+    def ask(i):
+        svc, n = services[i % 2]
+        return svc.execute(doc)["sql"]["count"], n
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:  # more threads than cores
+            answers = list(pool.map(ask, range(64), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert [a for a in answers if a[0] != a[1]] == []
+    assert not spark.catalog.tableExists("self")
+
+
 def test_conflicting_expression_inputs(service):
     from graphique_spark.service import GraphQLError
 

@@ -550,11 +550,11 @@ def test_internal_attr_token_inside_string_literal(spark):
 
 
 def test_asof_range_strategy_month_tolerance_renders_matching_bound(spark):
-    """strategy='range' bounds candidates on the right side
-    (r.on >= l.on - tol); calendar-month arithmetic makes that asymmetric
-    with the union bound (l.on <= r.on + tol). The rendered SQL must use
-    the RECORDED strategy's bound (review r12: it silently rendered the
-    union bound, dropping matches)."""
+    """A calendar-month tolerance bounds on the left side
+    (l.on <= r.on + tol), which is not the same as r.on >= l.on - tol for
+    month arithmetic: 2023-02-28 + 1 month is 2023-03-28, before
+    2023-03-30, so the match is voided. The rendered SQL must reproduce
+    the executed bound."""
     import datetime as dt
 
     from graphique_spark.sources import roots
@@ -568,21 +568,11 @@ def test_asof_range_strategy_month_tolerance_renders_matching_bound(spark):
     pair = roots({"t_rng_l": left, "t_rng_r": right})
     left.createOrReplaceTempView("t_rng_l")
     right.createOrReplaceTempView("t_rng_r")
-    for strategy in ("range", "union"):
-        ds = pair["t_rng_l"].asof_join(
-            pair["t_rng_r"], on="t", right_on="rt", by=["k"],
-            tolerance="INTERVAL 1 MONTH", strategy=strategy,
-        )
-        sql = ds.to_sql()
-        assert sql.startswith("SELECT"), f"fallback for {strategy}:\n{sql}"
-        assert _rows(spark.sql(sql)) == _rows(ds.df), strategy
-    # the two strategies genuinely disagree here — range matches, union nulls
-    match = pair["t_rng_l"].asof_join(
+    ds = pair["t_rng_l"].asof_join(
         pair["t_rng_r"], on="t", right_on="rt", by=["k"],
-        tolerance="INTERVAL 1 MONTH", strategy="range",
-    ).df.collect()
-    miss = pair["t_rng_l"].asof_join(
-        pair["t_rng_r"], on="t", right_on="rt", by=["k"],
-        tolerance="INTERVAL 1 MONTH", strategy="union",
-    ).df.collect()
-    assert match[0]["payload"] == 42.0 and miss[0]["payload"] is None
+        tolerance="INTERVAL 1 MONTH",
+    )
+    sql = ds.to_sql()
+    assert sql.startswith("SELECT"), f"fallback:\n{sql}"
+    assert _rows(spark.sql(sql)) == _rows(ds.df)
+    assert ds.df.collect()[0]["payload"] is None

@@ -204,12 +204,14 @@ def main() -> None:
 
     def components(mult):
         from graphique_spark.llm import dedup
+        from graphique_spark.session import materialize
 
         docs = docs_distinct(mult)
         pairs = dedup.minhash_candidates(docs, num_hashes=16, bands=4, min_jaccard=0.7)
-        # explicit method: the probe measures the DISTRIBUTED path, not the
-        # small-graph union-find fast path the auto default would take
-        return dedup.connected_components(pairs, method="label")
+        # label propagation directly: the probe measures the DISTRIBUTED
+        # path, not the small-graph union-find the auto selection would take
+        edges = materialize(dedup._undirected_edges(pairs, "id_a", "id_b"))
+        return dedup._label_components(edges, 50)
 
     def segments(mult):
         from graphique_spark.llm import dedup
@@ -310,12 +312,15 @@ def main() -> None:
     def star_cc_chain(mult):
         # deep-chain CC: rounds must stay O(log n), not O(n)
         from graphique_spark.llm import dedup
+        from graphique_spark.session import materialize
 
         n = 2000 * mult
         edges = spark.range(n - 1).select(
             F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
         )
-        return dedup.connected_components(edges, method="star", max_iterations=24)
+        return dedup._star_components(
+            materialize(dedup._undirected_edges(edges, "id_a", "id_b")), 24
+        )
 
     def substring(mult):
         from graphique_spark.llm import dedup
