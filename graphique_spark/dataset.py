@@ -11,7 +11,6 @@ the *semantics* declaratively.
 
 from __future__ import annotations
 
-import threading
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -22,8 +21,7 @@ from graphique_spark.operators.asof import asof_join
 from graphique_spark.operators.sequence import with_row_index, with_run_ids
 from graphique_spark.operators.topk import rank_filter, sort_keys, top_k
 from graphique_spark.session import local_frame
-
-_SQL_VIEW_LOCK = threading.Lock()
+from graphique_spark.sqlrender import run_sql, with_alias
 
 
 class Dataset:
@@ -742,39 +740,12 @@ class Dataset:
     # -- SQL escape hatch (reference interface.py:523-535; gated by caller) -----------
 
     def sql(self, query: str, alias: str = "self") -> "Dataset":
-        # a temp view name is session-wide: register, analyze and drop it
-        # under one lock so concurrent requests never read each other's
-        # table (classic spark.sql analyzes eagerly, so the frame stays
-        # valid once the view is gone)
-        spark = self.df.sparkSession
-        with _SQL_VIEW_LOCK:
-            self.df.createOrReplaceTempView(alias)
-            try:
-                out = spark.sql(query)
-            finally:
-                spark.catalog.dropTempView(alias)
+        # ``alias`` is a CTE over this frame, bound per call: no session-wide
+        # view name that concurrent requests could overwrite
+        out = run_sql(
+            self.df.sparkSession,
+            lambda text: with_alias(alias, text, query),
+            frame=self.df,
+        )
         op = ("sql", self.df, {"query": query, "alias": alias})
         return self._wrap(out, op)
-
-    # -- data-engineering conveniences (beyond the reference surface) -----------------
-
-    def checksum(self, by: Sequence[str] = ()) -> "Dataset":
-        """Order-insensitive content checksum per group — see
-        ``sources.table_checksum`` (the manifest/integrity primitive)."""
-        from graphique_spark.sources import table_checksum
-
-        return self._wrap(table_checksum(self.df, by))
-
-    def validate(self, rules) -> "Dataset":
-        """Evaluate declarative data-quality rules — see
-        ``operators.quality.validate`` (one scan for row-local rules)."""
-        from graphique_spark.operators.quality import validate
-
-        return self._wrap(validate(self.df, rules))
-
-    def skew_report(self, keys: Sequence[str], top: int = 10) -> "Dataset":
-        """Key-distribution diagnostic before a join/agg on ``keys`` — see
-        ``operators.skew.skew_report``."""
-        from graphique_spark.operators.skew import skew_report
-
-        return self._wrap(skew_report(self.df, keys, top))

@@ -841,23 +841,3 @@ def _label_type(labels: list) -> T.DataType:
         small = all(-(2**31) <= c < 2**31 for c in labels)
         return T.IntegerType() if small else T.LongType()
     return T.DoubleType()
-
-
-def cluster_balanced_sample(
-    df: DataFrame,
-    per_cluster: int,
-    num_clusters: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Up to ``per_cluster`` rows from each embedding cluster, chosen
-    deterministically by id hash — the diversity-preserving subset
-    selection pattern (uniform sampling over-represents dense regions).
-    Per-group top-k via window rank over the (bounded) cluster key."""
-    assigned = assign_clusters(df, num_clusters, vec_col, id_col)
-    w = Window.partitionBy("cluster").orderBy(hash60(F.col(id_col)), F.col(id_col))
-    return (
-        assigned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= per_cluster)
-        .drop("__rn")
-    )

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphique_spark.session import local_frame, materialize
-from graphique_spark.sqlrender import Unrenderable, expr_sql, quote, subquery
+from graphique_spark.sqlrender import Unrenderable, expr_sql, quote, run_sql, subquery
 
 _SIDE = "__asof_side"
 _P = "__asof_p"
@@ -85,6 +85,16 @@ class AsofSql:
         if clash:
             raise ValueError(f"asof join: column names {sorted(clash)} are reserved")
         rschema = right.schema
+        # the union widens a left `on` or key column to a wider right type
+        # (int against bigint comes back bigint); finish casts it back,
+        # losslessly, since only left rows leave the join
+        lschema = left.schema
+        self.casts = {}
+        for c, rc in [(self.on, self.right_on), *zip(self.by, self.right_by)]:
+            if c in lschema.names and rc in rschema.names:
+                ltype = lschema[c].dataType.simpleString()
+                if ltype != rschema[rc].dataType.simpleString():
+                    self.casts[c] = ltype
         self.payload = [
             c for c in right.columns if c not in self.right_by and c != self.right_on
         ]
@@ -182,7 +192,10 @@ class AsofSql:
             else:
                 within = f"{_T} <= {on} + ({self.tolerance})"
             payload = f"(CASE WHEN {_T} IS NOT NULL AND {within} THEN {_P} END)"
-        items = [quote(c) for c in self.left_columns] + [
+        items = [
+            f"CAST({quote(c)} AS {self.casts[c]}) AS {quote(c)}" if c in self.casts else quote(c)
+            for c in self.left_columns
+        ] + [
             f"{payload}.{quote(c)} AS {quote(self.renames[c])}" for c in self.payload
         ]
         return (
@@ -193,19 +206,6 @@ class AsofSql:
 
     def sql(self, ltext: str, rtext: str) -> str:
         return self.finish(self.fill(self.union(ltext, rtext)))
-
-
-def _run_sql(spark, build, **frames: DataFrame) -> DataFrame:
-    """``spark.sql`` over the text ``build`` returns, with ``frames`` as its
-    inputs: ``build`` gets one input text per frame (the ``{name}``
-    parameter), and every other brace in its text (quoted names, tolerance
-    literals) is escaped for the formatter."""
-    marks = {name: f"\0{name}\0" for name in frames}
-    text = build(*(f"SELECT * FROM {m}" for m in marks.values()))
-    text = text.replace("{", "{{").replace("}", "}}")
-    for name, mark in marks.items():
-        text = text.replace(mark, "{" + name + "}")
-    return spark.sql(text, **frames)
 
 
 def asof_join(
@@ -229,10 +229,10 @@ def asof_join(
     spec = AsofSql(left, right, on, right_on, by, right_by, tolerance, direction, suffix)
     spark = left.sparkSession
     if spec.by:
-        return _run_sql(spark, spec.sql, left=left, right=right)
-    unioned = _run_sql(spark, spec.union, left=left, right=right)
+        return run_sql(spark, spec.sql, left=left, right=right)
+    unioned = run_sql(spark, spec.union, left=left, right=right)
     filled = _global_last_fill(unioned, spec.order_columns())
-    return _run_sql(spark, spec.finish, filled=filled)
+    return run_sql(spark, spec.finish, filled=filled)
 
 
 def _global_last_fill(unioned: DataFrame, order: list[Column]) -> DataFrame:

@@ -82,34 +82,3 @@ def kll_merge_quantiles(
             F.kll_sketch_get_quantile_double("sketch", F.lit(float(p))),
         )
     return out
-
-
-def theta_sketches(
-    df: DataFrame, col: str, by: Sequence[str] = (), lgk: int = 12
-) -> DataFrame:
-    """Per-group Theta sketch + estimate for ``col``. Unlike HLL, Theta
-    sketches support full set algebra: union, INTERSECTION, and difference
-    of distinct sets across groups — "users active in both week A and
-    week B" from per-week sketches, no rescan of either week."""
-    grouped = df.groupBy(*by) if by else df.groupBy()
-    out = grouped.agg(F.theta_sketch_agg(F.col(col), F.lit(lgk)).alias("sketch"))
-    return out.withColumn("estimate", F.theta_sketch_estimate("sketch"))
-
-
-def theta_overlap(sketches: DataFrame, by: Sequence[str] = ()) -> DataFrame:
-    """Distinct-set overlap profile across ALL sketch rows (optionally
-    re-grouped by ``by``): union, intersection, and the overlap
-    (Jaccard-style) ratio — pure sketch algebra, no base-data access."""
-    grouped = sketches.groupBy(*by) if by else sketches.groupBy()
-    merged = grouped.agg(
-        F.theta_union_agg("sketch").alias("u"),
-        F.theta_intersection_agg("sketch").alias("i"),
-    )
-    return merged.select(
-        *by,
-        F.theta_sketch_estimate("u").alias("union_estimate"),
-        F.theta_sketch_estimate("i").alias("intersection_estimate"),
-        (
-            F.theta_sketch_estimate("i") / F.theta_sketch_estimate("u")
-        ).alias("overlap_ratio"),
-    )

@@ -271,109 +271,6 @@ def write_partitioned(
     out.write.partitionBy(*keys).mode(mode).parquet(dest)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: Sequence[str],
-    buckets: int = 32,
-    sort_by: Sequence[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed catalog table (hash-partitioned files by ``keys``): joins
-    and aggregations on the bucket keys between co-bucketed tables skip
-    the shuffle entirely — the pre-partitioning IS the exchange, paid once
-    at write time. The 100 TB pattern for repeatedly-joined fact tables
-    (e.g. lineitem ⋈ orders on orderkey every day).
-
-    ``sort_by`` additionally sorts within buckets, upgrading sort-merge
-    joins to skip the sort too."""
-    writer = df.write.format("parquet").mode(mode).bucketBy(buckets, *keys)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table)
-
-
-def zorder_value(columns: Sequence, mins: Sequence, maxs: Sequence, bits: int = 12):
-    """Z-order (Morton) key: min/max-normalize each column to ``bits`` bits
-    and interleave them — pure bitwise expressions, JVM-side."""
-    from pyspark.sql import functions as F
-
-    n = len(columns)
-    scale = (1 << bits) - 1
-    z = F.lit(0).cast("long")
-    for i, col in enumerate(columns):
-        lo, hi = float(mins[i]), float(maxs[i])
-        span = (hi - lo) or 1.0
-        scaled = F.least(
-            F.lit(scale),
-            ((col.cast("double") - F.lit(lo)) / F.lit(span) * scale).cast("long"),
-        )
-        for b in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(scaled, b).bitwiseAND(F.lit(1)), b * n + i
-                )
-            )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    dest: str,
-    columns: Sequence[str],
-    bits: int = 12,
-    partitions: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet: rows are range-partitioned and sorted by
-    the interleaved Morton key, so every file's min/max footer stats form a
-    tight box in ALL ``columns`` — multi-column predicates prune files/row
-    groups, where a single-column sort only helps its leading column. The
-    table-format-free version of Delta/Iceberg Z-ordering; at 100 TB this
-    is the difference between scanning a stripe and scanning everything
-    for point-in-box queries.
-
-    Column min/max are collected once (2 scalars per column, metadata-
-    cheap for parquet sources) to normalize the key."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def numeric(c):
-        # Morton normalization needs a float(min)/float(max) — convert
-        # temporal/boolean columns; reject types with no linear order
-        dt = df.schema[c].dataType
-        if isinstance(dt, T.DateType):
-            return F.unix_date(F.col(c))
-        if isinstance(dt, T.TimestampType | T.TimestampNTZType):
-            return F.unix_micros(F.col(c).cast("timestamp"))
-        if isinstance(dt, T.BooleanType):
-            return F.col(c).cast("int")
-        if isinstance(dt, T.NumericType):
-            return F.col(c)
-        raise ValueError(
-            f"z-order column {c!r} has non-linear type {dt.simpleString()}; "
-            "cast it to a numeric or temporal type first"
-        )
-
-    cols = [numeric(c) for c in columns]
-    stats = df.agg(
-        *[F.min(c).alias(f"__lo{i}") for i, c in enumerate(cols)],
-        *[F.max(c).alias(f"__hi{i}") for i, c in enumerate(cols)],
-    ).first()
-    mins = [stats[f"__lo{i}"] for i in range(len(cols))]
-    maxs = [stats[f"__hi{i}"] for i in range(len(cols))]
-    if any(v is None for v in mins + maxs):
-        # empty frame or an all-null z-column: no stats to normalize by —
-        # write unclustered instead of float(None) crashing
-        df.write.mode(mode).parquet(dest)
-        return
-    z = zorder_value(cols, mins, maxs, bits)
-    out = df.repartitionByRange(
-        partitions or df.sparkSession.sparkContext.defaultParallelism, z
-    ).sortWithinPartitions(z)
-    out.write.mode(mode).parquet(dest)
-
-
 def _list_files(spark: SparkSession, root: str):
     """Driver-side recursive file listing via the Hadoop FS API —
     metadata only (namenode RPCs), no data pages. Returns
@@ -605,40 +502,6 @@ def write_with_manifest(
     # from corruption — every pre-change manifest would read as "tampered".
     from pyspark.sql import functions as F
 
-    manifest = manifest.withColumn(
-        "format_version", F.lit(MANIFEST_FORMAT_VERSION)
-    )
-    manifest.write.mode("overwrite").parquet(f"{dest}/_manifest")
-
-
-def rewrite_manifest(
-    spark: SparkSession, dest: str, partition_by: str | None = None
-) -> None:
-    """Migrate a dataset's ``_manifest`` to the current format WITHOUT
-    re-writing the data files: recompute counts + checksums from the bytes
-    on disk and stamp :data:`MANIFEST_FORMAT_VERSION`. This is the
-    operator's path out of :func:`verify_manifest`'s cross-version refusal
-    (a pre-versioned or old-algorithm manifest) when the data itself is
-    intact — at 100 TB, re-writing data to refresh a metadata artifact is
-    not an option (ADVICE r08).
-
-    Note this TRUSTS the current files: any corruption present at rewrite
-    time is baked into the new checksums. Run the old-format verifier (or
-    an external audit) first if the data's integrity is itself in doubt.
-    """
-    from pyspark.errors import AnalysisException
-
-    from pyspark.sql import functions as F
-
-    try:
-        current = spark.read.parquet(dest)
-    except AnalysisException as exc:
-        raise ValueError(
-            f"{dest} has no readable data files to recompute a manifest "
-            "from (empty partitioned writes carry their schema only at "
-            "write time). Re-create it with write_with_manifest."
-        ) from exc
-    manifest = table_checksum(current, [partition_by] if partition_by else [])
     manifest = manifest.withColumn(
         "format_version", F.lit(MANIFEST_FORMAT_VERSION)
     )

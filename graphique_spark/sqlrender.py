@@ -286,6 +286,28 @@ def subquery(text: str, alias: str) -> str:
     return f"(\n{indented}\n) AS {alias}"
 
 
+def with_alias(alias: str, text: str, query: str) -> str:
+    """``query`` over ``text`` bound to the name ``alias`` (``sql(query:)``
+    execution and rendering both use this). The query sits parenthesized
+    on its own lines, so it may open with its own ``WITH`` and a trailing
+    ``--`` comment cannot swallow the closing parenthesis."""
+    query = query.rstrip().rstrip(";")
+    return f"WITH {quote(alias)} AS (\n{text}\n)\n(\n{query}\n)"
+
+
+def run_sql(spark, build, **frames: DataFrame) -> DataFrame:
+    """``spark.sql`` over the text ``build`` returns, with ``frames`` as its
+    inputs: ``build`` gets one input text per frame (the ``{name}``
+    parameter, bound to a per-call view name), and every other brace in
+    its text (quoted names, literals) is escaped for the formatter."""
+    marks = {name: f"\0{name}\0" for name in frames}
+    text = build(*(f"SELECT * FROM {m}" for m in marks.values()))
+    text = text.replace("{", "{{").replace("}", "}}")
+    for name, mark in marks.items():
+        text = text.replace(mark, "{" + name + "}")
+    return spark.sql(text, **frames)
+
+
 class _Block:
     """One SELECT block being assembled; operators fold into free clause
     slots when SQL evaluation order matches the operator order, otherwise
@@ -620,7 +642,7 @@ class _Renderer:
         return block
 
     def op_sql(self, block, df, query: str, alias: str):
-        return _Block(self._sub(f"WITH {quote(alias)} AS (\n{block.render()}\n)\n{query}"))
+        return _Block(self._sub(with_alias(alias, block.render(), query)))
 
     # -- multi-table ---------------------------------------------------------
 

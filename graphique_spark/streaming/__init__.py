@@ -5,45 +5,18 @@ from-scratch extension. Design: every transformation here is written
 against a plain DataFrame so the *same function* works in batch mode (for
 testing/backfill) and on a ``readStream`` source — the Structured
 Streaming model's core property. Event-time semantics come from
-``withWatermark`` + ``window()``/``session_window()``; custom state uses
-``applyInPandasWithState``.
+``withWatermark`` + ``window()``/``session_window()``.
 
 At scale: watermarks bound state size; tumbling/session aggregations
-shuffle once on (key, window); state stores are RocksDB-backed on real
-clusters.
+shuffle once on (key, window).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphique_spark.session import local_frame, materialize
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def rocksdb_state_conf(changelog_checkpointing: bool = True) -> dict[str, str]:
-    """Session conf for the RocksDB state store — the bounded-memory store
-    a 100 TB streaming job needs (the default HDFS-backed provider keeps
-    every key in executor heap; RocksDB spills to local disk and, with
-    changelog checkpointing, uploads per-batch deltas instead of full
-    snapshots). Apply before starting queries::
-
-        for k, v in rocksdb_state_conf().items(): spark.conf.set(k, v)
-
-    Verified working against this Spark build in
-    tests/test_streaming.py (batch/stream parity under the provider)."""
-    # the flag is authoritative both ways: omitting the key on False
-    # would leave a previously-set "true" in session conf
-    return {
-        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
-            "true" if changelog_checkpointing else "false",
-    }
+from graphique_spark.session import materialize
 
 
 def _duration_ms(spec: str) -> int:
@@ -245,103 +218,6 @@ def windowed_rollup(
     )
 
 
-def stream_dedup(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    ts: str = "ts",
-    watermark: str = "2 hours",
-    streaming: bool = False,
-) -> DataFrame:
-    """Ingest-time exact dedup for at-least-once sources (the first stage
-    of any streaming training-data pipeline). In streaming mode uses
-    ``dropDuplicatesWithinWatermark`` so the dedup state store is bounded
-    by the watermark instead of growing forever; batch mode is a plain
-    ``dropDuplicates`` for backfills."""
-    keys = list(keys or ["event_id"])
-    if streaming:
-        return df.withWatermark(ts, watermark).dropDuplicatesWithinWatermark(keys)
-    return df.dropDuplicates(keys)
-
-
-def stateful_user_totals(
-    df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    value: str = "value",
-    watermark: str = "2 hours",
-    idle_timeout: str = "24 hours",
-):
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    per-key running event count and value sum carried in the state store
-    across micro-batches (RocksDB-backed on a real cluster), emitted in
-    update mode each batch. Keys that stop arriving are EVICTED
-    once the event-time watermark passes their last activity plus
-    ``idle_timeout`` — with applyInPandasWithState the watermark alone
-    never cleans state (that takes EventTimeTimeout + an explicit
-    remove), and an unbounded anonymous-id stream would otherwise grow
-    the state store forever.
-
-    Arrow-batched (pandas) on the state path only — the one place custom
-    state genuinely needs Python; everything else in this module is
-    built-in windowed aggregation.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    idle_ms = _duration_ms(idle_timeout)
-    # derive the key's type from the frame — hardcoding `long` makes the
-    # Arrow conversion throw on the first micro-batch for string user ids
-    key_type = df.schema[key].dataType.simpleString()
-    out_schema = (
-        f"{key} {key_type}, events_total long, value_total double, batches long"
-    )
-    state_schema = "total long, vsum double, batches long"
-
-    def update(keys, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            # idle horizon passed: drop the key's state, emit nothing
-            state.remove()
-            return
-        total, vsum, batches = state.get if state.exists else (0, 0.0, 0)
-        ts_max_ms = 0
-        for pdf in pdf_iter:
-            total += len(pdf)
-            vsum += float(pdf[value].fillna(0.0).sum())
-            if len(pdf):
-                # event times arrive as session-tz-naive pandas timestamps;
-                # the session runs UTC, so .value is UTC epoch nanos —
-                # comparable with getCurrentWatermarkMs
-                m = pd.to_datetime(pdf[ts]).max()
-                ts_max_ms = max(ts_max_ms, int(m.value // 1_000_000))
-        batches += 1
-        state.update((total, vsum, batches))
-        # anchor the idle horizon at LAST ACTIVITY, not the watermark: in
-        # early batches getCurrentWatermarkMs() is still 0 (epoch 1970), so
-        # wm + idle would evict first-batch keys the moment the real
-        # watermark initializes, silently resetting their running totals
-        state.setTimeoutTimestamp(
-            max(state.getCurrentWatermarkMs(), ts_max_ms) + idle_ms
-        )
-        yield pd.DataFrame(
-            {
-                key: [keys[0]],
-                "events_total": [total],
-                "value_total": [vsum],
-                "batches": [batches],
-            }
-        )
-
-    return (
-        df.withWatermark(ts, watermark)
-        .groupBy(key)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 def interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -388,117 +264,6 @@ def interval_join(
         & (F.col(f"{prefix}{right_ts}") <= F.col(left_ts) + F.expr(f"INTERVAL {upper}"))
     )
     return l.join(r, cond, how)
-
-
-def incremental_dedup_sink(
-    docs: DataFrame,
-    index_dest: str,
-    dups_dest: str,
-    checkpoint: str,
-    text: str = "text",
-    id_col: str = "doc_id",
-    min_jaccard: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    trigger_seconds: int = 60,
-    available_now: bool = False,
-):
-    """Streaming fuzzy-dedup against a growing MinHash index — the
-    100 TB ingest topology: each micro-batch of documents is (1) checked
-    against the persisted index of everything seen before
-    (``incremental_minhash_dedup`` — batch side broadcasts, index side
-    never shuffles), with near-dup pairs appended to ``dups_dest``; then
-    (2) its own signature rows are appended to ``index_dest``, so the next
-    batch sees it as history. The historical corpus is never re-shingled.
-
-    Idempotence: both outputs are hive-partitioned by ``batch_id`` with
-    per-write dynamic overwrite, so a retried batch replaces exactly its
-    own partition instead of double-appending; the dedup reads only
-    strictly-earlier batch partitions, so a retry never matches a doc
-    against its own half-written index rows.
-
-    Scope: pairs are CROSS-batch (new vs history). Within-batch near-dups
-    are one ``minhash_candidates`` call over the (small) batch if needed.
-    """
-    from graphique_spark.llm import dedup as _dedup
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # materialized: the dedup probe and the index append both read the
-        # batch's index rows (shingling is the dominant per-batch cost —
-        # computing it twice doubled the ingest CPU)
-        idx_rows = materialize(
-            _dedup.minhash_index(
-                batch, text=text, id_col=id_col, num_hashes=num_hashes, bands=bands
-            )
-        )
-        existing = read_parquet_if_exists(spark, index_dest)
-        if existing is not None:
-            # strictly-earlier batches only: a RETRIED batch may have
-            # already written its own index partition, and matching a
-            # doc against itself would fabricate jaccard=1.0 dups.
-            # batch_id is the hive partition key, so this prunes files.
-            history = existing.filter(F.col("batch_id") < batch_id).select(
-                "id", "hs", "band_keys"
-            )
-            dups = _dedup.incremental_minhash_dedup(
-                batch, history,
-                text=text, id_col=id_col, num_hashes=num_hashes,
-                bands=bands, min_jaccard=min_jaccard,
-                new_index=idx_rows,
-            )
-        else:
-            dups = local_frame(
-                spark, [], "new_id long, index_id long, jaccard double"
-            )
-        (
-            dups.withColumn("batch_id", F.lit(batch_id))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(dups_dest)
-        )
-        (
-            idx_rows.withColumn("batch_id", F.lit(batch_id))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(index_dest)
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def write_stream_to_parquet(
-    df: DataFrame,
-    dest: str,
-    checkpoint: str,
-    trigger_seconds: int = 60,
-    available_now: bool = False,
-):
-    """Standard sink: exactly-once parquet append with checkpointing.
-    ``available_now=True`` drains everything currently available in
-    bounded micro-batches and stops — the backfill/catch-up trigger."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", dest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def upsert_sink(
@@ -742,30 +507,3 @@ def cdc_sink(
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
-
-
-def windowed_distinct(
-    df: DataFrame,
-    key: str,
-    ts: str = "ts",
-    duration: str = "1 hour",
-    watermark: str = "2 hours",
-    lgk: int = 12,
-    streaming: bool = False,
-) -> DataFrame:
-    """Distinct-``key`` count per tumbling window via HLL sketches — the
-    streaming-legal form of windowed COUNT(DISTINCT) (exact distinct is
-    unsupported in streaming aggregations; a sketch is also what you want
-    in batch at 100 TB: mergeable partials, bounded state). Returns
-    (window_start, n_events, distinct_est). Identical logic batch/stream;
-    pass ``streaming=True`` on a readStream frame to attach the watermark.
-    Estimates are ±~2% at lgk=12 — asserted in tests, not oracles."""
-    if streaming:
-        df = df.withWatermark(ts, watermark)
-    out = df.groupBy(F.window(F.col(ts), duration).alias("win")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.hll_sketch_estimate(
-            F.hll_sketch_agg(F.col(key), F.lit(lgk))
-        ).cast("long").alias("distinct_est"),
-    )
-    return out.select(F.col("win.start").alias("window_start"), "n_events", "distinct_est")

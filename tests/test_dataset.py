@@ -399,84 +399,6 @@ def test_read_jdbc_end_to_end_derby(spark, tmp_path):
     assert filtered.df.count() == 2
 
 
-def test_bucketed_join_skips_shuffle(spark, tables, tmp_path_factory):
-    # co-bucketed fact tables join without any Exchange: the write-time
-    # hash partitioning replaces the shuffle. Broadcast is disabled so the
-    # planner actually exercises the bucket-aware sort-merge path (at real
-    # fact-x-fact scale neither side would broadcast).
-    from graphique_spark import sources
-
-    orders = tables["orders"].df.select("o_orderkey", "o_orderdate")
-    li = tables["lineitem"].df.select("l_orderkey", "l_quantity")
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        for name in ["b_orders", "b_lineitem"]:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-        sources.write_bucketed(orders, "b_orders", ["o_orderkey"], buckets=8,
-                               sort_by=["o_orderkey"])
-        sources.write_bucketed(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "b_lineitem", ["o_orderkey"], buckets=8, sort_by=["o_orderkey"],
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("b_orders").join(spark.table("b_lineitem"), on="o_orderkey")
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        for name in ["b_orders", "b_lineitem"]:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def test_zorder_layout_tightens_file_stats(spark, tables, tmp_path):
-    # z-ordered files must have tight min/max boxes in BOTH dimensions;
-    # a single-column sort leaves the second column spanning ~full range
-    import pyarrow.parquet as pq
-    import os
-
-    from graphique_spark import sources
-
-    li = tables["lineitem"].df.select("l_orderkey", "l_partkey")
-    zdir, sdir = str(tmp_path / "z"), str(tmp_path / "s")
-    sources.write_zordered(li, zdir, ["l_orderkey", "l_partkey"], partitions=16)
-    li.repartitionByRange(16, "l_orderkey").sortWithinPartitions(
-        "l_orderkey"
-    ).write.parquet(sdir)
-
-    def mean_span(root, col):
-        spans, full_lo, full_hi = [], None, None
-        for f in os.listdir(root):
-            if not f.endswith(".parquet"):
-                continue
-            meta = pq.ParquetFile(os.path.join(root, f)).metadata
-            for rg in range(meta.num_row_groups):
-                cols = {
-                    meta.row_group(rg).column(i).path_in_schema:
-                    meta.row_group(rg).column(i).statistics
-                    for i in range(meta.row_group(rg).num_columns)
-                }
-                st = cols[col]
-                spans.append(st.max - st.min)
-                full_lo = st.min if full_lo is None else min(full_lo, st.min)
-                full_hi = st.max if full_hi is None else max(full_hi, st.max)
-        return (sum(spans) / len(spans)) / ((full_hi - full_lo) or 1)
-
-    # second dimension: z-order keeps per-row-group spans a fraction of the
-    # domain; single-column sort leaves them ~the whole domain
-    z_span = mean_span(zdir, "l_partkey")
-    s_span = mean_span(sdir, "l_partkey")
-    assert z_span < 0.5 < s_span
-    # and the first dimension stays clustered too (z-order trades a little
-    # leading-column locality for locality in every dimension)
-    assert mean_span(zdir, "l_orderkey") < 0.5
-    # layout preserves the data
-    assert spark.read.parquet(zdir).count() == li.count()
-
-
 def test_compact_parquet_flat_and_partitioned(spark, tables, tmp_path):
     from graphique_spark.sources import _list_files, compact_parquet
 
@@ -589,18 +511,6 @@ def test_manifest_describes_written_bytes_not_input_plan(spark, tmp_path):
     assert verify_manifest(spark, dest, partition_by="bucket").count() == 0
 
 
-def test_dataset_convenience_wrappers(tables):
-    from graphique_spark.operators.quality import Rule
-
-    nation = tables["nation"]
-    cs = nation.checksum(by=["n_regionkey"]).df.collect()
-    assert len(cs) == 5 and all(r["n_rows"] == 5 for r in cs)
-    rep = nation.validate([Rule("key_nn", "not_null", column="n_nationkey")]).df.collect()
-    assert rep[0]["violations"] == 0 and rep[0]["passed"]
-    sk = nation.skew_report(["n_regionkey"], top=2).df.collect()
-    assert len(sk) == 2 and all(abs(r["skew_ratio"] - 1.0) < 1e-9 for r in sk)
-
-
 def test_compact_parquet_splits_under_kv_named_ancestor_dir(spark, tmp_path):
     # an ancestor directory of src that itself looks like a partition
     # (ds=2024) must not inject phantom pairs into the split-map keys —
@@ -639,50 +549,6 @@ def test_write_with_manifest_empty_partitioned_frame(spark, tmp_path):
     assert verify_manifest(spark, dest, partition_by="bucket").count() == 0
 
 
-def test_rewrite_manifest_migrates_old_format_in_place(spark, tmp_path):
-    # ADVICE r08: verify_manifest's cross-version refusal is operationally
-    # one-way without a migration path that doesn't re-write the data
-    import pytest
-
-    from graphique_spark.sources import (
-        rewrite_manifest, verify_manifest, write_with_manifest,
-    )
-
-    dest = str(tmp_path / "migrate")
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 3).cast("int").alias("bucket")
-    )
-    write_with_manifest(df, dest, partition_by="bucket")
-    # simulate a pre-versioned manifest: strip the format_version column
-    # (materialize before the self-overwrite — a lazy read-then-overwrite
-    # of the same path deletes its own input files mid-job)
-    old = spark.read.parquet(f"{dest}/_manifest").drop("format_version")
-    rows, schema = old.collect(), old.schema
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-        f"{dest}/_manifest"
-    )
-    with pytest.raises(ValueError, match="format_version"):
-        verify_manifest(spark, dest, partition_by="bucket").count()
-    # migrate: recompute from the bytes on disk, no data re-write
-    import glob as _glob
-
-    files_before = sorted(_glob.glob(f"{dest}/bucket=*/*.parquet"))
-    rewrite_manifest(spark, dest, partition_by="bucket")
-    assert sorted(_glob.glob(f"{dest}/bucket=*/*.parquet")) == files_before
-    assert verify_manifest(spark, dest, partition_by="bucket").count() == 0
-
-
-def test_rewrite_manifest_no_data_files_raises(spark, tmp_path):
-    import pytest
-
-    from graphique_spark.sources import rewrite_manifest
-
-    dest = str(tmp_path / "nodata")
-    (tmp_path / "nodata").mkdir()
-    with pytest.raises(ValueError, match="no readable data files"):
-        rewrite_manifest(spark, dest)
-
-
 def test_verify_manifest_null_partition_intact(spark, tmp_path):
     from graphique_spark.sources import verify_manifest, write_with_manifest
 
@@ -711,15 +577,6 @@ def test_compact_parquet_reports_bytes_not_partition_count(spark, tmp_path):
     )
     # regression: 'bytes' was shadowed by the output partition count
     assert stats["bytes"] > 100_000
-
-
-def test_write_zordered_empty_frame(spark, tmp_path):
-    from graphique_spark.sources import write_zordered
-
-    df = spark.range(0).select(F.col("id").alias("x"), F.col("id").alias("y"))
-    dest = str(tmp_path / "zempty")
-    write_zordered(df, dest, ["x", "y"])
-    assert spark.read.parquet(dest).count() == 0
 
 
 def test_join_rkeys_self_join_with_overlap(tables):

@@ -3710,258 +3710,6 @@ def test_streaming_interval_join_parity(spark, lbatches, rbatches, long_wm):
 
 
 # ---------------------------------------------------------------------------
-# Streaming ingest-dedup parity (dropDuplicatesWithinWatermark): randomized
-# duplicate schedules across micro-batches vs a pure-Python state model.
-# Entries are drawn per (key, batch) with a duplicate count and all copies
-# identical, so WHICH copy survives is never ambiguous — only whether the
-# key emits in that batch. Semantics pinned by fuzzing (round 9):
-#   * watermark lags one batch (same as every stateful op fuzzed above)
-#   * late rows (ts < wm) are dropped entirely
-#   * first arrival of a key emits and stores expiry = ts + delay;
-#     while state lives, any further arrival of the key is dropped
-#   * expired state (expiry <= wm) leaves before the batch processes, so
-#     a re-arrival after the horizon emits again
-# ---------------------------------------------------------------------------
-
-_dedup_batches = st.lists(
-    st.dictionaries(
-        st.sampled_from(["a", "b", "c"]),
-        st.tuples(
-            st.integers(0, 10),           # 36-minute grid (see ts_of)
-            st.sampled_from([-1, 0, 1]),  # ms jitter at expiry boundaries
-            st.integers(1, 3),            # duplicate copies in this batch
-        ),
-        max_size=3,
-    ),
-    min_size=1,
-    max_size=4,
-)
-
-
-@settings(max_examples=10, deadline=None)
-@given(batches=_dedup_batches)
-def test_streaming_dedup_within_watermark_parity(spark, batches):
-    import collections
-    import datetime
-    import os
-    import shutil
-    import tempfile
-
-    from graphique_spark import streaming as stx
-
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    delay_ms = 3_600_000  # 1 hour
-
-    def ts_of(h, j):
-        # 36-minute grid over ~6h: spreads exceed 2x the delay, so state
-        # expiry + re-emission and late drops are genuinely reachable
-        return t0 + datetime.timedelta(minutes=h * 36, milliseconds=j)
-
-    def ms(dt):
-        return int((dt - t0).total_seconds() * 1000)
-
-    work = tempfile.mkdtemp(prefix="ddfuzz")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        seen = set()
-        for b, entries in enumerate(batches):
-            data = []
-            for k, (h, j, ndup) in sorted(entries.items()):
-                data.extend((k, ts_of(h, j), f"b{b}") for _ in range(ndup))
-            spark.createDataFrame(
-                data, "k string, ts timestamp, tag string"
-            ).coalesce(1).write.mode("append").parquet(src)
-            for fn in os.listdir(src):
-                if fn.endswith(".parquet") and fn not in seen:
-                    seen.add(fn)
-                    os.utime(os.path.join(src, fn), (1_000_000 + b, 1_000_000 + b))
-
-        stream = stx.read_event_stream(spark, src, schema="k string, ts timestamp, tag string")
-        deduped = stx.stream_dedup(stream, keys=["k"], watermark="1 hour", streaming=True)
-        name = f"dd_fuzz_{next(_stream_counter)}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(180), "streaming query did not drain"
-        finally:
-            if q.isActive:
-                q.stop()
-        got = collections.Counter(
-            (r["k"], ms(r["ts"]), r["tag"])
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        )
-        spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-    want: collections.Counter = collections.Counter()
-    state: dict = {}  # key -> expiry ms
-    max_hist: list[int] = []
-    for b, entries in enumerate(batches):
-        # SPARK-40925 two-version watermark (see stateful-totals fuzzer)
-        wm_late = max_hist[b - 2] - delay_ms if b >= 2 else None
-        wm_evict = max_hist[b - 1] - delay_ms if b >= 1 else None
-        batch_ms = []
-        for k, (h, j, ndup) in sorted(entries.items()):
-            t = ms(ts_of(h, j))
-            batch_ms.extend([t] * ndup)
-            if wm_late is not None and t < wm_late:
-                continue  # late
-            if k not in state:
-                state[k] = t + delay_ms
-                want[(k, t, f"b{b}")] += 1
-        if wm_evict is not None:
-            # state cleanup runs at batch END: an expired-but-not-yet-
-            # removed key still dedups arrivals within the same batch
-            for k in [k for k, exp in state.items() if exp <= wm_evict]:
-                del state[k]
-        if batch_ms or max_hist:
-            max_hist.append(max(batch_ms + ([max_hist[-1]] if max_hist else [])))
-        else:
-            max_hist.append(-10**15)  # empty first batch: no watermark signal
-
-    assert got == want, (batches, dict(got), dict(want))
-
-
-# ---------------------------------------------------------------------------
-# Custom stateful operator parity (applyInPandasWithState): randomized
-# schedules vs a state model of stateful_user_totals — running per-key
-# totals in update mode with EventTimeTimeout idle eviction anchored at
-# last activity (the round-9 fix: a watermark-anchored timeout evicted
-# first-batch keys the moment the watermark initialized). Pinned:
-#   * watermark lags one batch; late rows (ts < wm) are dropped
-#   * a key emits once per batch it has kept rows in, with cumulative
-#     totals and an invocation counter
-#   * idle timeout fires for keys with NO data whose
-#     max(wm_at_update, last_event) + idle < current wm — state is
-#     removed silently and a re-arrival restarts from zero
-# ---------------------------------------------------------------------------
-
-_stateful_batches = st.lists(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["a", "b"]),
-            st.integers(0, 10),           # 36-minute grid over ~6h
-            st.sampled_from([-1, 0, 1]),  # ms jitter at timeout boundaries
-        ),
-        min_size=0,
-        max_size=4,
-    ),
-    min_size=1,
-    max_size=4,
-)
-
-
-@settings(max_examples=10, deadline=None)
-@given(batches=_stateful_batches)
-def test_streaming_stateful_totals_parity(spark, batches):
-    import collections
-    import datetime
-    import os
-    import shutil
-    import tempfile
-
-    from graphique_spark import streaming as stx
-
-    t0 = datetime.datetime(2024, 1, 1)
-    delay_ms = 3_600_000       # watermark 1 hour
-    idle_ms = 2 * 3_600_000    # idle timeout 2 hours
-
-    def ts_of(h, j):
-        return t0 + datetime.timedelta(minutes=h * 36, milliseconds=j)
-
-    def ms(dt):
-        return int((dt - t0).total_seconds() * 1000)
-
-    work = tempfile.mkdtemp(prefix="stfuzz")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        seen = set()
-        for b, rows in enumerate(batches):
-            data = [(k, ts_of(h, j), float(h + 1)) for (k, h, j) in rows]
-            spark.createDataFrame(
-                data, "user_id string, ts timestamp, value double"
-            ).coalesce(1).write.mode("append").parquet(src)
-            for fn in os.listdir(src):
-                if fn.endswith(".parquet") and fn not in seen:
-                    seen.add(fn)
-                    os.utime(os.path.join(src, fn), (1_000_000 + b,) * 2)
-        stream = stx.read_event_stream(
-            spark, src, schema="user_id string, ts timestamp, value double"
-        )
-        totals = stx.stateful_user_totals(
-            stream, watermark="1 hour", idle_timeout="2 hours"
-        )
-        name = f"st_fuzz_{next(_stream_counter)}"
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(180), "streaming query did not drain"
-        finally:
-            if q.isActive:
-                q.stop()
-        got = collections.Counter(
-            (r["user_id"], r["events_total"], r["value_total"], r["batches"])
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        )
-        spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-    want: collections.Counter = collections.Counter()
-    state: dict = {}  # key -> [total, vsum, batches, timeout_ms]
-    max_hist: list[int] = []
-    NEG = -10**15  # "watermark not initialized": epoch 0 is ~-1.7e12 in
-    # t0-relative ms, far below every event — never floor at 0 here
-    for b, rows in enumerate(batches):
-        # SPARK-40925 two-version watermark: LATE filtering uses the
-        # previous batch's watermark (max through b-2), while EVICTION /
-        # timeout processing uses the updated one (max through b-1) —
-        # pinned by a schedule where an idle timeout fired during an
-        # empty middle batch the late-watermark said it couldn't
-        wm_late = max_hist[b - 2] - delay_ms if b >= 2 else NEG
-        wm_evict = max_hist[b - 1] - delay_ms if b >= 1 else NEG
-        batch_ms, bykey = [], {}
-        for k, h, j in rows:
-            t = ms(ts_of(h, j))
-            batch_ms.append(t)
-            if t < wm_late:
-                continue  # late
-            bykey.setdefault(k, []).append((t, float(h + 1)))
-        # idle timeouts fire for keys with NO data once wm passes the mark
-        for k in [k for k, s in state.items() if k not in bykey and s[3] < wm_evict]:
-            del state[k]
-        for k, kept in bykey.items():
-            total, vsum, nb, _ = state.get(k, (0, 0.0, 0, 0))
-            total += len(kept)
-            vsum += sum(v for _, v in kept)
-            nb += 1
-            timeout = max(wm_evict, max(t for t, _ in kept)) + idle_ms
-            state[k] = (total, vsum, nb, timeout)
-            want[(k, total, vsum, nb)] += 1
-        if batch_ms or max_hist:
-            max_hist.append(max(batch_ms + ([max_hist[-1]] if max_hist else [])))
-        else:
-            max_hist.append(NEG)
-
-    assert got == want, (batches, dict(got), dict(want))
-
-
-# ---------------------------------------------------------------------------
 # Chained stateful aggregations (windowed_rollup): randomized out-of-order /
 # late micro-batches through fine-window count/sum -> window_time() ->
 # coarse rollup (TWO stateful aggs in one append-mode streaming query,
@@ -4099,119 +3847,6 @@ def test_streaming_windowed_rollup_parity(spark, batches, grouped, with_value):
         ck: ((n, sv) if with_value else (n,)) for ck, (n, sv) in want.items()
     }
     assert got == want, (batches, grouped, with_value, got, want)
-
-
-# ---------------------------------------------------------------------------
-# Chained stateful operators, dedup -> windowed aggregation: ingest dedup
-# (dropDuplicatesWithinWatermark) feeding tumbling counts in ONE append-mode
-# streaming query, vs the two pinned models composed. The composition fact
-# that makes the oracle simple: a dedup survivor in batch b has
-# ts >= wm_late(b), so its tumbling window END (> ts) always survives the
-# downstream agg's late filter — the agg just counts dedup survivors, and
-# append emits windows whose end the final watermark passed. The watermark
-# is attached ONCE at the source (stream_dedup); tumbling_counts runs with
-# streaming=False so the inherited watermark is not re-declared.
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=10, deadline=None)
-@given(batches=_dedup_batches, grouped=st.booleans())
-def test_streaming_dedup_then_window_parity(spark, batches, grouped):
-    import collections
-    import datetime
-    import os
-    import shutil
-    import tempfile
-
-    from graphique_spark import streaming as stx
-
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    delay_ms = 3_600_000  # 1 hour
-    dur_ms = 3_600_000    # 1 hour tumbling
-
-    def ts_of(h, j):
-        return t0 + datetime.timedelta(minutes=h * 36, milliseconds=j)
-
-    def ms(dt):
-        return int((dt - t0).total_seconds() * 1000)
-
-    work = tempfile.mkdtemp(prefix="ddwfuzz")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        seen = set()
-        for b, entries in enumerate(batches):
-            data = []
-            for k, (h, j, ndup) in sorted(entries.items()):
-                data.extend((k, ts_of(h, j)) for _ in range(ndup))
-            spark.createDataFrame(
-                data, "k string, ts timestamp"
-            ).coalesce(1).write.mode("append").parquet(src)
-            for fn in os.listdir(src):
-                if fn.endswith(".parquet") and fn not in seen:
-                    seen.add(fn)
-                    os.utime(os.path.join(src, fn), (1_000_000 + b, 1_000_000 + b))
-
-        stream = stx.read_event_stream(spark, src, schema="k string, ts timestamp")
-        deduped = stx.stream_dedup(stream, keys=["k"], watermark="1 hour", streaming=True)
-        agg = stx.tumbling_counts(
-            deduped, duration="1 hour", by=["k"] if grouped else None, streaming=False
-        )
-        name = f"ddw_fuzz_{next(_stream_counter)}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(180), "streaming query did not drain"
-        finally:
-            if q.isActive:
-                q.stop()
-        got = {}
-        for r in spark.sql(f"SELECT * FROM {name}").collect():
-            key = (ms(r["window_start"]), r["k"] if grouped else None)
-            assert key not in got, f"append emitted {key} twice"
-            got[key] = r["n"]
-        spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-    # stage 1: the pinned dropDuplicatesWithinWatermark model
-    survivors: list[tuple[str, int]] = []
-    state: dict = {}
-    max_hist: list[int] = []
-    for b, entries in enumerate(batches):
-        wm_late = max_hist[b - 2] - delay_ms if b >= 2 else None
-        wm_evict = max_hist[b - 1] - delay_ms if b >= 1 else None
-        batch_ms = []
-        for k, (h, j, ndup) in sorted(entries.items()):
-            t = ms(ts_of(h, j))
-            batch_ms.extend([t] * ndup)
-            if wm_late is not None and t < wm_late:
-                continue
-            if k not in state:
-                state[k] = t + delay_ms
-                survivors.append((k, t))
-        if wm_evict is not None:
-            for k in [k for k, exp in state.items() if exp <= wm_evict]:
-                del state[k]
-        if batch_ms or max_hist:
-            max_hist.append(max(batch_ms + ([max_hist[-1]] if max_hist else [])))
-        else:
-            max_hist.append(-10**15)
-    final_wm = max_hist[-1] - delay_ms
-
-    # stage 2: tumbling counts over survivors; append emits finalized windows
-    want: collections.Counter = collections.Counter()
-    for k, t in survivors:
-        ws = (t // dur_ms) * dur_ms
-        if ws + dur_ms <= final_wm:
-            want[(ws, k if grouped else None)] += 1
-    assert got == dict(want), (batches, grouped, got, dict(want))
 
 
 # ---------------------------------------------------------------------------

@@ -608,36 +608,6 @@ def test_kll_quantile_sketches_accuracy_and_merge(tables):
     assert merged["q50"] == pytest.approx(global_p50[0] if isinstance(global_p50, list) else global_p50, rel=0.05)
 
 
-def test_cluster_balanced_sample_caps_each_cluster(tables):
-    emb = tables["embeddings"].df
-    sampled = similarity.cluster_balanced_sample(emb, per_cluster=5, num_clusters=4)
-    sizes = {
-        r["cluster"]: r["n"]
-        for r in sampled.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert all(n <= 5 for n in sizes.values())
-    assert len(sizes) >= 2  # multiple clusters actually represented
-    # deterministic: same call returns the same ids
-    a = {r["vec_id"] for r in sampled.collect()}
-    b = {r["vec_id"] for r in similarity.cluster_balanced_sample(emb, 5, 4).collect()}
-    assert a == b
-
-
-def test_theta_sketch_set_algebra(tables):
-    from graphique_spark.operators import sketch
-
-    events = tables["events"].df
-    two = events.filter(F.col("event_type").isin("click", "view"))
-    per_type = sketch.theta_sketches(two, "user_id", by=["event_type"])
-    [overlap] = sketch.theta_overlap(per_type).collect()
-
-    clicks = {r["user_id"] for r in two.filter("event_type = 'click'").select("user_id").distinct().collect()}
-    views = {r["user_id"] for r in two.filter("event_type = 'view'").select("user_id").distinct().collect()}
-    assert overlap["union_estimate"] == pytest.approx(len(clicks | views), rel=0.05)
-    assert overlap["intersection_estimate"] == pytest.approx(len(clicks & views), rel=0.1)
-    assert 0.0 <= overlap["overlap_ratio"] <= 1.0
-
-
 def test_kmeans_centroids_beat_hash_sampled(spark):
     # fit_centroids (Spark ML KMeans) must beat the deterministic hash
     # sample on both IVF recall@10 and mean centroid affinity — the reason
@@ -1759,7 +1729,6 @@ def test_similarity_degenerate_inputs(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert similarity.ivf_topk(empty, [1.0, 0.0], num_centroids=4, k=3).count() == 0
     assert similarity.assign_clusters(empty).count() == 0
-    assert similarity.cluster_balanced_sample(empty, per_cluster=2).count() == 0
     queries = spark.createDataFrame(
         [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"
     )

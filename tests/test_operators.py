@@ -252,6 +252,27 @@ def test_asof_range_keeps_duplicate_left_rows(spark):
     assert uni.count() == 2
 
 
+def _single_task_windows(plan: str) -> list[str]:
+    """``Window`` nodes of a plan string whose nearest ``Exchange`` below
+    is ``SinglePartition``: windows computed in one task."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    lines = plan.splitlines()
+    found = []
+    for i, line in enumerate(lines):
+        if "Window [" not in line:
+            continue
+        for below in lines[i + 1 :]:
+            if depth(below) <= depth(line):
+                break
+            if "Exchange " in below:
+                if "SinglePartition" in below:
+                    found.append(line.lstrip(" :+-|"))
+                break
+    return found
+
+
 def test_asof_global_no_keys(spark):
     # keyless as-of: two-phase range-partition path, no unpartitioned window
     left = spark.createDataFrame([(10,), (20,), (3,)], "t long")
@@ -260,7 +281,7 @@ def test_asof_global_no_keys(spark):
     got = {r["t"]: r["v"] for r in out.collect()}
     assert got == {3: None, 10: "a", 20: "b"}
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window [" not in plan or "partitionBy" not in plan  # loose: no global window node
+    assert _single_task_windows(plan) == [], plan
     fwd = asof_join(left, right, on="t", direction="forward")
     got_fwd = {r["t"]: r["v"] for r in fwd.collect()}
     assert got_fwd == {3: "a", 10: "b", 20: None}
@@ -931,6 +952,20 @@ def test_asof_build_cost_flat_in_left_columns(spark, py4j_calls):
     build(2)  # first build: one-time lookups
     n2, n32 = build(2), build(32)
     assert n32 <= 1.1 * n2
+
+
+def test_asof_keeps_left_types(spark):
+    # the union widened the left `on` and key columns to the right side's
+    # wider types (k int, t int came back bigint)
+    left = spark.createDataFrame([(1, 10), (2, 3)], "k int, t int")
+    right = spark.createDataFrame([(1, 5, "z"), (2, 1, "y")], "k bigint, t bigint, v string")
+    for by in (["k"], []):
+        out = asof_join(left, right, on="t", by=by)
+        types = dict(out.dtypes)
+        assert (types["k"], types["t"]) == ("int", "int"), (by, out.dtypes)
+        assert sorted(r["t"] for r in out.collect()) == [3, 10]
+    keyed = asof_join(left, right, on="t", by=["k"])
+    assert sorted(map(tuple, keyed.collect())) == [(1, 10, "z"), (2, 3, "y")]
 
 
 def test_asof_internal_name_collision_raises(spark):

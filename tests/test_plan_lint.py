@@ -3,9 +3,10 @@ join shapes that destroy 100 TB runs — CartesianProduct and
 BroadcastNestedLoopJoin — plus Python row-at-a-time evaluation
 (BatchEvalPython). A new query that accidentally introduces one fails CI
 here, not on the cluster. A source-level check keeps list-built frames
-(Python-RDD scans) behind ``session.local_frame``, and another keeps every
+(Python-RDD scans) behind ``session.local_frame``, another keeps every
 lineage cut (``persist``/``cache``/``checkpoint``) behind
-``session.materialize``.
+``session.materialize``, and a third fails on a public function that only
+tests reach.
 
 Whitelist rationale:
 * knn_join — deliberate bounded cross join (small broadcast query side);
@@ -131,6 +132,18 @@ def test_driver_vector_scoring_runs_in_arrow_kernel(spark, tables):
         assert "ZipWith" not in tree and "ArrayAggregate" not in tree, name
 
 
+def _parsed(root, skip: str | None = None):
+    """``(path, text, tree)`` of every ``.py`` file under ``root``, except
+    under its top-level directory ``skip``."""
+    import ast
+
+    for path in sorted(root.rglob("*.py")):
+        if skip is not None and path.relative_to(root).parts[0] == skip:
+            continue
+        text = path.read_text()
+        yield path, text, ast.parse(text, filename=str(path))
+
+
 def _calls_outside(function: str, attrs: set[str]) -> list[str]:
     """``file:line`` of every ``.attr(...)`` call in ``graphique_spark/``
     whose attribute is in ``attrs``, except inside ``session.<function>``."""
@@ -141,8 +154,7 @@ def _calls_outside(function: str, attrs: set[str]) -> list[str]:
 
     root = pathlib.Path(graphique_spark.__file__).parent
     offenders = []
-    for path in sorted(root.rglob("*.py")):
-        tree = ast.parse(path.read_text(), filename=str(path))
+    for path, _, tree in _parsed(root):
         allowed = set()
         if path == root / "session.py":
             for node in ast.walk(tree):
@@ -180,6 +192,58 @@ def test_lineage_cuts_go_through_materialize():
     attrs = {"persist", "unpersist", "cache", "localCheckpoint", "checkpoint"}
     offenders = _calls_outside("materialize", attrs)
     assert not offenders, f"lineage cuts outside session.materialize: {offenders}"
+
+
+#: public names in graphique_spark/ that nothing outside tests/ names, kept
+#: on purpose
+UNREACHED_KEEP = {
+    "read_source": "SURVEY §2.1: a root may be any DataSource V2 or catalog table",
+    "read_jdbc": "SURVEY §2.1: the reference's any-backend root maps to JDBC",
+    "time_to_micros": "the inverse that micros_to_time is checked against",
+    "bmp_bytes": "the only input that reaches the live BMP decoder branch",
+    "jpeg_bytes": "the only input that reaches the live JPEG decoder branch",
+}
+
+
+def test_public_functions_are_reached_outside_tests():
+    # A public function or class that only tests call is code the tests
+    # keep alive. Each must be named in a .py file outside tests/ (a call,
+    # an import, a registry string such as the functions' __all__, a
+    # docstring or a comment), other than inside its own definition, or
+    # be registered as a suite query (@query, or @partsupp_query for the
+    # partsupp shapes that join the suite when the table ships).
+    import ast
+    import collections
+    import pathlib
+    import re
+
+    import graphique_spark
+
+    pkg = pathlib.Path(graphique_spark.__file__).parent
+    words = collections.Counter()
+    defs = []
+    for path, text, tree in _parsed(pkg.parent, skip="tests"):
+        lines = text.splitlines()
+        words.update(re.findall(r"\w+", text))
+        if not path.is_relative_to(pkg):
+            continue
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if node.name.startswith("_") or any(
+                isinstance(d, ast.Call)
+                and getattr(d.func, "id", None) in {"query", "partsupp_query"}
+                for d in node.decorator_list
+            ):
+                continue
+            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            own = re.findall(r"\w+", "\n".join(lines[start - 1 : node.end_lineno]))
+            defs.append((node.name, own.count(node.name)))
+    unreached = {name for name, own in defs if words[name] == own}
+    assert unreached == set(UNREACHED_KEEP), (
+        f"reached only from tests: {sorted(unreached - set(UNREACHED_KEEP))}; "
+        f"stale keep entries: {sorted(set(UNREACHED_KEEP) - unreached)}"
+    )
 
 
 def test_plans_api_reports_and_asserts(spark, tables):

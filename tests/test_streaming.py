@@ -80,68 +80,6 @@ def test_stream_write_parquet_sink(spark, tables):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_stateful_user_totals_across_batches(spark, tables):
-    """applyInPandasWithState: state must accumulate across micro-batches
-    (two source files, maxFilesPerTrigger=1 -> two batches)."""
-    events = tables["events"].df
-    workdir = tempfile.mkdtemp(prefix="gs_state_")
-    try:
-        src = f"{workdir}/src"
-        half = events.limit(400)
-        half.limit(200).coalesce(1).write.mode("append").parquet(src)
-        half.subtract(half.limit(200)).coalesce(1).write.mode("append").parquet(src)
-        schema = events.schema.simpleString().replace("struct<", "").rstrip(">").replace(":", " ")
-        stream = streaming.read_event_stream(spark, src, schema=schema, max_files_per_trigger=1)
-        out = streaming.stateful_user_totals(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("gs_state_sink")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        latest = spark.sql(
-            """SELECT sum(events_total) FROM (
-                 SELECT user_id, max_by(events_total, batches) AS events_total
-                 FROM gs_state_sink GROUP BY user_id)"""
-        ).first()[0]
-        assert latest == 400
-        assert spark.sql("SELECT max(batches) FROM gs_state_sink").first()[0] >= 2
-    finally:
-        for q in spark.streams.active:
-            q.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def test_stream_dedup_within_watermark(spark, tables):
-    """Duplicate events across two micro-batches must be emitted once."""
-    events = tables["events"].df
-    workdir = tempfile.mkdtemp(prefix="gs_dedup_")
-    try:
-        src = f"{workdir}/src"
-        batch = events.limit(300)
-        batch.coalesce(1).write.mode("append").parquet(src)
-        batch.limit(100).coalesce(1).write.mode("append").parquet(src)  # dupes
-        schema = events.schema.simpleString().replace("struct<", "").rstrip(">").replace(":", " ")
-        stream = streaming.read_event_stream(spark, src, schema=schema, max_files_per_trigger=1)
-        out = streaming.stream_dedup(stream, keys=["event_id"], streaming=True)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("gs_dedup_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        n = spark.sql("SELECT count(DISTINCT event_id), count(*) FROM gs_dedup_sink").first()
-        assert n[0] == n[1] == 300
-    finally:
-        for q in spark.streams.active:
-            q.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
 def test_interval_join_stream_batch_parity(spark, tables):
     """The interval join must produce identical pairs as a micro-batch
     stream-stream join (inner joins emit eagerly; watermarks only bound
@@ -228,23 +166,6 @@ def test_upsert_sink_foreachbatch(spark, tables, tmp_path):
     assert got == expect
 
 
-def test_available_now_drains_and_stops(spark, tables, tmp_path):
-    # availableNow processes all pending files in bounded batches, then the
-    # query terminates on its own — the backfill trigger
-    from graphique_spark import streaming
-
-    events = tables["events"].df.select("event_id", "user_id", "value")
-    src = str(tmp_path / "src")
-    events.limit(300).coalesce(1).write.parquet(src)
-    schema = "event_id bigint, user_id bigint, value double"
-    stream = streaming.read_event_stream(spark, src, schema=schema)
-    q = streaming.write_stream_to_parquet(
-        stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), available_now=True
-    )
-    assert q.awaitTermination(120)  # terminates without stop()
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 300
-
-
 def test_upsert_sink_rejects_non_key_partition_col(spark, tables, tmp_path):
     # a partition column outside the upsert keys would strand stale rows in
     # old partitions when a key's partition value drifts between batches
@@ -265,56 +186,6 @@ def test_upsert_sink_rejects_non_key_partition_col(spark, tables, tmp_path):
             agg, str(tmp_path / "dest"), keys=["event_type"],
             checkpoint=str(tmp_path / "ckpt"), partition_col="n",
         )
-
-
-@slow_full  # ~95s: the sink mechanism AND its exactly-once contract are
-# covered by default via test_incremental_dedup_sink_replay_idempotent
-def test_incremental_dedup_sink(spark, tables, tmp_path):
-    # stream documents in two micro-batches: cross-batch near-dup pairs
-    # must match the batch-split incremental computation, and the index
-    # must accumulate every doc exactly once
-    from graphique_spark import streaming
-    from graphique_spark.llm import dedup
-
-    docs = tables["documents"].df.select("doc_id", "text")
-    a = docs.filter(F.col("doc_id") < 40)
-    b = docs.filter(F.col("doc_id") >= 40)
-    src = str(tmp_path / "src")
-    a.coalesce(1).write.mode("append").parquet(src)
-    b.coalesce(1).write.mode("append").parquet(src)
-
-    stream = streaming.read_event_stream(
-        spark, src, schema="doc_id bigint, text string", max_files_per_trigger=1
-    )
-    q = streaming.incremental_dedup_sink(
-        stream,
-        index_dest=str(tmp_path / "index"),
-        dups_dest=str(tmp_path / "dups"),
-        checkpoint=str(tmp_path / "ckpt"),
-        min_jaccard=0.0,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    index = spark.read.parquet(str(tmp_path / "index"))
-    assert index.count() == docs.count()  # every doc indexed exactly once
-    assert index.select("id").distinct().count() == docs.count()
-
-    got = {
-        frozenset((r["new_id"], r["index_id"])): round(r["jaccard"], 12)
-        for r in spark.read.parquet(str(tmp_path / "dups")).collect()
-    }
-    # expectation: exactly the cross-split subset of full-corpus candidate
-    # pairs (file->batch order may flip, hence frozenset keys)
-    expect = {
-        frozenset((r["id_a"], r["id_b"])): round(r["jaccard"], 12)
-        for r in dedup.minhash_candidates(docs).collect()
-        if (r["id_a"] < 40) != (r["id_b"] < 40)
-    }
-    assert got == expect
-    assert expect  # fixture must actually exercise cross-batch dups
 
 
 def test_cdc_sink_applies_log_across_batches(spark, tmp_path):
@@ -352,49 +223,6 @@ def test_cdc_sink_applies_log_across_batches(spark, tmp_path):
     assert got == expect
     import glob
     assert not glob.glob(str(tmp_path / "snap" / "cohort=3"))  # dead dir dropped
-
-
-def test_rocksdb_state_store_parity(spark, tables, tmp_path):
-    # the bounded-memory state store a real cluster runs: the same
-    # windowed aggregation must produce identical results under the
-    # RocksDB provider (proves the claim in the module docstring against
-    # THIS Spark build, not just on paper)
-    from graphique_spark import streaming as st
-
-    events = tables["events"].df
-    batch = {
-        (r["window_start"], r["event_type"]): r["n"]
-        for r in st.tumbling_counts(
-            events, duration="6 hours", by=["event_type"]
-        ).collect()
-    }
-    src = str(tmp_path / "src")
-    events.coalesce(2).write.parquet(src)
-    schema = events.schema.simpleString().replace("struct<", "").rstrip(">").replace(":", " ")
-    for k, v in st.rocksdb_state_conf().items():
-        spark.conf.set(k, v)
-    try:
-        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        out = st.tumbling_counts(
-            stream, duration="6 hours", by=["event_type"], streaming=True
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("rocks_parity")
-            .outputMode("complete")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        streamed = {
-            (r["window_start"], r["event_type"]): r["n"]
-            for r in spark.sql("SELECT * FROM rocks_parity").collect()
-        }
-    finally:
-        for k in st.rocksdb_state_conf():
-            spark.conf.unset(k)
-    assert streamed == batch
 
 
 def test_cdc_sink_drops_dead_partitions_with_escaped_and_null_values(spark, tmp_path):
@@ -440,46 +268,6 @@ def test_cdc_sink_drops_dead_partitions_with_escaped_and_null_values(spark, tmp_
     assert not _glob.glob(str(tmp_path / "snap" / "region=a%3Ab"))
     assert not _glob.glob(str(tmp_path / "snap" / "region=__HIVE_DEFAULT_PARTITION__"))
     assert _glob.glob(str(tmp_path / "snap" / "region=ok"))
-
-
-def test_windowed_distinct_hll_accuracy_and_stream_parity(spark, tables, tmp_path):
-    from graphique_spark import streaming as st
-
-    events = tables["events"].df
-    batch = {
-        r["window_start"]: r
-        for r in st.windowed_distinct(events, key="user_id", duration="6 hours").collect()
-    }
-    exact = {
-        r["ws"]: r["d"]
-        for r in events.groupBy(F.window("ts", "6 hours").alias("w"))
-        .agg(F.count_distinct("user_id").alias("d"))
-        .select(F.col("w.start").alias("ws"), "d")
-        .collect()
-    }
-    assert set(batch) == set(exact)
-    for ws, row in batch.items():
-        assert abs(row["distinct_est"] - exact[ws]) <= max(2, 0.05 * exact[ws])
-
-    # micro-batch parity: the same function on a readStream frame
-    src = str(tmp_path / "src")
-    events.coalesce(2).write.parquet(src)
-    schema = events.schema.simpleString().replace("struct<", "").rstrip(">").replace(":", " ")
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    out = st.windowed_distinct(stream, key="user_id", duration="6 hours", streaming=True)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wd_hll")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    streamed = {
-        r["window_start"]: r["distinct_est"]
-        for r in spark.sql("SELECT * FROM wd_hll").collect()
-    }
-    assert streamed == {ws: r["distinct_est"] for ws, r in batch.items()}
 
 
 @slow_full  # ~16s edge-case twin: default dead-dir/null-partition
@@ -584,41 +372,6 @@ def test_upsert_sink_null_partition_and_null_keys(spark, tmp_path):
     assert got == {(None, 1, 11.0), (None, 2, 20.0), ("a", 3, 30.0)}
 
 
-def test_stateful_user_totals_string_key(spark, tmp_path):
-    # the output schema must derive the key's real type (a hardcoded
-    # `long` crashed the Arrow conversion for string user ids)
-    import time as _time
-
-    from graphique_spark import streaming as st
-
-    src = str(tmp_path / "src")
-    schema = "user_id string, ts timestamp, value double"
-    rows = [("alice", "2024-01-01 00:00:00", 1.0),
-            ("bob", "2024-01-01 00:01:00", 2.0),
-            ("alice", "2024-01-01 00:02:00", 3.0)]
-    df = spark.createDataFrame(
-        [(u, __import__("datetime").datetime.fromisoformat(t), v) for u, t, v in rows],
-        schema,
-    )
-    df.coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(0.2)
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = st.stateful_user_totals(stream, key="user_id")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("gs_state_strkey")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r["user_id"]: r["events_total"]
-        for r in spark.sql("SELECT * FROM gs_state_strkey").collect()
-    }
-    assert got == {"alice": 2, "bob": 1}
-
-
 def test_upsert_sink_string_partition_values_round_trip(spark, tmp_path):
     # regression: reading dest WITHOUT a schema let partition-type
     # inference retype region='0123' as int 123, so the rewrite landed in
@@ -666,13 +419,6 @@ def test_interval_join_output_chains(spark):
     twice = streaming.interval_join(once, right, keys=["k"])
     assert twice.count() == 1
     assert len(set(twice.columns)) == len(twice.columns)  # no dup names
-
-
-def test_rocksdb_conf_flag_is_authoritative(spark):
-    on = streaming.rocksdb_state_conf(True)
-    off = streaming.rocksdb_state_conf(False)
-    key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    assert on[key] == "true" and off[key] == "false"
 
 
 def test_windowed_agg_drops_rows_older_than_watermark(spark, tmp_path):
@@ -748,63 +494,6 @@ def test_streaming_global_session_window_raises(tables):
     events = tables["events"].df
     with _pytest.raises(ValueError, match="grouping key"):
         streaming.session_windows(events, gap="30 minutes", by=None, streaming=True)
-
-
-def test_stateful_totals_idle_anchor_is_last_activity(spark):
-    """Idle eviction must anchor at last ACTIVITY + idle, not watermark +
-    idle: in early batches the watermark is still 0 (epoch 1970), so a
-    wm-anchored timeout evicts first-batch keys as soon as the real
-    watermark initializes, silently resetting their running totals."""
-    import datetime
-    import os
-    import shutil
-    import tempfile
-
-    t0 = datetime.datetime(2024, 1, 1)
-    mins = lambda m: t0 + datetime.timedelta(minutes=m)
-    batches = [
-        [("a", mins(0), 1.0)],
-        [("b", mins(72), 1.0)],    # advances wm to 12 min in batch 2
-        [("c", mins(120), 1.0)],   # a's state must survive this batch
-        [("a", mins(144), 1.0)],   # within 2h idle of a's last activity
-    ]
-    work = tempfile.mkdtemp(prefix="gs_idle_anchor")
-    try:
-        src = f"{work}/src"
-        os.makedirs(src)
-        seen = set()
-        for b, data in enumerate(batches):
-            spark.createDataFrame(
-                data, "user_id string, ts timestamp, value double"
-            ).coalesce(1).write.mode("append").parquet(src)
-            for fn in os.listdir(src):
-                if fn.endswith(".parquet") and fn not in seen:
-                    seen.add(fn)
-                    os.utime(os.path.join(src, fn), (1_000_000 + b,) * 2)
-        stream = streaming.read_event_stream(
-            spark, src, schema="user_id string, ts timestamp, value double"
-        )
-        totals = streaming.stateful_user_totals(
-            stream, watermark="1 hour", idle_timeout="2 hours"
-        )
-        q = (
-            totals.writeStream.format("memory")
-            .queryName("idle_anchor")
-            .outputMode("update")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        rows = spark.sql(
-            "SELECT * FROM idle_anchor WHERE user_id = 'a' ORDER BY batches"
-        ).collect()
-        spark.catalog.dropTempView("idle_anchor")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    # batch 3's update must CONTINUE a's state (2 events over 2 batches),
-    # not restart from zero after a premature 1970-anchored eviction
-    assert [(r["events_total"], r["batches"]) for r in rows] == [(1, 1), (2, 2)], rows
 
 
 def _force_replay(checkpoint: str) -> tuple[str, int]:
@@ -1156,67 +845,3 @@ def test_interval_join_window_file_sink_replay_idempotent(spark, tmp_path):
     assert after == before
     # non-vacuous: the finalized [0,30) x 'a' window with its full count
     assert (t0, "a", 2) in before
-
-
-def test_incremental_dedup_sink_replay_idempotent(spark, tables, tmp_path):
-    """Crash-replay for the streaming ingest-dedup topology: the sink
-    documents its idempotence contract (batch_id-partitioned dynamic
-    overwrite; dedup probes only strictly-earlier partitions) — prove it
-    under an actual checkpoint replay. Replaying the final micro-batch
-    must (1) not double-append its index rows, (2) not fabricate
-    self-match jaccard=1.0 dup pairs from its own already-written index
-    partition, and (3) leave both outputs identical."""
-    import os
-
-    docs = tables["documents"].df.select("doc_id", "text")
-    src = str(tmp_path / "src")
-    seen = set()
-    for b, split in enumerate(
-        [docs.filter(F.col("doc_id") < 30),
-         docs.filter((F.col("doc_id") >= 30) & (F.col("doc_id") < 60)),
-         docs.filter(F.col("doc_id") >= 60)]
-    ):
-        split.coalesce(1).write.mode("append").parquet(src)
-        for fn in os.listdir(src):
-            if fn.endswith(".parquet") and fn not in seen:
-                seen.add(fn)
-                os.utime(os.path.join(src, fn), (1_000_000 + b, 1_000_000 + b))
-
-    def run(ckpt):
-        stream = streaming.read_event_stream(
-            spark, src, schema="doc_id bigint, text string", max_files_per_trigger=1
-        )
-        q = streaming.incremental_dedup_sink(
-            stream,
-            index_dest=str(tmp_path / "index"),
-            dups_dest=str(tmp_path / "dups"),
-            checkpoint=ckpt,
-            min_jaccard=0.0,
-            available_now=True,
-        )
-        assert q.awaitTermination(180)
-
-    run(str(tmp_path / "ckpt"))
-    index_before = sorted(
-        tuple(r) for r in spark.read.parquet(str(tmp_path / "index")).select("id", "batch_id").collect()
-    )
-    dups_before = sorted(
-        tuple(r) for r in spark.read.parquet(str(tmp_path / "dups")).collect()
-    )
-    clone, replayed = _force_replay(str(tmp_path / "ckpt"))
-    run(clone)
-    index_after = sorted(
-        tuple(r) for r in spark.read.parquet(str(tmp_path / "index")).select("id", "batch_id").collect()
-    )
-    dups_after = sorted(
-        tuple(r) for r in spark.read.parquet(str(tmp_path / "dups")).collect()
-    )
-    assert replayed >= 1
-    assert index_after == index_before
-    assert dups_after == dups_before
-    # non-vacuous: every doc indexed exactly once, and the replayed run
-    # actually produced cross-batch dup pairs to get wrong
-    assert len(index_after) == docs.count()
-    assert dups_before
-    # no self-matches fabricated from a replayed batch's own partition
-    assert all(r[0] != r[1] for r in dups_after)

@@ -223,6 +223,24 @@ def test_sql_escape_hatch_renders_as_cte(spark, tables):
     assert _rows(spark.sql(sql)) == _rows(ds.df)
 
 
+def test_sql_query_with_its_own_with_renders_runnable(spark):
+    """A query that opens with its own WITH (and ends in a comment) runs
+    inside the CTE that binds ``self``, and ``to_sql`` renders that text."""
+    from graphique_spark.sources import read_parquet
+
+    nation = read_parquet(spark, f"{SF_DIR}/nation.parquet")
+    ds = nation.sql(
+        "WITH x AS (SELECT n_regionkey, n_name FROM self WHERE n_nationkey < 20) "
+        "SELECT n_regionkey, count(1) AS n FROM x GROUP BY n_regionkey -- per region"
+    )
+    sql = ds.to_sql()
+    assert sql.startswith("SELECT")
+    assert _rows(spark.sql(sql)) == _rows(ds.df)
+    assert not spark.catalog.tableExists("self")
+    # a statement's trailing semicolon stays outside the parenthesized query
+    assert nation.sql("SELECT * FROM self;").df.count() == 25
+
+
 # --- randomized chain fuzzer -------------------------------------------------
 # Random operator chains over the Dataset API itself (not GraphQL): any
 # rendered chain must re-execute identically. Non-terminal ops keep the
