@@ -11,15 +11,16 @@ the *semantics* declaratively.
 
 from __future__ import annotations
 
-from typing import Any, Mapping, Sequence
+from functools import partial
+from typing import Any, Callable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graphique_spark.inputs import Agg, Filter, combine_filters
 from graphique_spark.operators.asof import asof_join
 from graphique_spark.operators.sequence import with_row_index, with_run_ids
-from graphique_spark.operators.topk import rank_filter, sort_keys, top_k
+from graphique_spark.operators.topk import distinct_sql, group_top_k_sql, rank_sql, take_sql, top_k
 from graphique_spark.session import local_frame
 from graphique_spark.sqlrender import run_sql, with_alias
 
@@ -58,6 +59,16 @@ class Dataset:
             out._source = self._source
             out._ops = self._ops + (op,)
         return out
+
+    def _run(
+        self, build: Callable[[str], str], frame: DataFrame | None = None, renderable: bool = True
+    ) -> "Dataset":
+        """New Dataset over ``build(input text)`` run on ``frame`` (default:
+        this frame); ``to_sql`` renders the same builder unless
+        ``renderable=False`` (text that depends on scan order)."""
+        df = self.df if frame is None else frame
+        out = run_sql(df.sparkSession, build, frame=df)
+        return self._wrap(out, ("text", self.df, {"build": build}) if renderable else None)
 
     def _resolve(self, other: "Dataset | DataFrame | str") -> DataFrame:
         if isinstance(other, str):
@@ -377,35 +388,16 @@ class Dataset:
     ) -> "Dataset":
         """De-duplicate on a key subset, keeping all columns (reference
         interface.py:185-215). ``keep``: 'first'/'last' (by ``order_by``, or
-        arbitrary-but-deterministic via a stable tiebreak), None = drop *all*
-        duplicated rows."""
-        on = list(on) or self.column_names()
-        op = (
-            "distinct",
-            self.df,
-            {"on": on, "keep": keep, "counts": counts, "order_by": list(order_by)},
-        )
-        if keep is None:
-            # window count, not groupBy+semi-join: a plain equi semi join
-            # never matches NULL key values, silently dropping null-keyed
-            # singleton groups (NULL is a group, like Arrow/DuckDB), and
-            # the window is one shuffle where the join shape costs two
-            w_n = Window.partitionBy(*on)
-            out = self.df.withColumn("__n", F.count(F.lit(1)).over(w_n))
-            return self._wrap(out.filter(F.col("__n") == 1).drop("__n"), op)
-        keys = sort_keys(order_by) if order_by else [F.monotonically_increasing_id()]
-        if keep == "last":
-            # reverse each key's direction by flipping its '-' prefix --
-            # .desc() on a SortOrder produced by sort_keys would crash
-            flipped = [k[1:] if k.startswith("-") else "-" + k for k in order_by]
-            keys = sort_keys(flipped) if order_by else [
-                F.monotonically_increasing_id().desc()
-            ]
-        w = Window.partitionBy(*on).orderBy(*keys)
-        out = self.df.withColumn("__rn", F.row_number().over(w))
-        if counts:
-            out = out.withColumn(counts, F.count(F.lit(1)).over(Window.partitionBy(*on)))
-        return self._wrap(out.filter(F.col("__rn") == 1).drop("__rn"), op)
+        by scan order without it), None = drop *all* duplicated rows; see
+        :func:`distinct_sql`."""
+        on = list(on)
+        # without order_by the kept row is the first or last in scan order,
+        # which SQL text can't pin
+        by_scan = bool(on) and keep is not None and not order_by
+        if by_scan and set(on) == set(self.column_names()):
+            on, by_scan = [], False  # every column is a key: duplicates are identical
+        build = partial(distinct_sql, on=on, keep=keep, counts=counts, order_by=list(order_by))
+        return self._run(build, renderable=not by_scan)
 
     def runs(
         self,
@@ -529,20 +521,16 @@ class Dataset:
         return reader.parquet(*chosen).select(*self.df.columns)
 
     def order(self, by: Sequence[str], limit: int | None = None, over: Sequence[str] = ()) -> "Dataset":
-        op = ("order", self.df, {"by": list(by), "limit": limit, "over": list(over)})
-        if limit is not None and not over:
-            pruned = self._fragment_prune(by, limit=limit)
-            if pruned is not None:
-                return self._wrap(top_k(pruned, by, limit, over), op)
-        return self._wrap(top_k(self.df, by, limit, over), op)
+        if limit is not None and over:
+            return self._run(partial(group_top_k_sql, by=list(by), limit=limit, over=list(over)))
+        op = ("order", self.df, {"by": list(by), "limit": limit})
+        pruned = self._fragment_prune(by, limit=limit) if limit is not None else None
+        return self._wrap(top_k(self.df if pruned is None else pruned, by, limit), op)
 
     def first(self, by: Sequence[str], rank: int = 1, dense: bool = False, over: Sequence[str] = ()) -> "Dataset":
-        op = ("first", self.df, {"by": list(by), "rank": rank, "dense": dense, "over": list(over)})
-        if not over:
-            pruned = self._fragment_prune(by, rank=rank, dense=dense)
-            if pruned is not None:
-                return self._wrap(rank_filter(pruned, by, rank, dense, over), op)
-        return self._wrap(rank_filter(self.df, by, rank, dense, over), op)
+        build = partial(rank_sql, by=list(by), rank=rank, dense=dense, over=list(over))
+        pruned = None if over else self._fragment_prune(by, rank=rank, dense=dense)
+        return self._run(build, frame=pruned)
 
     def slice(self, offset: int = 0, limit: int | None = None) -> "Dataset":
         """Contiguous rows in current order; negative offset = from the end
@@ -559,26 +547,16 @@ class Dataset:
         ``take``, interface.py:424-435): duplicate indices repeat rows and
         the requested order is preserved — a broadcast inner join against a
         literal (position, index) table over a dense row index, distributed
-        rather than a driver-side collect."""
-        synthesized = rowid not in self.df.columns
-        # SQL-renderable only with an explicit rowid column: a synthesized
-        # index depends on scan row order, which SQL text can't pin
-        op = (
-            ("take", self.df, {"indices": [int(i) for i in indices], "rowid": rowid})
-            if not synthesized
-            else None
-        )
+        rather than a driver-side collect (:func:`take_sql`)."""
+        build = partial(take_sql, indices=[int(i) for i in indices], rowid=rowid)
+        if rowid in self.df.columns:
+            return self._run(build)
+        # a synthesized index depends on scan row order, which SQL text
+        # can't pin: to_sql falls back
         if not len(indices):
-            # pyarrow take([]) = empty table
-            return self._wrap(self.df.limit(0), op)
-        df = with_row_index(self.df, rowid) if synthesized else self.df
-        wanted = local_frame(
-            df.sparkSession,
-            [(pos, int(i)) for pos, i in enumerate(indices)],
-            f"__pos long, `{rowid}` long",
-        )
-        out = df.join(F.broadcast(wanted), on=rowid, how="inner").orderBy("__pos").drop("__pos")
-        return self._wrap(out.drop(rowid) if synthesized else out, op)
+            return self._wrap(self.df.limit(0))
+        out = run_sql(self.df.sparkSession, build, frame=with_row_index(self.df, rowid))
+        return self._wrap(out.drop(rowid))
 
     def with_row_index(self, name: str = "_rowid") -> "Dataset":
         return self._wrap(with_row_index(self.df, name))
@@ -742,10 +720,4 @@ class Dataset:
     def sql(self, query: str, alias: str = "self") -> "Dataset":
         # ``alias`` is a CTE over this frame, bound per call: no session-wide
         # view name that concurrent requests could overwrite
-        out = run_sql(
-            self.df.sparkSession,
-            lambda text: with_alias(alias, text, query),
-            frame=self.df,
-        )
-        op = ("sql", self.df, {"query": query, "alias": alias})
-        return self._wrap(out, op)
+        return self._run(lambda text: with_alias(alias, text, query))

@@ -971,49 +971,6 @@ def remove_duplicate_segments(
     )
 
 
-def corpus_minhash(
-    df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_hashes: int = 32,
-) -> DataFrame:
-    """ONE MinHash signature for an entire corpus: per permutation, the
-    min over every shingle hash in every document. A corpus of any size
-    compresses to ``num_hashes`` longs; signatures of two corpora estimate
-    their shingle-set Jaccard without touching either corpus again — the
-    sketch a dataset registry stores per crawl/dump to answer "how much
-    does the new dump overlap the old one" at planning time.
-
-    Scale shape: the per-doc signature projection is map-side; the global
-    min is a map-side-combinable aggregate shuffling #partitions rows of
-    ``num_hashes`` longs. Mergeable: min of two corpus signatures IS the
-    signature of the union."""
-    sigs = _signatures(df, text, id_col, k, num_hashes)
-    return sigs.sparkSession.sql(f"SELECT {_min_sql(num_hashes)} FROM {{sigs}}", sigs=sigs)
-
-
-def corpus_overlap(
-    a: DataFrame,
-    b: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_hashes: int = 32,
-) -> DataFrame:
-    """Estimated shingle-set Jaccard between two corpora from their
-    corpus-level MinHash signatures: the fraction of matching permutation
-    mins. One row out: (n_matches, jaccard_est). The two single-row
-    signature frames cross-join trivially (1x1)."""
-    sa = corpus_minhash(a, text, id_col, k, num_hashes)
-    sb = corpus_minhash(b, text, id_col, k, num_hashes)
-    return sa.sparkSession.sql(
-        f"SELECT {_match_sql('a.m', 'b.m', num_hashes)} FROM {{sa}} a CROSS JOIN {{sb}} b",
-        sa=sa,
-        sb=sb,
-    )
-
-
 def corpus_overlap_single_pass(
     df: DataFrame,
     in_a: Column,
@@ -1022,8 +979,10 @@ def corpus_overlap_single_pass(
     k: int = 5,
     num_hashes: int = 32,
 ) -> DataFrame:
-    """:func:`corpus_overlap` for two cohorts OF THE SAME TABLE (old dump
-    vs new dump living side by side, one source vs the rest): membership
+    """Estimated shingle-set Jaccard between two cohorts OF THE SAME TABLE
+    (old dump vs new dump living side by side, one source vs the rest)
+    from their corpus-level MinHash signatures: the fraction of matching
+    permutation mins, one row out (n_matches, jaccard_est). Membership
     predicates instead of two DataFrames, so both signatures come out of
     ONE scan — per-doc permutation mins are computed map-side once, and a
     single aggregate takes the conditional min per (cohort, permutation).

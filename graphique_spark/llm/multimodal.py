@@ -328,35 +328,6 @@ def sample_frames(
     )
 
 
-def resize_images(
-    df: DataFrame,
-    blob_col: str = "blob",
-    id_col: str = "doc_id",
-    target: tuple[int, int] = (32, 32),
-) -> DataFrame:
-    """Nearest-neighbor resample of decoded image pixels (any supported
-    format) to ``target`` — a real resize over real pixels (numpy integer
-    indexing), keeping the Arrow-batched contract. Returns the resized
-    mean pixel value."""
-
-    tw, th = target
-
-    def batches(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            rows = []
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                width, height, pixels = decode_image_blob(bytes(blob))
-                ys = (np.arange(th) * height) // th
-                xs = (np.arange(tw) * width) // tw
-                resized = pixels[ys][:, xs]
-                rows.append((doc_id, tw, th, float(resized.mean() / 255.0)))
-            yield pd.DataFrame(rows, columns=[id_col, "width", "height", "mean_px"])
-
-    return df.select(id_col, blob_col).mapInPandas(
-        batches, schema=f"{id_col} long, width int, height int, mean_px double"
-    )
-
-
 def _read_pcm_mono(blob: bytes) -> tuple[np.ndarray, int]:
     """Decode a RIFF/PCM WAV blob to (mono float64 samples, sample rate).
     Multichannel frames interleave channels, so the raster is truncated to
@@ -421,8 +392,7 @@ def dhash_images(
     df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id"
 ) -> DataFrame:
     """56-bit difference hash (dHash) of decoded images: nearest-neighbor
-    resample to an 8×8 grayscale grid (same ``(i*dim)//8`` sampling as
-    :func:`resize_images`), then one bit per horizontally-adjacent cell
+    resample to an 8×8 grayscale grid (``(i*dim)//8`` sampling), then one bit per horizontally-adjacent cell
     pair — ``bit(y,x) = g[y,x] > g[y,x+1]`` — giving 8 rows × 7
     comparisons. 56 bits (not the classic 64) keeps the value inside the
     positive BIGINT range of every engine, so SQL oracles and other

@@ -13,7 +13,7 @@ Two ways to compute a cosine, chosen by where the other vector lives:
 
 * **Against driver-side vectors** (a query, centroids, a probe list):
   :func:`brute_force_topk`, :func:`ivf_topk`, :func:`assign_clusters`,
-  :func:`lsh_ann_topk`, :func:`lsh_ann_topk_indexed` and the cell
+  :func:`lsh_ann_topk` and the cell
   assignment of :func:`ivf_knn_join` all call one numpy kernel,
   :func:`_score`, under ``DataFrame.mapInArrow``. As Column expressions
   every literal vector cost ``dim`` ``F.lit`` columns plus lambdas to
@@ -643,47 +643,6 @@ def _probe_masks(num_planes: int, radius: int) -> list[int]:
     return masks
 
 
-def write_lsh_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    num_planes: int = 4,
-) -> list[list[float]]:
-    """Materialize the LSH index the :func:`lsh_ann_topk` docstring promises:
-    buckets precomputed once, table written hive-partitioned by ``bucket``.
-    A probe is then a partition-pruned scan (the bucket IN-filter never
-    touches non-probed directories) instead of recomputing every signature
-    per query. Returns the hyperplanes (deterministic, so callers can also
-    re-derive them from ``num_planes`` + dim)."""
-    dim = _dim(df, vec_col)
-    if dim is None:
-        raise ValueError("cannot index an empty corpus (no vector to size hyperplanes)")
-    planes = [_hyperplane(p, dim) for p in range(num_planes)]
-    out = df.withColumn("bucket", lsh_bucket(F.col(vec_col), planes))
-    out.write.partitionBy("bucket").mode("overwrite").parquet(path)
-    return planes
-
-
-def lsh_ann_topk_indexed(
-    spark,
-    path: str,
-    query: Sequence[float],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    num_planes: int = 4,
-    probe_radius: int = 1,
-) -> DataFrame:
-    """Probe a :func:`write_lsh_index` table: compute the query's bucket and
-    probe set driver-side, then scan only those partitions — at scale this
-    reads ~|probe|/2^planes of the data and zero signature math."""
-    planes = [_hyperplane(p, len(query)) for p in range(num_planes)]
-    query_bucket = _py_bucket(query, planes)
-    probe = [query_bucket ^ m for m in _probe_masks(num_planes, probe_radius)]
-    probed = spark.read.parquet(path).filter(F.col("bucket").isin(probe))
-    return _topk(_query_cosine(probed, query, vec_col, id_col), id_col, k)
-
-
 def knn_join_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -767,8 +726,8 @@ def lsh_ann_topk(
     """
     dim = len(query)
     planes = [_hyperplane(p, dim) for p in range(num_planes)]
-    # _py_bucket matches Spark's aggregate HOF bit-for-bit (already relied
-    # on by lsh_ann_topk_indexed's partition probing) — no Spark job needed
+    # _py_bucket matches Spark's aggregate HOF bit-for-bit — no Spark job
+    # needed
     query_bucket = _py_bucket(query, planes)
     # O(planes^radius) probe set via XOR masks — enumerating all
     # 2^planes buckets is driver-side exponential work at realistic

@@ -1,21 +1,17 @@
 """Skew mitigation for joins and aggregations.
 
 AQE's skew-join splitting (on by default, session.py) handles most skew at
-runtime for sort-merge joins. These helpers cover the cases AQE cannot:
-shuffle-hash paths, skewed aggregations, and deliberately pre-salted
-layouts.
+runtime for sort-merge joins. These helpers cover what AQE cannot:
 
-* :func:`salted_join` — classic salting: the skewed (big) side gets a
-  random-ish salt in ``[0, salts)``, the small side is exploded ``salts``
-  times; the join key becomes ``(key, salt)``, spreading each hot key over
-  ``salts`` reducers. Salt is derived from a hash of the row's other
-  columns, not ``rand()``, so plans stay deterministic and re-executable
-  (speculative retries, AQE re-optimization, and oracles all see the same
-  data).
 * :func:`two_phase_agg` — salted partial aggregation for hot group keys:
   aggregate on ``(key, salt)`` first (spreads the hot key), then
   re-aggregate on ``key``. Only algebraic aggregates (sum/count/min/max)
-  compose this way.
+  compose this way. The salt is derived from a hash of the row's other
+  columns, not ``rand()``, so plans stay deterministic and re-executable
+  (speculative retries, AQE re-optimization, and oracles all see the same
+  data).
+* :func:`skew_report` — the key distribution that says whether salting
+  is needed.
 """
 
 from __future__ import annotations
@@ -55,34 +51,6 @@ def _det_salt(df: DataFrame, salts: int) -> Column:
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    keys: Sequence[str],
-    salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``big`` has skewed key values: spread each key over
-    ``salts`` sub-keys. ``small`` is replicated ``salts`` times (keep it the
-    genuinely smaller side). Only join types that preserve at most the
-    big side's rows are legal: under right/full/right-preserving joins
-    every unmatched small-side REPLICA would null-extend, fabricating up
-    to ``salts``-1 spurious rows per small row."""
-    keys = list(keys)
-    if how.replace("_", "").lower() not in (
-        "inner", "left", "leftouter", "semi", "leftsemi", "anti", "leftanti",
-    ):
-        raise ValueError(
-            f"salted_join does not support how={how!r}: the salt replicas "
-            "of the small side would surface as fabricated null-extended "
-            "rows in a right/full join"
-        )
-    b = big.withColumn(_SALT, _det_salt(big, salts))
-    s = small.withColumn(_SALT, F.explode(F.sequence(F.lit(0), F.lit(salts - 1))))
-    out = b.join(s, on=keys + [_SALT], how=how)
-    return out.drop(_SALT)
-
-
 def two_phase_agg(
     df: DataFrame,
     by: Sequence[str],
@@ -113,8 +81,8 @@ def skew_report(
     ``keys`` needs salting: the ``top`` heaviest key values with their
     row share and the ratio to a perfectly uniform key. A ``skew_ratio``
     in the hundreds means one reducer would own that multiple of the
-    average partition — the planning signal for :func:`salted_join` /
-    :func:`two_phase_agg` or a higher AQE skew threshold.
+    average partition — the planning signal for :func:`two_phase_agg`
+    or a higher AQE skew threshold.
 
     Scale shape: one map-side-combined count per key, global scalars from
     its tiny re-aggregate, heap top-k — the report never materializes more

@@ -1,23 +1,19 @@
-"""Physical-plan introspection — the scale-safety lint as a public API.
-
-tests/test_plan_lint.py screens every suite query for the operator
-shapes that destroy 100 TB runs; this module is that screen packaged for
-USERS, so a pipeline team can gate their own queries in their own CI::
+"""Physical-plan introspection: the operator counts behind the scale-safety
+lint in tests/test_plan_lint.py, which screens every suite query for the
+operator shapes that destroy 100 TB runs::
 
     from graphique_spark import plans
 
     report = plans.analyze(df)
     report.exchanges          # shuffle count
     report.pushed_filters     # per-scan pushed predicates
-    plans.assert_scalable(df) # raises PlanWarningError on scale-killers
 
 What counts as a scale-killer (and why):
 
 * ``CartesianProduct`` — |left| x |right| rows; at 100 TB this is the
   job that never finishes.
 * ``BroadcastNestedLoopJoin`` — per-row scan of the broadcast side; fine
-  ONLY when the build side is a one-row scalar aggregate, which the
-  caller asserts explicitly via ``allow_nested_loop=True``.
+  ONLY when the build side is a one-row scalar aggregate.
 * ``BatchEvalPython`` — row-at-a-time Python UDF evaluation; 10-100x
   slower than Arrow-batched (``ArrowEvalPython``/``MapInPandas``, which
   are allowed).
@@ -33,10 +29,6 @@ import dataclasses
 import re
 
 from pyspark.sql import DataFrame
-
-
-class PlanWarningError(AssertionError):
-    """A scale-killer operator shape was found in the physical plan."""
 
 
 @dataclasses.dataclass(frozen=True)
@@ -55,19 +47,6 @@ class PlanReport:
     codegen_stages: int
     pushed_filters: tuple[str, ...]
     plan: str = dataclasses.field(repr=False, default="")
-
-    @property
-    def scale_killers(self) -> list[str]:
-        out = []
-        if self.cartesian_products:
-            out.append(f"CartesianProduct x{self.cartesian_products}")
-        if self.broadcast_nested_loop_joins:
-            out.append(
-                f"BroadcastNestedLoopJoin x{self.broadcast_nested_loop_joins}"
-            )
-        if self.batch_eval_python:
-            out.append(f"BatchEvalPython x{self.batch_eval_python}")
-        return out
 
 
 def plan_string(df: DataFrame) -> str:
@@ -111,26 +90,3 @@ def analyze(df: DataFrame) -> PlanReport:
     )
 
 
-def assert_scalable(
-    df: DataFrame,
-    allow_nested_loop: bool = False,
-    max_exchanges: int | None = None,
-) -> PlanReport:
-    """Raise :class:`PlanWarningError` if the plan contains a
-    scale-killer (see module doc). ``allow_nested_loop=True`` waives the
-    NLJ/cartesian check for plans the caller KNOWS join a one-row scalar
-    side; ``max_exchanges`` optionally caps shuffle rounds. Returns the
-    report so callers can log it."""
-    report = analyze(df)
-    killers = report.scale_killers
-    if allow_nested_loop:
-        killers = [k for k in killers if k.startswith("BatchEvalPython")]
-    if killers:
-        raise PlanWarningError(
-            f"scale-killer operators in plan: {', '.join(killers)}"
-        )
-    if max_exchanges is not None and report.exchanges > max_exchanges:
-        raise PlanWarningError(
-            f"{report.exchanges} exchanges exceeds the cap of {max_exchanges}"
-        )
-    return report

@@ -16,7 +16,6 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from graphique_spark.dataset import Dataset
-from graphique_spark.session import local_frame
 
 
 def hive_partition_keys(path: str) -> tuple[str, ...]:
@@ -424,8 +423,7 @@ def table_checksum(df: DataFrame, by: Sequence[str] = ()) -> DataFrame:
     """Order-insensitive content checksum: per group (or globally), the
     row count and the sum of each row's md5-derived 60-bit hash over ALL
     columns. Commutative + associative, so it map-side combines, survives
-    any repartitioning, and any engine with md5 reproduces it — the
-    integrity primitive behind :func:`write_with_manifest`.
+    any repartitioning, and any engine with md5 reproduces it.
 
     NULLs and field order are canonicalized (``concat_ws`` with a unit
     separator and explicit casts), so the checksum is a function of the
@@ -465,125 +463,4 @@ def table_checksum(df: DataFrame, by: Sequence[str] = ()) -> DataFrame:
         F.pmod(total, F.lit(1 << 61).cast("decimal(38,0)"))
         .cast("bigint")
         .alias("checksum"),
-    )
-
-
-#: checksum-algorithm version stamped into every ``_manifest`` (see
-#: :func:`write_with_manifest`); bump when ``table_checksum``'s published
-#: form changes so old manifests fail loud instead of reading as corrupt
-MANIFEST_FORMAT_VERSION = 2
-
-
-def write_with_manifest(
-    df: DataFrame, dest: str, partition_by: str | None = None
-) -> None:
-    """Write parquet plus a ``_manifest`` parquet directory holding the
-    per-partition row count + content checksum — the integrity artifact a
-    100 TB pipeline checks before trusting an input (partial writes,
-    truncated copies, and silent row loss all shift the checksum).
-    Verify with :func:`verify_manifest`."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(dest)
-    # checksum the BYTES WRITTEN, not the input plan: re-executing df for
-    # the manifest would describe a second run of the plan, which diverges
-    # from the files on disk if the plan is nondeterministic or a source
-    # changed between the two jobs — defeating verify_manifest
-    # explicit schema: an empty partitioned write emits only _SUCCESS, and
-    # schema inference over zero files raises — the input schema is by
-    # definition the schema of the (zero) bytes written
-    written = df.sparkSession.read.schema(df.schema).parquet(dest)
-    manifest = table_checksum(written, [partition_by] if partition_by else [])
-    # format_version stamps the CHECKSUM ALGORITHM (2 = sum of 60-bit row
-    # hashes mod 2^61 published as int64; 1 = the unversioned DECIMAL(38)
-    # sum written before round 7). verify_manifest refuses to diff across
-    # versions: without the stamp, an algorithm change is indistinguishable
-    # from corruption — every pre-change manifest would read as "tampered".
-    from pyspark.sql import functions as F
-
-    manifest = manifest.withColumn(
-        "format_version", F.lit(MANIFEST_FORMAT_VERSION)
-    )
-    manifest.write.mode("overwrite").parquet(f"{dest}/_manifest")
-
-
-def verify_manifest(spark: SparkSession, dest: str, partition_by: str | None = None):
-    """Recompute counts + checksums of ``dest`` and diff against its
-    stored ``_manifest``. Returns a DataFrame of mismatching partitions
-    (empty == intact); each row carries both sides' numbers."""
-    from pyspark.sql import functions as F
-
-    from pyspark.errors import AnalysisException
-
-    stored = spark.read.parquet(f"{dest}/_manifest")
-    # versioned manifests only: an unversioned (pre-round-7 DECIMAL-sum) or
-    # future-format manifest must raise a FORMAT error here, not surface as
-    # a wall of checksum "mismatches" downstream (ADVICE r07) — the caller
-    # can tell "re-write the manifest" apart from "data corrupted"
-    if "format_version" not in stored.columns:
-        raise ValueError(
-            f"{dest}/_manifest has no format_version column: it predates "
-            f"manifest format v{MANIFEST_FORMAT_VERSION} (the checksum "
-            "algorithm changed from a DECIMAL(38) sum to sum mod 2^61 as "
-            "int64). Re-write it with write_with_manifest; diffing across "
-            "formats would report intact data as corrupted."
-        )
-    versions = [r[0] for r in stored.select("format_version").distinct().collect()]
-    # zero stored rows (an empty write's manifest) carry no checksums to
-    # mis-diff — any version vacuously matches
-    if versions and versions != [MANIFEST_FORMAT_VERSION]:
-        raise ValueError(
-            f"{dest}/_manifest format_version {versions} != supported "
-            f"[{MANIFEST_FORMAT_VERSION}]: refusing to diff checksums "
-            "computed by a different algorithm. Re-write the manifest."
-        )
-    stored = stored.drop("format_version")
-    try:
-        actual = table_checksum(
-            spark.read.parquet(dest), [partition_by] if partition_by else []
-        )
-    except AnalysisException:
-        # zero data files (underscore paths are hidden from the read):
-        # schema inference raises. The checksum of nothing is the typed
-        # empty frame — any stored partition then reports n_actual=null,
-        # which is exactly the "files are gone" mismatch. Narrow catch:
-        # a corrupt footer / permission error must RAISE, not read as
-        # "empty but intact".
-        actual = local_frame(spark, [], stored.schema)
-    on = [partition_by] if partition_by else []
-    a = actual.select(
-        *on, F.col("n_rows").alias("n_actual"), F.col("checksum").alias("sum_actual")
-    )
-    s = stored.select(
-        *[F.col(k).alias(f"__s_{k}") for k in on],
-        F.col("n_rows").alias("n_stored"),
-        F.col("checksum").alias("sum_stored"),
-    )
-    if on:
-        # null-safe: the __HIVE_DEFAULT_PARTITION__ row has a NULL key on
-        # both sides, and a plain on= join would split it into two
-        # "mismatching" rows for perfectly intact data
-        cond = None
-        for k in on:
-            c = a[k].eqNullSafe(s[f"__s_{k}"])
-            cond = c if cond is None else cond & c
-        joined = a.join(s, cond, "full").select(
-            *[F.coalesce(a[k], s[f"__s_{k}"]).alias(k) for k in on],
-            "n_actual", "sum_actual", "n_stored", "sum_stored",
-        )
-    else:
-        # constant-key FULL join, not a crossJoin: with zero actual rows a
-        # crossJoin yields zero rows — "no mismatches" for a dataset whose
-        # data is entirely gone
-        joined = (
-            a.withColumn("__k", F.lit(1))
-            .join(s.withColumn("__k", F.lit(1)), "__k", "full")
-            .select("n_actual", "sum_actual", "n_stored", "sum_stored")
-        )
-    return joined.where(
-        (F.col("n_actual") != F.col("n_stored"))
-        | (F.col("sum_actual") != F.col("sum_stored"))
-        | F.col("n_actual").isNull()
-        | F.col("n_stored").isNull()
     )

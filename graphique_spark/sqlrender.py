@@ -8,6 +8,11 @@ and its arguments — see ``dataset.py``); ``render`` folds that log into one
 SQL statement of nested SELECT blocks that ``spark.sql`` re-executes with
 identical semantics.
 
+Operators written once as SQL text (``operators.topk``, ``sql(query:)``,
+``operators.asof.AsofSql``) run it through :func:`run_sql` and render the
+same builder over the rendered input. A ``spark.sql`` call pays ~10 ms for
+its temp view, so cheaper operators stay DataFrame steps with an ``op_*``.
+
 Expression fidelity comes from Catalyst itself, not a hand-written
 expression grammar: each ``pyspark.sql.Column`` is analyzed against its
 input frame (``df.select(col.alias(tag))``) and the *resolved* expression's
@@ -110,6 +115,24 @@ def _split_opaque(sql: str) -> list[tuple[str, bool]]:
     if start < n:
         out.append((sql[start:], False))
     return out
+
+
+_QUALIFIER = re.compile(r"(?<![\w.`])(?:[A-Za-z_]\w*\.)+")
+
+
+def _unqualified(sql: str, columns: frozenset[str]) -> str:
+    """``sql`` without the relation qualifiers (``__w.x`` -> ``x``) that a
+    frame run from SQL text carries and a rendered block can't resolve;
+    dotted parts from the first input column on are struct field access."""
+
+    def _drop(m: re.Match) -> str:
+        parts = m.group(0).split(".")[:-1]
+        head = next((i for i, p in enumerate(parts) if p in columns), len(parts))
+        return "".join(p + "." for p in parts[head:])
+
+    return "".join(
+        seg if opaque else _QUALIFIER.sub(_drop, seg) for seg, opaque in _split_opaque(sql)
+    )
 
 
 def _walk_alias(jplan, tag: str, protected: frozenset[str] = frozenset()) -> str | None:
@@ -232,10 +255,11 @@ def expr_sql(df: DataFrame, col: Column) -> str:
         plan = df.select(col.alias(tag))._jdf.queryExecution().analyzed()
     except Exception as exc:  # unresolvable against this frame
         raise Unrenderable(str(exc)) from exc
-    sql = _walk_alias(plan, tag, protected=frozenset(df.columns))
+    columns = frozenset(df.columns)
+    sql = _walk_alias(plan, tag, protected=columns)
     if sql is None:
         raise Unrenderable("alias not found in analyzed plan")
-    return _fix_lambdas(sql)
+    return _fix_lambdas(_unqualified(sql, columns))
 
 
 def agg_sqls(df: DataFrame, aggcols: Sequence[Column]) -> list[tuple[str, str]]:
@@ -253,11 +277,12 @@ def agg_sqls(df: DataFrame, aggcols: Sequence[Column]) -> list[tuple[str, str]]:
         if children.size() != 1:
             raise Unrenderable("unexpected aggregate plan shape")
         node = children.apply(0)
+    columns = frozenset(df.columns)
     exprs = node.aggregateExpressions()
     for i in range(exprs.size()):
         e = exprs.apply(i)
         if e.getClass().getSimpleName() == "Alias":
-            out.append((e.name(), _fix_lambdas(e.child().sql())))
+            out.append((e.name(), _fix_lambdas(_unqualified(e.child().sql(), columns))))
     if len(out) != len(aggcols):
         raise Unrenderable("aggregate alias extraction mismatch")
     return out
@@ -425,8 +450,15 @@ class _Renderer:
     def op_dropnull(self, block, df, subset, how: str):
         if not block.plain:
             block = self.wrap(block)
-        cols = list(subset) if subset else df.columns
-        conds = [f"{quote(c)} IS NOT NULL" for c in cols]
+        types = dict(df.dtypes)
+        cols = list(subset) if subset else list(types)
+        # na.drop counts NaN as null in float and double columns
+        conds = [
+            f"({quote(c)} IS NOT NULL AND NOT isnan({quote(c)}))"
+            if types.get(c) in ("float", "double")
+            else f"{quote(c)} IS NOT NULL"
+            for c in cols
+        ]
         joiner = " AND " if how == "any" else " OR "
         block.where.append(joiner.join(conds))
         return block
@@ -441,12 +473,14 @@ class _Renderer:
         if plan.getClass().getSimpleName() != "Project":
             raise Unrenderable("na.fill did not produce a single projection")
         items = []
+        columns = frozenset(df.columns)
         exprs = plan.projectList()
         for i in range(exprs.size()):
             e = exprs.apply(i)
             cls = e.getClass().getSimpleName()
             if cls == "Alias":
-                items.append(f"{_fix_lambdas(e.child().sql())} AS {quote(e.name())}")
+                sql = _fix_lambdas(_unqualified(e.child().sql(), columns))
+                items.append(f"{sql} AS {quote(e.name())}")
             elif cls == "AttributeReference":
                 items.append(quote(e.name()))
             else:
@@ -479,84 +513,12 @@ class _Renderer:
             block.group_by = ", ".join(keys)
         return block
 
-    def op_order(self, block, df, by: Sequence[str], limit, over: Sequence[str]):
-        items = [sort_item(k) for k in by]
-        if limit is None or not over:
-            if block.limit is not None or block.offset:
-                block = self.wrap(block)
-            block.order_by = items
-            if limit is not None:
-                block.limit = limit
-            return block
-        if limit <= 0:
+    def op_order(self, block, df, by: Sequence[str], limit):
+        if block.limit is not None or block.offset:
             block = self.wrap(block)
-            block.limit = 0
-            return block
-        return self._window_filter(
-            block, df.columns, f"ROW_NUMBER() OVER ({self._over(over, items)})", f"<= {int(limit)}"
-        )
-
-    def op_first(self, block, df, by: Sequence[str], rank: int, dense: bool, over: Sequence[str]):
-        items = [sort_item(k) for k in by]
-        fn = "DENSE_RANK" if dense else "RANK"
-        return self._window_filter(
-            block, df.columns, f"{fn}() OVER ({self._over(over, items)})", f"<= {int(rank)}"
-        )
-
-    @staticmethod
-    def _over(over: Sequence[str], order_items: list[str]) -> str:
-        part = f"PARTITION BY {', '.join(col_ref(c) for c in over)} " if over else ""
-        return part + "ORDER BY " + ", ".join(order_items)
-
-    def _window_filter(self, block, columns, window_sql: str, cond: str) -> _Block:
-        if not block.plain or block.where:
-            block = self.wrap(block)
-        tag = "__wf"
-        block.select = [quote(c) for c in columns] + [f"{window_sql} AS {tag}"]
-        block = self.wrap(block)
-        block.where.append(f"{tag} {cond}")
-        block.select = [quote(c) for c in columns]
-        return block
-
-    def op_distinct(
-        self, block, df, on: Sequence[str], keep, counts, order_by: Sequence[str]
-    ):
-        columns = df.columns
-        all_cols = list(on) == columns or set(on) == set(columns)
-        if keep is not None and not order_by and not all_cols:
-            raise Unrenderable(
-                "distinct with an arbitrary (monotonic-id) tiebreak has no "
-                "deterministic SQL equivalent; pass orderBy"
-            )
-        if not block.plain or block.where:
-            block = self.wrap(block)
-        part = ", ".join(col_ref(c) for c in on)
-        if keep is None:  # drop ALL duplicated rows
-            block.select = [quote(c) for c in columns] + [
-                f"COUNT(1) OVER (PARTITION BY {part}) AS __n"
-            ]
-            block = self.wrap(block)
-            block.where.append("__n = 1")
-            block.select = [quote(c) for c in columns]
-            return block
-        if all_cols and not counts:
-            block.distinct = True
-            return block
-        keys = list(order_by)
-        if keep == "last":
-            keys = [k[1:] if k.startswith("-") else "-" + k for k in keys]
-        if not keys and all_cols:
-            # every column is a key: rows within a group are identical, any
-            # representative works — ORDER BY the keys themselves
-            keys = list(on)
-        order_items = ", ".join(sort_item(k) for k in keys)
-        extra = [f"ROW_NUMBER() OVER (PARTITION BY {part} ORDER BY {order_items}) AS __rn"]
-        if counts:
-            extra.append(f"COUNT(1) OVER (PARTITION BY {part}) AS {quote(counts)}")
-        block.select = [quote(c) for c in columns] + extra
-        block = self.wrap(block)
-        block.where.append("__rn = 1")
-        block.select = [quote(c) for c in columns] + ([quote(counts)] if counts else [])
+        block.order_by = [sort_item(k) for k in by]
+        if limit is not None:
+            block.limit = limit
         return block
 
     def op_runs(
@@ -592,27 +554,6 @@ class _Renderer:
         block.order_by = ["__run"]
         return block
 
-    def op_take(self, block, df, indices: Sequence[int], rowid: str):
-        """pyarrow ``take`` semantics against an explicit rowid column:
-        inner join a (position, index) VALUES table, requested order
-        preserved, duplicate indices repeating rows."""
-        if not indices:
-            if block.limit is not None:
-                block = self.wrap(block)
-            block.limit = 0
-            return block
-        lref = self._sub(block.render())
-        self.n += 1
-        values = ", ".join(f"({pos}, {int(i)})" for pos, i in enumerate(indices))
-        src = (
-            f"{lref} JOIN (VALUES {values}) AS __v{self.n}(__pos, {quote(rowid)}) "
-            f"USING ({quote(rowid)})"
-        )
-        out = _Block(src)
-        out.select = [quote(rowid)] + [quote(c) for c in df.columns if c != rowid]
-        out.order_by = ["__pos"]
-        return out
-
     def op_slice(self, block, df, offset: int, limit):
         if block.limit is not None or block.offset:
             block = self.wrap(block)
@@ -641,8 +582,10 @@ class _Renderer:
         ]
         return block
 
-    def op_sql(self, block, df, query: str, alias: str):
-        return _Block(self._sub(with_alias(alias, block.render(), query)))
+    def op_text(self, block, df, build):
+        """An operator written once as SQL text over its input text
+        (``Dataset._run``): the same builder over the rendered input."""
+        return _Block(self._sub(build(block.render())))
 
     # -- multi-table ---------------------------------------------------------
 

@@ -3493,7 +3493,7 @@ def resample_interpolate(spark, sf_dir):
 )
 def table_checksum_audit(spark, sf_dir):
     """Content checksum per source — the order-insensitive, engine-portable
-    integrity number `write_with_manifest` stores next to data: sum of
+    integrity number to store next to data: sum of
     md5-derived 60-bit row hashes mod 2^61, published as int64 (the
     DECIMAL accumulator is internal; the bounded form survives pandas /
     Arrow / JSON exactly, where HUGEINT/DECIMAL lossy-cast to float64).

@@ -2054,36 +2054,50 @@ def test_top_k_matches_python_sort(spark, rows, k, desc, grouped):
 @given(
     rows=st.lists(
         st.tuples(st.one_of(st.none(), st.integers(0, 3)),
-                  st.one_of(st.none(), st.integers(0, 3))),
+                  st.one_of(st.none(), st.integers(0, 3)),
+                  st.sampled_from([None, float("nan"), 0.5])),
         min_size=0, max_size=12,
     ),
     fill=st.integers(-1, 9),
     how=st.sampled_from(["any", "all"]),
-    subset=st.sampled_from([None, ["a"], ["a", "b"]]),
+    subset=st.sampled_from([None, ["a"], ["a", "b"], ["c"], ["b", "c"]]),
 )
 def test_fill_drop_null_match_python(spark, rows, fill, how, subset):
+    import math
+
     from graphique_spark.dataset import Dataset
 
-    data = [(i, a, b) for i, (a, b) in enumerate(rows)]
-    df = spark.createDataFrame(data, "id int, a int, b int")
+    data = [(i, a, b, c) for i, (a, b, c) in enumerate(rows)]
+    df = spark.createDataFrame(data, "id int, a int, b int, c double")
     ds = Dataset(df)
     filled = {
-        r["id"]: (r["a"], r["b"])
+        r["id"]: (r["a"], r["b"], r["c"])
         for r in ds.fill_null(fill, subset=subset).df.collect()
     }
     kept = sorted(r["id"] for r in ds.drop_null(subset=subset, how=how).df.collect())
 
+    # na.fill and na.drop treat NaN like null in float and double columns
+    def missing(v):
+        return v is None or (isinstance(v, float) and math.isnan(v))
+
     # subset=None means ALL columns — including the never-null id, so
     # how='all' can then never drop a row (Spark na.drop semantics)
-    cols = subset or ["id", "a", "b"]
-    for i, a, b in data:
-        wa = fill if a is None and "a" in cols else a
-        wb = fill if b is None and "b" in cols else b
-        assert filled[i] == (wa, wb), (i, filled[i], (wa, wb))
-    test = (lambda vs: any(v is None for v in vs)) if how == "any" else (
-        lambda vs: all(v is None for v in vs))
-    want = [i for i, a, b in data
-            if not test([{"id": i, "a": a, "b": b}[c] for c in cols])]
+    cols = subset or ["id", "a", "b", "c"]
+    for i, *vals in data:
+        want_row = tuple(
+            fill if missing(v) and name in cols else v
+            for name, v in zip(["a", "b", "c"], vals)
+        )
+        got = filled[i]
+        assert all(
+            (missing(g) and missing(w)) or g == w for g, w in zip(got, want_row)
+        ), (i, got, want_row)
+    test = (lambda vs: any(map(missing, vs))) if how == "any" else (
+        lambda vs: all(map(missing, vs)))
+    want = [
+        row[0] for row in data
+        if not test([dict(zip(["id", "a", "b", "c"], row))[c] for c in cols])
+    ]
     assert kept == want
 
 

@@ -197,21 +197,6 @@ def test_embedding_near_dups_finds_planted(spark):
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
 
-def test_resize_real_nearest_neighbor(tables):
-    import numpy as np
-
-    docs = tables["documents"].df.limit(10).select("doc_id")
-    blobs = multimodal.attach_image_blobs(docs)
-    resized = {r["doc_id"]: r for r in multimodal.resize_images(blobs, target=(4, 4)).collect()}
-    assert len(resized) == 10
-    for d, r in resized.items():
-        w, h = 8 + d % 8, 8 + (d // 8) % 8
-        _, _, px, _ = multimodal.decode_ppm(multimodal.ppm_bytes(d, w, h))
-        ys = (np.arange(4) * h) // 4
-        xs = (np.arange(4) * w) // 4
-        assert r["mean_px"] == pytest.approx(px[ys][:, xs].mean() / 255.0, abs=1e-12)
-
-
 def test_audio_decode_real_wav(tables):
     import numpy as np
 
@@ -225,21 +210,6 @@ def test_audio_decode_real_wav(tables):
         assert (r["sample_rate"], r["n_samples"]) == (8000, 256)
         assert r["rms"] == pytest.approx(np.sqrt((s ** 2).mean()) / 32768.0, abs=1e-12)
         assert 0.0 <= r["zero_cross_rate"] <= 1.0
-
-
-def test_lsh_index_partition_pruned_probe(tables, tmp_path):
-    emb = tables["embeddings"].df
-    path = str(tmp_path / "lsh_index")
-    similarity.write_lsh_index(emb, path, num_planes=3)
-    qvec = emb.filter(F.col("vec_id") == 7).first()["embedding"]
-    spark = emb.sparkSession
-    out = similarity.lsh_ann_topk_indexed(spark, path, qvec, k=10, num_planes=3)
-    live = similarity.lsh_ann_topk(emb, qvec, k=10, num_planes=3)
-    assert [r["vec_id"] for r in out.collect()] == [r["vec_id"] for r in live.collect()]
-    # probing must prune partitions: the scan's PartitionFilters carry the
-    # bucket IN-list, so non-probed bucket directories are never read
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
 
 
 def test_knn_join_lsh_bucketed(tables):
@@ -956,21 +926,11 @@ def test_minhash_build_cost_flat_in_num_hashes(spark, py4j_calls):
 def _column_corpus(df, num_hashes):
     """The corpus signature frames written with Column expressions: per-hash
     ``min`` aggregates, renaming projections and a Python ``sum`` of
-    ``==`` terms. Returns (minhash, overlap, single-pass overlap, matrix)."""
+    ``==`` terms. Returns (single-pass overlap, matrix)."""
 
     def match(a, b):
         matches = sum((F.col(f"{a}{i}") == F.col(f"{b}{i}")).cast("long") for i in range(num_hashes))
         return matches.alias("n_matches"), (matches / F.lit(float(num_hashes))).alias("jaccard_est")
-
-    def minhash(frame):
-        sigs = dedup._signatures(frame, "text", "doc_id", 5, num_hashes)
-        return sigs.agg(*[F.min(f"m{i}").alias(f"m{i}") for i in range(num_hashes)])
-
-    web, rest = df.where(F.col("source") == "web"), df.where(F.col("source") != "web")
-    sb = minhash(rest)
-    for i in range(num_hashes):
-        sb = sb.withColumnRenamed(f"m{i}", f"n{i}")
-    overlap = minhash(web).crossJoin(sb).select(*match("m", "n"))
 
     in_a, in_b = F.col("source") == "web", F.col("source") != "web"
     base = dedup.ensure_parallelism(
@@ -993,7 +953,7 @@ def _column_corpus(df, num_hashes):
     a = per_grp.select(F.col("__grp").alias("src_a"), *[F.col(f"m{i}").alias(f"a{i}") for i in range(num_hashes)])
     b = per_grp.select(F.col("__grp").alias("src_b"), *[F.col(f"m{i}").alias(f"b{i}") for i in range(num_hashes)])
     matrix = a.join(b, a["src_a"] < b["src_b"]).select("src_a", "src_b", *match("a", "b"))
-    return minhash(df), overlap, single, matrix
+    return single, matrix
 
 
 def test_corpus_signatures_same_plan_as_column_helpers(spark):
@@ -1013,8 +973,6 @@ def test_corpus_signatures_same_plan_as_column_helpers(spark):
     web, rest = F.col("source") == "web", F.col("source") != "web"
     for num_hashes in (8, 3):
         got = (
-            dedup.corpus_minhash(df, num_hashes=num_hashes),
-            dedup.corpus_overlap(df.where(web), df.where(rest), num_hashes=num_hashes),
             dedup.corpus_overlap_single_pass(df, web, rest, num_hashes=num_hashes),
             dedup.corpus_overlap_matrix(df, by="source", num_hashes=num_hashes),
         )
@@ -1071,7 +1029,7 @@ def test_minhash_rejects_degenerate_parameters(spark, params, match):
         dedup.minhash_index(df, **params)
     if "bands" not in params:
         with pytest.raises(ValueError, match=match):
-            dedup.corpus_minhash(df, **params)
+            dedup.corpus_overlap_single_pass(df, F.lit(True), F.lit(True), **params)
     if "k" in params:
         with pytest.raises(ValueError, match=match):
             dedup.char_shingles(F.col("text"), params["k"])
@@ -1256,19 +1214,18 @@ def test_corpus_overlap_identical_and_disjoint(spark):
         [(i, f"document number {i} about spark shuffles and partitions") for i in range(20)],
         "doc_id long, text string",
     )
-    same = dedup.corpus_overlap(docs, docs).first()
+    everything = F.lit(True)
+    same = dedup.corpus_overlap_single_pass(docs, everything, everything).first()
     assert same["n_matches"] == 32 and same["jaccard_est"] == 1.0
     other = spark.createDataFrame(
         [(i, "زبان فارسی متن کاملا متفاوت " + "×" * i) for i in range(20, 30)],
         "doc_id long, text string",
     )
-    diff = dedup.corpus_overlap(docs, other).first()
+    both = docs.union(other)
+    diff = dedup.corpus_overlap_single_pass(
+        both, F.col("doc_id") < 20, F.col("doc_id") >= 20
+    ).first()
     assert diff["jaccard_est"] < 0.3  # near-disjoint shingle sets
-    # mergeability: signature of (a ∪ b) == elementwise min of signatures
-    u = dedup.corpus_minhash(docs.union(other)).first()
-    a = dedup.corpus_minhash(docs).first()
-    b = dedup.corpus_minhash(other).first()
-    assert all(u[f"m{i}"] == min(a[f"m{i}"], b[f"m{i}"]) for i in range(32))
 
 
 def test_token_budget_rates_cap_and_math(spark):
@@ -1288,6 +1245,21 @@ def test_token_budget_rates_cap_and_math(spark):
     assert out["small"]["expected_tokens"] == pytest.approx(80.0)
 
 
+def _two_frame_overlap(a, b, num_hashes=32):
+    """Reference overlap: each corpus's MinHash signature computed from its
+    own frame (per-hash ``min`` over the per-doc signatures), then the
+    fraction of matching permutation mins."""
+
+    def signature(frame, out):
+        sigs = dedup._signatures(frame, "text", "doc_id", 5, num_hashes)
+        return sigs.agg(*[F.min(f"m{i}").alias(f"{out}{i}") for i in range(num_hashes)])
+
+    matches = sum((F.col(f"m{i}") == F.col(f"n{i}")).cast("long") for i in range(num_hashes))
+    return signature(a, "m").crossJoin(signature(b, "n")).select(
+        matches.alias("n_matches"), (matches / F.lit(float(num_hashes))).alias("jaccard_est")
+    )
+
+
 def test_corpus_overlap_single_pass_matches_two_frame(spark):
     docs = spark.createDataFrame(
         [(i, f"shared prose number {i % 7} with common phrasing") for i in range(40)],
@@ -1295,7 +1267,7 @@ def test_corpus_overlap_single_pass_matches_two_frame(spark):
     )
     a_pred = F.col("doc_id") % 2 == 0
     b_pred = F.col("doc_id") % 3 == 0
-    two = dedup.corpus_overlap(docs.where(a_pred), docs.where(b_pred)).first()
+    two = _two_frame_overlap(docs.where(a_pred), docs.where(b_pred)).first()
     one = dedup.corpus_overlap_single_pass(docs, a_pred, b_pred).first()
     assert one["n_matches"] == two["n_matches"]
     assert one["jaccard_est"] == two["jaccard_est"]
@@ -1319,7 +1291,7 @@ def test_corpus_overlap_matrix_ids_repeat_across_groups(spark):
         for r in dedup.corpus_overlap_matrix(df, by="source").collect()
     }
     for pair in [("a", "b"), ("a", "c"), ("b", "c")]:
-        two = dedup.corpus_overlap(
+        two = _two_frame_overlap(
             df.where(F.col("source") == pair[0]),
             df.where(F.col("source") == pair[1]),
         ).first()
@@ -1403,47 +1375,6 @@ def test_curation_pipeline_end_to_end(spark, tmp_path):
     written = spark.read.parquet(str(tmp_path / "shards"))
     assert written.count() == curated.count()
     assert written.select("shard").distinct().count() <= 4
-
-
-def test_quality_classifier_separates_reference_from_gibberish(spark):
-    from graphique_spark.llm import quality_model as qm
-
-    import random as _random
-
-    rng = _random.Random(7)
-    stop = "the of and to in is was for on with as at by it".split()
-    content = "research model data spark shuffle partition quality corpus token text".split()
-    def sentence(i):
-        words = [rng.choice(stop) if j % 3 == 0 else rng.choice(content)
-                 for j in range(20)]
-        return f"doc {i}: " + " ".join(words)
-    def gibberish(i):
-        return " ".join("".join(rng.choice("qxzjkvw") for _ in range(rng.randint(2, 11)))
-                        for _ in range(18))
-
-    good = spark.createDataFrame([(i, sentence(i)) for i in range(60)], "doc_id long, text string")
-    bad = spark.createDataFrame([(1000 + i, gibberish(i)) for i in range(60)], "doc_id long, text string")
-    model = qm.train_quality_classifier(good.limit(40), bad.limit(40), num_features=1 << 12, max_iter=10)
-
-    # held-out docs (never trained on) must separate cleanly
-    held = good.where(F.col("doc_id") >= 40).unionByName(bad.where(F.col("doc_id") >= 1040))
-    scores = {r["doc_id"]: r["p_good"] for r in qm.score_quality(model, held).collect()}
-    good_scores = [v for k, v in scores.items() if k < 1000]
-    bad_scores = [v for k, v in scores.items() if k >= 1000]
-    assert min(good_scores) > max(bad_scores)  # perfect separation on this fixture
-    # AUC = 1.0 given full separation; check means too for slack reporting
-    assert sum(good_scores) / len(good_scores) > 0.8
-    assert sum(bad_scores) / len(bad_scores) < 0.2
-
-    # self-training bootstrap: extremes of the heuristic produce usable labels
-    corpus = good.unionByName(bad)
-    g2, b2 = qm.self_training_labels(corpus, lo=0.3, hi=0.7)
-    assert g2.count() > 0 and b2.count() > 0
-    m2 = qm.train_quality_classifier(g2, b2, num_features=1 << 12, max_iter=10)
-    s2 = {r["doc_id"]: r["p_good"] for r in qm.score_quality(m2, held).collect()}
-    g2s = [v for k, v in s2.items() if k < 1000]
-    b2s = [v for k, v in s2.items() if k >= 1000]
-    assert sum(g2s) / len(g2s) > sum(b2s) / len(b2s) + 0.5
 
 
 def test_ivf_knn_join_empty_centroids_returns_typed_empty(tables):
@@ -1734,8 +1665,6 @@ def test_similarity_degenerate_inputs(spark):
     )
     out = similarity.knn_join_lsh(empty, queries, k=2)
     assert out.count() == 0 and out.columns == ["query_id", "vec_id", "cosine"]
-    with _pytest.raises(ValueError, match="empty corpus"):
-        similarity.write_lsh_index(empty, "/tmp/never-written")
     # zero-norm vector sampled as centroid: no driver crash
     rows = [(i, [0.0, 0.0] if i == 0 else [float(i), 1.0]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")

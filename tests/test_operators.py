@@ -129,20 +129,6 @@ def test_rollup_and_cube(tables):
     assert len(cubed) == 6
 
 
-def test_salted_join_matches_plain(tables):
-    from graphique_spark.operators.skew import salted_join
-
-    li = tables["lineitem"].df.select("l_orderkey", "l_extendedprice")
-    orders = tables["orders"].df.select("l_orderkey", "o_orderpriority").toDF(
-        "l_orderkey", "o_orderpriority"
-    ) if "l_orderkey" in tables["orders"].df.columns else tables["orders"].df.select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
-    )
-    plain = li.join(orders, on="l_orderkey").count()
-    salted = salted_join(li, orders, keys=["l_orderkey"], salts=8).count()
-    assert salted == plain
-
-
 def test_two_phase_agg_matches_plain(tables):
     from graphique_spark.operators.skew import two_phase_agg
 
@@ -755,18 +741,6 @@ def test_apply_cdc_null_op_is_upsert_not_delete(spark):
     out = apply_cdc(base, log, keys=["k"]).collect()
     # a malformed (null-op) log row must not silently delete the row
     assert [(r["k"], r["v"]) for r in out] == [(1, "b")]
-
-
-def test_salted_join_rejects_right_preserving_joins(spark):
-    from graphique_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, "x")], "k int, b string")
-    small = spark.createDataFrame([(1, "y")], "k int, s string")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="salted_join"):
-        salted_join(big, small, ["k"], how="full")
-    assert salted_join(big, small, ["k"], how="left").count() == 1
 
 
 def test_profile_saturates_huge_extrema_and_skips_intervals(spark):

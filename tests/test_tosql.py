@@ -124,6 +124,94 @@ def test_roundtrip(spark, service, doc):
     assert _rows(spark.sql(sql)) == _rows(ds.df)
 
 
+WINDOW_SHAPED = {
+    "distinct_orderby_counts": lambda ds: ds.distinct(
+        on=["o_orderpriority"], order_by=["-o_totalprice", "o_orderkey"], counts="cnt"
+    ),
+    "distinct_keep_last": lambda ds: ds.distinct(
+        on=["o_orderstatus"], keep="last", order_by=["o_orderdate", "o_orderkey"]
+    ),
+    "distinct_keep_null": lambda ds: ds.distinct(on=["o_custkey"], keep=None),
+    "distinct_all_columns_counts": lambda ds: ds.select("o_orderstatus", "o_orderpriority")
+    .distinct(counts="n"),
+    "first_global": lambda ds: ds.first(["-o_totalprice"], rank=3),
+    "first_global_dense_two_keys": lambda ds: ds.first(
+        ["o_orderstatus", "-o_orderpriority"], rank=2, dense=True
+    ),
+    "first_over": lambda ds: ds.first(["-o_totalprice"], rank=2, over=["o_orderstatus"]),
+    "order_limit_over": lambda ds: ds.order(
+        ["-o_totalprice", "o_orderkey"], limit=2, over=["o_orderpriority"]
+    ),
+    "take_rowid": lambda ds: ds.take([7, 3, 3, 12], rowid="o_orderkey"),
+}
+
+
+@pytest.mark.parametrize("name", list(WINDOW_SHAPED))
+def test_window_shaped_ops_run_the_rendered_text(spark, name):
+    """distinct, first, order(limit:, over:) and take run the SQL text that
+    ``to_sql`` renders: over a parquet root, the executed frame and the
+    rendered statement optimize to the same plan."""
+    from graphique_spark.sources import read_parquet
+
+    root = read_parquet(spark, f"{SF_DIR}/orders.parquet")
+    # scan the root through its own rendered text: a DataFrameReader scan
+    # carries reader options that the parquet.`path` scan lacks, so the two
+    # relations never compare equal
+    root.df = spark.sql(root.to_sql())
+    ds = WINDOW_SHAPED[name](root)
+    sql = ds.to_sql()
+    assert sql.startswith("SELECT"), f"fallback:\n{sql}"
+    rendered = spark.sql(sql)._jdf.queryExecution().optimizedPlan()
+    assert ds.df._jdf.queryExecution().optimizedPlan().sameResult(rendered), sql
+    assert spark.sql(sql).columns == ds.df.columns
+    assert _rows(spark.sql(sql)) == _rows(ds.df)
+
+
+def test_expressions_over_sql_text_ops_render(spark):
+    """A frame run from SQL text carries its last subquery's alias as a
+    column qualifier; expressions rendered over it must not print that
+    qualifier, since the rendered block reading it has another alias."""
+    from pyspark.sql import functions as F
+
+    from graphique_spark.inputs import Agg
+    from graphique_spark.sources import read_parquet
+
+    ds = read_parquet(spark, f"{SF_DIR}/orders.parquet")
+    chains = [
+        ds.first(["-o_totalprice"], rank=20, over=["o_orderpriority"]).group(
+            ["o_orderpriority"], aggregate=[Agg("sum", "o_totalprice", alias="s")]
+        ),
+        ds.distinct(on=["o_custkey"], keep=None).filter(where=F.col("o_totalprice") > 1000),
+        ds.take([3, 1], rowid="o_orderkey").project({"z": F.col("o_totalprice") * 2}),
+        ds.sql("SELECT * FROM self s WHERE o_orderkey < 100").filter(
+            where=F.col("o_totalprice") > 1000
+        ),
+    ]
+    for out in chains:
+        sql = out.to_sql()
+        assert sql.startswith("SELECT"), f"fallback:\n{sql}"
+        assert _rows(spark.sql(sql)) == _rows(out.df)
+
+
+@pytest.mark.parametrize("how", ["any", "all"])
+def test_dropnull_nan_renders_like_na_drop(spark, how):
+    """``na.drop`` counts NaN as null in float and double columns; the
+    rendered WHERE must drop the same rows."""
+    from graphique_spark.sources import roots
+
+    df = spark.createDataFrame(
+        [(1, float("nan"), None), (2, None, None), (3, 1.0, 7), (4, float("nan"), 5)],
+        "id int, x double, y int",
+    )
+    df.createOrReplaceTempView("t_dropnull_nan")
+    ds = roots({"t_dropnull_nan": df})["t_dropnull_nan"].drop_null(["x", "y"], how=how)
+    sql = ds.to_sql()
+    assert sql.startswith("SELECT"), f"fallback:\n{sql}"
+    kept = sorted(r["id"] for r in ds.df.collect())
+    assert kept == ([3] if how == "any" else [3, 4])
+    assert sorted(r["id"] for r in spark.sql(sql).collect()) == kept
+
+
 def test_service_tosql_field_is_runnable(spark, service):
     data = service.execute(
         """{ orders { filter(o_orderstatus: {eq: ["F"]}) {

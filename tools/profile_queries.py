@@ -1,7 +1,8 @@
 """Per-query profiler for the optimization rounds: for each named suite
 query, measure (a) DataFrame build time (driver-side plan construction +
-any plan-time jobs like centroid collects), (b) noop-sink execution wall,
-(c) the number of Spark jobs and stages the query submitted, and (d) the
+any plan-time jobs like centroid collects) and the py4j commands the build
+sends to the JVM, (b) noop-sink execution wall, (c) the number of Spark
+jobs and stages the query submitted, and (d) the
 ``explain("formatted")`` physical plan — the evidence base the
 spark_optimization_guide §1 asks for before touching anything.
 
@@ -21,6 +22,26 @@ import argparse
 import json
 import os
 import time
+
+
+def _counting_py4j(spark):
+    """Wrap the gateway client's ``send_command`` with a counter; returns
+    the one-item list the counter bumps. Handle releases are not counted:
+    py4j's finalizer thread sends them late, for earlier work."""
+    from py4j import protocol
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    count = [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(release):
+            count[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    return count
 
 
 def main() -> None:
@@ -61,6 +82,7 @@ def main() -> None:
         names += [n for n, _ in ranked[: args.top] if n not in names]
 
     sc = spark.sparkContext
+    py4j = _counting_py4j(spark)
     # warmup: every profiled query once at sf0.001 so codegen/broadcast
     # machinery is hot before anything is timed
     for name in names:
@@ -81,9 +103,10 @@ def main() -> None:
         for rep in range(max(1, args.repeats)):
             group = f"{name}#{rep}"
             sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
+            t0, n0 = time.perf_counter(), py4j[0]
             df = fn(spark, args.sf)
             t_build = time.perf_counter() - t0
+            build_py4j = py4j[0] - n0
             t0 = time.perf_counter()
             df.write.mode("overwrite").format("noop").save()
             wall = time.perf_counter() - t0
@@ -103,14 +126,15 @@ def main() -> None:
                         tasks += sinfo.numTasks
             rec = {
                 "query": name,
-                "build_s": round(t_build, 3),
+                "build_ms": round(t_build * 1000, 1),
+                "build_py4j": build_py4j,
                 "wall_s": round(wall, 3),
                 "jobs": len(jobs),
                 "stages": stages,
                 "tasks": tasks,
             }
-            if best is None or rec["wall_s"] + rec["build_s"] < best["wall_s"] + best["build_s"]:
-                best = rec
+            if best is None or wall + t_build < best_total:
+                best, best_total = rec, wall + t_build
             if args.plans and rep == 0:
                 try:
                     plan = df._sc._jvm.PythonSQLUtils.explainString(
